@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Expression-file ingest → COO matrix (reference `Input.scala:104-162`,
   * S2/P2/P3/U1/A8).
@@ -22,7 +23,8 @@ import org.apache.spark.sql.types._
   *
   * Dictionaries: the reference assigns probe ids from `Set` iteration
   * order — nondeterministic (SURVEY §8 Q3). We sort names before
-  * assigning dense ids so every run is reproducible.
+  * assigning dense ids so every run is reproducible. Both are built on
+  * the driver (registry- and probe-sized, broadcast-joined).
   */
 object Ingest {
 
@@ -32,6 +34,7 @@ object Ingest {
       matrix: DataFrame, // (sample INT, probe INT, value DOUBLE)
       sampleDict: DataFrame, // (name STRING, sample INT)
       probeDict: DataFrame, // (name STRING, probe INT)
+      nProbes: Long, // probe dictionary size = distinct probes in `matrix`
   )
 
   /** All expression rows of one sample-type as (sample_name, probe_name,
@@ -104,24 +107,6 @@ object Ingest {
       col("value").cast("double").as("value")).as[MatrixEntry]
   }
 
-  /** Deterministic dense-id dictionary over a name column: sorted, then
-    * ids assigned by partition-local index + offset (zipWithIndex) — no
-    * single-partition window, so the build distributes at any scale.
-    */
-  def dictionary(df: DataFrame, nameCol: String, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sorted = df.select(nameCol).distinct().orderBy(nameCol).as[String]
-    val ids = sorted.rdd.zipWithIndex().map { case (n, i) =>
-      if (i > Int.MaxValue)
-        throw new IllegalStateException(
-          s"dictionary overflow: > ${Int.MaxValue} distinct $nameCol values " +
-            "(the pipeline's MatrixEntry ids are 32-bit, matching the reference's IndexType)")
-      (n, i.toInt)
-    }
-    spark.createDataFrame(ids).toDF(nameCol, idCol)
-  }
-
   /** Full ingest: every declared sample-type of the config, read, tagged,
     * unioned, dictionary-encoded (reference appends the per-type probe
     * column spaces into one, `Input.scala:116-131` — probe names
@@ -148,18 +133,24 @@ object Ingest {
     require(perType.nonEmpty, "no expression files registered")
     val named = perType.reduce(_ union _)
 
+    import spark.implicits._
     // sample dictionary is driver-known (config) — tiny, sorted, broadcast
-    val sampleDict = {
-      import spark.implicits._
-      config.samples.map(_.name).sorted.zipWithIndex
-        .toDF("sample_name", "sample")
-    }
-    val probeDict = dictionary(named, "probe_name", "probe")
+    val sampleDict = config.samples.map(_.name).sorted.zipWithIndex
+      .toDF("sample_name", "sample")
+    // probe dictionary from the collected distinct names: it is the
+    // broadcast join's build side below, so it is driver-resident either
+    // way, and ids assigned here cost no Spark sort or zipWithIndex job.
+    // Sorted in Spark's string order (unsigned UTF-8 bytes, as `orderBy`
+    // would), not Java's UTF-16 order, so ids match a Spark-side sort
+    // for any name.
+    val probeNames = named.select("probe_name").distinct().as[String].collect()
+      .map(UTF8String.fromString).sortWith(_.compareTo(_) < 0).map(_.toString)
+    val probeDict = probeNames.toSeq.zipWithIndex.toDF("probe_name", "probe")
 
     val matrix = named
       .join(broadcast(sampleDict), "sample_name")
       .join(broadcast(probeDict), "probe_name")
       .select(col("sample"), col("probe"), col("value"))
-    IngestResult(matrix, sampleDict, probeDict)
+    IngestResult(matrix, sampleDict, probeDict, probeNames.length.toLong)
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -10,8 +11,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Differences from the reference, all deliberate (SURVEY §4.1
   * anti-patterns): shared subtrees are persisted instead of recomputed
-  * per action; the completed matrix never round-trips through the
-  * driver; everything is a pure function of (SparkSession, config).
+  * per action; the completed matrix reaches the driver only in the
+  * budget-gated dense regime (`Network.useDense`), where it is read
+  * once and never re-parallelized as a matrix; everything is a pure
+  * function of (SparkSession, config).
   */
 object LuadPipeline {
 
@@ -44,14 +47,15 @@ object LuadPipeline {
     val matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK)
 
     // ONE cardinality pass over the ingested matrix, reused by the
-    // coverage guard here, the ALS block sizing, and the Pearson-path
-    // gate (previously each recomputed its own distinct counts — three
-    // shuffle rounds for the same two numbers; r15 pipeline review)
+    // coverage guard here, the ALS block sizing, and the dense-path
+    // gate; the probe count is the dictionary's size, which ingest
+    // already knows
     val coveredSamples = timed("ingest-materialize") {
       matrix.select("sample").distinct().collect().map(_.getInt(0)).toSet
     }
-    val nBefore = matrix.select("probe").distinct().count()
-    val cards = Some((coveredSamples.size.toLong, nBefore))
+    val nBefore = ing.nProbes
+    val nSamples = coveredSamples.size.toLong
+    val cards = Some((nSamples, nBefore))
 
     // loud coverage guard (r15 pipeline review): a registered sample
     // whose file(s) yield ZERO parseable rows (empty export, all
@@ -74,19 +78,19 @@ object LuadPipeline {
     // completion fabricates cells only for the OBSERVED sample × probe
     // grid, so the distinct sets — and `cards` — are unchanged by it
 
-    val filtered = timed("pearson-network") {
-      val f = Network(spark, completed, config.pcThreshold, cards)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      f.count()
-      f
-    }
-    val nAfter = filtered.select("probe").distinct().count()
-
-    val features = timed("feature-assembly") {
-      val f = Svm.assembleFeatures(filtered)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      f.count() // materialize inside the timed span (else it lands in svm-train)
-      f
+    // network filter + feature assembly. Dense regime: one collect and
+    // one kernel pass, vectors built on the driver. Relational: Pearson
+    // self-join → GraphX → filter join → Spark-side assembly, whose
+    // vectors all have one length (its probe_sig guard) — the survivor
+    // count.
+    val (features, nAfter) = timed("network-and-assembly") {
+      if (Network.useDense(spark, nSamples, nBefore))
+        Network.denseFeatures(spark, completed, config.pcThreshold)
+      else {
+        val filtered = config.pcThreshold.fold(completed)(Network.filterRelational(spark, completed, _))
+        val f = Svm.assembleFeatures(filtered)
+        (f, f.select("features").head().getAs[Vector](0).size.toLong)
+      }
     }
 
     // training labels / prediction ids via the sample dictionary (F1/F2)
@@ -115,7 +119,6 @@ object LuadPipeline {
     decoded.count() // materialize so every upstream block can be freed
 
     matrix.unpersist(); completed.unpersist()
-    filtered.unpersist(); features.unpersist()
     Result(decoded, nBefore, nAfter)
   }
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,9 +18,15 @@ import org.apache.spark.storage.StorageLevel
   *    and partial aggregation is map-side combinable. Cost is
   *    O(Σ_sample nnz_sample²) — the honest cost of all-pairs — but
   *    distributed, with no driver copy.
-  *  - Connected components: GraphX `connectedComponents()` (Pregel,
-  *    incremental frontier — same semantics as the reference's delta
-  *    iteration `PreProcess.scala:179-197`, maxIter 100). A pure
+  *  - Dense regime (skinny matrix under the driver budget, `useDense`):
+  *    the reference's own design — the matrix on the driver, its
+  *    standardized rows broadcast — made sample-aligned. One pass
+  *    finds edges AND components (per-task union-find, merged on the
+  *    driver), and `denseFeatures` assembles the SVM vectors from the
+  *    arrays already collected.
+  *  - Connected components elsewhere: GraphX `connectedComponents()`
+  *    (Pregel, incremental frontier — same semantics as the reference's
+  *    delta iteration `PreProcess.scala:179-197`, maxIter 100). A pure
   *    DataFrame loop fallback is provided for the SQL-only engine path;
   *    it checkpoints each round to truncate lineage.
   *  - Representative per component: `min(probe)` — the reference takes
@@ -83,78 +90,201 @@ object Network {
     * DIMSUM-style approximation instead.
     *
     * Requires a COMPLETE matrix (every sample × probe cell present) —
-    * asserted; the reference runs it post-completion only.
+    * asserted; the reference runs it post-completion only. The
+    * pipeline's dense regime does not build this edge frame: it runs
+    * `denseFeatures`, which finds components in the same pass.
     */
   def pearsonEdgesDense(spark: SparkSession, matrix: DataFrame, threshold: Double): DataFrame = {
     import spark.implicits._
+    val d = collectDense(spark, matrix)
+    val probes = d.probes
+    val bz = broadcastStandardized(spark, d.values)
+    val bp = spark.sparkContext.broadcast(probes)
+    val nP = probes.length
+    spark.sparkContext
+      .parallelize(0 until nP, kernelPartitions(spark, nP))
+      .flatMap { i =>
+        val ids = bp.value
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
+        forEachEdge(bz.value, i, threshold)((j, r) => out += ((ids(i), ids(j), r)))
+        out.iterator
+      }
+      .toDF("pi", "pj", "r")
+  }
+
+  /** A complete COO matrix pulled to the driver: probe ids ascending,
+    * the one sample sequence every probe covers (ascending), and each
+    * probe's values aligned to it — `values(p)(k)` is the cell
+    * (samples(k), probes(p)).
+    */
+  private[pipeline] final case class DenseMatrix(
+      probes: Array[Int],
+      samples: Array[Int],
+      values: Array[Array[Double]],
+  )
+
+  /** The dense paths' one collect, with the completeness guards.
+    *
+    * Requires a COMPLETE matrix (every sample × probe cell present
+    * exactly once) — asserted; the reference runs it post-completion
+    * only.
+    */
+  private[pipeline] def collectDense(spark: SparkSession, matrix: DataFrame): DenseMatrix = {
+    import spark.implicits._
     // typed Dataset of PRIMITIVE arrays: the encoder deserializes
     // Array[Int]/Array[Double] as int[]/double[] — the collected heap is
-    // the 8-bytes-per-cell the gate in `apply` budgets for, not the
-    // 4-6× boxed Seq overhead a Row/Seq collect would carry
-    val rows = matrix
+    // the 8-bytes-per-cell the dense gate budgets for, not the 4-6×
+    // boxed Seq overhead a Row/Seq collect would carry
+    val byProbe = matrix
       .groupBy("probe")
       .agg(
         expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.sample)").as("ss"),
         expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.value)").as("vs"))
       .as[(Int, Array[Int], Array[Double])]
-      .collect()
+    val rows = byProbe.collect()
     require(rows.nonEmpty, "empty matrix")
     // alignment guard: every probe must cover the IDENTICAL sample
     // sequence — equal counts alone would let positionally-misaligned
     // vectors through (the reference's quirk Q2, the exact bug this
-    // module exists to fix)
-    val samples0 = rows.head._2
+    // module exists to fix) — and that sequence must hold each sample
+    // once: a duplicate (sample, probe) observation repeated on every
+    // probe would pass the equality check alone
+    val samples = rows.head._2
     require(
-      rows.forall(r => java.util.Arrays.equals(r._2, samples0)),
-      "pearsonEdgesDense requires a complete matrix (identical sample set per probe)")
-    val n = samples0.length
-    // standardize: z = (x - mean) / (sd·sqrt(n)) so dot(z_i, z_j) = r.
-    // Index-aligned PRIMITIVE arrays, sorted by probe id: the inner
-    // pair loop below must be pure double[] arithmetic — a Map[Int, _]
-    // lookup per pair would box the key and hash 230M+ times at the
-    // reference shape (measured 10×+ slower than the flops themselves)
+      rows.forall(r => java.util.Arrays.equals(r._2, samples)) &&
+        samples.indices.drop(1).forall(k => samples(k - 1) < samples(k)),
+      "dense path requires a complete matrix (each sample exactly once per probe) — " +
+        "matrix incomplete, or a duplicate (sample, probe) observation survived ingest")
+    // index-aligned PRIMITIVE arrays, sorted by probe id: the pair loop
+    // must be pure double[] arithmetic — a Map[Int, _] lookup per pair
+    // would box the key and hash 230M+ times at the reference shape
+    // (measured 10×+ slower than the flops themselves)
     val sorted = rows.sortBy(_._1)
-    val probes: Array[Int] = sorted.map(_._1)
-    val z: Array[Array[Double]] = sorted.map { case (_, _, vs) =>
+    DenseMatrix(sorted.map(_._1), samples, sorted.map(_._3))
+  }
+
+  /** Standardize each probe row so that r_ij = z_i · z_j —
+    * z = (x - mean) / (sd·sqrt(n)); null for a zero-variance probe (its
+    * r is undefined, reference F5) — and broadcast the rows. The
+    * caller destroys the broadcast once its pass has run.
+    */
+  private def broadcastStandardized(
+      spark: SparkSession,
+      values: Array[Array[Double]],
+  ): Broadcast[Array[Array[Double]]] = {
+    val z: Array[Array[Double]] = values.map { vs =>
+      val n = vs.length
       val mean = vs.sum / n
       var ss = 0.0
       vs.foreach(v => ss += (v - mean) * (v - mean))
       val norm = math.sqrt(ss)
       if (norm == 0.0) null else vs.map(v => (v - mean) / norm)
     }
-    val bz = spark.sparkContext.broadcast(z)
-    val bp = spark.sparkContext.broadcast(probes)
-    val nP = probes.length
-    // many small index ranges: row i costs (nP-1-i) dots, so contiguous
-    // ranges are skewed — 16× oversubscription lets the scheduler
-    // balance them dynamically
-    val parts = math.min(spark.sparkContext.defaultParallelism * 16, nP)
-    spark.sparkContext
-      .parallelize(0 until nP, parts)
-      .flatMap { i =>
-        val zs = bz.value
-        val zi = zs(i)
-        if (zi == null) Iterator.empty
-        else {
-          val ids = bp.value
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-          var j = i + 1
-          while (j < zs.length) {
-            val zj = zs(j)
-            if (zj != null) {
-              var d = 0.0
-              var k = 0
-              while (k < zi.length) { d += zi(k) * zj(k); k += 1 }
-              // fp guard: z·z can overshoot ±1 by ~1e-15
-              d = math.min(1.0, math.max(-1.0, d))
-              if (math.abs(d) >= threshold) out += ((ids(i), ids(j), d))
-            }
-            j += 1
-          }
-          out.iterator
+    spark.sparkContext.broadcast(z)
+  }
+
+  /** Many small row ranges: row i costs (nP-1-i) dots, so contiguous
+    * ranges are skewed — 16× oversubscription lets the scheduler
+    * balance them dynamically.
+    */
+  private def kernelPartitions(spark: SparkSession, nP: Int): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism * 16, nP))
+
+  /** Calls `f(j, r)` for every row j > i with |r_ij| >= threshold over
+    * standardized rows (null rows — zero variance — have no edges).
+    */
+  private def forEachEdge(zs: Array[Array[Double]], i: Int, threshold: Double)(
+      f: (Int, Double) => Unit): Unit = {
+    val zi = zs(i)
+    if (zi != null) {
+      var j = i + 1
+      while (j < zs.length) {
+        val zj = zs(j)
+        if (zj != null) {
+          var d = 0.0
+          var k = 0
+          while (k < zi.length) { d += zi(k) * zj(k); k += 1 }
+          // fp guard: z·z can overshoot ±1 by ~1e-15
+          d = math.min(1.0, math.max(-1.0, d))
+          if (math.abs(d) >= threshold) f(j, d)
         }
+        j += 1
       }
-      .toDF("pi", "pj", "r")
+    }
+  }
+
+  /** Union-find root of x, halving the path on the way. */
+  private def find(parent: Array[Int], x: Int): Int = {
+    var a = x
+    while (parent(a) != a) { parent(a) = parent(parent(a)); a = parent(a) }
+    a
+  }
+
+  /** Joins the sets of a and b under the SMALLER root, so every root is
+    * the minimum index of its set.
+    */
+  private def union(parent: Array[Int], a: Int, b: Int): Unit = {
+    val (ra, rb) = (find(parent, a), find(parent, b))
+    if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+  }
+
+  /** Row indices that survive the network filter: one pass over the
+    * broadcast standardized rows in which each task unions its
+    * above-threshold pairs into a local union-find and returns only the
+    * entries it changed, as flat (index, root) pairs. The driver merges
+    * them; roots are minimum indices, and rows are in probe-id order,
+    * so the survivors — every root, i.e. each component's minimum probe
+    * plus every probe with no edge — are exactly what GraphX's min-id
+    * labels followed by `filterMatrix` keep.
+    */
+  private[pipeline] def denseSurvivors(
+      spark: SparkSession,
+      values: Array[Array[Double]],
+      threshold: Double,
+      partitions: Option[Int] = None,
+  ): Array[Int] = {
+    val nP = values.length
+    val bz = broadcastStandardized(spark, values)
+    val tasks = spark.sparkContext
+      .parallelize(0 until nP, partitions.getOrElse(kernelPartitions(spark, nP)))
+      .mapPartitions { rows =>
+        val zs = bz.value
+        val parent = Array.tabulate(zs.length)(identity)
+        rows.foreach(i => forEachEdge(zs, i, threshold)((j, _) => union(parent, i, j)))
+        val out = Array.newBuilder[Int]
+        parent.indices.foreach { x =>
+          if (parent(x) != x) { out += x; out += find(parent, x) }
+        }
+        Iterator.single(out.result())
+      }
+    val changed = try tasks.collect() finally bz.destroy()
+    val parent = Array.tabulate(nP)(identity)
+    changed.foreach(c => c.indices.by(2).foreach(k => union(parent, c(k), c(k + 1))))
+    parent.indices.filter(i => find(parent, i) == i).toArray
+  }
+
+  /** Dense-regime network filter and feature assembly in one step: the
+    * completed matrix is collected once (`collectDense`), one
+    * distributed pass finds the surviving probes (`denseSurvivors`;
+    * threshold None keeps all, reference `PreProcess.scala:156`), and
+    * the per-sample vectors are built on the driver from the arrays
+    * already held. No edge DataFrame, no GraphX, no filter join and no
+    * re-aggregation. Returns the features — same rows and bit-identical
+    * vectors as `filterMatrix` then `Svm.assembleFeatures` — and the
+    * surviving probe count.
+    *
+    * Driver peak: the one `denseFootprintBytes` models (collected
+    * arrays, z rows, broadcast chunks); the z rows and their broadcast
+    * are released before the vectors (≤ 8 B/cell) are built.
+    */
+  def denseFeatures(
+      spark: SparkSession,
+      matrix: DataFrame,
+      threshold: Option[Double],
+  ): (DataFrame, Long) = {
+    val d = collectDense(spark, matrix)
+    val keep = threshold.fold(d.probes.indices.toArray)(denseSurvivors(spark, d.values, _))
+    (Svm.denseFeatures(spark, d.samples, keep.map(d.values)), keep.length.toLong)
   }
 
   /** Connected components over an (pi, pj) edge list via GraphX
@@ -320,8 +450,28 @@ object Network {
     */
   val DefaultMaxDenseBytes: Long = 256L << 20
 
-  /** Full network step: edges → components → filtered matrix.
+  /** The dense-path gate, shared by `apply` and `LuadPipeline.run`:
+    * a skinny matrix (few samples, many probes — the reference shape)
+    * whose MODELED driver peak (`denseFootprintBytes`, not a cell
+    * count) fits the session budget `spark.graft.pearson.maxDenseBytes`.
+    */
+  def useDense(spark: SparkSession, nSamples: Long, nProbes: Long): Boolean = {
+    val maxBytes = spark.conf
+      .getOption("spark.graft.pearson.maxDenseBytes")
+      .map(_.toLong)
+      .getOrElse(DefaultMaxDenseBytes)
+    val bytes = denseFootprintBytes(nSamples, nProbes)
+    val dense = nSamples <= 10000 && bytes <= maxBytes
+    System.err.println(
+      s"[graft] pearson path: ${if (dense) "dense-broadcast" else "relational-self-join"} " +
+        s"(samples=$nSamples probes=$nProbes footprint=${bytes >> 20}MB budget=${maxBytes >> 20}MB)")
+    dense
+  }
+
+  /** Full network step: the matrix restricted to the surviving probes.
     * threshold None → pass-through (reference `PreProcess.scala:156`).
+    * Dense regime: `denseSurvivors` (no edge frame, no GraphX);
+    * otherwise `filterRelational`.
     */
   def apply(
       spark: SparkSession,
@@ -331,43 +481,35 @@ object Network {
   ): DataFrame = threshold match {
     case None => matrix
     case Some(t) =>
-      // skinny matrix (few samples, many probes — the reference shape)
-      // → dense broadcast block-multiply; otherwise relational
-      // self-join. The gate bounds the MODELED driver peak (see
-      // denseFootprintBytes), not a cell count. `cards` = caller-known
-      // (nSamples, nProbes) so a pipeline that already counted them
-      // doesn't pay two more distinct-shuffles here (r15 review).
+      // `cards` = caller-known (nSamples, nProbes) so a pipeline that
+      // already counted them doesn't pay two more distinct-shuffles
+      // here
       val (nSamples, nProbes) = cards.getOrElse((
         matrix.select("sample").distinct().count(),
         matrix.select("probe").distinct().count()))
-      val maxBytes = spark.conf
-        .getOption("spark.graft.pearson.maxDenseBytes")
-        .map(_.toLong)
-        .getOrElse(DefaultMaxDenseBytes)
-      val bytes = denseFootprintBytes(nSamples, nProbes)
-      val useDense = nSamples <= 10000 && bytes <= maxBytes
-      System.err.println(
-        s"[graft] pearson path: ${if (useDense) "dense-broadcast" else "relational-self-join"} " +
-          s"(samples=$nSamples probes=$nProbes footprint=${bytes >> 20}MB budget=${maxBytes >> 20}MB)")
-      val t0 = System.nanoTime()
-      // localCheckpoint (eager): edges feed both CC and nothing else,
-      // but materializing splits the timing and keeps GraphX off the
-      // full Pearson lineage
-      val edges =
-        (if (useDense) pearsonEdgesDense(spark, matrix, t)
-         else pearsonEdges(matrix, t)).localCheckpoint()
-      val nEdges = edges.count()
-      val t1 = System.nanoTime()
-      // already materialized + localCheckpoint'd inside (so it can free
-      // its cached GraphX RDDs) — a second checkpoint here would just
-      // copy the blocks
-      val comps = connectedComponents(spark, edges)
-      val nInGraph = comps.count()
-      val t2 = System.nanoTime()
-      val result = filterMatrix(matrix, comps)
-      System.err.println(
-        f"[graft] pearson edges=$nEdges (${(t1 - t0) / 1e9}%.1f s), " +
-          f"cc vertices=$nInGraph (${(t2 - t1) / 1e9}%.1f s)")
-      result
+      if (useDense(spark, nSamples, nProbes)) {
+        import spark.implicits._
+        val d = collectDense(spark, matrix)
+        val keep = denseSurvivors(spark, d.values, t).map(d.probes)
+        matrix.join(keep.toSeq.toDF("probe"), Seq("probe"), "left_semi")
+      } else filterRelational(spark, matrix, t)
+  }
+
+  /** The relational regime's network step: Pearson self-join edges →
+    * GraphX CC → `filterMatrix`.
+    */
+  def filterRelational(spark: SparkSession, matrix: DataFrame, threshold: Double): DataFrame = {
+    val t0 = System.nanoTime()
+    // localCheckpoint (eager): materializing splits the timing and
+    // keeps GraphX off the full Pearson lineage
+    val edges = pearsonEdges(matrix, threshold).localCheckpoint()
+    val t1 = System.nanoTime()
+    // materialized + localCheckpoint'd inside (so it can free its
+    // cached GraphX RDDs)
+    val comps = connectedComponents(spark, edges)
+    val t2 = System.nanoTime()
+    System.err.println(
+      f"[graft] pearson edges ${(t1 - t0) / 1e9}%.1f s, cc ${(t2 - t1) / 1e9}%.1f s")
+    filterMatrix(matrix, comps)
   }
 }

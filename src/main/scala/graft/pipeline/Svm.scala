@@ -57,6 +57,24 @@ object Svm {
     assembled.select(col("sample"), toVec(col("values")).as("features"))
   }
 
+  /** Per-sample dense feature vectors from driver-resident probe
+    * columns: `columns(p)(k)` is probe p's value for `samples(k)`, with
+    * columns in probe-id order — the same rows and values, bit for
+    * bit, as `assembleFeatures` over the matching COO matrix. The
+    * caller guarantees completeness (`Network.collectDense` asserts
+    * it).
+    */
+  def denseFeatures(
+      spark: SparkSession,
+      samples: Array[Int],
+      columns: Array[Array[Double]],
+  ): DataFrame = {
+    import spark.implicits._
+    samples.indices
+      .map(k => (samples(k), Vectors.dense(Array.tabulate(columns.length)(p => columns(p)(k)))))
+      .toDF("sample", "features")
+  }
+
   /** Train on the labeled subset (F1 semi-join on training ids),
     * labels ±1.0 → {0,1}.
     */

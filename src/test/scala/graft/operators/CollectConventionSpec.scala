@@ -34,10 +34,18 @@ class CollectConventionSpec extends AnyFunSuite {
     ("SimilarityOps.scala", ".collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq"),
     // single-row min/max bounds aggregate (the q108 bounds pattern)
     ("Relational.scala", "df.agg(min(a), max(a), min(b), max(b)).collect().head"),
-    // dense-Pearson matrix pull: probes × samples primitive arrays,
-    // entered ONLY under the measured memory-budget gate in `apply`
-    // (the budget require() is the loud guard)
-    ("Network.scala", ".collect()"),
+    // dense-path matrix pull: probes × samples primitive arrays,
+    // entered ONLY under the memory-budget gate `Network.useDense`
+    ("Network.scala", "byProbe.collect()"),
+    // dense-path union-find merge: per kernel task, the (index, root)
+    // int pairs its union-find changed — ≤ 2 ints per probe per task
+    // (tasks ≤ 16 × cores), one int pair per probe that has an edge in
+    // the task; same budget gate as the matrix pull
+    ("Network.scala", "tasks.collect()"),
+    // distinct probe names for the probe dictionary: probes-sized
+    // (~21.5k at the reference shape), and the dictionary is the
+    // broadcast join's build side, so it is driver-resident anyway
+    ("Ingest.scala", "named.select(\"probe_name\").distinct().as[String].collect()"),
     // distinct ingested sample ids: registry-sized (62 samples at the
     // reference shape) — the coverage-guard cardinality pass
     ("LuadPipeline.scala", "matrix.select(\"sample\").distinct().collect()"),

@@ -129,10 +129,12 @@ class IngestSpec extends SparkSpec {
       ex.getMessage.contains("zero parseable"), ex.getMessage)
   }
 
-  test("end-to-end with pc-threshold: correlated probes collapse to representatives") {
-    val dir = Files.createTempDirectory("graft_corpus_thr")
+  /** The mini-corpus with probe p005 rewritten to mirror p000 exactly
+    * (an |r| = 1 edge), at pc-threshold 0.99.
+    */
+  private def mirroredCorpus(name: String): (String, DefParser.PipelineConfig) = {
+    val dir = Files.createTempDirectory(name)
     val base = writeCorpus(dir, nTrain = 12, nPredict = 4, nProbes = 6)
-    // rewrite probe p005 to mirror p000 exactly → |r| = 1 edge
     val config0 = DefParser.parseFile(s"$base/input.txt")
     config0.samples.foreach { sspec =>
       val f = dir.resolve(sspec.files("expr"))
@@ -145,13 +147,106 @@ class IngestSpec extends SparkSpec {
       }
       Files.writeString(f, patched.mkString("\n"))
     }
-    val config = config0.copy(pcThreshold = Some(0.99))
-    val result = LuadPipeline.run(
+    (base, config0.copy(pcThreshold = Some(0.99)))
+  }
+
+  private def runMini(base: String, config: DefParser.PipelineConfig) =
+    LuadPipeline.run(
       spark, base, config,
       Completion.AlsParams(rank = 3, maxIter = 3, numBlocks = 2),
       Svm.SvmParams(maxIter = 20))
+
+  test("end-to-end with pc-threshold: correlated probes collapse to representatives") {
+    val (base, config) = mirroredCorpus("graft_corpus_thr")
+    val result = runMini(base, config)
     assert(result.nProbesBefore == 6)
     assert(result.nProbesAfter == 5) // p005 merged into p000's component
     assert(result.predictions.count() == 4)
+  }
+
+  test("a dense-path run starts no GraphX and no zipWithIndex job; the relational path agrees") {
+    val (base, config) = mirroredCorpus("graft_corpus_jobs")
+    def predictions(r: LuadPipeline.Result) =
+      r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
+    assert(Network.useDense(spark, config.samples.size.toLong, 6L))
+    val (dense, denseJobs) = graft.JobStacks(spark)(runMini(base, config))
+    assert(denseJobs.exists(_.contains("denseSurvivors")), "the fused kernel did not run")
+    for (code <- Seq("org.apache.spark.graphx", "zipWithIndex", "pearsonEdges",
+        "connectedComponents", "filterRelational"))
+      assert(!denseJobs.exists(_.contains(code)), s"dense-path run started a job in $code")
+
+    // the same run forced onto the relational path (a zero driver
+    // budget) — which the listener must see running GraphX
+    spark.conf.set("spark.graft.pearson.maxDenseBytes", "0")
+    val (relational, relationalJobs) =
+      try graft.JobStacks(spark)(runMini(base, config))
+      finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
+    assert(relationalJobs.exists(_.contains("org.apache.spark.graphx")))
+    assert(relational.nProbesAfter == dense.nProbesAfter)
+    assert(predictions(relational) == predictions(dense))
+    // and it sees a zipWithIndex job when one runs
+    val (_, zipJobs) = graft.JobStacks(spark)(spark.sparkContext.parallelize(1 to 4, 2).zipWithIndex().count())
+    assert(zipJobs.exists(_.contains("zipWithIndex")))
+  }
+
+  test("a sample-type with more files than Spark's default listing threshold tags every row") {
+    // 40 files (Spark lists more than 32 explicit paths in a job by
+    // default); value = 100 × sample index + probe index identifies the
+    // file each row came from. Two probe names order differently in
+    // UTF-8 bytes (Spark) and UTF-16 units (Java).
+    val dir = Files.createTempDirectory("graft_corpus_wide")
+    val probeNames = Seq("p\uFF01", "p\uD83D\uDE00", "pb", "pa", "p0")
+    val names = (0 until 40).map(i => f"S-$i%02d")
+    val defLines = new StringBuilder("def\tsample-type\texpr\ndef\tpc-threshold\tnone\n")
+    names.zipWithIndex.foreach { case (n, i) =>
+      defLines ++= s"def\t${if (i < 30) "sample" else "predictive"}\t$n\n"
+      if (i % 2 == 0) defLines ++= s"diagnosis\t$n\tTN\n"
+      defLines ++= s"expr\t$n\t$n.txt\n"
+      Files.writeString(dir.resolve(s"$n.txt"), probeNames.zipWithIndex
+        .map { case (p, k) => s"$p\t${100 * i + k}\n" }.mkString("probe\tvalue\n", "", ""))
+    }
+    Files.writeString(dir.resolve("input.txt"), defLines.toString)
+    val base = dir.toString
+    val config = DefParser.parseFile(s"$base/input.txt")
+
+    def decoded(r: Ingest.IngestResult) = r.matrix
+      .join(r.sampleDict, "sample").join(r.probeDict, "probe")
+      .select("sample_name", "probe_name", "value")
+      .collect().map(row => (row.getString(0), row.getString(1), row.getDouble(2))).toSet
+    val expected = (for {
+      (n, i) <- names.zipWithIndex; (p, k) <- probeNames.zipWithIndex
+    } yield (n, p, 100.0 * i + k)).toSet
+    val listingKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    // with an explicit schema, the only job the scan's construction
+    // can start is the distributed file listing
+    val listing = "csv at Ingest.scala"
+
+    // listed on the driver at the session's threshold ...
+    val (r, jobs) = graft.JobStacks(spark)(Ingest.ingest(spark, base, config))
+    assert(!jobs.exists(_.startsWith(listing)), "listing ran as a Spark job")
+    assert(decoded(r) == expected)
+    // ... and in a Spark job above a lowered one, with the same rows
+    val threshold = spark.conf.get(listingKey)
+    spark.conf.set(listingKey, "8")
+    val (rDistributed, jobsDistributed) =
+      try graft.JobStacks(spark)(Ingest.ingest(spark, base, config))
+      finally spark.conf.set(listingKey, threshold)
+    assert(jobsDistributed.exists(_.startsWith(listing)))
+    assert(decoded(rDistributed) == expected)
+
+    // probe ids: the dense range 0..P-1 in Spark's string order
+    val dict = r.probeDict.orderBy("probe").collect().map(row => (row.getString(0), row.getInt(1)))
+    assert(dict.map(_._2).toSeq == probeNames.indices)
+    assert(dict.map(_._1).toSeq ==
+      r.probeDict.orderBy("probe_name").collect().map(_.getString(0)).toSeq)
+    assert(dict.map(_._1).toSeq == Seq("p0", "pa", "pb", "p\uFF01", "p\uD83D\uDE00"))
+    assert(r.nProbes == probeNames.size)
+
+    val result = LuadPipeline.run(
+      spark, base, config,
+      Completion.AlsParams(rank = 2, maxIter = 2, numBlocks = 2),
+      Svm.SvmParams(maxIter = 5))
+    assert(result.nProbesBefore == r.nProbes && result.nProbesAfter == r.nProbes)
+    assert(result.predictions.count() == 10)
   }
 }

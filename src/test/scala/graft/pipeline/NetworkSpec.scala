@@ -190,4 +190,108 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(Set(comps(3), comps(4), comps(5)).size == 1)
     assert(comps(0) != comps(3))
   }
+
+  /** A random block-correlated matrix with the shapes the dense kernel
+    * must get right: correlated blocks, a zero-variance probe, a
+    * negatively correlated pair, and a chain p0-p1-p2-p3 whose links
+    * are edges (r = 0.5) while its non-adjacent pairs are not (r = 0),
+    * spread over the probe order so its edges fall in different kernel
+    * tasks. Probe ids are shuffled and non-contiguous. Returns the COO
+    * rows and the chain's probe ids.
+    */
+  private def kernelCase(seed: Int, nSamples: Int): (Seq[(Int, Int, Double)], Seq[Int]) = {
+    val rnd = new Random(seed)
+    val blocks = (0 until 4).flatMap { _ =>
+      val signal = Array.fill(nSamples)(rnd.nextGaussian())
+      Seq.fill(2 + rnd.nextInt(4))(
+        signal.map(v => v * (rnd.nextDouble() + 0.5) + rnd.nextGaussian() * 0.1))
+    }
+    val noise = Seq.fill(8)(Array.fill(nSamples)(rnd.nextGaussian()))
+    val constant = Array.fill(nSamples)(3.25)
+    val negA = Array.fill(nSamples)(rnd.nextGaussian())
+    val negB = negA.map(v => -2.0 * v + rnd.nextGaussian() * 0.01)
+    // zero-mean, mutually orthogonal cosines: p_k = e_k + e_(k+1)
+    def e(k: Int) = Array.tabulate(nSamples)(s => math.cos(2 * math.Pi * k * s / nSamples))
+    val chain = (1 to 4).map(k => e(k).zip(e(k + 1)).map { case (a, b) => a + b })
+    val others = rnd.shuffle(blocks ++ noise ++ Seq(constant, negA, negB))
+    // chain members at the start, middle and end of the probe order
+    val third = others.size / 3
+    val rows = Seq(chain(0)) ++ others.take(third) ++ Seq(chain(1)) ++
+      others.slice(third, 2 * third) ++ Seq(chain(2)) ++ others.drop(2 * third) ++ Seq(chain(3))
+    val ids = rows.indices.map(_ * 7 + 3) // ascending in row order
+    val chainIds = Seq(0, third + 1, 2 * third + 2, rows.size - 1).map(ids)
+    val coo = rnd.shuffle(for {
+      (vals, p) <- rows.zip(ids); s <- 0 until nSamples
+    } yield (s, p, vals(s)))
+    (coo, chainIds)
+  }
+
+  private def vectors(features: org.apache.spark.sql.DataFrame): Map[Int, Array[Double]] =
+    features.collect().map(r =>
+      r.getInt(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray).toMap
+
+  test("fused dense kernel matches pearsonEdgesDense → GraphX CC → filterMatrix → assembleFeatures") {
+    val t = 0.45
+    for (seed <- 1 to 3) {
+      val (coo, chainIds) = kernelCase(seed, nSamples = 40)
+      val df = cooDF(coo)
+      // the chain is one component through three edges, no shortcut
+      val edgeDf = Network.pearsonEdgesDense(spark, df, t)
+      val edges = edgeDf.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      chainIds.sliding(2).foreach { case Seq(a, b) => assert(edges.contains((a, b)), s"seed $seed") }
+      assert(!edges.contains((chainIds(0), chainIds(2))), s"seed $seed")
+      assert(edges.values.exists(_ <= -t), s"seed $seed: no negative edge")
+
+      val filtered = Network.filterMatrix(df, Network.connectedComponents(spark, edgeDf))
+      val legacySurvivors = filtered.select("probe").distinct().collect().map(_.getInt(0)).toSet
+      val legacyVectors = vectors(Svm.assembleFeatures(filtered))
+
+      val d = Network.collectDense(spark, df)
+      val constantId = d.probes(d.values.indexWhere(vs => vs.distinct.length == 1))
+      assert(legacySurvivors.contains(constantId), s"seed $seed: zero-variance probe dropped")
+      // one kernel task, a few multi-row tasks, one row per task
+      for (parts <- Seq(Some(1), Some(3), None)) {
+        val got = Network.denseSurvivors(spark, d.values, t, parts).map(d.probes).toSet
+        assert(got == legacySurvivors, s"seed $seed, partitions $parts")
+      }
+      val (features, nAfter) = Network.denseFeatures(spark, df, Some(t))
+      assert(nAfter == legacySurvivors.size)
+      val fused = vectors(features)
+      assert(fused.keySet == legacyVectors.keySet, s"seed $seed")
+      fused.foreach { case (sample, v) =>
+        assert(java.util.Arrays.equals(v, legacyVectors(sample)), s"seed $seed, sample $sample")
+      }
+    }
+  }
+
+  test("fused dense kernel without a threshold keeps every probe") {
+    val (coo, _) = kernelCase(4, nSamples = 20)
+    val df = cooDF(coo)
+    val (features, nAfter) = Network.denseFeatures(spark, df, None)
+    assert(nAfter == df.select("probe").distinct().count())
+    val legacy = vectors(Svm.assembleFeatures(df))
+    val fused = vectors(features)
+    assert(fused.keySet == legacy.keySet)
+    fused.foreach { case (s, v) => assert(java.util.Arrays.equals(v, legacy(s)), s"sample $s") }
+  }
+
+  test("fused dense kernel fails loudly on an incomplete matrix or a duplicate observation") {
+    val full = for { s <- 0 until 6; p <- 0 until 4 } yield (s, p, s * 1.5 + p * p)
+    val incomplete = full.filterNot(_ == full(5))
+    val duplicateCell = full :+ full(5)
+    // a whole sample repeated: every probe sees the same (duplicated)
+    // sample sequence, so only the once-per-probe check catches it
+    val duplicateSample = full ++ full.filter(_._1 == 2)
+    for ((name, rows) <- Seq(
+        "incomplete" -> incomplete, "duplicate cell" -> duplicateCell,
+        "duplicate sample" -> duplicateSample)) {
+      val df = cooDF(rows)
+      // the relational assembly rejects the same inputs (probe_sig)
+      assertThrows[IllegalArgumentException](Svm.assembleFeatures(df))
+      for (t <- Seq(Some(0.5), None)) {
+        val e = intercept[IllegalArgumentException](Network.denseFeatures(spark, df, t))
+        assert(e.getMessage.contains("complete matrix"), s"$name, threshold $t: ${e.getMessage}")
+      }
+    }
+  }
 }
