@@ -41,8 +41,7 @@ object DedupScale {
     * Pid-scoped, caller removes on exit (main's finally): a fixed
     * shared path let a concurrent run's overwrite delete part files
     * under this run's in-flight scan — the q205 race class — and each
-    * run leaked a fixture-sized copy (r13 instrument review; same fix
-    * as Bench's rewrite).
+    * run leaked a fixture-sized copy (r13 instrument review).
     */
   private def synthesize(spark: org.apache.spark.sql.SparkSession, srcDir: String, xf: Int): String = {
     val out = s"/tmp/graft_dedup_scale/pid${ProcessHandle.current().pid()}_" +

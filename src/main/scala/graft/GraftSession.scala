@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the engine — the single place session conf
-  * lives (Bench/BenchOne/Verify/LuadPipeline all build through here, so
-  * the configs can't drift).
+  * lives (Verify, LuadPipeline, the audit mains and perfbench all build
+  * through here, so the configs can't drift).
   *
   * Scale posture: AQE on (runtime join-strategy switch, skew splitting,
   * partition coalescing), shuffle partitions sized for the local[32]
@@ -87,8 +87,8 @@ object GraftSession {
   }
 
   /** Recursive local-file delete shared by the harness mains' scratch
-    * cleanup (Verify's failed-write removal, Bench/BenchScan/DedupScale
-    * pid-scoped rewrites, Relational's roundtrip shutdown hook) — ONE
+    * cleanup (Verify's failed-write removal, DedupScale's pid-scoped
+    * rewrite, Relational's roundtrip shutdown hook) — ONE
     * implementation, previously copy-pasted in five files where a fix
     * to any copy would silently miss the others (r15 gate-tooling
     * review). Recursive because a failed Spark write can leave a

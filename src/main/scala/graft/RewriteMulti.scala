@@ -7,7 +7,7 @@ package graft
   * first thing real 100 TB data has is MANY files. This main rewrites
   * each table as an `nFiles`-part parquet directory (round-robin
   * repartition: even part sizes, no layout skew) so the whole surface
-  * can be re-run — oracle gate AND bench — against a source layout
+  * can be re-run through the oracle gate against a source layout
   * whose scans actually parallelize.
   *
   * `events` goes through [[Tables.events]] first, so its TIMESTAMP
@@ -19,14 +19,11 @@ package graft
   * Then:  runMain graft.Verify <outDir> <verifyOut>
   *        python3 tools/check.py <sfDir> <verifyOut>   # oracle reads
   *                                                     # the ORIGINAL
-  *        SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench
   */
 object RewriteMulti {
 
   /** Rewrite every fixture table under `sfDir` as an `nFiles`-part
-    * parquet directory under `outDir`. Callable (Bench uses it to
-    * build its primary multi-file layout); the main below is the
-    * standalone CLI the close chain drives.
+    * parquet directory under `outDir`.
     */
   def rewrite(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       outDir: String, nFiles: Int): Unit = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * form (sketch + exact in one aggregation — countDistinct forces an
   * Expand that doubles the shuffled rows), the sketch-only form a
   * production rollup would run, and the exact-only form, each warm,
-  * min-of-3, through the noop sink exactly like Bench. Results recorded
+  * min-of-3, through the noop sink. Results recorded
   * in BASELINE.md as the re-recorded like-for-like baseline pair.
   *
   * Usage: runMain graft.SketchCost [sfDir]

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** All declared operator queries, in registration order. lazy val,
-    * not def: Bench/BenchOne touch this inside timed paths, and a def
+    * not def: Verify and the benchmark read it per query, and a def
     * would re-concatenate all 15 spec seqs per call.
     */
   lazy val specs: Seq[QuerySpec] = {

@@ -62,10 +62,6 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val xf = if (args.length > 1) args(1).toInt else 10
-    // host-load calibration, same protocol as Bench: rows/sec deltas
-    // across runs mean nothing without it (the r12 noise episodes)
-    val nominal = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val calPre = Bench.effectiveCores(nominal)
     val spark = GraftSession.fromEnv()
     // recentProgress is a BOUNDED rolling buffer (default 100): at
     // large xf the drop(before) accounting below would silently slice
@@ -209,12 +205,6 @@ object StreamBench {
           h = 50.0 * math.max(1.0, math.abs(evMean))))
       benchTwin("first_seen", evRows, 10000)(df =>
         graft.streaming.Streams.firstSeenStream(df))
-
-      val calPost = Bench.effectiveCores(nominal)
-      def r1(v: Double): Double = math.rint(v * 10) / 10
-      println(
-        s"""{"metric":"stream_bench_cal","effective_cores_pre":${r1(calPre._1)},""" +
-          s""""effective_cores_post":${r1(calPost._1)},"nominal":$nominal}""")
     } finally spark.stop()
   }
 }

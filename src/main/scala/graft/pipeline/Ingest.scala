@@ -28,8 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Ingest {
 
-  final case class MatrixEntry(sample: Int, probe: Int, value: Double)
-
   final case class IngestResult(
       matrix: DataFrame, // (sample INT, probe INT, value DOUBLE)
       sampleDict: DataFrame, // (name STRING, sample INT)
@@ -46,7 +44,11 @@ object Ingest {
       fileToSample: Map[String, String], // relative path → sample name
   ): DataFrame = {
     require(fileToSample.nonEmpty, "no files for sample-type")
-    val base = baseDir.stripSuffix("/") + "/"
+    // Spark reports each scanned file by its absolute, normalized path,
+    // so the base is normalized the same way once here: a base with a
+    // `.` or `..` segment (`./input.txt`'s parent is `<cwd>/.`) would
+    // otherwise never match and every row would fail the lookup below.
+    val base = java.nio.file.Paths.get(baseDir).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
     val paths = fileToSample.keys.map(base + _).toSeq.sorted
     // input_file_name() yields a percent-encoded URI (file:///...);
     // decode it, then strip everything up to the base dir and look the
@@ -92,19 +94,6 @@ object Ingest {
       .withColumn("value", expr("try_cast(raw_value AS DOUBLE)"))
       .filter(col("value").isNotNull && col("probe_name").isNotNull) // lenient
       .select("sample_name", "probe_name", "value")
-  }
-
-  /** Typed view of a COO matrix DataFrame — `Dataset[MatrixEntry]` with
-    * the case-class Encoder, for callers who want compile-time row
-    * types (`.map`/`.filter` over MatrixEntry instead of Row).
-    */
-  def typed(matrix: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Dataset[MatrixEntry] = {
-    val spark = matrix.sparkSession
-    import spark.implicits._
-    matrix.select(
-      col("sample").cast("int").as("sample"),
-      col("probe").cast("int").as("probe"),
-      col("value").cast("double").as("value")).as[MatrixEntry]
   }
 
   /** Full ingest: every declared sample-type of the config, read, tagged,

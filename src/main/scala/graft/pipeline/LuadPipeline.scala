@@ -24,8 +24,8 @@ object LuadPipeline {
       nProbesAfter: Long,
   )
 
-  /** Wall-time one pipeline phase to stderr (profiling aid — the e2e
-    * budget is tracked per-round).
+  /** Wall-time one pipeline phase to stderr (profiling aid; per-module
+    * timing is `perfbench/run.py --trace 1`).
     */
   private def timed[T](label: String)(body: => T): T = {
     val t0 = System.nanoTime()
@@ -146,73 +146,27 @@ object LuadPipeline {
 
   /** CLI mirroring the reference driver: args(0) = definition file.
     *
-    * Emits one `luad_e2e` JSON line (stderr — stdout belongs to the K1
-    * print sink) carrying the same effective-cores calibration + drift
-    * normalization as the bench mains (VERDICT r13 #3, executed r15):
-    * the e2e wall crept 50.4 → 106 s over five rounds with each
-    * reading adjudicated against host load in PROSE; the runner now
-    * measures the load around the run and emits the normalized wall
-    * itself. `pipeline_s` is the in-JVM pipeline wall (parse → run →
-    * sink); `session_s` is Spark-session construction; sbt/JVM startup
-    * stays outside the JVM's reach — historical BASELINE rows quote
-    * the full sbt wall, so cross-round rows should compare
-    * pipeline_s + session_s and note the ~25 s fixed sbt cost
-    * separately. Normalization and cal_stable semantics are exactly
-    * Bench's (normalized = raw × eff/nominal; spread over threshold →
-    * read raw); since r19 the line carries BOTH instruments — the
-    * bracket-only historical columns (*_2s, pipeline_normalized_s)
-    * and the three-sample robust-spread columns (see the main body).
+    * Emits one `luad_e2e` JSON line on stderr (stdout belongs to the
+    * print sink): `pipeline_s` is the in-JVM pipeline wall (parse → run
+    * → sink), `session_s` is Spark-session construction.
     */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: LuadPipeline <definition-file> — args(0) must be the def-file path")
     val defFile = args(0)
     val baseDir = new java.io.File(defFile).getAbsoluteFile.getParent
-    val nominal = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toIntOption.getOrElse(32)
-    val calPre = graft.Bench.effectiveCores(nominal)
     val t0 = System.nanoTime()
     val spark = graft.GraftSession.fromEnv()
     val sessionS = (System.nanoTime() - t0) / 1e9
-    // a third calibration sample BETWEEN session construction and the
-    // pipeline wall (VERDICT r18 #4): it sits OUTSIDE both timed
-    // windows, so the e2e walls are unperturbed — unlike Bench, whose
-    // totals are sums of per-query times, this main's metric IS a
-    // wall, so probing INSIDE it would inflate the thing measured.
-    // Three samples spanning ~50 s catch the ~30 s-timescale churn
-    // the two brackets alone were blind to.
-    val calMid = graft.Bench.effectiveCores(nominal)
     val t1 = System.nanoTime()
     val config = DefParser.parseFile(defFile)
     val result = run(spark, baseDir, config)
     writeOutput(result.predictions, config.outputPath)
     val pipelineS = (System.nanoTime() - t1) / 1e9
-    val calPost = graft.Bench.effectiveCores(nominal)
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    def r1(v: Double): Double = math.rint(v * 10) / 10
-    // normalization formula + cal_stable threshold are Bench's, by
-    // construction (shared Calibration), not by parallel maintenance.
-    // TWO instruments side by side (r19): `c2` is the bracket-only
-    // historical formula — pipeline_normalized_s and the *_2s fields
-    // keep the exact meaning every recorded creep-watch row was
-    // adjudicated under — while `c` folds the mid probe through the
-    // robust spread (the r19 instrument; its cal_stable gates at the
-    // n-aware Calibration.robustThresholdFor(3) ≈ 0.159 since r20 —
-    // at n=3 the quantile gap degenerates to 0.8×range, so the flat
-    // 0.30 gate was materially looser than the two-sample gate it
-    // replaced, ADVICE r19 #2); cross-round rows compare like with
-    // like and the new columns take over once anchored.
-    val c2 = graft.Bench.Calibration(calPre._1, calPost._1, nominal)
-    val c = graft.Bench.Calibration(calPre._1, calPost._1, nominal, Seq(calMid._1))
     System.err.println(
-      s"""{"metric":"luad_e2e","pipeline_s":${r3(pipelineS)},""" +
-        s""""pipeline_normalized_s":${r3(c2.normalize(pipelineS))},""" +
-        s""""pipeline_normalized_all_s":${r3(c.normalize(pipelineS))},""" +
-        s""""session_s":${r3(sessionS)},""" +
-        s""""n_probes_before":${result.nProbesBefore},"n_probes_after":${result.nProbesAfter},""" +
-        s""""effective_cores":{"pre":${r1(calPre._1)},"mid":${r1(calMid._1)},"post":${r1(calPost._1)}},""" +
-        s""""cal_spread_2s":${r3(c2.spread)},"cal_stable_2s":${c2.stable},""" +
-        s""""cal_spread":${r3(c.spread)},"cal_stable":${c.stable},""" +
-        s""""load_factor":${r3(c.loadFactor)}}""")
+      s"""{"metric":"luad_e2e","pipeline_s":${r3(pipelineS)},"session_s":${r3(sessionS)},""" +
+        s""""n_probes_before":${result.nProbesBefore},"n_probes_after":${result.nProbesAfter}}""")
     spark.stop()
   }
 }

@@ -450,7 +450,7 @@ object Network {
     */
   val DefaultMaxDenseBytes: Long = 256L << 20
 
-  /** The dense-path gate, shared by `apply` and `LuadPipeline.run`:
+  /** The dense-path gate of `LuadPipeline.run`:
     * a skinny matrix (few samples, many probes — the reference shape)
     * whose MODELED driver peak (`denseFootprintBytes`, not a cell
     * count) fits the session budget `spark.graft.pearson.maxDenseBytes`.
@@ -466,33 +466,6 @@ object Network {
       s"[graft] pearson path: ${if (dense) "dense-broadcast" else "relational-self-join"} " +
         s"(samples=$nSamples probes=$nProbes footprint=${bytes >> 20}MB budget=${maxBytes >> 20}MB)")
     dense
-  }
-
-  /** Full network step: the matrix restricted to the surviving probes.
-    * threshold None → pass-through (reference `PreProcess.scala:156`).
-    * Dense regime: `denseSurvivors` (no edge frame, no GraphX);
-    * otherwise `filterRelational`.
-    */
-  def apply(
-      spark: SparkSession,
-      matrix: DataFrame,
-      threshold: Option[Double],
-      cards: Option[(Long, Long)] = None,
-  ): DataFrame = threshold match {
-    case None => matrix
-    case Some(t) =>
-      // `cards` = caller-known (nSamples, nProbes) so a pipeline that
-      // already counted them doesn't pay two more distinct-shuffles
-      // here
-      val (nSamples, nProbes) = cards.getOrElse((
-        matrix.select("sample").distinct().count(),
-        matrix.select("probe").distinct().count()))
-      if (useDense(spark, nSamples, nProbes)) {
-        import spark.implicits._
-        val d = collectDense(spark, matrix)
-        val keep = denseSurvivors(spark, d.values, t).map(d.probes)
-        matrix.join(keep.toSeq.toDF("probe"), Seq("probe"), "left_semi")
-      } else filterRelational(spark, matrix, t)
   }
 
   /** The relational regime's network step: Pearson self-join edges →

@@ -81,8 +81,7 @@ object ConventionScan {
           } else if (at("\"\"\"")) {
             // Scala's greedy rule: in a run of >=3 quotes the LAST
             // three terminate; preceding ones are content
-            // (`...v)}""""` in Bench.scala ends a string with a
-            // literal quote)
+            // (`...v)}""""` ends a string with a literal quote)
             var q = 0
             while (i + q < src.length && src.charAt(i + q) == '"') q += 1
             out.append("\"" * q); stack = stack.tail; i += q

@@ -39,7 +39,7 @@ class ConventionScanSpec extends AnyFunSuite {
   }
 
   test("triple-quoted strings survive, including the 4-quote terminator") {
-    // the Bench.scala shape: string CONTENT ends with a quote, so the
+    // a JSON-emitting shape: string CONTENT ends with a quote, so the
     // terminator run is 4 quotes — a naive 3-quote match would leave
     // the lexer inside a phantom string and swallow following lines
     val src = "val j = s\"\"\"\"k\":$v\"\"\"\"\nval after = broadcast(f)"

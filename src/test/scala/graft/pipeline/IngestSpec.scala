@@ -79,12 +79,20 @@ class IngestSpec extends SparkSpec {
     assert(rows("hdr.txt") == want, "header line not dropped leniently")
   }
 
-  test("typed Dataset[MatrixEntry] view supports typed transforms") {
-    val s = spark; import s.implicits._
-    val df = Seq((0, 1, 2.5), (1, 0, 3.5)).toDF("sample", "probe", "value")
-    val ds = Ingest.typed(df)
-    assert(ds.filter(_.value > 3.0).map(_.sample).collect().toSeq == Seq(1))
-    assert(ds.orderBy("sample", "probe").head() == Ingest.MatrixEntry(0, 1, 2.5))
+  test("a base dir with . or .. segments ingests the same matrix as the plain dir") {
+    // Spark reports scanned files by their normalized path; an
+    // un-normalized base (`./input.txt` gives `<cwd>/.`) once failed
+    // every row with "cannot map scanned file back to a sample"
+    val dir = Files.createTempDirectory("graft_corpus_dots")
+    val base = writeCorpus(dir, nTrain = 4, nPredict = 2, nProbes = 3)
+    Files.createDirectories(dir.resolve("sub"))
+    val config = DefParser.parseFile(s"$base/input.txt")
+    def cells(b: String) = Ingest.ingest(spark, b, config).matrix
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).sorted.toSeq
+    val want = cells(base)
+    assert(want.size == 6 * 3)
+    assert(cells(s"$base/.") == want)
+    assert(cells(s"$base/sub/..") == want)
   }
 
   test("end-to-end pipeline on separable mini-corpus: correct ±1 predictions (P4)") {

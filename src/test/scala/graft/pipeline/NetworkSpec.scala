@@ -123,24 +123,29 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(Network.denseFootprintBytes(10000, 1000000) > Network.DefaultMaxDenseBytes)
   }
 
-  test("apply falls back to the relational path when the footprint exceeds the budget") {
+  test("the budget gate picks the path and both paths keep the same probes") {
     val rnd = new Random(23)
     val nSamples = 15; val nProbes = 10
     val coo = for {
       p <- 0 until nProbes; s <- 0 until nSamples
     } yield (s, p, rnd.nextDouble() * 4 - 2)
     val df = cooDF(coo)
-    // same matrix, both paths, forced via the budget conf: a budget of
-    // 0 bytes forbids the dense collect; a huge budget allows it. Both
-    // must produce identical surviving probes.
-    def survivors(maxBytes: Long): Set[Int] = {
+    // a budget of 0 bytes forbids the dense collect; a huge budget
+    // allows it
+    def dense(maxBytes: Long): Boolean = {
       spark.conf.set("spark.graft.pearson.maxDenseBytes", maxBytes.toString)
-      try Network(spark, df, Some(0.5))
-        .select("probe").distinct().collect().map(_.getInt(0)).toSet
+      try Network.useDense(spark, nSamples, nProbes)
       finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
     }
-    assert(Network.denseFootprintBytes(nSamples, nProbes) > 0L)
-    assert(survivors(0L) == survivors(Long.MaxValue))
+    assert(!dense(0L))
+    assert(dense(Long.MaxValue))
+    // same matrix, both paths: identical surviving probes
+    val d = Network.collectDense(spark, df)
+    val denseKeep = Network.denseSurvivors(spark, d.values, 0.5).map(d.probes).toSet
+    val relationalKeep = Network.filterRelational(spark, df, 0.5)
+      .select("probe").distinct().collect().map(_.getInt(0)).toSet
+    assert(denseKeep.size < nProbes, "no edge at this threshold: the filter is not exercised")
+    assert(relationalKeep == denseKeep)
   }
 
   test("connectedComponentsDF fails loudly when maxIter is too small") {

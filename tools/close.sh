@@ -5,13 +5,9 @@
 # correctness gates use tools/check.py, whose exit code since round 10
 # gates on the driver-exact mode, not just the 1e-6-tolerant compare.
 #
-# Usage: tools/close.sh [workdir=/tmp/graft_close] [round=N]
+# Usage: tools/close.sh [workdir=/tmp/graft_close]
 set -u
 WORK="${1:-/tmp/graft_close}"
-# round number for the in-repo bench artifact (VERDICT r12 #2): default
-# = the highest driver BENCH_r artifact + 1 (close runs before the
-# driver writes this round's)
-ROUND="${2:-$(ls BENCH_r*.json 2>/dev/null | sed 's/[^0-9]*//g' | sort -n | tail -1 | awk '{print $1+1}')}"
 SF001=/root/testdata/sf0.01
 SF01=/root/testdata/sf0.1
 mkdir -p "$WORK"
@@ -48,108 +44,12 @@ python3 tools/check.py "$SF01" "$WORK/verify_multi" > "$WORK/check_multi.log" 2>
   || { echo "FAIL: check multi"; fail=1; }
 tail -1 "$WORK/check_multi.log"
 
-step "4/6 bench at sf0.1 (primary = 8-file layout since r12; reuses step 3's rewrite; records calibration in target/bench.json)"
-# Calm-retry (VERDICT r16 #5): a loaded-host reading (cal_stable=false)
-# is protected-against below but unusable for cross-round comparison —
-# retry up to twice on a fresh window so the round's PRIMARY artifact
-# is calm whenever the host allows, instead of requiring a manual
-# re-run + the bench_rN_final.json convention after every loaded close.
-bench_ok=0
-for attempt in 1 2 3; do
-  # reset state per attempt AND preserve any prior attempt's artifact
-  # (r17 ADVICE): with the old rm -f, attempt 1 succeeding
-  # (cal_stable=false) followed by attempt 2's Bench FAILING left
-  # bench_ok=1 with the only usable reading deleted — the chain still
-  # went red, but the attempt-1 artifact was lost for adjudication.
-  # Now state and artifact stay consistent: bench_ok reflects THIS
-  # attempt, and earlier readings survive under $WORK — named for the
-  # attempt that PRODUCED them (r18 ADVICE: the old
-  # bench_art_prev_a$attempt name was off by one — written during
-  # attempt N it holds attempt N-1's reading, or a stale pre-run
-  # artifact when N=1, which misleads post-hoc adjudication).
-  bench_ok=0
-  if [ -f target/bench.json ]; then
-    if [ "$attempt" -eq 1 ]; then
-      mv target/bench.json "$WORK/bench_art_stale.json"
-    else
-      mv target/bench.json "$WORK/bench_art_a$((attempt-1)).json"
-    fi
-  fi
-  if SPARK_GRAFT_SF_DIR="$SF01" SPARK_GRAFT_MULTI_DIR="$WORK/sf01_multi8" sbt "runMain graft.Bench" > "$WORK/bench_a$attempt.log" 2>&1; then
-    bench_ok=1
-    python3 - <<'EOF'
-import json
-d = json.load(open('target/bench.json'))
-print(f"bench [{d.get('layout')}] total {d['value']} s raw / {d.get('value_normalized')} s "
-      f"drift-normalized (load_factor {d.get('load_factor')}, "
-      f"cal_stable {d.get('cal_stable')}) / {len(d['queries'])} queries; "
-      f"single-file continuity total {d.get('value_singlefile')} s; "
-      f"effective_cores {d.get('effective_cores')}; errors: {d.get('errors')}")
-EOF
-    stable=$(python3 -c "import json; print(json.load(open('target/bench.json')).get('cal_stable'))")
-    if [ "$stable" = "True" ]; then
-      break
-    elif [ "$attempt" -lt 3 ]; then
-      echo "bench cal_stable=false (attempt $attempt/3) — retrying on a fresh window in 90 s"
-      sleep 90
-    else
-      echo "bench cal_stable=false after 3 attempts — keeping the last reading (loaded-run protection below still applies)"
-    fi
-  else
-    echo "FAIL: bench (attempt $attempt)"; fail=1; break
-  fi
+step "4/6 benchmark (perfbench): one run per BENCHMARK.json workload"
+for w in luad_wide ops_sf0.01; do
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 > "$WORK/perfbench_$w.log" 2>&1 \
+    || { echo "FAIL: perfbench $w (see $WORK/perfbench_$w.log)"; fail=1; }
+  tail -1 "$WORK/perfbench_$w.log"
 done
-
-# Commit the COMPLETE per-query bench map in-repo (VERDICT r12 #2): the
-# driver's BENCH_rN.json keeps only a truncated stdout tail, so
-# cross-round per-query regression checks need this durable copy (both
-# layouts + normalized columns + calibration). Gated on THIS run's
-# bench having succeeded — never copy a stale artifact.
-#
-# Calm-freeze protection (r13 task, executed r15): when a round closes
-# more than once, cross-round diffs must compare calm-vs-calm — a later
-# re-freeze under host load (cal_stable=false) must NOT displace an
-# earlier calm map (cal_stable=true) as the round's primary artifact.
-# The loaded re-run is still recorded, under a _loaded suffix.
-if [ "$bench_ok" -eq 1 ] && [ -f target/bench.json ] && [ -n "$ROUND" ]; then
-  mkdir -p bench
-  # the copy is part of the gate: a python failure here (corrupt JSON,
-  # full disk) must turn the chain RED, not scroll past a green close
-  python3 - "$ROUND" <<'EOF' || { echo "FAIL: bench artifact copy"; fail=1; }
-import json, os, shutil, sys
-round_n = sys.argv[1]
-primary = f"bench/bench_r{round_n}.json"
-# THIS run's artifact must parse — a truncated file (full disk) is a
-# gate failure, not a silent skip
-new = json.load(open('target/bench.json'))
-try:
-    old = json.load(open(primary))
-except FileNotFoundError:
-    old = None
-except ValueError:
-    # a corrupt primary (interrupted earlier close) is not a calm map
-    # worth protecting — replace it
-    print(f"WARN: existing {primary} is corrupt JSON; replacing it")
-    old = None
-if old is not None and old.get('cal_stable') is True and new.get('cal_stable') is not True:
-    # never overwrite an earlier loaded record either: first free suffix
-    n = 0
-    while True:
-        n += 1
-        dest = (f"bench/bench_r{round_n}_loaded.json" if n == 1
-                else f"bench/bench_r{round_n}_loaded{n}.json")
-        if not os.path.exists(dest):
-            break
-    shutil.copy('target/bench.json', dest)
-    print(f"bench artifact -> {dest} (primary {primary} kept: it is "
-          f"cal_stable=true, this run is cal_stable={new.get('cal_stable')})")
-else:
-    shutil.copy('target/bench.json', primary)
-    print(f"bench artifact -> {primary} (commit it with the close record)")
-EOF
-else
-  echo "WARN: no target/bench.json or no round number — in-repo bench artifact not written"
-fi
 
 step "5/6 advice ledger (VERDICT r16 #6)"
 # On-disk ADVICE.md must reflect closure state at close time: every
