@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.ml.recommendation.ALS
+import java.util.concurrent.Executors
+
+import org.apache.spark.ml.recommendation.{ALS, GraftAlsBridge}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +22,11 @@ import org.apache.spark.sql.functions._
   *  - The reference collects the COMPLETED matrix to the driver and
   *    re-parallelizes it (`PreProcess.scala:163`) — the scalability
   *    killer called out in SURVEY §3.1. Here the completed matrix stays
-  *    a DataFrame end to end.
+  *    a DataFrame end to end in the relational regime.
+  *  - Dense regime (the `Network.useDense` budget admits the matrix to
+  *    the driver): the observed matrix is collected once
+  *    (`collectObserved`) and completed on the driver by `completeDense`,
+  *    a replica of ml-ALS's own arithmetic — no Spark job per ALS step.
   */
 object Completion {
 
@@ -42,6 +48,19 @@ object Completion {
       .crossJoin(probes)
       .join(matrix.select("sample", "probe"), Seq("sample", "probe"), "left_anti")
   }
+
+  /** Effective block count for `card` ids: scales with the DATA,
+    * `numBlocks` is only the cap. The reference's fixed 100 blocks on a
+    * 62-sample dimension makes every ALS stage schedule ~100 near-empty
+    * tasks and a 100×100-piece block exchange per iteration — measured
+    * ~90 s of pure scheduling churn at the reference shape. ~512 ids per
+    * block keeps each solve batched. Derived from CARDINALITY ONLY —
+    * never core count: ml-ALS's factor init and normal-equation
+    * accumulation depend on the blocking, so a core-derived count would
+    * make seed-42 results differ across cluster sizes.
+    */
+  private def blocksFor(params: AlsParams, card: Long): Int =
+    math.max(1L, math.min(params.numBlocks.toLong, (card + 511) / 512)).toInt
 
   /** Complete the matrix: observed ∪ ALS-predicted missing cells.
     * Deterministic under the fixed seed. Asserts completeness (the
@@ -65,22 +84,11 @@ object Completion {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (missing.count() == 0) { missing.unpersist(); return observed }
 
-    // Effective block count scales with the DATA, params.numBlocks is
-    // only the cap: the reference's fixed 100 blocks on a 62-sample
-    // dimension makes every ALS stage schedule ~100 near-empty tasks
-    // and a 100×100-piece block exchange per iteration — measured ~90 s
-    // of pure scheduling churn at the reference shape. ~512 ids per
-    // block keeps each solve batched. Derived from CARDINALITY ONLY —
-    // never core count: ml-ALS's factor init and normal-equation
-    // accumulation depend on the blocking, so a core-derived count
-    // would make seed-42 results differ across cluster sizes.
-    def blocksFor(card: Long): Int =
-      math.max(1L, math.min(params.numBlocks.toLong, (card + 511) / 512)).toInt
     val (nSamples, nProbes) = cards.getOrElse((
       observed.select("sample").distinct().count(),
       observed.select("probe").distinct().count()))
-    val userBlocks = blocksFor(nSamples)
-    val itemBlocks = blocksFor(nProbes)
+    val userBlocks = blocksFor(params, nSamples)
+    val itemBlocks = blocksFor(params, nProbes)
 
     val als = new ALS()
       .setUserCol("sample")
@@ -109,5 +117,147 @@ object Completion {
     val nan = predicted.filter(isnan(col("value"))).count()
     require(nan == 0, s"ALS cold-start produced $nan NaN cells")
     observed.union(predicted)
+  }
+
+  /** An observed COO matrix on the driver, by probe: probe ids
+    * ascending; `samples(p)` holds probe p's observed sample ids
+    * ascending, each once, and `values(p)` their values aligned to it.
+    */
+  final case class Observed(
+      probes: Array[Int],
+      samples: Array[Array[Int]],
+      values: Array[Array[Double]],
+  )
+
+  /** The dense regime's one collect of the ingested matrix, with the
+    * duplicate-observation guard: two observations of one (sample,
+    * probe) cell would be two ratings to ALS and two values to every
+    * later step, so they are rejected, as the relational assembly's
+    * probe-set check rejects them.
+    */
+  def collectObserved(spark: SparkSession, matrix: DataFrame): Observed = {
+    val rows = Network.byProbe(spark, matrix).collect().sortBy(_._1)
+    require(rows.nonEmpty, "empty matrix")
+    val dup = rows.find(r => r._2.indices.drop(1).exists(k => r._2(k - 1) >= r._2(k)))
+    require(dup.isEmpty,
+      s"probe ${dup.map(_._1).getOrElse(-1)} holds a duplicate (sample, probe) " +
+        "observation that survived ingest")
+    Observed(rows.map(_._1), rows.map(_._2), rows.map(_._3))
+  }
+
+  /** `complete` on the driver: the same completed cells, computed by a
+    * replica of `ml.recommendation.ALS` with the same parameters.
+    *
+    *  - Ratings are the observed values cast to Float, as ml-ALS casts
+    *    its rating column.
+    *  - User (sample) factors start as `ALS.initialize` draws them:
+    *    `userSeed` from `XORShiftRandom(seed)`, one stream per user
+    *    block (`floorMod(id, blocks)`, ids ascending in a block).
+    *  - Each iteration solves every item from the user factors, then
+    *    every user from the item factors, each with ml-ALS's
+    *    `NormalEquation` and Cholesky solve, regularized by λ × its
+    *    rating count. Solves are split over `threads` driver threads,
+    *    one normal equation per thread; a solve's arithmetic does not
+    *    depend on the split, so neither does the result.
+    *  - A missing cell is the Float dot product of its factors (the
+    *    `ALSModel` predict UDF), cast to Double; observed cells keep
+    *    their Double values.
+    *
+    * Float rounding can differ from ml-ALS in the last bit where the
+    * two sum a normal equation's ratings in another order (ml-ALS's
+    * order follows its shuffle); filled cells agree to ~1e-7 relative.
+    * A matrix with no missing cell is returned as observed.
+    */
+  def completeDense(observed: Observed, params: AlsParams, threads: Int): Network.DenseMatrix = {
+    require(params.maxIter > 0, "completeDense needs at least one ALS iteration")
+    val seen = new java.util.BitSet
+    observed.samples.foreach(_.foreach(seen.set))
+    val samples = seen.stream().toArray
+    val nS = samples.length
+    val nP = observed.probes.length
+    val itemUsers = observed.samples.map(_.map(java.util.Arrays.binarySearch(samples, _)))
+    if (itemUsers.forall(_.length == nS))
+      return Network.DenseMatrix(observed.probes, samples, observed.values)
+
+    val itemRatings = observed.values.map(_.map(_.toFloat))
+    // the same ratings by user, probe indices ascending
+    val counts = new Array[Int](nS)
+    itemUsers.foreach(_.foreach(u => counts(u) += 1))
+    val userItems = counts.map(n => new Array[Int](n))
+    val userRatings = counts.map(n => new Array[Float](n))
+    java.util.Arrays.fill(counts, 0)
+    for (p <- 0 until nP; i <- itemUsers(p).indices) {
+      val u = itemUsers(p)(i)
+      userItems(u)(counts(u)) = p
+      userRatings(u)(counts(u)) = itemRatings(p)(i)
+      counts(u) += 1
+    }
+
+    val rank = params.rank
+    var userFactors = new Array[Array[Float]](nS)
+    val userBlocks = blocksFor(params, nS.toLong)
+    val userSeed = GraftAlsBridge.userSeed(params.seed)
+    (0 until userBlocks).foreach { b =>
+      val members = (0 until nS).filter(k => Math.floorMod(samples(k), userBlocks) == b)
+      members.zip(GraftAlsBridge.initialFactors(userSeed, b, members.size, rank))
+        .foreach { case (k, f) => userFactors(k) = f }
+    }
+
+    val pool = Executors.newFixedThreadPool(math.max(1, threads))
+    try {
+      // dst j solved from the src factors of its ratings
+      def solveAll(
+          srcIdx: Array[Array[Int]],
+          ratings: Array[Array[Float]],
+          src: Array[Array[Float]],
+      ): Array[Array[Float]] = {
+        val n = srcIdx.length
+        val out = new Array[Array[Float]](n)
+        val chunk = math.max(1, (n + threads - 1) / math.max(1, threads))
+        (0 until n by chunk).map { from =>
+          pool.submit(new Runnable {
+            def run(): Unit = {
+              val solver = new GraftAlsBridge.Solver(rank)
+              var j = from
+              while (j < math.min(n, from + chunk)) {
+                val idx = srcIdx(j)
+                var i = 0
+                while (i < idx.length) { solver.add(src(idx(i)), ratings(j)(i)); i += 1 }
+                out(j) = solver.solve(idx.length * params.regParam)
+                j += 1
+              }
+            }
+          })
+        }.foreach(_.get())
+        out
+      }
+      var itemFactors: Array[Array[Float]] = null
+      (0 until params.maxIter).foreach { _ =>
+        itemFactors = solveAll(itemUsers, itemRatings, userFactors)
+        userFactors = solveAll(userItems, userRatings, itemFactors)
+      }
+
+      val values = Array.tabulate(nP) { p =>
+        val col = new Array[Double](nS)
+        val seen = new Array[Boolean](nS)
+        itemUsers(p).indices.foreach { i =>
+          col(itemUsers(p)(i)) = observed.values(p)(i)
+          seen(itemUsers(p)(i)) = true
+        }
+        var k = 0
+        while (k < nS) {
+          if (!seen(k)) {
+            val (u, v) = (userFactors(k), itemFactors(p))
+            var dot = 0.0f
+            var r = 0
+            while (r < rank) { dot += u(r) * v(r); r += 1 }
+            col(k) = dot.toDouble
+          }
+          k += 1
+        }
+        col
+      }
+      Network.DenseMatrix(observed.probes, samples, values)
+    } finally pool.shutdown()
   }
 }

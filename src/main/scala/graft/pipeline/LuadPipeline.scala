@@ -10,11 +10,12 @@ import org.apache.spark.storage.StorageLevel
   * probe filter → SVM train → predict → name-decoded output.
   *
   * Differences from the reference, all deliberate (SURVEY §4.1
-  * anti-patterns): shared subtrees are persisted instead of recomputed
-  * per action; the completed matrix reaches the driver only in the
-  * budget-gated dense regime (`Network.useDense`), where it is read
-  * once and never re-parallelized as a matrix; everything is a pure
-  * function of (SparkSession, config).
+  * anti-patterns): the matrix reaches the driver only in the
+  * budget-gated dense regime (`Network.useDense`), where the ingested
+  * matrix is read once and every later step runs on the driver arrays
+  * — never re-parallelized as a matrix; in the relational regime shared
+  * subtrees are persisted instead of recomputed per action; everything
+  * is a pure function of (SparkSession, config).
   */
 object LuadPipeline {
 
@@ -41,33 +42,92 @@ object LuadPipeline {
       alsParams: Completion.AlsParams = Completion.AlsParams(),
       svmParams: Svm.SvmParams = Svm.SvmParams(),
   ): Result = {
-    import spark.implicits._
+    // a one-class training set is no classifier: LinearSVC fails deep
+    // inside on all-normal labels but fits a constant +1 model on
+    // all-tumorous ones — reject both before any work
+    val nTumorous = config.training.count(_.tumorous)
+    require(nTumorous > 0 && nTumorous < config.training.size,
+      s"training set needs both classes: $nTumorous tumorous and " +
+        s"${config.training.size - nTumorous} normal sample(s)")
 
     val ing = Ingest.ingest(spark, baseDir, config)
-    val matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK)
+    // sample dictionary (id → name): registry-sized, built on the driver
+    val sampleNames = ing.sampleDict.collect()
+      .map(r => r.getAs[Int]("sample") -> r.getAs[String]("sample_name")).toMap
+    // the coverage guard below makes the registered samples the covered
+    // ones, so the gate needs no pass over the matrix
+    if (Network.useDense(spark, sampleNames.size.toLong, ing.nProbes))
+      runDense(spark, ing, sampleNames, config, alsParams, svmParams)
+    else runRelational(spark, ing, sampleNames, config, alsParams, svmParams)
+  }
 
-    // ONE cardinality pass over the ingested matrix, reused by the
-    // coverage guard here, the ALS block sizing, and the dense-path
-    // gate; the probe count is the dictionary's size, which ingest
-    // already knows
-    val coveredSamples = timed("ingest-materialize") {
-      matrix.select("sample").distinct().collect().map(_.getInt(0)).toSet
-    }
-    val nBefore = ing.nProbes
-    val nSamples = coveredSamples.size.toLong
-    val cards = Some((nSamples, nBefore))
-
-    // loud coverage guard (r15 pipeline review): a registered sample
-    // whose file(s) yield ZERO parseable rows (empty export, all
-    // values failing the lenient cast) would otherwise vanish
-    // silently — no matrix rows, nothing fabricated by completion, the
-    // training join shrinks, and the run exits 0 with N-1 predictions
-    val uncovered = ing.sampleDict.collect()
-      .filter(r => !coveredSamples.contains(r.getAs[Int]("sample")))
-      .map(_.getAs[String]("sample_name"))
+  /** Loud coverage guard (r15 pipeline review): a registered sample
+    * whose file(s) yield ZERO parseable rows (empty export, all values
+    * failing the lenient cast) would otherwise vanish silently — no
+    * matrix rows, nothing fabricated by completion, the training join
+    * shrinks, and the run exits 0 with N-1 predictions.
+    */
+  private def requireCovered(sampleNames: Map[Int, String], covered: Int => Boolean): Unit = {
+    val uncovered = sampleNames.toSeq.sorted.collect { case (id, name) if !covered(id) => name }
     require(uncovered.isEmpty,
       s"registered sample(s) with zero parseable matrix rows: " +
         s"${uncovered.mkString(", ")} — empty or fully unparseable file?")
+  }
+
+  /** Dense regime: the ingested matrix is collected once, and
+    * completion, the network filter, training and prediction run on the
+    * driver arrays — replicas of ml-ALS and LinearSVC (`completeDense`,
+    * `trainDense`) plus one `denseSurvivors` pass. The predictions are a
+    * local frame.
+    */
+  private def runDense(
+      spark: SparkSession,
+      ing: Ingest.IngestResult,
+      sampleNames: Map[Int, String],
+      config: DefParser.PipelineConfig,
+      alsParams: Completion.AlsParams,
+      svmParams: Svm.SvmParams,
+  ): Result = {
+    import spark.implicits._
+    val observed = timed("ingest-materialize")(Completion.collectObserved(spark, ing.matrix))
+    val covered = new java.util.BitSet
+    observed.samples.foreach(_.foreach(covered.set))
+    requireCovered(sampleNames, covered.get)
+    val completed = timed("als-completion")(
+      Completion.completeDense(observed, alsParams, spark.sparkContext.defaultParallelism))
+    val keep = timed("network-and-assembly")(config.pcThreshold
+      .fold(completed.probes.indices.toArray)(Network.denseSurvivors(spark, completed.values, _)))
+    val rows = Svm.denseRows(keep.map(completed.values))
+    val rowOf = completed.samples.zip(rows).toMap
+    val sampleIds = sampleNames.map(_.swap)
+    val training = config.training.flatMap(s => sampleIds.get(s.name).map(_ -> s.tumorous)).sortBy(_._1)
+    val model = timed("svm-train")(
+      Svm.trainDense(training.map(t => rowOf(t._1)).toArray, training.map(_._2).toArray, svmParams))
+    val preds = config.predicting.flatMap(s => sampleIds.get(s.name))
+      .map(id => (sampleNames(id), Svm.predictDense(model, rowOf(id))))
+    Result(preds.toDF("sample_name", "prediction"), ing.nProbes, keep.length.toLong)
+  }
+
+  /** Relational regime: ml-ALS, the Pearson self-join → GraphX → filter
+    * join, Spark-side assembly and LinearSVC, with shared subtrees
+    * persisted.
+    */
+  private def runRelational(
+      spark: SparkSession,
+      ing: Ingest.IngestResult,
+      sampleNames: Map[Int, String],
+      config: DefParser.PipelineConfig,
+      alsParams: Completion.AlsParams,
+      svmParams: Svm.SvmParams,
+  ): Result = {
+    import spark.implicits._
+    val matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK)
+    val coveredSamples = timed("ingest-materialize") {
+      matrix.select("sample").distinct().collect().map(_.getInt(0)).toSet
+    }
+    requireCovered(sampleNames, coveredSamples)
+    val nBefore = ing.nProbes
+    val cards = Some((coveredSamples.size.toLong, nBefore))
 
     val completed = timed("als-completion") {
       val c = Completion.complete(spark, matrix, alsParams, cards)
@@ -78,19 +138,13 @@ object LuadPipeline {
     // completion fabricates cells only for the OBSERVED sample × probe
     // grid, so the distinct sets — and `cards` — are unchanged by it
 
-    // network filter + feature assembly. Dense regime: one collect and
-    // one kernel pass, vectors built on the driver. Relational: Pearson
-    // self-join → GraphX → filter join → Spark-side assembly, whose
-    // vectors all have one length (its probe_sig guard) — the survivor
-    // count.
+    // network filter + feature assembly: Pearson self-join → GraphX →
+    // filter join → Spark-side assembly, whose vectors all have one
+    // length (its probe_sig guard) — the survivor count
     val (features, nAfter) = timed("network-and-assembly") {
-      if (Network.useDense(spark, nSamples, nBefore))
-        Network.denseFeatures(spark, completed, config.pcThreshold)
-      else {
-        val filtered = config.pcThreshold.fold(completed)(Network.filterRelational(spark, completed, _))
-        val f = Svm.assembleFeatures(filtered)
-        (f, f.select("features").head().getAs[Vector](0).size.toLong)
-      }
+      val filtered = config.pcThreshold.fold(completed)(Network.filterRelational(spark, completed, _))
+      val f = Svm.assembleFeatures(filtered)
+      (f, f.select("features").head().getAs[Vector](0).size.toLong)
     }
 
     // training labels / prediction ids via the sample dictionary (F1/F2)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,9 +21,9 @@ import org.apache.spark.storage.StorageLevel
   *  - Dense regime (skinny matrix under the driver budget, `useDense`):
   *    the reference's own design — the matrix on the driver, its
   *    standardized rows broadcast — made sample-aligned. One pass
-  *    finds edges AND components (per-task union-find, merged on the
-  *    driver), and `denseFeatures` assembles the SVM vectors from the
-  *    arrays already collected.
+  *    (`denseSurvivors`) finds edges AND components (per-task
+  *    union-find, merged on the driver) over the matrix
+  *    `Completion.completeDense` already holds.
   *  - Connected components elsewhere: GraphX `connectedComponents()`
   *    (Pregel, incremental frontier — same semantics as the reference's
   *    delta iteration `PreProcess.scala:179-197`, maxIter 100). A pure
@@ -92,7 +92,7 @@ object Network {
     * Requires a COMPLETE matrix (every sample × probe cell present) —
     * asserted; the reference runs it post-completion only. The
     * pipeline's dense regime does not build this edge frame: it runs
-    * `denseFeatures`, which finds components in the same pass.
+    * `denseSurvivors`, which finds components in the same pass.
     */
   def pearsonEdgesDense(spark: SparkSession, matrix: DataFrame, threshold: Double): DataFrame = {
     import spark.implicits._
@@ -112,36 +112,43 @@ object Network {
       .toDF("pi", "pj", "r")
   }
 
-  /** A complete COO matrix pulled to the driver: probe ids ascending,
-    * the one sample sequence every probe covers (ascending), and each
-    * probe's values aligned to it — `values(p)(k)` is the cell
-    * (samples(k), probes(p)).
+  /** A complete COO matrix on the driver: probe ids ascending, the one
+    * sample sequence every probe covers (ascending), and each probe's
+    * values aligned to it — `values(p)(k)` is the cell (samples(k),
+    * probes(p)).
     */
-  private[pipeline] final case class DenseMatrix(
+  final case class DenseMatrix(
       probes: Array[Int],
       samples: Array[Int],
       values: Array[Array[Double]],
   )
 
-  /** The dense paths' one collect, with the completeness guards.
+  /** A COO matrix grouped by probe, as a typed Dataset of PRIMITIVE
+    * arrays: (probe, its sample ids ascending, the values aligned to
+    * them). The encoder deserializes Array[Int]/Array[Double] as
+    * int[]/double[] — a collected row costs the 4 + 8 bytes per cell
+    * the dense gate budgets for, not the 4-6× boxed Seq overhead a
+    * Row/Seq collect would carry.
+    */
+  private[pipeline] def byProbe(spark: SparkSession, matrix: DataFrame): Dataset[(Int, Array[Int], Array[Double])] = {
+    import spark.implicits._
+    matrix
+      .groupBy("probe")
+      .agg(
+        expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.sample)").as("ss"),
+        expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.value)").as("vs"))
+      .as[(Int, Array[Int], Array[Double])]
+  }
+
+  /** The completed-matrix collect of `pearsonEdgesDense`, with the
+    * completeness guards.
     *
     * Requires a COMPLETE matrix (every sample × probe cell present
     * exactly once) — asserted; the reference runs it post-completion
     * only.
     */
   private[pipeline] def collectDense(spark: SparkSession, matrix: DataFrame): DenseMatrix = {
-    import spark.implicits._
-    // typed Dataset of PRIMITIVE arrays: the encoder deserializes
-    // Array[Int]/Array[Double] as int[]/double[] — the collected heap is
-    // the 8-bytes-per-cell the dense gate budgets for, not the 4-6×
-    // boxed Seq overhead a Row/Seq collect would carry
-    val byProbe = matrix
-      .groupBy("probe")
-      .agg(
-        expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.sample)").as("ss"),
-        expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.value)").as("vs"))
-      .as[(Int, Array[Int], Array[Double])]
-    val rows = byProbe.collect()
+    val rows = byProbe(spark, matrix).collect()
     require(rows.nonEmpty, "empty matrix")
     // alignment guard: every probe must cover the IDENTICAL sample
     // sequence — equal counts alone would let positionally-misaligned
@@ -261,30 +268,6 @@ object Network {
     val parent = Array.tabulate(nP)(identity)
     changed.foreach(c => c.indices.by(2).foreach(k => union(parent, c(k), c(k + 1))))
     parent.indices.filter(i => find(parent, i) == i).toArray
-  }
-
-  /** Dense-regime network filter and feature assembly in one step: the
-    * completed matrix is collected once (`collectDense`), one
-    * distributed pass finds the surviving probes (`denseSurvivors`;
-    * threshold None keeps all, reference `PreProcess.scala:156`), and
-    * the per-sample vectors are built on the driver from the arrays
-    * already held. No edge DataFrame, no GraphX, no filter join and no
-    * re-aggregation. Returns the features — same rows and bit-identical
-    * vectors as `filterMatrix` then `Svm.assembleFeatures` — and the
-    * surviving probe count.
-    *
-    * Driver peak: the one `denseFootprintBytes` models (collected
-    * arrays, z rows, broadcast chunks); the z rows and their broadcast
-    * are released before the vectors (≤ 8 B/cell) are built.
-    */
-  def denseFeatures(
-      spark: SparkSession,
-      matrix: DataFrame,
-      threshold: Option[Double],
-  ): (DataFrame, Long) = {
-    val d = collectDense(spark, matrix)
-    val keep = threshold.fold(d.probes.indices.toArray)(denseSurvivors(spark, d.values, _))
-    (Svm.denseFeatures(spark, d.samples, keep.map(d.values)), keep.length.toLong)
   }
 
   /** Connected components over an (pi, pj) edge list via GraphX
@@ -430,19 +413,23 @@ object Network {
     matrix.join(survivors, Seq("probe"), "left_semi")
   }
 
-  /** Driver-heap bytes the dense path will hold AT PEAK (broadcast
-    * build time, when everything below is simultaneously reachable):
-    * the collected raw value arrays `vs` (8 B/cell), the per-probe
-    * sample-id arrays `ss` for the alignment guard (4 B/cell), the NEW
-    * standardized `z` arrays (8 B/cell), and the serialized
-    * TorrentBroadcast chunks of z (~8 B/cell). 28 B/cell total — the
-    * earlier 20 B/cell model omitted one of the z copies and
-    * undercounted the peak by ~40% (r15 pipeline review), which with a
-    * budget raised toward the heap would have admitted a matrix that
-    * OOMs the driver.
+  /** Driver-heap bytes the dense regime holds AT PEAK: during
+    * `Completion.completeDense`, when everything below is reachable at
+    * once —
+    *  - the collected observed matrix: sample ids (4 B/cell) and values
+    *    (8 B/cell);
+    *  - ALS's ratings twice, by probe and by sample: an index (4 B) and
+    *    a Float rating (4 B) per cell each, 16 B/cell;
+    *  - the completed values (8 B/cell).
+    * 36 B/cell. The network step that follows holds the completed
+    * values, their standardized z rows (8 B/cell) and the serialized
+    * TorrentBroadcast chunks of z (~8 B/cell) — 24 B/cell, or 36 with
+    * the collected arrays still reachable, so the ALS peak bounds it
+    * too. Factors (rank floats per probe and per sample) and per-array
+    * headers are a few percent at the reference shape and not counted.
     */
   def denseFootprintBytes(nSamples: Long, nProbes: Long): Long =
-    nSamples * nProbes * (8L * 2 + 4L + 8L)
+    nSamples * nProbes * ((4L + 8L) + 2 * (4L + 4L) + 8L)
 
   /** Default dense-path driver budget: 256 MB — safe inside Spark's
     * 1 GB default driver heap with room for the broadcast manager.
@@ -450,9 +437,9 @@ object Network {
     */
   val DefaultMaxDenseBytes: Long = 256L << 20
 
-  /** The dense-path gate of `LuadPipeline.run`:
-    * a skinny matrix (few samples, many probes — the reference shape)
-    * whose MODELED driver peak (`denseFootprintBytes`, not a cell
+  /** The dense-regime gate of `LuadPipeline.run` (collect, ALS, network
+    * filter and SVM all on the driver): a skinny matrix (few samples,
+    * many probes — the reference shape) whose MODELED driver peak (`denseFootprintBytes`, not a cell
     * count) fits the session budget `spark.graft.pearson.maxDenseBytes`.
     */
   def useDense(spark: SparkSession, nSamples: Long, nProbes: Long): Boolean = {

@@ -62,4 +62,52 @@ class CompletionSpec extends SparkSpec {
       .orderBy("sample", "probe").collect().map(_.getDouble(2)).toSeq
     assert(runOnce() == runOnce())
   }
+
+  test("completeDense reproduces ml-ALS: same cells, observed bit-identical, filled within 1e-6") {
+    val s = spark; import s.implicits._
+    // the pipeline's parameters, and a short weakly regularized run:
+    // the default run converges to nearly the same cells from any
+    // start, so only the short one pins the initial factors
+    val paramSets = Seq(Completion.AlsParams(), Completion.AlsParams(maxIter = 2, regParam = 0.05))
+    // (seed, samples, probes, missing share): one matrix over 512
+    // samples, so ml-ALS draws its initial factors from two user
+    // blocks, and one with no missing cell. Sample ids are spread
+    // (3i + 1), so block membership is not the index order.
+    for ((seed, nS, nP, missingShare) <- Seq((1, 40, 30, 0.15), (2, 600, 8, 0.1), (3, 25, 20, 0.0));
+        params <- paramSets) {
+      val rnd = new Random(seed)
+      val u = Array.fill(nS, 3)(rnd.nextDouble() + 0.5)
+      val v = Array.fill(nP, 3)(rnd.nextDouble() + 0.5)
+      val cells = for {
+        i <- 0 until nS; j <- 0 until nP if rnd.nextDouble() >= missingShare
+      } yield (3 * i + 1, j, (0 until 3).map(k => u(i)(k) * v(j)(k)).sum + rnd.nextGaussian() * 0.1)
+      val df = cells.toDF("sample", "probe", "value")
+      val ml = Completion.complete(spark, df, params).collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+
+      val observed = Completion.collectObserved(spark, df)
+      val dense = Completion.completeDense(observed, params, threads = 4)
+      // the split over threads leaves every solve's arithmetic alone
+      val single = Completion.completeDense(observed, params, threads = 1)
+      assert(dense.values.indices.forall(p => java.util.Arrays.equals(dense.values(p), single.values(p))),
+        s"seed $seed: result depends on the thread count")
+      val got = (for {
+        p <- dense.probes.indices; k <- dense.samples.indices
+      } yield (dense.samples(k), dense.probes(p)) -> dense.values(p)(k)).toMap
+
+      assert(got.keySet == ml.keySet && ml.size == nS * nP, s"seed $seed: cell sets differ")
+      val obs = cells.map(c => (c._1, c._2) -> c._3).toMap
+      obs.foreach { case (cell, value) =>
+        assert(java.lang.Double.doubleToRawLongBits(got(cell)) == java.lang.Double.doubleToRawLongBits(value),
+          s"seed $seed: observed cell $cell altered")
+      }
+      val filled = ml.keySet -- obs.keySet
+      assert(filled.isEmpty == (missingShare == 0.0), s"seed $seed")
+      filled.foreach { cell =>
+        val (a, b) = (got(cell), ml(cell))
+        assert(math.abs(a - b) <= 1e-6 * math.max(math.abs(a), math.abs(b)),
+          s"seed $seed, $params: filled cell $cell is $a, ml-ALS gives $b")
+      }
+    }
+  }
 }

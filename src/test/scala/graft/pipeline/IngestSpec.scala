@@ -197,6 +197,46 @@ class IngestSpec extends SparkSpec {
     assert(zipJobs.exists(_.contains("zipWithIndex")))
   }
 
+  test("a dense-regime run starts no ALS, LinearSVC or GraphX job; forced relational it runs them and agrees") {
+    val (base, config) = mirroredCorpus("graft_corpus_replicas")
+    // drop a few cells (never p000 or its mirror p005), so completion
+    // has missing cells to fill on both paths
+    Seq("TRAIN-01" -> "p001", "TRAIN-04" -> "p003", "PRED-02" -> "p002", "TRAIN-07" -> "p004").foreach {
+      case (sample, probe) =>
+        val f = Path.of(base, s"expr/$sample.expr.txt")
+        Files.writeString(f, Files.readAllLines(f).toArray.map(_.toString)
+          .filterNot(_.startsWith(probe)).mkString("\n"))
+    }
+    def predictions(r: LuadPipeline.Result) =
+      r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
+    val mlCode = Seq("recommendation.ALS", "LinearSVC", "RDDLossFunction", "treeAggregate", "graphx")
+
+    val (dense, denseJobs) = graft.JobStacks(spark)(runMini(base, config))
+    for (code <- mlCode)
+      assert(!denseJobs.exists(_.contains(code)), s"dense-regime run started a job in $code")
+    spark.conf.set("spark.graft.pearson.maxDenseBytes", "0")
+    val (relational, relationalJobs) =
+      try graft.JobStacks(spark)(runMini(base, config))
+      finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
+    for (code <- mlCode)
+      assert(relationalJobs.exists(_.contains(code)), s"relational run started no job in $code")
+    assert(dense.nProbesAfter == 5 && relational.nProbesAfter == dense.nProbesAfter)
+    assert(predictions(dense).size == 4)
+    assert(predictions(relational) == predictions(dense))
+  }
+
+  test("a training set of one class fails the run, naming the class counts") {
+    val dir = Files.createTempDirectory("graft_corpus_one_class")
+    val base = writeCorpus(dir, nTrain = 6, nPredict = 2, nProbes = 4)
+    val config = DefParser.parseFile(s"$base/input.txt")
+    for (tumorous <- Seq(true, false)) {
+      val oneClass = config.copy(samples = config.samples.map(s => if (s.predictive) s else s.copy(tumorous = tumorous)))
+      val e = intercept[IllegalArgumentException](runMini(base, oneClass))
+      val counts = if (tumorous) "6 tumorous and 0 normal" else "0 tumorous and 6 normal"
+      assert(e.getMessage.contains(counts), e.getMessage)
+    }
+  }
+
   test("a sample-type with more files than Spark's default listing threshold tags every row") {
     // 40 files (Spark lists more than 32 explicit paths in a job by
     // default); value = 100 × sample index + probe index identifies the

@@ -112,11 +112,12 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("denseFootprintBytes prices the reference shape and the gate bounds it") {
-    // reference corpus: 62 samples × 21.5k probes → ~37 MB at the
-    // 28 B/cell peak model, well inside the 256 MB default budget →
-    // dense path
+    // reference corpus: 62 samples × 21.5k probes → ~48 MB at the
+    // 36 B/cell peak model (collected arrays, ALS ratings by probe and
+    // by sample, completed values), well inside the 256 MB default
+    // budget → dense path
     val refBytes = Network.denseFootprintBytes(62, 21500)
-    assert(refBytes == 62L * 21500 * 28)
+    assert(refBytes == 62L * 21500 * 36)
     assert(refBytes <= Network.DefaultMaxDenseBytes)
     // 10k samples × 1M probes (a 100 TB-scale matrix) → ~200 GB —
     // must NOT be collected to any driver
@@ -259,9 +260,9 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
         val got = Network.denseSurvivors(spark, d.values, t, parts).map(d.probes).toSet
         assert(got == legacySurvivors, s"seed $seed, partitions $parts")
       }
-      val (features, nAfter) = Network.denseFeatures(spark, df, Some(t))
-      assert(nAfter == legacySurvivors.size)
-      val fused = vectors(features)
+      val keep = Network.denseSurvivors(spark, d.values, t)
+      assert(keep.length == legacySurvivors.size)
+      val fused = d.samples.zip(Svm.denseRows(keep.map(d.values))).toMap
       assert(fused.keySet == legacyVectors.keySet, s"seed $seed")
       fused.foreach { case (sample, v) =>
         assert(java.util.Arrays.equals(v, legacyVectors(sample)), s"seed $seed, sample $sample")
@@ -272,10 +273,10 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
   test("fused dense kernel without a threshold keeps every probe") {
     val (coo, _) = kernelCase(4, nSamples = 20)
     val df = cooDF(coo)
-    val (features, nAfter) = Network.denseFeatures(spark, df, None)
-    assert(nAfter == df.select("probe").distinct().count())
+    val d = Network.collectDense(spark, df)
+    assert(d.probes.length == df.select("probe").distinct().count())
     val legacy = vectors(Svm.assembleFeatures(df))
-    val fused = vectors(features)
+    val fused = d.samples.zip(Svm.denseRows(d.values)).toMap
     assert(fused.keySet == legacy.keySet)
     fused.foreach { case (s, v) => assert(java.util.Arrays.equals(v, legacy(s)), s"sample $s") }
   }
@@ -293,9 +294,14 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
       val df = cooDF(rows)
       // the relational assembly rejects the same inputs (probe_sig)
       assertThrows[IllegalArgumentException](Svm.assembleFeatures(df))
-      for (t <- Seq(Some(0.5), None)) {
-        val e = intercept[IllegalArgumentException](Network.denseFeatures(spark, df, t))
-        assert(e.getMessage.contains("complete matrix"), s"$name, threshold $t: ${e.getMessage}")
+      val e = intercept[IllegalArgumentException](Network.collectDense(spark, df))
+      assert(e.getMessage.contains("complete matrix"), s"$name: ${e.getMessage}")
+      // the dense regime's collect of the INGESTED matrix takes missing
+      // cells (ALS fills them) but no duplicate
+      if (name == "incomplete") Completion.collectObserved(spark, df)
+      else {
+        val o = intercept[IllegalArgumentException](Completion.collectObserved(spark, df))
+        assert(o.getMessage.contains("duplicate"), s"$name: ${o.getMessage}")
       }
     }
   }

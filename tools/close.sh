@@ -44,12 +44,18 @@ python3 tools/check.py "$SF01" "$WORK/verify_multi" > "$WORK/check_multi.log" 2>
   || { echo "FAIL: check multi"; fail=1; }
 tail -1 "$WORK/check_multi.log"
 
-step "4/6 benchmark (perfbench): one run per BENCHMARK.json workload"
+step "4/6 benchmark (perfbench): one run per BENCHMARK.json workload, plus a traced luad_wide run"
 for w in luad_wide ops_sf0.01; do
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 > "$WORK/perfbench_$w.log" 2>&1 \
     || { echo "FAIL: perfbench $w (see $WORK/perfbench_$w.log)"; fail=1; }
   tail -1 "$WORK/perfbench_$w.log"
 done
+# traced LUAD run: its composition runs ml-ALS + LinearSVC and fails when
+# its predictions differ from the untraced run's (the dense regime's
+# driver-side replicas) — the end-to-end guard that the replicas match
+python3 perfbench/run.py --workload luad_wide --seed 1 --seconds 10 --trace 1 > "$WORK/perfbench_luad_wide_trace.log" 2>&1 \
+  || { echo "FAIL: perfbench luad_wide --trace 1 (see $WORK/perfbench_luad_wide_trace.log)"; fail=1; }
+tail -1 "$WORK/perfbench_luad_wide_trace.log"
 
 step "5/6 advice ledger (VERDICT r16 #6)"
 # On-disk ADVICE.md must reflect closure state at close time: every
