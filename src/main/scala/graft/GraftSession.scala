@@ -14,6 +14,21 @@ import org.apache.spark.sql.SparkSession
   * the DuckDB oracle.
   */
 object GraftSession {
+
+  /** Size of Spark's generated-class cache (static conf
+    * `spark.sql.codegen.cache.maxEntries`, default 100). Spark reads it
+    * once per JVM, at the first code generation, and evicts least
+    * recently used. Measured working sets: one pass over the 16
+    * benchmarked operator queries generates 256 distinct classes, so at
+    * the default every pass missed and recompiled ~250 classes with
+    * Janino (~3 s of a ~10 s pass on a 4-core host); one LUAD run
+    * generates 41. All 243 declared queries generate ~2,900 classes
+    * (~86 MB if all were cached), which this size does not try to hold.
+    * Each cached class retains ~26-29 KB of heap, so 1,024 entries cost
+    * at most ~30 MB.
+    */
+  val CodegenCacheEntries: Int = 1024
+
   def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -45,6 +60,7 @@ object GraftSession {
       // so a corpus far above this threshold goes back to listing in a
       // job.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec, RangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,19 +42,38 @@ object DedupOps {
     * has ≥ cores tasks and the exchange is pure overhead; ONLY the
     * single-row-group fixture (1-task scan) needs it, and there it is
     * worth 25-35% (q29b 2.38→1.65 s, q93 1.69→1.12, q112 1.26→0.84,
-    * single-file warm reps). So: spread iff the scan has fewer than
-    * cores/8 partitions, to an explicit (AQE-exempt,
+    * single-file warm reps). So: spread iff the source scan has at
+    * most cores/8 partitions, to an explicit (AQE-exempt,
     * REPARTITION_BY_NUM) defaultParallelism partition count — scale-
     * adaptive via the session's core count, never a local constant.
-    * Streaming frames pass through untouched (.rdd is illegal there;
-    * the streaming signature path uses withRowwiseBands directly).
+    * Streaming frames pass through untouched (the streaming signature
+    * path uses withRowwiseBands directly).
     */
   private def spread(df: DataFrame): DataFrame = {
     if (df.isStreaming) df
     else {
       val n = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions * 8 <= n) df.repartition(n, col("doc_id")) else df
+      if (scanPartitions(df).exists(_ * 8 <= n)) df.repartition(n, col("doc_id")) else df
     }
+  }
+
+  /** Task count of the frame's widest leaf scan (a parquet scan, a
+    * checkpointed RDD, a local relation or a range), read from the
+    * physical plan, which starts no job — the frame's own `rdd` would,
+    * under AQE, run its upstream shuffles at construction and again at
+    * execution, and would report their coalesced output instead of the
+    * scan. None when some leaf's count is not known without running it
+    * (e.g. a cached frame); `spread` then leaves the frame as it is.
+    */
+  private[operators] def scanPartitions(df: DataFrame): Option[Int] = {
+    val parts = df.queryExecution.sparkPlan.collectLeaves().map {
+      case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
+      case scan: RDDScanExec => scan.inputRDD.getNumPartitions
+      case scan: LocalTableScanExec => scan.inputRDD.getNumPartitions
+      case range: RangeExec => range.numSlices
+      case _ => 0
+    }
+    if (parts.isEmpty || parts.contains(0)) None else Some(parts.max)
   }
 
   /** Distinct word 3-gram shingles per (doc_id, text) frame row.

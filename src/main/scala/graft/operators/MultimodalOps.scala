@@ -399,7 +399,7 @@ object MultimodalOps {
           .toDF("doc_id", "payload")
         val path = s"$phashDir/${Relational.datasetKey(dir)}"
         media.write.mode("overwrite").parquet(path)
-        val hashes = s.read.parquet(path)
+        val hashes = s.read.schema(media.schema).parquet(path)
           .select(col("doc_id").cast("long"), col("payload"))
           .as[(Long, Array[Byte])]
           .mapPartitions { rows =>

@@ -432,7 +432,9 @@ object Network {
     nSamples * nProbes * ((4L + 8L) + 2 * (4L + 4L) + 8L)
 
   /** Default dense-path driver budget: 256 MB — safe inside Spark's
-    * 1 GB default driver heap with room for the broadcast manager.
+    * 1 GB default driver heap with room for the broadcast manager and
+    * the generated-class cache (`GraftSession.CodegenCacheEntries`,
+    * at most ~30 MB).
     * Override per-session with `spark.graft.pearson.maxDenseBytes`.
     */
   val DefaultMaxDenseBytes: Long = 256L << 20

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{JobStacks, SparkSpec}
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -372,5 +372,28 @@ class DedupSemanticsSpec extends SparkSpec {
       assert(found.contains((5L, 40L)) && found.contains((25L, 41L)),
         s"seed $seed: planted exact copies not found: $found")
     }
+  }
+
+  test("scanPartitions reads every kind of leaf scan from the plan, without a job") {
+    val s = spark; import s.implicits._
+    val local = Seq((1L, "a b c"), (2L, "d e f"), (3L, "g h i")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_scan_parts")
+    spark.range(0, 40, 1, 3).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val file = spark.read.parquet(s"$dir/documents.parquet")
+    val cached = local.select($"doc_id", upper($"text").as("text")).cache()
+    try {
+      val frames = Seq(local, spark.range(0, 10, 1, 3).toDF("doc_id"), file,
+        file.join(local.select($"doc_id"), "doc_id"), cached)
+      val (parts, stacks) = JobStacks(spark)(frames.map(DedupOps.scanPartitions))
+      assert(stacks.isEmpty, s"scanPartitions started jobs: $stacks")
+      // a scan-only frame's own rdd has its scan's partitions
+      val (localParts, fileParts) = (local.rdd.getNumPartitions, file.rdd.getNumPartitions)
+      assert(localParts == 3)
+      // a cached frame's partitions are only known by running its plan,
+      // so spread must leave it alone rather than guess
+      assert(parts == Seq(Some(localParts), Some(3), Some(fileParts),
+        Some(math.max(localParts, fileParts)), None))
+    } finally cached.unpersist()
   }
 }

@@ -44,7 +44,7 @@ python3 tools/check.py "$SF01" "$WORK/verify_multi" > "$WORK/check_multi.log" 2>
   || { echo "FAIL: check multi"; fail=1; }
 tail -1 "$WORK/check_multi.log"
 
-step "4/6 benchmark (perfbench): one run per BENCHMARK.json workload, plus a traced luad_wide run"
+step "4/6 benchmark (perfbench): one run per BENCHMARK.json workload, plus a traced run of each"
 for w in luad_wide ops_sf0.01; do
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 > "$WORK/perfbench_$w.log" 2>&1 \
     || { echo "FAIL: perfbench $w (see $WORK/perfbench_$w.log)"; fail=1; }
@@ -56,6 +56,11 @@ done
 python3 perfbench/run.py --workload luad_wide --seed 1 --seconds 10 --trace 1 > "$WORK/perfbench_luad_wide_trace.log" 2>&1 \
   || { echo "FAIL: perfbench luad_wide --trace 1 (see $WORK/perfbench_luad_wide_trace.log)"; fail=1; }
 tail -1 "$WORK/perfbench_luad_wide_trace.log"
+# traced operator pass: checks every golden row count and records the
+# per-module plan_s and spark.jobs
+python3 perfbench/run.py --workload ops_sf0.01 --seed 1 --seconds 10 --trace 1 > "$WORK/perfbench_ops_sf0.01_trace.log" 2>&1 \
+  || { echo "FAIL: perfbench ops_sf0.01 --trace 1 (see $WORK/perfbench_ops_sf0.01_trace.log)"; fail=1; }
+tail -1 "$WORK/perfbench_ops_sf0.01_trace.log"
 
 step "5/6 advice ledger (VERDICT r16 #6)"
 # On-disk ADVICE.md must reflect closure state at close time: every
