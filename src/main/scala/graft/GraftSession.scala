@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the engine — the single place session conf
-  * lives (Verify, LuadPipeline, the audit mains and perfbench all build
+  * lives (Verify, RewriteMulti, LuadPipeline and perfbench all build
   * through here, so the configs can't drift).
   *
   * Scale posture: AQE on (runtime join-strategy switch, skew splitting,
@@ -88,27 +88,13 @@ object GraftSession {
     rules.isFixedOffset && rules.getOffset(java.time.Instant.EPOCH) == java.time.ZoneOffset.UTC
   }
 
-  /** JSON string escape shared by the harness mains: backslash, quote,
-    * and ALL control chars (<0x20) — a tab or CR in builder-authored
-    * SQL would otherwise break the driver's json.load.
-    */
-  def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Recursive local-file delete shared by the harness mains' scratch
-    * cleanup (Verify's failed-write removal, DedupScale's pid-scoped
-    * rewrite, Relational's roundtrip shutdown hook) — ONE
-    * implementation, previously copy-pasted in five files where a fix
-    * to any copy would silently miss the others (r15 gate-tooling
-    * review). Recursive because a failed Spark write can leave a
-    * nested _temporary tree a flat delete would silently skip.
+  /** Recursive local-file delete shared by scratch cleanup (Verify's
+    * failed-write removal, Relational's roundtrip shutdown hook,
+    * perfbench's output reset) — ONE implementation, previously
+    * copy-pasted in five files where a fix to any copy would silently
+    * miss the others (r15 gate-tooling review). Recursive because a
+    * failed Spark write can leave a nested _temporary tree a flat
+    * delete would silently skip.
     */
   def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))

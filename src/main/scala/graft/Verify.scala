@@ -3,6 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string escape: backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise
+    * break tools/check.py's json.load.
+    */
+  private def jsonEscape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter for local
@@ -34,7 +48,7 @@ object Verify {
         if (d.exists()) GraftSession.rmTree(d)
       }
     }
-    def q(s: String): String = "\"" + GraftSession.jsonEscape(s) + "\""
+    def q(s: String): String = "\"" + jsonEscape(s) + "\""
     // dump only the ATTEMPTED subset's oracle SQL: check.py since r11
     // FAILs every oracle key without an output dir, so a filtered local
     // run that wrote the full 242-entry map would report ~200 spurious

@@ -243,8 +243,8 @@ object DedupOps {
     * declared r15; same declared-decision form as q41's as-of table).
     * The q29 family ships three band shapes; pick by documents per
     * dedup DOMAIN (per source/lang partition, not the global corpus),
-    * from the measured bucket tables in BASELINE.md (round-9/13
-    * DedupScale, instrument re-audited r13):
+    * from the measured bucket tables in BASELINE.md (rounds 8-10,
+    * re-measured in round 13):
     *
     * | shape | buckets/band | recall guarantee | measured max bucket | domain bound |
     * |---|---|---|---|---|
@@ -269,13 +269,12 @@ object DedupOps {
     else if (nDocsPerDomain <= 100000L) (4, 16) // q29b: 64-bit signature
     else (2, 32) // q29c: hamming ≤ 1 only; hamming ≤ 3 → MinHash q27
 
-  /** SimHash banding shared by the q29 family's joins AND the
-    * DedupScale bucket audit — ONE implementation so the measured
-    * bucket statistics can never silently desynchronize from the band
-    * keys the joins actually use (r13 instrument review: DedupScale
-    * carried a hand-copied `& 255` vs q29's `% 256` — equal today only
-    * because the 32-bit signature is non-negative). Returns one row
-    * per (doc, band): (doc_id, <sigCol>, b, bv). The 8-bit slice keeps
+  /** SimHash banding shared by the q29 family's joins and
+    * DedupSemanticsSpec's bucket-bound check — ONE implementation, so
+    * the checked bucket statistics are those of the band keys the
+    * joins actually use (the BASELINE.md bucket records were measured
+    * through it). Returns one row per (doc, band):
+    * (doc_id, <sigCol>, b, bv). The 8-bit slice keeps
     * `% 256` (the spelling the DuckDB oracle uses — identical to
     * `& 255` for the non-negative 32-bit signature); wider slices use
     * arithmetic shift + mask, where sign-fill lands above the mask so
@@ -1216,7 +1215,7 @@ object DedupOps {
       // recomputes intersections over co-shingled pairs only — the
       // q142 oracle's no-all-pairs shape.
       "q177_containment_join",
-      (s, dir) => containmentFrames(s, dir)._4,
+      (s, dir) => containmentJoin(s, dir),
       Some(
         "WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents " +
           "WHERE len(string_split(text,' ')) >= 3), " +
@@ -1233,14 +1232,12 @@ object DedupOps {
     ),
   )
 
-  /** q177 internals, exposed (like ppjoinFrames) so the DedupScale
-    * audit can measure the asymmetric containment-prefix pruning:
-    * returns (derived-corpus shingles, prefix tokens, candidate pairs,
-    * final result). The join cost here is Σ_sh prefix(sh)·full(sh)
-    * (prefix side against FULL inverted lists), not q142's Σ|b|².
+  /** q177's body. The join cost is Σ_sh prefix(sh)·full(sh) (prefix
+    * side against FULL inverted lists), not q142's Σ|b|²; the pruning
+    * across scales is recorded in BASELINE.md (round-11 containment-join
+    * prefix pruning).
     */
-  private[graft] def containmentFrames(
-      s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  private def containmentJoin(s: SparkSession, dir: String): DataFrame = {
     val (arrs, sh) = derivedShingleFrames(s, dir)
     val wPos = Window.partitionBy("doc_id").orderBy("df", "sh")
     val prefix = sh
@@ -1268,14 +1265,13 @@ object DedupOps {
     // shuffle_hash 2.99-3.82 — identical rows). Merge over
     // shuffle_hash: graceful spill on the array payload at 100 TB vs
     // a build-side OOM risk, for ~0.1-0.3 s locally.
-    val result = cand
+    cand
       .join(arrs.hint("merge").select(col("doc_id").as("da"), col("arr").as("arr_a")), "da")
       .join(arrs.hint("merge").select(col("doc_id").as("db"), col("arr").as("arr_b")), "db")
       .withColumn("inter", size(array_intersect(col("arr_a"), col("arr_b"))))
       .filter(col("inter") * 10 >= col("na") * 8)
       .select(col("da"), col("db"),
         round(col("inter") / col("na").cast("double"), 6).as("containment"))
-    (sh.select("doc_id", "sh"), prefix, cand, result)
   }
 
   /** The derived-corpus shingle frame BOTH exact-join queries (q142
@@ -1290,8 +1286,8 @@ object DedupOps {
     * equivalent, guide §2.4), and the verify step then had to
     * re-aggregate the stream BACK into per-doc arrays with a
     * collect_list groupBy per join side (two ObjectHashAggregate +
-    * Exchange pairs over the 30× stream —
-    * plans/r20/q177_containment_join_before.txt nodes 26-38). Storing
+    * Exchange pairs over the 30× stream, as the r20 plan of q177
+    * showed — OPTIMIZATION_r20.md). Storing
     * the array row serves both: consumers derive the exploded stream
     * by re-exploding the in-memory arrays (codegen-cheap), the verify
     * joins read the arrays directly, and the per-doc set size is
@@ -1299,11 +1295,9 @@ object DedupOps {
     * the two families can never silently diverge on their input
     * corpus. Each CALL materializes its own checkpoint on purpose:
     * q142 and q177 are benched and baselined as independent queries,
-    * so they must not share work across invocations (DedupScale's
-    * double compute is the accepted cost of that per-query
-    * accounting).
+    * so they must not share work across invocations.
     */
-  private[graft] def derivedShingleArrays(s: SparkSession, dir: String): DataFrame = {
+  private def derivedShingleArrays(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -1343,6 +1337,17 @@ object DedupOps {
     * (r20) 4.26-5.31 / arrays-only 3.80-4.10 (forbidden shape: its
     * plan re-broadcasts a Generate of the stream) / THIS 3.04-3.14.
     * The r19 shapes measured worst of all (q177 6.05+, q142 6.62+).
+    *
+    * Scale note: the window df is NOT map-side combinable. The
+    * groupBy+join it replaced shuffled one partial count per
+    * (task, shingle); `count(1) OVER (PARTITION BY sh)` shuffles every
+    * (doc, sh) row and buffers each shingle's whole posting list in
+    * one task's sort buffer. The derived corpus has no stop-shingle
+    * filter, so a boilerplate shingle present in a large fraction of
+    * documents funnels that fraction of the ~30× stream through a
+    * single task (it spills, but stays single-task). The A/B above is
+    * local; at 100 TB a hot-shingle corpus wants the combinable
+    * groupBy+join back, or a stop-shingle cut before the explode.
     */
   private def derivedShingleFrames(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -1390,7 +1395,7 @@ object DedupOps {
     // intersection counted per candidate ROW — no pair×token re-explode;
     // the arrays come STRAIGHT from the checkpoint. MERGE hint: same
     // broadcast-of-the-array-payload pathology and A/B as
-    // containmentFrames (broadcast 3.86-5.86 s, merge 3.25-3.41)
+    // containmentJoin (broadcast 3.86-5.86 s, merge 3.25-3.41)
     val result = cand
       .join(arrs.hint("merge").select(col("doc_id").as("da"), col("arr").as("arr_a")), "da")
       .join(arrs.hint("merge").select(col("doc_id").as("db"), col("arr").as("arr_b")), "db")

@@ -431,8 +431,9 @@ object ModernSqlOps {
 
   /** q195's body with k exposed, returning the raw estimate next to
     * the exact intersection per event-type pair — shared by the gated
-    * query (k=64, 35% tolerance), the NewOpsPropertySpec witness, and
-    * the KmvScale error-vs-k audit.
+    * query (k=64, 35% tolerance) and the NewOpsPropertySpec witness.
+    * The estimator's error vs k is recorded in BASELINE.md (KMV
+    * intersection-sketch error vs k).
     */
   private[graft] def kmvIntersect(
       s: SparkSession, dir: String, k: Int): DataFrame = {

@@ -920,8 +920,8 @@ object Relational {
       // estimate must sit within 3× the requested rsd (0.02) of the
       // exact count. A broken sketch flips within_tol to false and the
       // oracle (which asserts `true` per group) catches it.
-      // Plan shape (r10 re-adjudication, measured in SketchCost /
-      // BASELINE.md): countDistinct + another aggregate in ONE
+      // Plan shape (r10 re-adjudication, measured in BASELINE.md's
+      // round-10 q12b record): countDistinct + another aggregate in ONE
       // aggregation forces an Expand that doubles the shuffled rows
       // (1.28 s at sf0.1 vs the 0.56 s baseline-era sketch-only form).
       // Instead: distinct (flag, key) pairs first — map-side combinable

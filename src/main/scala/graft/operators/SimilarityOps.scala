@@ -65,18 +65,9 @@ object SimilarityOps {
   private def duckNorm(e: String): String =
     s"SQRT((SELECT SUM(CAST($e[i] AS DOUBLE) * CAST($e[i] AS DOUBLE)) FROM unnest(range(1, 65)) AS u(i)))"
 
-  /** IVF ANN as a reusable operator: coarse cells from per-`label`
-    * centroids, probe the `nprobe` best cells per query by centroid dot
-    * product, exact cosine only inside probed cells, top-k.
-    *
-    * `e` must have (vec_id, embedding, label); `q` (qid, qemb). Recall
-    * depends on how well cells capture cosine neighborhoods — see
-    * SimilarityRecallSpec: ≥0.9 on clustered data, and on unclustered
-    * data no cell scheme can do better than the scanned fraction.
-    */
-  /** The coarse quantizer exactly as [[ivfTopK]] derives it — shared
-    * with the AnnScale recall audit so the measured scanned fraction
-    * can never desynchronize from what the operator actually probes.
+  /** The coarse quantizer of [[ivfTopK]]: one centroid per labeled
+    * cell (the recall-vs-nprobe curve in BASELINE.md, rounds 12-13,
+    * was measured through this quantizer).
     *
     * round(avg, 9): avg's partial-merge order is nondeterministic at
     * ULP level (run-to-run AND vs the oracle's sequential AVG); a
@@ -84,7 +75,7 @@ object SimilarityOps {
     * flip the probe set. 9 decimals is far above fp noise (~1e-16)
     * and far below any real centroid separation.
     */
-  private[graft] def ivfCentroids(e: DataFrame): DataFrame = e
+  private def ivfCentroids(e: DataFrame): DataFrame = e
     // an unlabeled vector belongs to no IVF cell — it can't be routed
     // at index-build time (candidates already drop it: the cell join
     // rejects NULL keys on both engines) and a NULL-label CENTROID
@@ -100,9 +91,9 @@ object SimilarityOps {
 
   /** The probe set exactly as [[ivfTopK]] picks it: each query's
     * `nprobe` best cells by centroid dot product (label asc breaks
-    * exact ties) — (qid, qemb, label). Shared with AnnScale.
+    * exact ties) — (qid, qemb, label).
     */
-  private[graft] def ivfProbe(q: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
+  private def ivfProbe(q: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(q.sparkSession)
     val wq = Window.partitionBy("qid").orderBy(col("cscore").desc, col("label").asc)
     q.crossJoin(broadcast(centroids)) // cells-sized: bounded by the label dim
@@ -112,6 +103,15 @@ object SimilarityOps {
       .select("qid", "qemb", "label")
   }
 
+  /** IVF ANN as a reusable operator: coarse cells from per-`label`
+    * centroids, probe the `nprobe` best cells per query by centroid dot
+    * product, exact cosine only inside probed cells, top-k.
+    *
+    * `e` must have (vec_id, embedding, label); `q` (qid, qemb). Recall
+    * depends on how well cells capture cosine neighborhoods — see
+    * SimilarityRecallSpec: ≥0.9 on clustered data, and on unclustered
+    * data no cell scheme can do better than the scanned fraction.
+    */
   def ivfTopK(
       e: DataFrame,
       q: DataFrame,

@@ -846,7 +846,10 @@ object TemporalOps {
       // groupBy; the spine × tiny type set is the q104 shape; the
       // neighbor lookup is two IGNORE-NULLS window passes over the
       // per-series day grain — state bounded by days × series, never
-      // raw events. Leading/trailing gaps back-/forward-fill.
+      // raw events. Leading/trailing gaps back-/forward-fill. The daily
+      // avg is round(avg, 9) on both engines (the ivfCentroids idiom):
+      // avg sums in file-layout order, so on a multi-file layout an
+      // unrounded mean drifted by an ULP and flipped the 6th decimal.
       "q135_interpolate",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
@@ -856,7 +859,7 @@ object TemporalOps {
             datediff(to_date(col("ts")), lit(java.sql.Date.valueOf("2024-01-01")))
               .cast("long"))
         val daily = ev.groupBy(col("event_type"), col("d"))
-          .agg(avg(col("value")).as("v"))
+          .agg(round(avg(col("value")), 9).as("v"))
           .filter(pmod(col("d") + length(col("event_type")), lit(4)) =!= 0)
         val bounds = ev.agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
         val spine = bounds.select(explode(expr("sequence(dmin, dmax)")).as("d"))
@@ -891,7 +894,7 @@ object TemporalOps {
           "b AS (SELECT MIN(d) AS dmin, MAX(d) AS dmax FROM e), " +
           "spine AS (SELECT UNNEST(range(dmin, dmax + 1)) AS d FROM b), " +
           "ty AS (SELECT DISTINCT event_type FROM e), " +
-          "daily AS (SELECT event_type, d, AVG(value) AS v FROM e GROUP BY 1, 2), " +
+          "daily AS (SELECT event_type, d, round(AVG(value), 9) AS v FROM e GROUP BY 1, 2), " +
           "dailyf AS (SELECT * FROM daily WHERE (d + len(event_type)) % 4 != 0), " +
           "g AS (SELECT ty.event_type, spine.d, f.v FROM spine CROSS JOIN ty " +
           "LEFT JOIN dailyf f ON f.event_type = ty.event_type AND f.d = spine.d), " +

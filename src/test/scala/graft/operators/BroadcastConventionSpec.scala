@@ -136,10 +136,6 @@ class BroadcastConventionSpec extends AnyFunSuite {
     // broadcast, entered only under the measured memory budget)
     ("Network.scala", "sparkContext.broadcast(z)"),
     ("Network.scala", "sparkContext.broadcast(probes)"),
-    // AnnScale audit main: the 20-query batch (nQueries constant) in
-    // the brute-force ground-truth pass; the centroid/probe hints live
-    // in the shared SimilarityOps helpers above
-    ("AnnScale.scala", "crossJoin(broadcast(q.withColumn("),
   )
 
   /** How many sites each entry is expected to match (default 1).
@@ -230,7 +226,11 @@ class BroadcastConventionSpec extends AnyFunSuite {
         }
       }
     }
-    assert(sites >= 60, s"broadcast-site discovery broke: found $sites")
+    // exact identity, not a floor: every site is accounted for by the
+    // allowlist's expected counts, so a discovery regression that
+    // drops sites fails here even when no entry drifts to 0
+    val expected = allowed.map(expectedSites).sum
+    assert(sites == expected, s"broadcast-site discovery broke: found $sites, allowlist expects $expected")
     assert(
       hits.isEmpty,
       "forced broadcast without a written size bound — either the frame " +

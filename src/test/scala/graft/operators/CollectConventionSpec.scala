@@ -8,10 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * single-node serialization stall, and nothing in the oracle gate
   * would catch it (the result is correct, just undistributed). Every
   * current site is bounded — single-row aggregates, k-sized centroid
-  * pulls, registry/dictionary-scale pipeline reads, measurement-main
-  * fixture materialization — but that boundedness lives in each
-  * site's head, exactly the state the forced-broadcast convention was
-  * in before BroadcastConventionSpec. Same gate shape: every
+  * pulls, registry/dictionary-scale pipeline reads — but that
+  * boundedness lives in each site's head, exactly the state the
+  * forced-broadcast convention was in before BroadcastConventionSpec.
+  * Same gate shape: every
   * driver-materializing call in `src/main` must match an allowlist
   * entry naming its size bound; a new collect anywhere moves a count
   * and fails the pin, forcing the review question ("why does this
@@ -35,9 +35,9 @@ class CollectConventionSpec extends AnyFunSuite {
     // single-row min/max bounds aggregate (the q108 bounds pattern)
     ("Relational.scala", "df.agg(min(a), max(a), min(b), max(b)).collect().head"),
     // completed-matrix pull of `pearsonEdgesDense`: probes × samples
-    // primitive arrays; its callers (the traced benchmark composition,
-    // ArtifactCheck on the reference corpus) use it only at shapes the
-    // memory-budget gate `Network.useDense` admits
+    // primitive arrays; its one caller outside tests (perfbench's
+    // traced composition) uses it only at shapes the memory-budget
+    // gate `Network.useDense` admits
     ("Network.scala", "byProbe(spark, matrix).collect()"),
     // dense-regime pull of the INGESTED matrix: ≤ probes × samples
     // primitive arrays (observed cells only), entered ONLY under the
@@ -60,20 +60,6 @@ class CollectConventionSpec extends AnyFunSuite {
     // K1 stdout print sink (reference contract): predictions are
     // prediction-set-sized (≤ registered samples)
     ("LuadPipeline.scala", "result.collect().foreach"),
-    // -------- measurement mains (not in any declared query) --------
-    // ANN audit: exact/IVF top-k for the nQueries=20 query batch
-    // (rows ≤ nQueries × k), k-sized cell histogram, probed cells
-    // ≤ nQueries × nprobe
-    ("AnnScale.scala", ".collect().map(r => (r.getLong(0), r.getLong(1)))"),
-    ("AnnScale.scala", ".collect().map(r => r.getLong(0) -> r.getLong(1)).toMap"),
-    ("AnnScale.scala", ".collect().map(r => cellSizes(r.getLong(1))).sum"),
-    // streaming bench harness (all four sites, one class): replayed
-    // fixture shards/signatures/events as in-memory event streams —
-    // fixture-sized by the harness contract (sf0.01 inputs), plus the
-    // single stop-shingle row
-    ("StreamBench.scala", ".collect()"),
-    // KMV audit main: one row per (table-pair, k) — pairs × 3 rows
-    ("KmvScale.scala", ".collect()"),
   )
 
   /** How many sites each entry is expected to match (default 1) — the
@@ -84,10 +70,6 @@ class CollectConventionSpec extends AnyFunSuite {
   private val expectedSites: Map[(String, String), Int] = Map(
     // IVF build + rebuild centroid pulls share the line shape
     (("SimilarityOps.scala", ".collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq"), 2),
-    // exact top-k ground truth + the per-nprobe IVF result pull
-    (("AnnScale.scala", ".collect().map(r => (r.getLong(0), r.getLong(1)))"), 2),
-    // the four harness-materialization sites share the one entry
-    (("StreamBench.scala", ".collect()"), 4),
   ).withDefaultValue(1)
 
   /** Every spelling of an unbounded driver materialization. `\s*` in
@@ -149,7 +131,11 @@ class CollectConventionSpec extends AnyFunSuite {
         }
       }
     }
-    assert(sites >= 15, s"collect-site discovery broke: found $sites")
+    // exact identity, not a floor: every site is accounted for by the
+    // allowlist's expected counts, so a discovery regression that
+    // drops sites fails here even when no entry drifts to 0
+    val expected = allowed.map(expectedSites).sum
+    assert(sites == expected, s"collect-site discovery broke: found $sites, allowlist expects $expected")
     assert(
       hits.isEmpty,
       "driver-materializing collect without a written size bound — either the frame scales " +

@@ -37,9 +37,9 @@ class OracleConventionSpec extends SparkSpec {
     * corpus-sized fold of large-magnitude values (q133's
     * avg(l_extendedprice) over 60k rows, delta ~1e-6 absolute). Small
     * bounded folds and O(1)-magnitude outputs sit orders of magnitude
-    * inside the quantum. Every entry below is exact-hash green under
-    * the driver (CORRECTNESS_r09); the reason says WHY that holds at
-    * any scale, not just on the fixture.
+    * inside the quantum. Every entry below passes the exact mode of
+    * tools/check.py; the reason says WHY that holds at any scale, not
+    * just on the fixture.
     *
     * r13 gate-instrument hardening: an exemption no longer skips the
     * query's scan — the scan runs for EVERY query, and each entry pins
@@ -58,7 +58,6 @@ class OracleConventionSpec extends SparkSpec {
     "q43_salted_join" -> ("sum of integer-valued l_quantity doubles — IEEE-exact below 2^53", Set("sum_qty")),
     "q122_adaptive_salted_join" -> ("sum of integer-valued l_quantity doubles — IEEE-exact below 2^53", Set("sum_qty")),
     "q130_group_trend" -> ("regr_* are centered-moment RATIOS, O(1) magnitude (day index <= 31); scale cancels", Set("slope", "intercept", "r2")),
-    "q135_interpolate" -> ("per-(type,day) avg = small per-cell folds of O(100)-magnitude values; interpolation is then row-local on two selected elements", Set("v_filled")),
     "q136_temperature_mixture" -> ("p^alpha probabilities and rates are O(1) magnitude over the <=4-source frame", Set("q", "rate")),
     "q91_pagerank" -> ("pr is O(1) magnitude (probability mass); per-node fold bounded by degree", Set("pr")),
   )
@@ -67,8 +66,8 @@ class OracleConventionSpec extends SparkSpec {
     * pandas as HUGEINT. Two safe shapes: the window sum lives in an
     * intermediate CTE and the FINAL select re-CASTs (or consumes it in
     * double arithmetic), or the operand is DOUBLE (DuckDB does not
-    * promote float sums). All entries exact-hash green in
-    * CORRECTNESS_r09.
+    * promote float sums). All entries pass the exact mode of
+    * tools/check.py.
     */
   private val windowSumAllow: Map[String, (String, Int)] = Map(
     "q36_window_session" -> ("session_id CAST AS BIGINT in the final select", 1),

@@ -62,12 +62,42 @@ class SimilarityRecallSpec extends SparkSpec {
     assert(r >= 0.9, s"clustered recall $r")
   }
 
+  private val corpusDim = 64
+
+  /** Deterministic clustered corpus: `label` = point's true cluster,
+    * point = G·global + delta_label + noise, all components md5-derived
+    * U[-4, 4]^corpusDim (no RNG). The shared global component makes
+    * the cells ANGULARLY close (cos between centers ≈ G²/(G²+1) ≈ 0.9
+    * at G=3) —
+    * the real-embedding regime where topical clusters share a domain
+    * direction — and noise at the delta's own scale pushes boundary
+    * points' true cosine neighbors into the 2nd/3rd-nearest cell.
+    * That is what makes recall actually DEPEND on nprobe: orthogonal
+    * well-separated centers read recall 1.0 at nprobe=1 everywhere —
+    * a saturated instrument. This is the construction behind the
+    * recall-vs-nprobe curve recorded in BASELINE.md (round 13).
+    */
+  private def corpus(s: org.apache.spark.sql.SparkSession, n: Int): DataFrame =
+    s.range(n.toLong).toDF("vec_id")
+      // skewed cell assignment: u = md5-uniform in [0,1), label =
+      // floor(10·sqrt(u)) ⇒ P(label=j) = (2j+1)/100 — sizes ramp ~1:19
+      // across the 10 cells, so the scanned fraction depends on WHICH
+      // cells the probes pick instead of collapsing to nprobe/10
+      .withColumn("label", expr(
+        "CAST(floor(10.0D * sqrt((CAST(conv(substr(md5(concat('l:', vec_id)), 1, 6), 16, 10) AS BIGINT) % 10000) / 10000.0D)) AS BIGINT)"))
+      .withColumn("embedding", expr(
+        s"""transform(sequence(0, ${corpusDim - 1}), i ->
+           |  CAST(3.0D * (CAST(conv(substr(md5(concat('g:', i)), 1, 6), 16, 10) AS BIGINT) % 2000 - 1000) / 250.0 AS FLOAT)
+           |  + CAST((CAST(conv(substr(md5(concat('c', label, ':', i)), 1, 6), 16, 10) AS BIGINT) % 2000 - 1000) / 250.0 AS FLOAT)
+           |  + CAST((CAST(conv(substr(md5(concat('p', vec_id, ':', i)), 1, 6), 16, 10) AS BIGINT) % 2000 - 1000) / 250.0 AS FLOAT))"""
+          .stripMargin))
+
   test("nprobe=2 point of the AnnScale recall curve: >= 0.9 at ~20% scanned, and nprobe=1 is genuinely worse") {
     // the overlapping-angle corpus (shared global direction, noise at
-    // the cluster-delta scale — graft.AnnScale's construction, reused
-    // so the gate can't drift from the recorded curve in BASELINE.md);
-    // 2k points keeps this fast while preserving the geometry
-    val e = graft.AnnScale.corpus(spark, 2000).localCheckpoint()
+    // the cluster-delta scale — the construction of the recorded curve
+    // in BASELINE.md); 2k points keeps this fast while preserving the
+    // geometry
+    val e = corpus(spark, 2000).localCheckpoint()
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
     val exact = topkSets(bruteTopK(e, q, 5))

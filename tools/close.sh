@@ -15,14 +15,14 @@ fail=0
 
 step() { echo "== close: $*"; }
 
-step "1/6 sbt test (full suite)"
+step "1/5 sbt test (full suite)"
 if sbt test > "$WORK/sbt_test.log" 2>&1; then
   grep -E "Total number of tests|All tests passed" "$WORK/sbt_test.log" | tail -2
 else
   echo "FAIL: sbt test (see $WORK/sbt_test.log)"; fail=1
 fi
 
-step "2/6 oracle gate at sf0.01 (both checker modes; exit gates on exact)"
+step "2/5 oracle gate at sf0.01 (both checker modes; exit gates on exact)"
 # the gate tooling's own spec first: a broken checker must fail the
 # chain itself, not silently mis-grade 242 queries (r16, VERDICT r15 #3)
 python3 tools/test_check.py > "$WORK/test_check.log" 2>&1 \
@@ -34,7 +34,7 @@ python3 tools/check.py "$SF001" "$WORK/verify_sf001" > "$WORK/check_sf001.log" 2
   || { echo "FAIL: check sf0.01"; fail=1; }
 tail -1 "$WORK/check_sf001.log"
 
-step "3/6 oracle gate on the 8-file sf0.1 rewrite (layout independence)"
+step "3/5 oracle gate on the 8-file sf0.1 rewrite (layout independence)"
 sbt "runMain graft.RewriteMulti $SF01 $WORK/sf01_multi8 8" > "$WORK/rewrite.log" 2>&1 \
   || { echo "FAIL: RewriteMulti"; fail=1; }
 sbt "runMain graft.Verify $WORK/sf01_multi8 $WORK/verify_multi" > "$WORK/verify_multi.log" 2>&1 \
@@ -44,7 +44,7 @@ python3 tools/check.py "$SF01" "$WORK/verify_multi" > "$WORK/check_multi.log" 2>
   || { echo "FAIL: check multi"; fail=1; }
 tail -1 "$WORK/check_multi.log"
 
-step "4/6 benchmark (perfbench): one run per BENCHMARK.json workload, plus a traced run of each"
+step "4/5 benchmark (perfbench): one run per BENCHMARK.json workload, plus a traced run of each"
 for w in luad_wide ops_sf0.01; do
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 > "$WORK/perfbench_$w.log" 2>&1 \
     || { echo "FAIL: perfbench $w (see $WORK/perfbench_$w.log)"; fail=1; }
@@ -62,24 +62,7 @@ python3 perfbench/run.py --workload ops_sf0.01 --seed 1 --seconds 10 --trace 1 >
   || { echo "FAIL: perfbench ops_sf0.01 --trace 1 (see $WORK/perfbench_ops_sf0.01_trace.log)"; fail=1; }
 tail -1 "$WORK/perfbench_ops_sf0.01_trace.log"
 
-step "5/6 advice ledger (VERDICT r16 #6)"
-# On-disk ADVICE.md must reflect closure state at close time: every
-# item annotated '_closed in <commit>' once its fix lands. A WARN, not
-# a gate failure — the driver rewrites ADVICE.md with NEW (legitimately
-# unclosed) items after close, and the next round's open chain runs on
-# that unchanged HEAD.
-if [ -f ADVICE.md ]; then
-  n_items=$(grep -c '^- \*\*' ADVICE.md)
-  n_closed=$(grep -c '_closed in ' ADVICE.md)
-  if [ "$n_items" -gt 0 ] && [ "$n_closed" -lt "$n_items" ]; then
-    echo "WARN: ADVICE.md carries $n_items item(s) but only $n_closed closure note(s) —"
-    echo "      append '  _closed in <commit>: <note>_' under each item you fixed this round"
-  else
-    echo "advice ledger: $n_closed/$n_items items annotated closed"
-  fi
-fi
-
-step "6/6 summary"
+step "5/5 summary"
 echo "closing commit: $(git rev-parse --short HEAD) ($(git log -1 --format=%s))"
 if [ "$fail" -eq 0 ]; then
   echo "ALL GATES GREEN — record this pass (with the commit hash above) in BASELINE.md."
