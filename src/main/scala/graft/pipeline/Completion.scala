@@ -129,7 +129,8 @@ object Completion {
       values: Array[Array[Double]],
   )
 
-  /** The dense regime's one collect of the ingested matrix, with the
+  /** The dense regime's one collect of the ingested matrix (and
+    * `Network.collectDense`'s of a completed one), with the
     * duplicate-observation guard: two observations of one (sample,
     * probe) cell would be two ratings to ALS and two values to every
     * later step, so they are rejected, as the relational assembly's

@@ -30,10 +30,28 @@ object Ingest {
 
   final case class IngestResult(
       matrix: DataFrame, // (sample INT, probe INT, value DOUBLE)
-      sampleDict: DataFrame, // (name STRING, sample INT)
+      sampleNames: Array[String], // sample id → name: id k is sampleNames(k)
+      sampleDict: DataFrame, // (sample_name STRING, sample INT), from sampleNames
       probeDict: DataFrame, // (name STRING, probe INT)
       nProbes: Long, // probe dictionary size = distinct probes in `matrix`
   )
+
+  /** The expression-file scan of `readType` and of its streaming twin
+    * `Streams.expressionFileStream`: only cols 0-1 reach the plan (S2),
+    * read with header=false, then `parseLenient`. The reference
+    * (Input.scala lenient=true) drops a row only when its VALUE fails
+    * the Double parse, so a header line is dropped as a non-numeric
+    * row, where header=true would eat the first DATA row of a headerless
+    * export (an observed cell turned into a missing one for ALS to
+    * fabricate). try_cast, not cast: under Spark 4's ANSI default a
+    * plain cast THROWS on a non-numeric value.
+    */
+  private[graft] val ExpressionSchema: StructType =
+    StructType(Seq(StructField("probe_name", StringType), StructField("raw_value", StringType)))
+  private[graft] val ExpressionOptions: Map[String, String] = Map("sep" -> "\t", "header" -> "false")
+  private[graft] def parseLenient(raw: DataFrame): DataFrame =
+    raw.withColumn("value", expr("try_cast(raw_value AS DOUBLE)"))
+      .filter(col("value").isNotNull && col("probe_name").isNotNull)
 
   /** All expression rows of one sample-type as (sample_name, probe_name,
     * value) — one multi-path scan, sample recovered from the file path.
@@ -72,28 +90,9 @@ object Ingest {
           s"cannot map scanned file back to a sample: $fileName (base $base)")
       sample
     }
-    spark.read
-      .option("sep", "\t")
-      // header=FALSE is the faithful leniency (reference Input.scala
-      // lenient=true drops rows only when the VALUE column fails the
-      // Double parse): a header line like "miRNA_ID\tread_count" fails
-      // the cast below and is dropped identically — but header=true
-      // would eat the first DATA row of a headerless export, turning
-      // an observed cell into a missing one for ALS to fabricate
-      .option("header", "false")
-      .schema(StructType(Seq( // S2: only cols 0-1 reach the plan
-        StructField("probe_name", StringType),
-        StructField("raw_value", StringType),
-      )))
-      .csv(paths: _*)
+    val raw = spark.read.options(ExpressionOptions).schema(ExpressionSchema).csv(paths: _*)
       .withColumn("sample_name", lookup(input_file_name()))
-      // try_cast, not cast: under Spark 4's ANSI default a plain cast
-      // THROWS on any non-numeric value (including the header line that
-      // now flows through as data) — the reference's lenient parse
-      // DROPS such rows, which is exactly try_cast-to-NULL + the filter
-      .withColumn("value", expr("try_cast(raw_value AS DOUBLE)"))
-      .filter(col("value").isNotNull && col("probe_name").isNotNull) // lenient
-      .select("sample_name", "probe_name", "value")
+    parseLenient(raw).select("sample_name", "probe_name", "value")
   }
 
   /** Full ingest: every declared sample-type of the config, read, tagged,
@@ -124,8 +123,8 @@ object Ingest {
 
     import spark.implicits._
     // sample dictionary is driver-known (config) — tiny, sorted, broadcast
-    val sampleDict = config.samples.map(_.name).sorted.zipWithIndex
-      .toDF("sample_name", "sample")
+    val sampleNames = config.samples.map(_.name).sorted.toArray
+    val sampleDict = sampleNames.toSeq.zipWithIndex.toDF("sample_name", "sample")
     // probe dictionary from the collected distinct names: it is the
     // broadcast join's build side below, so it is driver-resident either
     // way, and ids assigned here cost no Spark sort or zipWithIndex job.
@@ -140,6 +139,6 @@ object Ingest {
       .join(broadcast(sampleDict), "sample_name")
       .join(broadcast(probeDict), "probe_name")
       .select(col("sample"), col("probe"), col("value"))
-    IngestResult(matrix, sampleDict, probeDict, probeNames.length.toLong)
+    IngestResult(matrix, sampleNames, sampleDict, probeDict, probeNames.length.toLong)
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.classification.LinearSVCModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -15,7 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * matrix is read once and every later step runs on the driver arrays
   * — never re-parallelized as a matrix; in the relational regime shared
   * subtrees are persisted instead of recomputed per action; everything
-  * is a pure function of (SparkSession, config).
+  * is a pure function of (SparkSession, config). `run` owns the
+  * registry-sized work of both regimes — sample ids, labels, the decode
+  * and the survivor count — so the regimes differ only in how they
+  * collect, complete, filter and train.
   */
 object LuadPipeline {
 
@@ -51,14 +54,28 @@ object LuadPipeline {
         s"${config.training.size - nTumorous} normal sample(s)")
 
     val ing = Ingest.ingest(spark, baseDir, config)
-    // sample dictionary (id → name): registry-sized, built on the driver
-    val sampleNames = ing.sampleDict.collect()
-      .map(r => r.getAs[Int]("sample") -> r.getAs[String]("sample_name")).toMap
-    // the coverage guard below makes the registered samples the covered
-    // ones, so the gate needs no pass over the matrix
-    if (Network.useDense(spark, sampleNames.size.toLong, ing.nProbes))
-      runDense(spark, ing, sampleNames, config, alsParams, svmParams)
-    else runRelational(spark, ing, sampleNames, config, alsParams, svmParams)
+    // sample ids (F1/F2) from Ingest's names; training and predictive
+    // samples are registered ones by the grammar, so each has an id
+    val names = ing.sampleNames
+    val ids = names.zipWithIndex.toMap
+    val training = config.training.map(s => ids(s.name) -> s.tumorous).sortBy(_._1)
+    val predicting = config.predicting.map(s => ids(s.name))
+    // the coverage guard makes the registered samples the covered ones,
+    // so the gate needs no pass over the matrix
+    val (model, scores) =
+      if (Network.useDense(spark, names.length.toLong, ing.nProbes))
+        runDense(spark, ing, training, predicting, config, alsParams, svmParams)
+      else runRelational(spark, ing, training, predicting, config, alsParams, svmParams)
+
+    // P5 reverse decode, once for both regimes: the reference prints
+    // "Unknown" for an unmapped id (`PipeLine.scala:30`); every scored
+    // id here came from `predicting`, so a miss is a bug and fails loudly
+    val preds = scores.map { case (id, p) =>
+      names.lift(id).getOrElse(throw new IllegalStateException(s"score for unregistered sample id $id")) -> p
+    }
+    import spark.implicits._
+    // the model's feature count is the network filter's survivor count
+    Result(preds.toDF("sample_name", "prediction"), ing.nProbes, model.numFeatures.toLong)
   }
 
   /** Loud coverage guard (r15 pipeline review): a registered sample
@@ -67,8 +84,8 @@ object LuadPipeline {
     * matrix rows, nothing fabricated by completion, the training join
     * shrinks, and the run exits 0 with N-1 predictions.
     */
-  private def requireCovered(sampleNames: Map[Int, String], covered: Int => Boolean): Unit = {
-    val uncovered = sampleNames.toSeq.sorted.collect { case (id, name) if !covered(id) => name }
+  private def requireCovered(names: Array[String], covered: Int => Boolean): Unit = {
+    val uncovered = names.indices.filterNot(covered).map(names)
     require(uncovered.isEmpty,
       s"registered sample(s) with zero parseable matrix rows: " +
         s"${uncovered.mkString(", ")} — empty or fully unparseable file?")
@@ -77,57 +94,53 @@ object LuadPipeline {
   /** Dense regime: the ingested matrix is collected once, and
     * completion, the network filter, training and prediction run on the
     * driver arrays — replicas of ml-ALS and LinearSVC (`completeDense`,
-    * `trainDense`) plus one `denseSurvivors` pass. The predictions are a
-    * local frame.
+    * `trainDense`) plus one `denseSurvivors` pass. Returns the model and
+    * the ±1.0 score of each id in `predicting`.
     */
   private def runDense(
       spark: SparkSession,
       ing: Ingest.IngestResult,
-      sampleNames: Map[Int, String],
+      training: Seq[(Int, Boolean)], // (sample id, tumorous), ids ascending
+      predicting: Seq[Int],
       config: DefParser.PipelineConfig,
       alsParams: Completion.AlsParams,
       svmParams: Svm.SvmParams,
-  ): Result = {
-    import spark.implicits._
+  ): (LinearSVCModel, Seq[(Int, Double)]) = {
     val observed = timed("ingest-materialize")(Completion.collectObserved(spark, ing.matrix))
     val covered = new java.util.BitSet
     observed.samples.foreach(_.foreach(covered.set))
-    requireCovered(sampleNames, covered.get)
+    requireCovered(ing.sampleNames, covered.get)
     val completed = timed("als-completion")(
       Completion.completeDense(observed, alsParams, spark.sparkContext.defaultParallelism))
     val keep = timed("network-and-assembly")(config.pcThreshold
       .fold(completed.probes.indices.toArray)(Network.denseSurvivors(spark, completed.values, _)))
-    val rows = Svm.denseRows(keep.map(completed.values))
-    val rowOf = completed.samples.zip(rows).toMap
-    val sampleIds = sampleNames.map(_.swap)
-    val training = config.training.flatMap(s => sampleIds.get(s.name).map(_ -> s.tumorous)).sortBy(_._1)
+    val rowOf = completed.samples.zip(Svm.denseRows(keep.map(completed.values))).toMap
     val model = timed("svm-train")(
       Svm.trainDense(training.map(t => rowOf(t._1)).toArray, training.map(_._2).toArray, svmParams))
-    val preds = config.predicting.flatMap(s => sampleIds.get(s.name))
-      .map(id => (sampleNames(id), Svm.predictDense(model, rowOf(id))))
-    Result(preds.toDF("sample_name", "prediction"), ing.nProbes, keep.length.toLong)
+    (model, predicting.map(id => id -> Svm.predictDense(model, rowOf(id))))
   }
 
   /** Relational regime: ml-ALS, the Pearson self-join → GraphX → filter
     * join, Spark-side assembly and LinearSVC, with shared subtrees
-    * persisted.
+    * persisted. Returns the model and the collected ±1.0 scores, one
+    * per id in `predicting`.
     */
   private def runRelational(
       spark: SparkSession,
       ing: Ingest.IngestResult,
-      sampleNames: Map[Int, String],
+      training: Seq[(Int, Boolean)], // (sample id, tumorous)
+      predicting: Seq[Int],
       config: DefParser.PipelineConfig,
       alsParams: Completion.AlsParams,
       svmParams: Svm.SvmParams,
-  ): Result = {
+  ): (LinearSVCModel, Seq[(Int, Double)]) = {
     import spark.implicits._
     val matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK)
     val coveredSamples = timed("ingest-materialize") {
       matrix.select("sample").distinct().collect().map(_.getInt(0)).toSet
     }
-    requireCovered(sampleNames, coveredSamples)
-    val nBefore = ing.nProbes
-    val cards = Some((coveredSamples.size.toLong, nBefore))
+    requireCovered(ing.sampleNames, coveredSamples)
+    val cards = Some((coveredSamples.size.toLong, ing.nProbes))
 
     val completed = timed("als-completion") {
       val c = Completion.complete(spark, matrix, alsParams, cards)
@@ -139,63 +152,34 @@ object LuadPipeline {
     // grid, so the distinct sets — and `cards` — are unchanged by it
 
     // network filter + feature assembly: Pearson self-join → GraphX →
-    // filter join → Spark-side assembly, whose vectors all have one
-    // length (its probe_sig guard) — the survivor count
-    val (features, nAfter) = timed("network-and-assembly") {
-      val filtered = config.pcThreshold.fold(completed)(Network.filterRelational(spark, completed, _))
-      val f = Svm.assembleFeatures(filtered)
-      (f, f.select("features").head().getAs[Vector](0).size.toLong)
-    }
-
-    // training labels / prediction ids via the sample dictionary (F1/F2)
-    val sampleDict = ing.sampleDict
-    val labels = config.training
-      .map(s => (s.name, s.tumorous)).toDF("sample_name", "tumorous")
-      .join(sampleDict, "sample_name")
-      .select("sample", "tumorous")
-    val predictIds = config.predicting.map(_.name).toDF("sample_name")
-      .join(sampleDict, "sample_name")
-      .select("sample")
-
-    val model = timed("svm-train")(Svm.train(spark, features, labels, svmParams))
+    // filter join → Spark-side assembly (checkpointed inside)
+    val features = timed("network-and-assembly")(
+      Svm.assembleFeatures(config.pcThreshold.fold(completed)(Network.filterRelational(spark, completed, _))))
+    val model = timed("svm-train")(Svm.train(spark, features, training.toDF("sample", "tumorous"), svmParams))
+    val predictIds = predicting.toDF("sample")
     val toScore = features.join(broadcast(predictIds), Seq("sample"), "left_semi")
-    val preds = Svm.predict(model, toScore)
-
-    // P5 reverse decode: id → name; the reference emits "Unknown" for
-    // unmapped ids (`PipeLine.scala:30`) — impossible here by
-    // construction, kept as coalesce for the same output contract.
-    val decoded = preds
-      .join(broadcast(sampleDict), Seq("sample"), "left")
-      .select(
-        coalesce(col("sample_name"), lit("Unknown")).as("sample_name"),
-        col("prediction"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    decoded.count() // materialize so every upstream block can be freed
-
+    // at most one row per predictive sample
+    val scores = Svm.predict(model, toScore).as[(Int, Double)].collect().toSeq
     matrix.unpersist(); completed.unpersist()
-    Result(decoded, nBefore, nAfter)
+    (model, scores)
   }
 
   /** Output sink (K1/K2, `PipeLine.scala:33-38`): stdout when no output
     * path, else tab-separated part files with `%s%` replaced by epoch
-    * millis. `parts` caps the part-file count — the reference writes
-    * 8-way (`PipeLine.scala:36-37`, artifact `output/text.txt/1..8`)
-    * and so does this by default; a single-task coalesce(1) write
-    * would serialize the whole sink through one core the moment the
-    * output is large. coalesce (not repartition): no shuffle, and it
-    * can only lower the partition count — a small result that already
-    * sits in fewer partitions stays as-is.
+    * millis, at most 8 — the reference writes 8-way
+    * (`PipeLine.scala:36-37`, artifact `output/text.txt/1..8`); a
+    * single-task coalesce(1) write would serialize the whole sink
+    * through one core the moment the output is large. coalesce (not
+    * repartition): no shuffle, and it can only lower the partition
+    * count — a small result that already sits in fewer partitions
+    * stays as-is.
     */
-  def writeOutput(
-      result: DataFrame,
-      outputPath: Option[String],
-      parts: Int = 8,
-  ): Unit =
+  def writeOutput(result: DataFrame, outputPath: Option[String]): Unit =
     outputPath match {
       case None => result.collect().foreach(r => println(s"${r.get(0)}\t${r.get(1)}"))
       case Some(p) =>
         val path = p.replace("%s%", System.currentTimeMillis().toString)
-        result.coalesce(parts).write.mode("overwrite").option("sep", "\t").csv(path)
+        result.coalesce(8).write.mode("overwrite").option("sep", "\t").csv(path)
     }
 
   /** CLI mirroring the reference driver: args(0) = definition file.

@@ -26,9 +26,10 @@ import org.apache.spark.storage.StorageLevel
   *    `Completion.completeDense` already holds.
   *  - Connected components elsewhere: GraphX `connectedComponents()`
   *    (Pregel, incremental frontier — same semantics as the reference's
-  *    delta iteration `PreProcess.scala:179-197`, maxIter 100). A pure
-  *    DataFrame loop fallback is provided for the SQL-only engine path;
-  *    it checkpoints each round to truncate lineage.
+  *    delta iteration `PreProcess.scala:179-197`, maxIter 100). The pure
+  *    DataFrame loop `connectedComponentsDF` serves the operator surface
+  *    (`PipelineOps`), not the pipeline; it checkpoints each round to
+  *    truncate lineage.
   *  - Representative per component: `min(probe)` — the reference takes
   *    an arbitrary group-first (quirk Q3); min is deterministic.
   */
@@ -140,34 +141,19 @@ object Network {
       .as[(Int, Array[Int], Array[Double])]
   }
 
-  /** The completed-matrix collect of `pearsonEdgesDense`, with the
-    * completeness guards.
-    *
-    * Requires a COMPLETE matrix (every sample × probe cell present
-    * exactly once) — asserted; the reference runs it post-completion
-    * only.
+  /** The completed-matrix collect of `pearsonEdgesDense`:
+    * `Completion.collectObserved` (one grouped collect, probe ids
+    * ascending, no duplicate observation) plus the alignment guard —
+    * every probe must cover the IDENTICAL sample array; equal counts
+    * alone would let positionally-misaligned vectors through (the
+    * reference's quirk Q2, the exact bug this module exists to fix).
     */
   private[pipeline] def collectDense(spark: SparkSession, matrix: DataFrame): DenseMatrix = {
-    val rows = byProbe(spark, matrix).collect()
-    require(rows.nonEmpty, "empty matrix")
-    // alignment guard: every probe must cover the IDENTICAL sample
-    // sequence — equal counts alone would let positionally-misaligned
-    // vectors through (the reference's quirk Q2, the exact bug this
-    // module exists to fix) — and that sequence must hold each sample
-    // once: a duplicate (sample, probe) observation repeated on every
-    // probe would pass the equality check alone
-    val samples = rows.head._2
-    require(
-      rows.forall(r => java.util.Arrays.equals(r._2, samples)) &&
-        samples.indices.drop(1).forall(k => samples(k - 1) < samples(k)),
-      "dense path requires a complete matrix (each sample exactly once per probe) — " +
-        "matrix incomplete, or a duplicate (sample, probe) observation survived ingest")
-    // index-aligned PRIMITIVE arrays, sorted by probe id: the pair loop
-    // must be pure double[] arithmetic — a Map[Int, _] lookup per pair
-    // would box the key and hash 230M+ times at the reference shape
-    // (measured 10×+ slower than the flops themselves)
-    val sorted = rows.sortBy(_._1)
-    DenseMatrix(sorted.map(_._1), samples, sorted.map(_._3))
+    val observed = Completion.collectObserved(spark, matrix)
+    val samples = observed.samples.head
+    require(observed.samples.forall(java.util.Arrays.equals(_, samples)),
+      "dense path requires a complete matrix (every probe covers the same samples) — matrix incomplete")
+    DenseMatrix(observed.probes, samples, observed.values)
   }
 
   /** Standardize each probe row so that r_ij = z_i · z_j —

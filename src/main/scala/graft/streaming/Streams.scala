@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.pipeline.Ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,25 +41,24 @@ object Streams {
   private def tsMicros(t: java.sql.Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
-  /** Streaming file-source ingest of expression TSVs (S2's schema) —
-    * the streaming twin of `pipeline.Ingest.readType`'s SCAN stage
-    * only: the `file` column carries the raw `input_file_name()` URI,
-    * and mapping it back to a sample (with readType's fail-loud check
-    * for files that map to no declared sample) is the caller's batch
-    * step, since the sample dictionary is a static frame joined per
-    * micro-batch, not streaming state.
+  /** Streaming file-source ingest of expression TSVs — the streaming
+    * twin of `pipeline.Ingest.readType`'s SCAN stage, with its schema,
+    * options and lenient parse (a headerless file keeps its first row;
+    * a non-numeric value drops its row): the `file` column carries the
+    * raw `input_file_name()` URI, and mapping it back to a sample (with
+    * readType's fail-loud check for files that map to no declared
+    * sample) is the caller's batch step, since the sample dictionary is
+    * a static frame joined per micro-batch, not streaming state.
     */
-  def expressionFileStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .option("sep", "\t")
-      .option("header", "true")
+  def expressionFileStream(spark: SparkSession, dir: String): DataFrame = {
+    val raw = spark.readStream
+      .options(Ingest.ExpressionOptions)
       .option("maxFilesPerTrigger", 16) // bound micro-batch size
-      .schema("probe_name STRING, raw_value STRING")
+      .schema(Ingest.ExpressionSchema)
       .csv(dir)
       .withColumn("file", input_file_name())
-      .withColumn("value", col("raw_value").cast("double"))
-      .filter(col("value").isNotNull && col("probe_name").isNotNull)
-      .select("file", "probe_name", "value")
+    Ingest.parseLenient(raw).select("file", "probe_name", "value")
+  }
 
   /** Tumbling event-time counts with watermark: rows later than the
     * watermark are dropped, state is evicted past it.
@@ -73,14 +73,6 @@ object Streams {
       .groupBy(window(col("ts"), window_), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"))
-
-  /** Sliding windows (1h every 30min) — same shape, overlapping. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("n"))
 
   /** Session windows per user, 30-minute gap (built-in session_window
     * state store — no custom mapGroupsWithState needed).
@@ -182,21 +174,7 @@ object Streams {
       right: DataFrame, // needs ts TIMESTAMP, user_id LONG, value DOUBLE
       window: String = "5 minutes",
       lateness: String = "10 minutes",
-  ): DataFrame = {
-    val l = left
-      .select(col("user_id"), col("ts").as("l_ts"), col("event_type").as("l_type"))
-      .withWatermark("l_ts", lateness)
-    val r = right
-      .select(col("user_id").as("r_user_id"), col("ts").as("r_ts"), col("value"))
-      .withWatermark("r_ts", lateness)
-    l.join(
-      r,
-      col("user_id") === col("r_user_id") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"interval $window"),
-      "inner")
-      .select(col("user_id"), col("l_ts"), col("l_type"), col("r_ts"), col("value"))
-  }
+  ): DataFrame = intervalJoinOf(left, right, window, lateness, "inner")
 
   /** Stream-stream LEFT OUTER interval join: same predicate as
     * `intervalJoin`, but a left row with no right match within its
@@ -214,6 +192,15 @@ object Streams {
       right: DataFrame,
       window: String = "5 minutes",
       lateness: String = "10 minutes",
+  ): DataFrame = intervalJoinOf(left, right, window, lateness, "leftOuter")
+
+  /** The one body of `intervalJoin` and `intervalJoinOuter`. */
+  private def intervalJoinOf(
+      left: DataFrame,
+      right: DataFrame,
+      window: String,
+      lateness: String,
+      joinType: String,
   ): DataFrame = {
     val l = left
       .select(col("user_id"), col("ts").as("l_ts"), col("event_type").as("l_type"))
@@ -226,7 +213,7 @@ object Streams {
       col("user_id") === col("r_user_id") &&
         col("r_ts") >= col("l_ts") &&
         col("r_ts") <= col("l_ts") + expr(s"interval $window"),
-      "leftOuter")
+      joinType)
       .select(col("user_id"), col("l_ts"), col("l_type"), col("r_ts"), col("value"))
   }
 

@@ -380,10 +380,10 @@ class ArrayOrderingConventionSpec extends SparkSpec {
     // Per-file token counts (comments included — the pin is a
     // tripwire, not semantics). Non-walkable sites and why they are
     // safe:
-    //  - pipeline/Network.scala ×2 (pearsonEdgesDense, EAGER collect):
-    //    struct(sample, value) over the completeness-ASSERTED matrix —
-    //    one value per (sample, probe) makes the first field unique
-    //    per probe group, and the alignment require() would catch any
+    //  - pipeline/Network.scala ×2 (byProbe, collected EAGERLY by
+    //    Completion.collectObserved): struct(sample, value) where a
+    //    sample occurs once per probe group — the duplicate-observation
+    //    require() makes the first field unique and would catch any
     //    divergence loudly.
     //  - pipeline/Svm.scala ×2 (assembleFeatures, behind
     //    localCheckpoint + eager sig check): same matrix, same

@@ -129,7 +129,6 @@ class BroadcastConventionSpec extends AnyFunSuite {
     // LUAD corpus dims: 62 samples / ~21.5k probes
     ("Svm.scala", "broadcast(labels)"),
     ("LuadPipeline.scala", "broadcast(predictIds)"),
-    ("LuadPipeline.scala", "broadcast(sampleDict)"),
     ("Ingest.scala", "broadcast(sampleDict)"),
     ("Ingest.scala", "broadcast(probeDict)"),
     // budget-gated dense-Pearson scratch arrays (sparkContext

@@ -34,14 +34,12 @@ class CollectConventionSpec extends AnyFunSuite {
     ("SimilarityOps.scala", ".collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq"),
     // single-row min/max bounds aggregate (the q108 bounds pattern)
     ("Relational.scala", "df.agg(min(a), max(a), min(b), max(b)).collect().head"),
-    // completed-matrix pull of `pearsonEdgesDense`: probes × samples
-    // primitive arrays; its one caller outside tests (perfbench's
-    // traced composition) uses it only at shapes the memory-budget
-    // gate `Network.useDense` admits
-    ("Network.scala", "byProbe(spark, matrix).collect()"),
     // dense-regime pull of the INGESTED matrix: ≤ probes × samples
     // primitive arrays (observed cells only), entered ONLY under the
-    // same `Network.useDense` gate in `LuadPipeline.run`
+    // `Network.useDense` gate in `LuadPipeline.run`; also the
+    // completed-matrix pull of `pearsonEdgesDense` (`collectDense`),
+    // whose one caller outside tests (perfbench's traced composition)
+    // uses it only at shapes the same gate admits
     ("Completion.scala", "Network.byProbe(spark, matrix).collect()"),
     // dense-path union-find merge: per kernel task, the (index, root)
     // int pairs its union-find changed — ≤ 2 ints per probe per task
@@ -55,8 +53,9 @@ class CollectConventionSpec extends AnyFunSuite {
     // distinct ingested sample ids: registry-sized (62 samples at the
     // reference shape) — the coverage-guard cardinality pass
     ("LuadPipeline.scala", "matrix.select(\"sample\").distinct().collect()"),
-    // sample dictionary: registry-sized by construction
-    ("LuadPipeline.scala", "ing.sampleDict.collect()"),
+    // relational-regime scores: one (id, ±1.0) row per predictive
+    // sample at most — registry-sized
+    ("LuadPipeline.scala", "Svm.predict(model, toScore).as[(Int, Double)].collect()"),
     // K1 stdout print sink (reference contract): predictions are
     // prediction-set-sized (≤ registered samples)
     ("LuadPipeline.scala", "result.collect().foreach"),

@@ -225,6 +225,59 @@ class IngestSpec extends SparkSpec {
     assert(predictions(relational) == predictions(dense))
   }
 
+  /** A two-type mini-corpus: mirna probes m0-m5 and rna probes r0-r5 in
+    * six correlated pairs (one pair carries the class signal), so the
+    * 0.8 pc-threshold merges each pair; the sample the seed picks
+    * registers no rna file, so completion fills a whole type of it.
+    */
+  private def twoTypeCorpus(seed: Long): (String, DefParser.PipelineConfig) = {
+    val rnd = new scala.util.Random(seed)
+    val dir = Files.createTempDirectory(s"graft_corpus_two_type_$seed")
+    val names = (0 until 12).map(i => f"TRAIN-$i%02d") ++ (0 until 4).map(i => f"PRED-$i%02d")
+    val lacking = names(rnd.nextInt(names.size))
+    // per (pair, sample) factor; pair 0 shifts by class (tumorous ⇔ even index)
+    val factor = Array.tabulate(6, names.size) { (b, i) =>
+      rnd.nextGaussian() + (if (b != 0) 0.0 else if (i % 2 == 0) 3.0 else -3.0)
+    }
+    val defLines = new StringBuilder("def\tsample-type\tmirna\ndef\tsample-type\trna\ndef\tpc-threshold\t0.8\n")
+    for ((n, i) <- names.zipWithIndex) {
+      defLines ++= s"def\t${if (i < 12) "sample" else "predictive"}\t$n\n"
+      if (i % 2 == 0 && i < 12) defLines ++= s"diagnosis\t$n\tTN\n"
+      for ((t, first) <- Seq("mirna" -> 0, "rna" -> 3) if !(t == "rna" && n == lacking)) {
+        Files.createDirectories(dir.resolve(t))
+        val rows = (0 until 6).map { k =>
+          val b = first + k / 2
+          val v = 10.0 * b + 2.0 * (factor(b)(i) + 0.05 * rnd.nextGaussian())
+          s"${t.head}$k\t" + String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
+        }
+        Files.writeString(dir.resolve(s"$t/$n.txt"), rows.mkString("probe\tvalue\n", "\n", "\n"))
+        defLines ++= s"$t\t$n\t$t/$n.txt\n"
+      }
+    }
+    Files.writeString(dir.resolve("input.txt"), defLines.toString)
+    (dir.toString, DefParser.parseFile(s"$dir/input.txt"))
+  }
+
+  test("both regimes give identical predictions and n_probes_after on two-type corpora with a missing type") {
+    // fixed seeds, chosen before the first run
+    for (seed <- Seq(11L, 12L, 13L)) {
+      val (base, config) = twoTypeCorpus(seed)
+      assert(Network.useDense(spark, config.samples.size.toLong, 12L))
+      def predictions(r: LuadPipeline.Result) =
+        r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
+      val dense = runMini(base, config)
+      spark.conf.set("spark.graft.pearson.maxDenseBytes", "0")
+      val relational =
+        try runMini(base, config)
+        finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
+      assert(dense.nProbesBefore == 12 && relational.nProbesBefore == 12, s"seed $seed")
+      assert(dense.nProbesAfter < 12, s"seed $seed: the threshold merged no probe")
+      assert(relational.nProbesAfter == dense.nProbesAfter, s"seed $seed")
+      assert(predictions(dense).size == 4, s"seed $seed")
+      assert(predictions(relational) == predictions(dense), s"seed $seed")
+    }
+  }
+
   test("a training set of one class fails the run, naming the class counts") {
     val dir = Files.createTempDirectory("graft_corpus_one_class")
     val base = writeCorpus(dir, nTrain = 6, nPredict = 2, nProbes = 4)

@@ -294,8 +294,12 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
       val df = cooDF(rows)
       // the relational assembly rejects the same inputs (probe_sig)
       assertThrows[IllegalArgumentException](Svm.assembleFeatures(df))
+      // collectDense is collectObserved plus the alignment guard, so
+      // the message names the fault: a duplicate is caught by the
+      // shared collect, a missing cell by the alignment guard
       val e = intercept[IllegalArgumentException](Network.collectDense(spark, df))
-      assert(e.getMessage.contains("complete matrix"), s"$name: ${e.getMessage}")
+      val fault = if (name == "incomplete") "complete matrix" else "duplicate"
+      assert(e.getMessage.contains(fault), s"$name: ${e.getMessage}")
       // the dense regime's collect of the INGESTED matrix takes missing
       // cells (ALS fills them) but no duplicate
       if (name == "incomplete") Completion.collectObserved(spark, df)
