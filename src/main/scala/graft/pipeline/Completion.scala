@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   *    re-parallelizes it (`PreProcess.scala:163`) — the scalability
   *    killer called out in SURVEY §3.1. Here the completed matrix stays
   *    a DataFrame end to end in the relational regime.
-  *  - Dense regime (the `Network.useDense` budget admits the matrix to
-  *    the driver): the observed matrix is collected once
-  *    (`collectObserved`) and completed on the driver by `completeDense`,
-  *    a replica of ml-ALS's own arithmetic — no Spark job per ALS step.
+  *  - Dense regime (the `Network.fitsDense` budget admits the matrix to
+  *    the driver): the observed matrix that `Ingest.ingestDense` merged
+  *    on the driver is completed there by `completeDense`, a replica of
+  *    ml-ALS's own arithmetic — no Spark job per ALS step.
   */
 object Completion {
 
@@ -129,12 +129,13 @@ object Completion {
       values: Array[Array[Double]],
   )
 
-  /** The dense regime's one collect of the ingested matrix (and
-    * `Network.collectDense`'s of a completed one), with the
-    * duplicate-observation guard: two observations of one (sample,
-    * probe) cell would be two ratings to ALS and two values to every
-    * later step, so they are rejected, as the relational assembly's
-    * probe-set check rejects them.
+  /** A COO matrix collected by probe — `Network.collectDense`'s collect
+    * of a completed matrix — with the duplicate-observation guard: two
+    * observations of one (sample, probe) cell would be two values to
+    * every later step, so they are rejected, as the relational
+    * assembly's probe-set check rejects them. (The dense regime's
+    * ingest merges its matrix from the scan tasks and names a duplicate
+    * by probe, sample and file there.)
     */
   def collectObserved(spark: SparkSession, matrix: DataFrame): Observed = {
     val rows = Network.byProbe(spark, matrix).collect().sortBy(_._1)

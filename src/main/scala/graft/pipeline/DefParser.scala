@@ -14,7 +14,7 @@ package graft.pipeline
   *   - `def predictive NAME`    NAME is a prediction sample
   *   - `def sample-type T`      declare sample-type T
   *   - `def output PATH`        output path (`%s%` → epoch millis)
-  *   - `def pc-threshold V`     `none` → None, else Double
+  *   - `def pc-threshold V`     `none` → None, else a Double in [0, 1]
   *   - `diagnosis NAME D`       NAME tumorous iff D == "TN"
   *   - `T NAME PATH`            attach file PATH of declared type T to
   *                              sample NAME (last file per (NAME,T) wins,
@@ -99,7 +99,7 @@ object DefParser {
         types :+= t
       case ("def", "output", p) => output = Some(p)
       case ("def", "pc-threshold", v) =>
-        threshold = if (v.equalsIgnoreCase("none")) None else Some(v.toDouble)
+        threshold = if (v.equalsIgnoreCase("none")) None else Some(parseThreshold(v))
       case ("def", sub, _) =>
         throw new IllegalArgumentException(s"unknown def subcommand: $sub")
       case ("diagnosis", name, d) => if (d == "TN") tumorous += name
@@ -123,4 +123,12 @@ object DefParser {
     }
     PipelineConfig(specs.sortBy(_.name), types.distinct, threshold, output)
   }
+
+  /** A Pearson |r| cut, in [0, 1]. Anything else would run quietly
+    * wrong: 8 (for 0.8) keeps every probe, a negative cut merges every
+    * pair, NaN disables the filter.
+    */
+  private def parseThreshold(v: String): Double =
+    v.toDoubleOption.filter(t => t >= 0.0 && t <= 1.0).getOrElse(
+      throw new IllegalArgumentException(s"pc-threshold must be 'none' or a number in [0, 1], got '$v'"))
 }

@@ -1,6 +1,10 @@
 package graft.pipeline
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,21 +14,29 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale design: the reference reads one file per (sample, type) in a
   * driver loop and chains 477 unions (`Input.scala:116-131`) — a plan
-  * with 477 scan nodes. Here all files of a sample-type are read in ONE
-  * multi-path scan; `input_file_name()` recovers which sample a row
-  * belongs to via a broadcast file→sample dictionary. At 100 TB this is
-  * a single distributed scan whose parallelism comes from file splits,
-  * not from plan width.
+  * with 477 scan nodes. Here every registered file of every type is
+  * read in ONE multi-path scan, and `_metadata.file_path` says which
+  * file a row came from; the resolver maps each file (not each row)
+  * back to its sample. At 100 TB this is a single distributed scan whose
+  * parallelism comes from file splits, not from plan width.
+  *
+  * Two forms of the same read, one per regime of `LuadPipeline.run`:
+  *  - `ingestDense`: one Spark job. Each task dictionary-encodes its
+  *    rows; the driver merges the task dictionaries into probe ids and
+  *    the by-probe observed matrix, applying the dense gate to the
+  *    probes seen as task results arrive.
+  *  - `ingest` (relational): the matrix stays a DataFrame; probe names
+  *    come from a map-only job of per-task distinct names,
+  *    broadcast-joined back as ids.
   *
   * Lenient semantics (reference `lenient = true`, `Input.scala:121`):
   * the header line and any row whose value column fails the double cast
-  * are dropped; only the first two columns are read (S2's
+  * are dropped and counted; only the first two columns are read (S2's
   * `includedFields = Array(0,1)`).
   *
   * Dictionaries: the reference assigns probe ids from `Set` iteration
   * order — nondeterministic (SURVEY §8 Q3). We sort names before
-  * assigning dense ids so every run is reproducible. Both are built on
-  * the driver (registry- and probe-sized, broadcast-joined).
+  * assigning dense ids so every run is reproducible.
   */
 object Ingest {
 
@@ -34,17 +46,28 @@ object Ingest {
       sampleDict: DataFrame, // (sample_name STRING, sample INT), from sampleNames
       probeDict: DataFrame, // (name STRING, probe INT)
       nProbes: Long, // probe dictionary size = distinct probes in `matrix`
+      rowsDropped: Long, // rows the lenient parse dropped, header lines included
   )
 
-  /** The expression-file scan of `readType` and of its streaming twin
-    * `Streams.expressionFileStream`: only cols 0-1 reach the plan (S2),
-    * read with header=false, then `parseLenient`. The reference
-    * (Input.scala lenient=true) drops a row only when its VALUE fails
-    * the Double parse, so a header line is dropped as a non-numeric
-    * row, where header=true would eat the first DATA row of a headerless
-    * export (an observed cell turned into a missing one for ALS to
-    * fabricate). try_cast, not cast: under Spark 4's ANSI default a
-    * plain cast THROWS on a non-numeric value.
+  /** The dense regime's ingest: probe id → name, the observed matrix by
+    * probe id (sample ids index `sampleNames`), and the rows the lenient
+    * parse dropped, header lines included.
+    */
+  final case class DenseIngest(
+      probeNames: Array[String],
+      observed: Completion.Observed,
+      rowsDropped: Long,
+  )
+
+  /** The expression-file scan of `readFiles`, `ingestDense` and of the
+    * streaming twin `Streams.expressionFileStream`: only cols 0-1 reach
+    * the plan (S2), read with header=false, then `parseLenient`. The
+    * reference (Input.scala lenient=true) drops a row only when its
+    * VALUE fails the Double parse, so a header line is dropped as a
+    * non-numeric row, where header=true would eat the first DATA row of
+    * a headerless export (an observed cell turned into a missing one for
+    * ALS to fabricate). try_cast, not cast: under Spark 4's ANSI default
+    * a plain cast THROWS on a non-numeric value.
     */
   private[graft] val ExpressionSchema: StructType =
     StructType(Seq(StructField("probe_name", StringType), StructField("raw_value", StringType)))
@@ -53,92 +76,277 @@ object Ingest {
     raw.withColumn("value", expr("try_cast(raw_value AS DOUBLE)"))
       .filter(col("value").isNotNull && col("probe_name").isNotNull)
 
-  /** All expression rows of one sample-type as (sample_name, probe_name,
-    * value) — one multi-path scan, sample recovered from the file path.
+  /** Sample id → name: the registered samples sorted by name, so ids
+    * are reproducible (F1/F2).
     */
-  def readType(
+  def sampleNames(config: DefParser.PipelineConfig): Array[String] =
+    config.samples.map(_.name).sorted.toArray
+
+  /** Every registered file, by its path relative to the base dir, → its
+    * sample. A file registered twice — by two samples, or by two types
+    * of one — would map back to two owners (the reference reads per
+    * (sample, file) pair and gives the rows to both), so it is rejected
+    * loudly instead.
+    */
+  private def registeredFiles(config: DefParser.PipelineConfig): Map[String, String] = {
+    val owners = for (s <- config.samples; (t, f) <- s.files.toSeq) yield (f, s.name, t)
+    require(owners.nonEmpty, "no expression files registered")
+    val dups = owners.groupBy(_._1).filter(_._2.size > 1)
+    require(
+      dups.isEmpty,
+      "file(s) registered more than once: " +
+        dups.map { case (f, os) => s"$f -> ${os.map(o => s"${o._2} (${o._3})").mkString(", ")}" }.mkString("; "))
+    owners.map(o => o._1 -> o._2).toMap
+  }
+
+  /** Spark reports each scanned file by its absolute, normalized path,
+    * so the base is normalized the same way: a base with a `.` or `..`
+    * segment (`./input.txt`'s parent is `<cwd>/.`) would otherwise never
+    * match.
+    */
+  private def normalizedBase(baseDir: String): String =
+    java.nio.file.Paths.get(baseDir).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
+
+  /** One multi-path scan of `files` (relative to `base`) as
+    * (probe_name, raw_value, file_path): file_path is the scanned file
+    * as Spark reports it, a percent-encoded URI.
+    */
+  private def scan(spark: SparkSession, base: String, files: Iterable[String]): DataFrame =
+    spark.read.options(ExpressionOptions).schema(ExpressionSchema).csv(files.map(base + _).toSeq.sorted: _*)
+      .select(col("probe_name"), col("raw_value"), col("_metadata.file_path").as("file_path"))
+
+  /** The registered file (its path relative to `base`) behind a file
+    * path Spark reports. The URI is decoded first: a space or non-ASCII
+    * character in the corpus path would otherwise never match. A miss
+    * throws: a path-form mismatch would otherwise lose every row of the
+    * file silently.
+    */
+  private def resolver(base: String, files: Map[String, String]): String => String = { scanned =>
+    val decoded =
+      try new java.net.URI(scanned).getPath
+      catch { case _: Exception => scanned }
+    val i = decoded.indexOf(base)
+    Option.when(i >= 0)(decoded.substring(i + base.length)).filter(files.contains).getOrElse(
+      throw new IllegalStateException(s"cannot map scanned file back to a sample: $scanned (base $base)"))
+  }
+
+  /** All expression rows of `fileToSample`'s files as (sample_name,
+    * probe_name, value): one multi-path scan, lenient, each row tagged
+    * with its file's sample by a broadcast join on the file's path (the
+    * resolver runs once per listed file, not per row).
+    */
+  def readFiles(
       spark: SparkSession,
       baseDir: String,
       fileToSample: Map[String, String], // relative path → sample name
   ): DataFrame = {
-    require(fileToSample.nonEmpty, "no files for sample-type")
-    // Spark reports each scanned file by its absolute, normalized path,
-    // so the base is normalized the same way once here: a base with a
-    // `.` or `..` segment (`./input.txt`'s parent is `<cwd>/.`) would
-    // otherwise never match and every row would fail the lookup below.
-    val base = java.nio.file.Paths.get(baseDir).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
-    val paths = fileToSample.keys.map(base + _).toSeq.sorted
-    // input_file_name() yields a percent-encoded URI (file:///...);
-    // decode it, then strip everything up to the base dir and look the
-    // relative path up exactly — O(1) per row, not O(#files), so
-    // tagging stays scan-speed at any file count. Decoding matters:
-    // a space or non-ASCII char in the corpus path would otherwise
-    // break the match and SILENTLY drop that sample's rows.
-    // throws (not null) on a miss: a path-form mismatch here would
-    // otherwise null the sample tag and the dictionary join would then
-    // SILENTLY drop every row of the file
-    val lookup = udf { (fileName: String) =>
-      val decoded =
-        try new java.net.URI(fileName).getPath
-        catch { case _: Exception => fileName }
-      val i = decoded.indexOf(base)
-      val sample =
-        if (i < 0) null
-        else fileToSample.getOrElse(decoded.substring(i + base.length), null)
-      if (sample == null)
-        throw new IllegalStateException(
-          s"cannot map scanned file back to a sample: $fileName (base $base)")
-      sample
-    }
-    val raw = spark.read.options(ExpressionOptions).schema(ExpressionSchema).csv(paths: _*)
-      .withColumn("sample_name", lookup(input_file_name()))
-    parseLenient(raw).select("sample_name", "probe_name", "value")
+    import spark.implicits._
+    val base = normalizedBase(baseDir)
+    val raw = scan(spark, base, fileToSample.keys)
+    val resolve = resolver(base, fileToSample)
+    // keyed by the URI's raw path: the listing reports `file:///x`
+    // where a row's `_metadata.file_path` reads `file:/x`
+    val owners = raw.inputFiles.toSeq
+      .map(f => new java.net.URI(f).getRawPath -> fileToSample(resolve(f))).toDF("file", "sample_name")
+    parseLenient(raw)
+      .withColumn("file", expr("parse_url(file_path, 'PATH')"))
+      .join(broadcast(owners), Seq("file"), "left")
+      .select(
+        // a row of a file the listing did not hold fails, not drops
+        when(col("sample_name").isNull,
+          raise_error(concat(lit("cannot map scanned file back to a sample: "), col("file_path"))))
+          .otherwise(col("sample_name")).as("sample_name"),
+        col("probe_name"), col("value"))
   }
 
-  /** Full ingest: every declared sample-type of the config, read, tagged,
-    * unioned, dictionary-encoded (reference appends the per-type probe
-    * column spaces into one, `Input.scala:116-131` — probe names
-    * don't collide across types in practice; we keep that semantic).
+  /** Relational ingest: every registered file read, tagged and
+    * dictionary-encoded as a DataFrame (reference appends the per-type
+    * probe column spaces into one, `Input.scala:116-131`).
     */
   def ingest(
       spark: SparkSession,
       baseDir: String,
       config: DefParser.PipelineConfig,
   ): IngestResult = {
-    val perType = config.sampleTypes.flatMap { t =>
-      val pairs = config.samples.flatMap(s => s.files.get(t).map(_ -> s.name))
-      // two samples registering the SAME file would silently lose one
-      // in the path→sample Map (the reference reads per (sample, file)
-      // pair and gives the rows to both) — reject loudly instead
-      val dups = pairs.groupBy(_._1).filter(_._2.size > 1)
-      require(
-        dups.isEmpty,
-        s"file(s) registered by multiple samples for type '$t': " +
-          dups.map { case (p, ss) => s"$p -> ${ss.map(_._2).mkString(",")}" }.mkString("; "))
-      val files = pairs.toMap
-      if (files.isEmpty) None else Some(readType(spark, baseDir, files))
-    }
-    require(perType.nonEmpty, "no expression files registered")
-    val named = perType.reduce(_ union _)
+    val named = readFiles(spark, baseDir, registeredFiles(config))
 
     import spark.implicits._
     // sample dictionary is driver-known (config) — tiny, sorted, broadcast
-    val sampleNames = config.samples.map(_.name).sorted.toArray
+    val sampleNames = this.sampleNames(config)
     val sampleDict = sampleNames.toSeq.zipWithIndex.toDF("sample_name", "sample")
-    // probe dictionary from the collected distinct names: it is the
-    // broadcast join's build side below, so it is driver-resident either
-    // way, and ids assigned here cost no Spark sort or zipWithIndex job.
-    // Sorted in Spark's string order (unsigned UTF-8 bytes, as `orderBy`
-    // would), not Java's UTF-16 order, so ids match a Spark-side sort
-    // for any name.
-    val probeNames = named.select("probe_name").distinct().as[String].collect()
-      .map(UTF8String.fromString).sortWith(_.compareTo(_) < 0).map(_.toString)
+    // probe dictionary from each scan task's distinct names, collected
+    // in a map-only job that also counts the rows the lenient parse
+    // drops: the dictionary is the broadcast join's build side below, so
+    // it is driver-resident either way, and ids assigned here cost no
+    // Spark sort or zipWithIndex job
+    val perTask = named.select("probe_name").queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(distinctNames(rows))).collect()
+    val probeNames = sortedNames(perTask.flatMap(_._1).distinct)
+    val rowsDropped = perTask.map(_._2).sum
     val probeDict = probeNames.toSeq.zipWithIndex.toDF("probe_name", "probe")
 
     val matrix = named
       .join(broadcast(sampleDict), "sample_name")
       .join(broadcast(probeDict), "probe_name")
       .select(col("sample"), col("probe"), col("value"))
-    IngestResult(matrix, sampleNames, sampleDict, probeDict, probeNames.length.toLong)
+    IngestResult(matrix, sampleNames, sampleDict, probeDict, probeNames.length.toLong, rowsDropped)
+  }
+
+  /** Probe names in Spark's string order (unsigned UTF-8 bytes, as
+    * `orderBy` would), not Java's UTF-16 order, so ids match a
+    * Spark-side sort for any name.
+    */
+  private def sortedNames(names: Array[String]): Array[String] =
+    names.map(UTF8String.fromString).sortWith(_.compareTo(_) < 0).map(_.toString)
+
+  /** The rows lost to the lenient parse in this task: the rows its scan
+    * read (its own input metrics) less the `kept` it saw.
+    */
+  private def droppedInTask(kept: Long): Long =
+    TaskContext.get().taskMetrics().inputMetrics.recordsRead - kept
+
+  /** One task's distinct probe names, and the rows it dropped. */
+  private def distinctNames(rows: Iterator[InternalRow]): (Array[String], Long) = {
+    val names = new java.util.HashSet[UTF8String]
+    var kept = 0L
+    rows.foreach { r =>
+      val name = r.getUTF8String(0)
+      if (!names.contains(name)) names.add(name.clone())
+      kept += 1
+    }
+    (names.toArray(Array.empty[UTF8String]).map(_.toString), droppedInTask(kept))
+  }
+
+  /** One scan task's rows, dictionary-encoded: the distinct probe names
+    * it saw, and per scanned file the name index and value of each kept
+    * row — 12 B per observed cell — plus the rows the lenient parse
+    * dropped.
+    */
+  private final class TaskRows(
+      val names: Array[String],
+      val files: Array[String], // as Spark reports them
+      val nameIdx: Array[Array[Int]],
+      val values: Array[Array[Double]],
+      val dropped: Long,
+  ) extends Serializable
+
+  /** Encodes one task's (probe_name, value, file_path) rows. A file's
+    * rows arrive together; a file split over tasks shows up in each.
+    */
+  private def encode(rows: Iterator[InternalRow]): TaskRows = {
+    val dict = new java.util.HashMap[UTF8String, Integer]
+    val (names, files) = (ArrayBuffer.empty[String], ArrayBuffer.empty[String])
+    val (nameIdx, values) = (ArrayBuffer.empty[Array[Int]], ArrayBuffer.empty[Array[Double]])
+    val (idx, vals) = (Array.newBuilder[Int], Array.newBuilder[Double])
+    def flush(): Unit = if (files.size > nameIdx.size) {
+      nameIdx += idx.result(); values += vals.result(); idx.clear(); vals.clear()
+    }
+    var file: UTF8String = null
+    var kept = 0L
+    rows.foreach { r =>
+      val f = r.getUTF8String(2)
+      if (f != file) { flush(); file = f.clone(); files += file.toString }
+      val name = r.getUTF8String(0)
+      var i = dict.get(name)
+      if (i == null) { i = names.size; dict.put(name.clone(), i); names += name.toString }
+      idx += i; vals += r.getDouble(1); kept += 1
+    }
+    flush()
+    new TaskRows(names.toArray, files.toArray, nameIdx.toArray, values.toArray, droppedInTask(kept))
+  }
+
+  /** The dense regime's ingest: every registered file in one scan job,
+    * dictionary-encoded inside its tasks, merged on the driver. None,
+    * with the job cancelled, once the probes seen so far put the dense
+    * footprint of the registered samples over `maxBytes`
+    * (`Network.fitsDense`) — the same decision as the gate on the final
+    * probe count, since the count only grows. Until then the driver
+    * holds the task results that passed the gate (12 B per observed
+    * cell, bounded by the 36 B/cell model) plus the one being checked.
+    *
+    * Probe ids are the names in UTF-8 byte order, as `ingest` assigns
+    * them. A (sample, probe) cell observed twice — a file listing a
+    * probe twice, or one name in two type files of a sample — fails,
+    * naming the probe, the sample and the file(s).
+    */
+  def ingestDense(
+      spark: SparkSession,
+      baseDir: String,
+      config: DefParser.PipelineConfig,
+      maxBytes: Long,
+  ): Option[DenseIngest] = {
+    val files = registeredFiles(config)
+    val samples = sampleNames(config)
+    val nSamples = samples.length.toLong
+    if (!Network.fitsDense(nSamples, 1, maxBytes)) return None
+
+    val base = normalizedBase(baseDir)
+    val tasks = parseLenient(scan(spark, base, files.keys)).select("probe_name", "value", "file_path")
+      .queryExecution.toRdd.mapPartitions(rows => Iterator.single(encode(rows)))
+    val sc = spark.sparkContext
+    val held = ArrayBuffer.empty[TaskRows]
+    val seen = new java.util.HashSet[String]
+    var over = false
+    val tag = s"graft-ingest-${java.util.UUID.randomUUID}"
+    def admit(r: TaskRows): Unit = if (!over) {
+      r.names.foreach(seen.add)
+      if (Network.fitsDense(nSamples, seen.size.toLong, maxBytes)) held += r
+      else {
+        over = true; held.clear(); seen.clear()
+        sc.cancelJobsWithTag(tag, "the probes seen exceed the dense-regime driver budget")
+      }
+    }
+    sc.addJobTag(tag)
+    try sc.runJob(tasks, (it: Iterator[TaskRows]) => it.next(), (_: Int, r: TaskRows) => admit(r))
+    catch { case _: SparkException if over => } // the job the gate cancelled
+    finally sc.removeJobTag(tag)
+    if (over) None else Some(merge(held.toSeq, resolver(base, files), files, samples))
+  }
+
+  /** The task results as the by-probe observed matrix: each probe's
+    * sample ids ascending, each once, values aligned.
+    */
+  private def merge(
+      tasks: Seq[TaskRows],
+      resolve: String => String,
+      files: Map[String, String],
+      samples: Array[String],
+  ): DenseIngest = {
+    val probeNames = sortedNames(tasks.flatMap(_.names).distinct.toArray)
+    val probeOf = probeNames.zipWithIndex.toMap
+    val toProbe = tasks.map(_.names.map(probeOf))
+    val sampleOf = samples.zipWithIndex.toMap
+    // (task, file in task, sample id, registered file), by sample id, so
+    // each probe's samples are appended in ascending order
+    val parts = (for (t <- tasks.indices; f <- tasks(t).files.indices) yield {
+      val file = resolve(tasks(t).files(f))
+      (t, f, sampleOf(files(file)), file)
+    }).sortBy(_._3)
+
+    val counts = new Array[Int](probeNames.length)
+    for ((t, f, _, _) <- parts; i <- tasks(t).nameIdx(f)) counts(toProbe(t)(i)) += 1
+    val sampleIds = counts.map(new Array[Int](_))
+    val values = counts.map(new Array[Double](_))
+    java.util.Arrays.fill(counts, 0)
+    for ((t, f, s, _) <- parts) {
+      val (idx, vs) = (tasks(t).nameIdx(f), tasks(t).values(f))
+      var k = 0
+      while (k < idx.length) {
+        val p = toProbe(t)(idx(k))
+        val n = counts(p)
+        if (n > 0 && sampleIds(p)(n - 1) == s) {
+          val in = parts.collect {
+            case (t2, f2, `s`, file) if tasks(t2).nameIdx(f2).exists(toProbe(t2)(_) == p) => file
+          }.distinct
+          throw new IllegalArgumentException(
+            s"probe '${probeNames(p)}' is observed more than once for sample '${samples(s)}' " +
+              s"(file(s): ${in.mkString(", ")}) — one value per (sample, probe) cell")
+        }
+        sampleIds(p)(n) = s; values(p)(n) = vs(k); counts(p) = n + 1
+        k += 1
+      }
+    }
+    DenseIngest(probeNames, Completion.Observed(probeNames.indices.toArray, sampleIds, values),
+      tasks.map(_.dropped).sum)
   }
 }

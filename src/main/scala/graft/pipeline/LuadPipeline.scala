@@ -11,14 +11,14 @@ import org.apache.spark.storage.StorageLevel
   *
   * Differences from the reference, all deliberate (SURVEY §4.1
   * anti-patterns): the matrix reaches the driver only in the
-  * budget-gated dense regime (`Network.useDense`), where the ingested
-  * matrix is read once and every later step runs on the driver arrays
+  * budget-gated dense regime (`Network.fitsDense`), where the files are
+  * read by one scan job and every later step runs on the driver arrays
   * — never re-parallelized as a matrix; in the relational regime shared
   * subtrees are persisted instead of recomputed per action; everything
   * is a pure function of (SparkSession, config). `run` owns the
-  * registry-sized work of both regimes — sample ids, labels, the decode
-  * and the survivor count — so the regimes differ only in how they
-  * collect, complete, filter and train.
+  * registry-sized work of both regimes — sample ids, labels, the
+  * coverage guard, the decode and the survivor count — so the regimes
+  * differ only in how they read, complete, filter and train.
   */
 object LuadPipeline {
 
@@ -26,6 +26,7 @@ object LuadPipeline {
       predictions: DataFrame, // (sample_name STRING, prediction DOUBLE)
       nProbesBefore: Long,
       nProbesAfter: Long,
+      rowsDropped: Long, // rows the lenient parse dropped, header lines included
   )
 
   /** Wall-time one pipeline phase to stderr (profiling aid; per-module
@@ -53,19 +54,39 @@ object LuadPipeline {
       s"training set needs both classes: $nTumorous tumorous and " +
         s"${config.training.size - nTumorous} normal sample(s)")
 
-    val ing = Ingest.ingest(spark, baseDir, config)
-    // sample ids (F1/F2) from Ingest's names; training and predictive
-    // samples are registered ones by the grammar, so each has an id
-    val names = ing.sampleNames
+    // sample ids (F1/F2); training and predictive samples are
+    // registered ones by the grammar, so each has an id
+    val names = Ingest.sampleNames(config)
     val ids = names.zipWithIndex.toMap
     val training = config.training.map(s => ids(s.name) -> s.tumorous).sortBy(_._1)
     val predicting = config.predicting.map(s => ids(s.name))
-    // the coverage guard makes the registered samples the covered ones,
-    // so the gate needs no pass over the matrix
-    val (model, scores) =
-      if (Network.useDense(spark, names.length.toLong, ing.nProbes))
-        runDense(spark, ing, training, predicting, config, alsParams, svmParams)
-      else runRelational(spark, ing, training, predicting, config, alsParams, svmParams)
+
+    // the dense regime's one scan job applies the gate to the probes it
+    // has seen, for the registered samples (the coverage guard makes
+    // them the covered ones); past the budget it is cancelled and the
+    // relational regime reads the files itself
+    val maxBytes = Network.maxDenseBytes(spark)
+    val ingested = timed("ingest") {
+      Ingest.ingestDense(spark, baseDir, config, maxBytes).toLeft {
+        val ing = Ingest.ingest(spark, baseDir, config)
+        val matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK)
+        val covered = matrix.select("sample").distinct().collect().map(_.getInt(0)).toSet
+        (ing.copy(matrix = matrix), covered)
+      }
+    }
+    val (nProbes, rowsDropped, covered) = ingested match {
+      case Left(d) =>
+        val seen = new java.util.BitSet
+        d.observed.samples.foreach(_.foreach(seen.set))
+        (d.probeNames.length.toLong, d.rowsDropped, (i: Int) => seen.get(i))
+      case Right((ing, seen)) => (ing.nProbes, ing.rowsDropped, seen)
+    }
+    Network.reportPath(ingested.isLeft, names.length.toLong, nProbes, maxBytes)
+    requireCovered(names, covered)
+    val (model, scores) = ingested match {
+      case Left(d) => runDense(spark, d.observed, training, predicting, config, alsParams, svmParams)
+      case Right((ing, _)) => runRelational(spark, ing, training, predicting, config, alsParams, svmParams)
+    }
 
     // P5 reverse decode, once for both regimes: the reference prints
     // "Unknown" for an unmapped id (`PipeLine.scala:30`); every scored
@@ -75,7 +96,7 @@ object LuadPipeline {
     }
     import spark.implicits._
     // the model's feature count is the network filter's survivor count
-    Result(preds.toDF("sample_name", "prediction"), ing.nProbes, model.numFeatures.toLong)
+    Result(preds.toDF("sample_name", "prediction"), nProbes, model.numFeatures.toLong, rowsDropped)
   }
 
   /** Loud coverage guard (r15 pipeline review): a registered sample
@@ -91,25 +112,21 @@ object LuadPipeline {
         s"${uncovered.mkString(", ")} — empty or fully unparseable file?")
   }
 
-  /** Dense regime: the ingested matrix is collected once, and
-    * completion, the network filter, training and prediction run on the
-    * driver arrays — replicas of ml-ALS and LinearSVC (`completeDense`,
-    * `trainDense`) plus one `denseSurvivors` pass. Returns the model and
-    * the ±1.0 score of each id in `predicting`.
+  /** Dense regime: completion, the network filter, training and
+    * prediction run on the driver arrays of the observed matrix —
+    * replicas of ml-ALS and LinearSVC (`completeDense`, `trainDense`)
+    * plus one `denseSurvivors` pass. Returns the model and the ±1.0
+    * score of each id in `predicting`.
     */
   private def runDense(
       spark: SparkSession,
-      ing: Ingest.IngestResult,
+      observed: Completion.Observed,
       training: Seq[(Int, Boolean)], // (sample id, tumorous), ids ascending
       predicting: Seq[Int],
       config: DefParser.PipelineConfig,
       alsParams: Completion.AlsParams,
       svmParams: Svm.SvmParams,
   ): (LinearSVCModel, Seq[(Int, Double)]) = {
-    val observed = timed("ingest-materialize")(Completion.collectObserved(spark, ing.matrix))
-    val covered = new java.util.BitSet
-    observed.samples.foreach(_.foreach(covered.set))
-    requireCovered(ing.sampleNames, covered.get)
     val completed = timed("als-completion")(
       Completion.completeDense(observed, alsParams, spark.sparkContext.defaultParallelism))
     val keep = timed("network-and-assembly")(config.pcThreshold
@@ -120,14 +137,14 @@ object LuadPipeline {
     (model, predicting.map(id => id -> Svm.predictDense(model, rowOf(id))))
   }
 
-  /** Relational regime: ml-ALS, the Pearson self-join → GraphX → filter
-    * join, Spark-side assembly and LinearSVC, with shared subtrees
-    * persisted. Returns the model and the collected ±1.0 scores, one
-    * per id in `predicting`.
+  /** Relational regime over the persisted ingested matrix: ml-ALS, the
+    * Pearson self-join → GraphX → filter join, Spark-side assembly and
+    * LinearSVC, with shared subtrees persisted. Returns the model and
+    * the collected ±1.0 scores, one per id in `predicting`.
     */
   private def runRelational(
       spark: SparkSession,
-      ing: Ingest.IngestResult,
+      ing: Ingest.IngestResult, // matrix persisted and covering every sample
       training: Seq[(Int, Boolean)], // (sample id, tumorous)
       predicting: Seq[Int],
       config: DefParser.PipelineConfig,
@@ -135,12 +152,8 @@ object LuadPipeline {
       svmParams: Svm.SvmParams,
   ): (LinearSVCModel, Seq[(Int, Double)]) = {
     import spark.implicits._
-    val matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK)
-    val coveredSamples = timed("ingest-materialize") {
-      matrix.select("sample").distinct().collect().map(_.getInt(0)).toSet
-    }
-    requireCovered(ing.sampleNames, coveredSamples)
-    val cards = Some((coveredSamples.size.toLong, ing.nProbes))
+    val matrix = ing.matrix
+    val cards = Some((ing.sampleNames.length.toLong, ing.nProbes))
 
     val completed = timed("als-completion") {
       val c = Completion.complete(spark, matrix, alsParams, cards)
@@ -186,7 +199,8 @@ object LuadPipeline {
     *
     * Emits one `luad_e2e` JSON line on stderr (stdout belongs to the
     * print sink): `pipeline_s` is the in-JVM pipeline wall (parse → run
-    * → sink), `session_s` is Spark-session construction.
+    * → sink), `session_s` is Spark-session construction, `rows_dropped`
+    * the rows the lenient parse dropped (header lines included).
     */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
@@ -204,7 +218,8 @@ object LuadPipeline {
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     System.err.println(
       s"""{"metric":"luad_e2e","pipeline_s":${r3(pipelineS)},"session_s":${r3(sessionS)},""" +
-        s""""n_probes_before":${result.nProbesBefore},"n_probes_after":${result.nProbesAfter}}""")
+        s""""n_probes_before":${result.nProbesBefore},"n_probes_after":${result.nProbesAfter},""" +
+        s""""rows_dropped":${result.rowsDropped}}""")
     spark.stop()
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.storage.StorageLevel
   *    and partial aggregation is map-side combinable. Cost is
   *    O(Σ_sample nnz_sample²) — the honest cost of all-pairs — but
   *    distributed, with no driver copy.
-  *  - Dense regime (skinny matrix under the driver budget, `useDense`):
+  *  - Dense regime (skinny matrix under the driver budget, `fitsDense`):
   *    the reference's own design — the matrix on the driver, its
   *    standardized rows broadcast — made sample-aligned. One pass
   *    (`denseSurvivors`) finds edges AND components (per-task
@@ -425,21 +425,33 @@ object Network {
     */
   val DefaultMaxDenseBytes: Long = 256L << 20
 
-  /** The dense-regime gate of `LuadPipeline.run` (collect, ALS, network
-    * filter and SVM all on the driver): a skinny matrix (few samples,
-    * many probes — the reference shape) whose MODELED driver peak (`denseFootprintBytes`, not a cell
-    * count) fits the session budget `spark.graft.pearson.maxDenseBytes`.
+  /** The session's dense-regime driver budget:
+    * `spark.graft.pearson.maxDenseBytes`, else `DefaultMaxDenseBytes`.
     */
-  def useDense(spark: SparkSession, nSamples: Long, nProbes: Long): Boolean = {
-    val maxBytes = spark.conf
-      .getOption("spark.graft.pearson.maxDenseBytes")
-      .map(_.toLong)
-      .getOrElse(DefaultMaxDenseBytes)
-    val bytes = denseFootprintBytes(nSamples, nProbes)
-    val dense = nSamples <= 10000 && bytes <= maxBytes
+  def maxDenseBytes(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.pearson.maxDenseBytes").map(_.toLong).getOrElse(DefaultMaxDenseBytes)
+
+  /** The dense-regime gate: a skinny matrix (few samples, many probes —
+    * the reference shape) whose MODELED driver peak
+    * (`denseFootprintBytes`, not a cell count) fits `maxBytes`.
+    * `Ingest.ingestDense` applies it to the probes seen so far while its
+    * scan runs.
+    */
+  def fitsDense(nSamples: Long, nProbes: Long, maxBytes: Long): Boolean =
+    nSamples <= 10000 && denseFootprintBytes(nSamples, nProbes) <= maxBytes
+
+  /** Prints the regime decision of a run, once, with the gate's inputs. */
+  def reportPath(dense: Boolean, nSamples: Long, nProbes: Long, maxBytes: Long): Unit =
     System.err.println(
       s"[graft] pearson path: ${if (dense) "dense-broadcast" else "relational-self-join"} " +
-        s"(samples=$nSamples probes=$nProbes footprint=${bytes >> 20}MB budget=${maxBytes >> 20}MB)")
+        s"(samples=$nSamples probes=$nProbes cells=${nSamples * nProbes} " +
+        s"footprint=${denseFootprintBytes(nSamples, nProbes)}B budget=${maxBytes}B)")
+
+  /** The dense-regime gate at the session budget, reported. */
+  def useDense(spark: SparkSession, nSamples: Long, nProbes: Long): Boolean = {
+    val maxBytes = maxDenseBytes(spark)
+    val dense = fitsDense(nSamples, nProbes, maxBytes)
+    reportPath(dense, nSamples, nProbes, maxBytes)
     dense
   }
 

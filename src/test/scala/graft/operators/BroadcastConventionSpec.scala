@@ -131,6 +131,9 @@ class BroadcastConventionSpec extends AnyFunSuite {
     ("LuadPipeline.scala", "broadcast(predictIds)"),
     ("Ingest.scala", "broadcast(sampleDict)"),
     ("Ingest.scala", "broadcast(probeDict)"),
+    // relational-regime file → sample tags: one row per registered
+    // file, registry-sized (121 on the benchmark corpus)
+    ("Ingest.scala", "broadcast(owners)"),
     // budget-gated dense-Pearson scratch arrays (sparkContext
     // broadcast, entered only under the measured memory budget)
     ("Network.scala", "sparkContext.broadcast(z)"),

@@ -21,7 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * they are literal-bounded by their own argument. The scanned
   * spellings are the unbounded ones — `collect()`, `collectAsList()`,
   * `toLocalIterator()` (an iterator still pulls every partition to
-  * the driver, just incrementally).
+  * the driver, just incrementally), and `runJob(` / `submitJob(`,
+  * whose result handler receives every task's result on the driver.
   */
 class CollectConventionSpec extends AnyFunSuite {
 
@@ -34,22 +35,28 @@ class CollectConventionSpec extends AnyFunSuite {
     ("SimilarityOps.scala", ".collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq"),
     // single-row min/max bounds aggregate (the q108 bounds pattern)
     ("Relational.scala", "df.agg(min(a), max(a), min(b), max(b)).collect().head"),
-    // dense-regime pull of the INGESTED matrix: ≤ probes × samples
-    // primitive arrays (observed cells only), entered ONLY under the
-    // `Network.useDense` gate in `LuadPipeline.run`; also the
-    // completed-matrix pull of `pearsonEdgesDense` (`collectDense`),
-    // whose one caller outside tests (perfbench's traced composition)
-    // uses it only at shapes the same gate admits
+    // `collectObserved`, which now serves only `Network.collectDense`:
+    // the completed-matrix pull of `pearsonEdgesDense`, ≤ probes ×
+    // samples primitive arrays, whose one caller outside tests
+    // (perfbench's traced composition) uses it only at shapes the
+    // `Network.fitsDense` gate admits
     ("Completion.scala", "Network.byProbe(spark, matrix).collect()"),
     // dense-path union-find merge: per kernel task, the (index, root)
     // int pairs its union-find changed — ≤ 2 ints per probe per task
     // (tasks ≤ 16 × cores), one int pair per probe that has an edge in
     // the task; same budget gate as the matrix pull
     ("Network.scala", "tasks.collect()"),
-    // distinct probe names for the probe dictionary: probes-sized
-    // (~21.5k at the reference shape), and the dictionary is the
-    // broadcast join's build side, so it is driver-resident anyway
-    ("Ingest.scala", "named.select(\"probe_name\").distinct().as[String].collect()"),
+    // relational-regime probe dictionary: each scan task's distinct
+    // probe names and one dropped-row count — ≤ probes names per task
+    // (~21.5k at the reference shape); the dictionary is the broadcast
+    // join's build side, so it is driver-resident anyway
+    ("Ingest.scala", "Iterator.single(distinctNames(rows))).collect()"),
+    // dense-regime scan job: each task returns its rows
+    // dictionary-encoded — 12 B per observed cell plus one probe-name
+    // array per task — and the driver keeps a result only while the
+    // probes seen pass the `Network.fitsDense` gate (36 B/cell modelled),
+    // dropping all of them and cancelling the job once they do not
+    ("Ingest.scala", "sc.runJob(tasks"),
     // distinct ingested sample ids: registry-sized (62 samples at the
     // reference shape) — the coverage-guard cardinality pass
     ("LuadPipeline.scala", "matrix.select(\"sample\").distinct().collect()"),
@@ -79,7 +86,7 @@ class CollectConventionSpec extends AnyFunSuite {
     * the empty-parens Dataset actions do.
     */
   private val siteRe =
-    """\.\s*(?:collect|collectAsList|toLocalIterator)\s*\(\s*\)""".r
+    """\.\s*(?:(?:collect|collectAsList|toLocalIterator)\s*\(\s*\)|(?:runJob|submitJob)\s*[\[(])""".r
 
   /** Hit sites per line index (line of the match START), scanned over
     * the joined comment-stripped source.
@@ -99,6 +106,12 @@ class CollectConventionSpec extends AnyFunSuite {
     val sites = findSites(Vector("val rows = df.collect(", "  )", "plan.collect { case x => x }"))
     assert(sites.values.sum == 1, s"wrapped collect() escaped or pf-collect matched: $sites")
     assert(sites.contains(0), s"site should anchor at the .collect( line: $sites")
+  }
+
+  test("runJob and submitJob are sites, with or without type arguments") {
+    val sites = findSites(Vector(
+      "sc.runJob(rdd, f, handler)", "sc.submitJob[Int, Int, Unit](rdd,", "sc", "  .runJob(rdd, f)", "def runJobs() = 1"))
+    assert(sites == Map(0 -> 1, 1 -> 1, 3 -> 1), s"runJob/submitJob spellings escaped: $sites")
   }
 
   test("every driver-materializing collect names its size bound in the allowlist") {

@@ -41,6 +41,20 @@ class DefParserSpec extends AnyFunSuite {
     assert(DefParser.parse(base :+ "def\tpc-threshold\tnone").pcThreshold.isEmpty)
   }
 
+  test("pc-threshold accepts none and a number in [0, 1]; anything else fails, naming the value") {
+    val base = Seq("def\tsample\ts1", "def\tsample-type\tt", "t\ts1\tf.txt")
+    def threshold(v: String) = DefParser.parse(base :+ s"def\tpc-threshold\t$v").pcThreshold
+    assert(threshold("0").contains(0.0))
+    assert(threshold("1").contains(1.0))
+    assert(threshold("NONE").isEmpty)
+    // 8 (for 0.8) keeps every probe, -0.5 merges every pair, NaN
+    // disables the filter, 0,8 is no number
+    for (bad <- Seq("8", "-0.5", "NaN", "0,8", "1.0000001", "Infinity")) {
+      val e = intercept[IllegalArgumentException](threshold(bad))
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("[0, 1]"), e.getMessage)
+    }
+  }
+
   test("last file per (sample, type) wins — reference quirk Q4") {
     val c = DefParser.parse(Seq(
       "def\tsample\ts1", "def\tsample-type\tt",

@@ -2,6 +2,9 @@ package graft.pipeline
 
 import graft.SparkSpec
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Ingest + end-to-end pipeline over a synthetic mini-corpus written in
   * the reference's file format (TSV expression files with a header
@@ -71,7 +74,7 @@ class IngestSpec extends SparkSpec {
     Files.writeString(dir.resolve("hdr.txt"),
       "probe_id\traw_count\np000\t1.5\np001\t2.5\n")
     def rows(f: String) = Ingest
-      .readType(spark, dir.toString, Map(f -> "S1"))
+      .readFiles(spark, dir.toString, Map(f -> "S1"))
       .orderBy("probe_name")
       .collect().map(r => (r.getString(1), r.getDouble(2))).toSeq
     val want = Seq(("p000", 1.5), ("p001", 2.5))
@@ -349,5 +352,122 @@ class IngestSpec extends SparkSpec {
       Svm.SvmParams(maxIter = 5))
     assert(result.nProbesBefore == r.nProbes && result.nProbesAfter == r.nProbes)
     assert(result.predictions.count() == 10)
+  }
+
+  /** What `body` made Spark do, from a listener: the jobs that read
+    * input files, the tasks of those jobs, the stages that wrote
+    * shuffle output, and every stage's stack (`graft.JobStacks`).
+    */
+  private final case class Work(readingJobs: Int, readingTasks: Int, shuffleStages: Int, stacks: Seq[String])
+
+  private def work[T](body: => T): (T, Work) = {
+    val jobOf = new ConcurrentHashMap[Int, Int]
+    val readingTasks = new ConcurrentHashMap[Int, Int] // job → tasks that read input
+    val shuffleStages = ConcurrentHashMap.newKeySet[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = e.stageIds.foreach(jobOf.put(_, e.jobId))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        if (m.inputMetrics.recordsRead > 0) readingTasks.merge(jobOf.get(e.stageId), 1, (a, b) => a + b)
+        if (m.shuffleWriteMetrics.recordsWritten > 0) shuffleStages.add(e.stageId)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // JobStacks returns once the listener bus has delivered every event
+    // of `body`, to this listener too (both sit on the shared queue)
+    val (result, stacks) =
+      try graft.JobStacks(spark)(body)
+      finally spark.sparkContext.removeSparkListener(listener)
+    var tasks = 0
+    readingTasks.values.forEach(n => tasks += n)
+    (result, Work(readingTasks.size, tasks, shuffleStages.size, stacks))
+  }
+
+  private def predictions(r: LuadPipeline.Result) =
+    r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
+
+  private def withBudget[T](maxBytes: Long)(body: => T): T = {
+    spark.conf.set("spark.graft.pearson.maxDenseBytes", maxBytes.toString)
+    try body
+    finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
+  }
+
+  test("a dense-regime run reads the corpus in one Spark job and writes no shuffle") {
+    val dir = Files.createTempDirectory("graft_corpus_one_scan")
+    val base = writeCorpus(dir, nTrain = 8, nPredict = 4, nProbes = 6)
+    val config = DefParser.parseFile(s"$base/input.txt")
+    assert(Network.useDense(spark, config.samples.size.toLong, 6L))
+    val (result, w) = work(runMini(base, config))
+    assert(w.readingJobs == 1, s"the corpus was read by ${w.readingJobs} jobs")
+    assert(w.shuffleStages == 0, s"${w.shuffleStages} stage(s) wrote shuffle output")
+    assert(result.nProbesAfter == 6 && predictions(result).size == 4)
+  }
+
+  test("the dense gate at the footprint of the corpus runs dense, one byte below it relational, with the same output") {
+    val (base, config) = twoTypeCorpus(14L)
+    val (nS, nP) = (config.samples.size.toLong, 12L)
+    val footprint = Network.denseFootprintBytes(nS, nP)
+    val (dense, dw) = withBudget(footprint)(work(runMini(base, config)))
+    assert(withBudget(footprint)(Network.useDense(spark, nS, nP)))
+    assert(dw.readingJobs == 1 && dw.readingTasks >= 2, s"the scan ran ${dw.readingTasks} task(s): no in-flight gate")
+    assert(!dw.stacks.exists(_.contains("org.apache.spark.graphx")), "the dense budget ran the relational regime")
+    // one byte less: the scan starts (one probe fits) and the gate
+    // cancels it once the probes seen overflow the budget
+    val (relational, rw) = withBudget(footprint - 1)(work(runMini(base, config)))
+    assert(!withBudget(footprint - 1)(Network.useDense(spark, nS, nP)))
+    assert(rw.stacks.exists(_.contains("org.apache.spark.graphx")), "one byte below the footprint ran dense")
+    assert(dense.nProbesBefore == nP && relational.nProbesBefore == nP)
+    assert(relational.nProbesAfter == dense.nProbesAfter)
+    assert(predictions(dense).size == 4 && predictions(relational) == predictions(dense))
+  }
+
+  test("a base dir with a space and a non-ASCII character ingests the same cells in both regimes") {
+    val dir = Files.createTempDirectory("graft corpus \u00e9\u6f22")
+    val base = writeCorpus(dir, nTrain = 4, nPredict = 2, nProbes = 3)
+    val config = DefParser.parseFile(s"$base/input.txt")
+    val d = Ingest.ingestDense(spark, base, config, Long.MaxValue).get
+    val names = Ingest.sampleNames(config)
+    val denseCells = (for {
+      p <- d.observed.probes.indices; k <- d.observed.samples(p).indices
+    } yield (names(d.observed.samples(p)(k)), d.probeNames(p), d.observed.values(p)(k))).toSet
+    val r = Ingest.ingest(spark, base, config)
+    val relationalCells = r.matrix.join(r.sampleDict, "sample").join(r.probeDict, "probe")
+      .select("sample_name", "probe_name", "value")
+      .collect().map(row => (row.getString(0), row.getString(1), row.getDouble(2))).toSet
+    assert(denseCells.size == 6 * 3)
+    assert(relationalCells == denseCells)
+    assert(d.rowsDropped == r.rowsDropped)
+  }
+
+  test("a probe listed twice in one file fails the run, naming the probe, the sample and the file") {
+    val dir = Files.createTempDirectory("graft_corpus_dup_row")
+    val base = writeCorpus(dir, nTrain = 6, nPredict = 2, nProbes = 4)
+    val f = dir.resolve("expr/TRAIN-03.expr.txt")
+    Files.writeString(f, Files.readString(f) + "p002\t0.5\tN\n")
+    val config = DefParser.parseFile(s"$base/input.txt")
+    val e = intercept[IllegalArgumentException](runMini(base, config))
+    for (part <- Seq("'p002'", "'TRAIN-03'", "expr/TRAIN-03.expr.txt"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  test("a probe name in both type files of one sample fails the run, naming the probe, the sample and both files") {
+    val (base, config) = twoTypeCorpus(15L)
+    val sample = config.samples.find(_.files.size == 2).get.name
+    val rna = Path.of(base, s"rna/$sample.txt")
+    Files.writeString(rna, Files.readString(rna) + "m1\t3.25\n")
+    val e = intercept[IllegalArgumentException](runMini(base, config))
+    for (part <- Seq("'m1'", s"'$sample'", s"mirna/$sample.txt", s"rna/$sample.txt"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  test("rows_dropped counts the header, malformed and NA rows the lenient parse drops, in both regimes") {
+    val dir = Files.createTempDirectory("graft_corpus_dropped")
+    val base = writeCorpus(dir, nTrain = 6, nPredict = 2, nProbes = 4)
+    val f = dir.resolve("expr/PRED-00.expr.txt")
+    Files.writeString(f, Files.readString(f).replaceFirst("p003\t[^\t]*\t", "p003\tNA\t"))
+    val config = DefParser.parseFile(s"$base/input.txt")
+    // per file: the header line and the truncated row; plus the NA
+    val want = 8 * 2 + 1
+    assert(runMini(base, config).rowsDropped == want)
+    assert(withBudget(0)(runMini(base, config)).rowsDropped == want)
   }
 }
