@@ -3,6 +3,7 @@ package graft.pipeline
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.{SparkException, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -20,14 +21,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * back to its sample. At 100 TB this is a single distributed scan whose
   * parallelism comes from file splits, not from plan width.
   *
-  * Two forms of the same read, one per regime of `LuadPipeline.run`:
-  *  - `ingestDense`: one Spark job. Each task dictionary-encodes its
-  *    rows; the driver merges the task dictionaries into probe ids and
-  *    the by-probe observed matrix, applying the dense gate to the
-  *    probes seen as task results arrive.
-  *  - `ingest` (relational): the matrix stays a DataFrame; probe names
-  *    come from a map-only job of per-task distinct names,
-  *    broadcast-joined back as ids.
+  * Both regimes of `LuadPipeline.run` run the same scan tasks, each of
+  * which dictionary-encodes its rows (`encode`); the driver assigns the
+  * probe ids and maps each scanned file to its sample once:
+  *  - `ingestDense`: one Spark job whose task results the driver merges
+  *    into the by-probe observed matrix, applying the dense gate to the
+  *    probes seen as they arrive.
+  *  - `ingest` (relational): only each task's probe names, files and
+  *    dropped-row count reach the driver; the matrix is a DataFrame over
+  *    the same tasks, whose local indices two broadcasts map to ids.
   *
   * Lenient semantics (reference `lenient = true`, `Input.scala:121`):
   * the header line and any row whose value column fails the double cast
@@ -40,32 +42,37 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Ingest {
 
+  /** What either regime's ingest reports besides its matrix. */
+  sealed trait Ingested {
+    def probeNames: Array[String] // probe id → name
+    def covered: Set[Int] // ids of the samples with at least one kept row
+    def rowsDropped: Long // rows the lenient parse dropped, header lines included
+  }
+
   final case class IngestResult(
       matrix: DataFrame, // (sample INT, probe INT, value DOUBLE)
       sampleNames: Array[String], // sample id → name: id k is sampleNames(k)
       sampleDict: DataFrame, // (sample_name STRING, sample INT), from sampleNames
-      probeDict: DataFrame, // (name STRING, probe INT)
-      nProbes: Long, // probe dictionary size = distinct probes in `matrix`
-      rowsDropped: Long, // rows the lenient parse dropped, header lines included
-  )
+      probeNames: Array[String],
+      covered: Set[Int],
+      rowsDropped: Long,
+  ) extends Ingested
 
-  /** The dense regime's ingest: probe id → name, the observed matrix by
-    * probe id (sample ids index `sampleNames`), and the rows the lenient
-    * parse dropped, header lines included.
-    */
+  /** The dense regime's ingest: the by-probe observed matrix (sample ids as `sampleNames`). */
   final case class DenseIngest(
       probeNames: Array[String],
       observed: Completion.Observed,
+      covered: Set[Int],
       rowsDropped: Long,
-  )
+  ) extends Ingested
 
-  /** The expression-file scan of `readFiles`, `ingestDense` and of the
-    * streaming twin `Streams.expressionFileStream`: only cols 0-1 reach
-    * the plan (S2), read with header=false, then `parseLenient`. The
-    * reference (Input.scala lenient=true) drops a row only when its
-    * VALUE fails the Double parse, so a header line is dropped as a
-    * non-numeric row, where header=true would eat the first DATA row of
-    * a headerless export (an observed cell turned into a missing one for
+  /** The expression-file scan of both regimes and of the streaming twin
+    * `Streams.expressionFileStream`: only cols 0-1 reach the plan (S2),
+    * read with header=false, then `parseLenient`. The reference
+    * (Input.scala lenient=true) drops a row only when its VALUE fails
+    * the Double parse, so a header line is dropped as a non-numeric
+    * row, where header=true would eat the first DATA row of a
+    * headerless export (an observed cell turned into a missing one for
     * ALS to fabricate). try_cast, not cast: under Spark 4's ANSI default
     * a plain cast THROWS on a non-numeric value.
     */
@@ -83,12 +90,12 @@ object Ingest {
     config.samples.map(_.name).sorted.toArray
 
   /** Every registered file, by its path relative to the base dir, → its
-    * sample. A file registered twice — by two samples, or by two types
-    * of one — would map back to two owners (the reference reads per
-    * (sample, file) pair and gives the rows to both), so it is rejected
-    * loudly instead.
+    * sample's id (`sampleNames`). A file registered twice — by two
+    * samples, or by two types of one — would map back to two owners (the
+    * reference reads per (sample, file) pair and gives the rows to
+    * both), so it is rejected loudly instead.
     */
-  private def registeredFiles(config: DefParser.PipelineConfig): Map[String, String] = {
+  private def registeredFiles(config: DefParser.PipelineConfig): Map[String, Int] = {
     val owners = for (s <- config.samples; (t, f) <- s.files.toSeq) yield (f, s.name, t)
     require(owners.nonEmpty, "no expression files registered")
     val dups = owners.groupBy(_._1).filter(_._2.size > 1)
@@ -96,24 +103,26 @@ object Ingest {
       dups.isEmpty,
       "file(s) registered more than once: " +
         dups.map { case (f, os) => s"$f -> ${os.map(o => s"${o._2} (${o._3})").mkString(", ")}" }.mkString("; "))
-    owners.map(o => o._1 -> o._2).toMap
+    val id = sampleNames(config).zipWithIndex.toMap
+    owners.map(o => o._1 -> id(o._2)).toMap
   }
 
   /** Spark reports each scanned file by its absolute, normalized path,
     * so the base is normalized the same way: a base with a `.` or `..`
     * segment (`./input.txt`'s parent is `<cwd>/.`) would otherwise never
-    * match.
+    * match. A base the JVM's file-name encoding cannot represent fails
+    * naming that encoding: under the POSIX locale it is ASCII, and any
+    * non-ASCII character is shown as `?`.
     */
   private def normalizedBase(baseDir: String): String =
-    java.nio.file.Paths.get(baseDir).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
-
-  /** One multi-path scan of `files` (relative to `base`) as
-    * (probe_name, raw_value, file_path): file_path is the scanned file
-    * as Spark reports it, a percent-encoded URI.
-    */
-  private def scan(spark: SparkSession, base: String, files: Iterable[String]): DataFrame =
-    spark.read.options(ExpressionOptions).schema(ExpressionSchema).csv(files.map(base + _).toSeq.sorted: _*)
-      .select(col("probe_name"), col("raw_value"), col("_metadata.file_path").as("file_path"))
+    try java.nio.file.Paths.get(baseDir).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
+    catch {
+      case e: java.nio.file.InvalidPathException =>
+        throw new IllegalArgumentException(
+          s"base dir '$baseDir' is not a path in this JVM's file-name encoding " +
+            s"(sun.jnu.encoding=${System.getProperty("sun.jnu.encoding")}); " +
+            "run under a UTF-8 locale, e.g. LC_ALL=C.UTF-8", e)
+    }
 
   /** The registered file (its path relative to `base`) behind a file
     * path Spark reports. The URI is decoded first: a space or non-ASCII
@@ -121,75 +130,13 @@ object Ingest {
     * throws: a path-form mismatch would otherwise lose every row of the
     * file silently.
     */
-  private def resolver(base: String, files: Map[String, String]): String => String = { scanned =>
+  private def resolver(base: String, files: Map[String, Int]): String => String = { scanned =>
     val decoded =
       try new java.net.URI(scanned).getPath
       catch { case _: Exception => scanned }
     val i = decoded.indexOf(base)
     Option.when(i >= 0)(decoded.substring(i + base.length)).filter(files.contains).getOrElse(
       throw new IllegalStateException(s"cannot map scanned file back to a sample: $scanned (base $base)"))
-  }
-
-  /** All expression rows of `fileToSample`'s files as (sample_name,
-    * probe_name, value): one multi-path scan, lenient, each row tagged
-    * with its file's sample by a broadcast join on the file's path (the
-    * resolver runs once per listed file, not per row).
-    */
-  def readFiles(
-      spark: SparkSession,
-      baseDir: String,
-      fileToSample: Map[String, String], // relative path → sample name
-  ): DataFrame = {
-    import spark.implicits._
-    val base = normalizedBase(baseDir)
-    val raw = scan(spark, base, fileToSample.keys)
-    val resolve = resolver(base, fileToSample)
-    // keyed by the URI's raw path: the listing reports `file:///x`
-    // where a row's `_metadata.file_path` reads `file:/x`
-    val owners = raw.inputFiles.toSeq
-      .map(f => new java.net.URI(f).getRawPath -> fileToSample(resolve(f))).toDF("file", "sample_name")
-    parseLenient(raw)
-      .withColumn("file", expr("parse_url(file_path, 'PATH')"))
-      .join(broadcast(owners), Seq("file"), "left")
-      .select(
-        // a row of a file the listing did not hold fails, not drops
-        when(col("sample_name").isNull,
-          raise_error(concat(lit("cannot map scanned file back to a sample: "), col("file_path"))))
-          .otherwise(col("sample_name")).as("sample_name"),
-        col("probe_name"), col("value"))
-  }
-
-  /** Relational ingest: every registered file read, tagged and
-    * dictionary-encoded as a DataFrame (reference appends the per-type
-    * probe column spaces into one, `Input.scala:116-131`).
-    */
-  def ingest(
-      spark: SparkSession,
-      baseDir: String,
-      config: DefParser.PipelineConfig,
-  ): IngestResult = {
-    val named = readFiles(spark, baseDir, registeredFiles(config))
-
-    import spark.implicits._
-    // sample dictionary is driver-known (config) — tiny, sorted, broadcast
-    val sampleNames = this.sampleNames(config)
-    val sampleDict = sampleNames.toSeq.zipWithIndex.toDF("sample_name", "sample")
-    // probe dictionary from each scan task's distinct names, collected
-    // in a map-only job that also counts the rows the lenient parse
-    // drops: the dictionary is the broadcast join's build side below, so
-    // it is driver-resident either way, and ids assigned here cost no
-    // Spark sort or zipWithIndex job
-    val perTask = named.select("probe_name").queryExecution.toRdd
-      .mapPartitions(rows => Iterator.single(distinctNames(rows))).collect()
-    val probeNames = sortedNames(perTask.flatMap(_._1).distinct)
-    val rowsDropped = perTask.map(_._2).sum
-    val probeDict = probeNames.toSeq.zipWithIndex.toDF("probe_name", "probe")
-
-    val matrix = named
-      .join(broadcast(sampleDict), "sample_name")
-      .join(broadcast(probeDict), "probe_name")
-      .select(col("sample"), col("probe"), col("value"))
-    IngestResult(matrix, sampleNames, sampleDict, probeDict, probeNames.length.toLong, rowsDropped)
   }
 
   /** Probe names in Spark's string order (unsigned UTF-8 bytes, as
@@ -199,28 +146,10 @@ object Ingest {
   private def sortedNames(names: Array[String]): Array[String] =
     names.map(UTF8String.fromString).sortWith(_.compareTo(_) < 0).map(_.toString)
 
-  /** The rows lost to the lenient parse in this task: the rows its scan
-    * read (its own input metrics) less the `kept` it saw.
-    */
-  private def droppedInTask(kept: Long): Long =
-    TaskContext.get().taskMetrics().inputMetrics.recordsRead - kept
-
-  /** One task's distinct probe names, and the rows it dropped. */
-  private def distinctNames(rows: Iterator[InternalRow]): (Array[String], Long) = {
-    val names = new java.util.HashSet[UTF8String]
-    var kept = 0L
-    rows.foreach { r =>
-      val name = r.getUTF8String(0)
-      if (!names.contains(name)) names.add(name.clone())
-      kept += 1
-    }
-    (names.toArray(Array.empty[UTF8String]).map(_.toString), droppedInTask(kept))
-  }
-
   /** One scan task's rows, dictionary-encoded: the distinct probe names
     * it saw, and per scanned file the name index and value of each kept
     * row — 12 B per observed cell — plus the rows the lenient parse
-    * dropped.
+    * dropped. A file appears only with a kept row.
     */
   private final class TaskRows(
       val names: Array[String],
@@ -252,7 +181,62 @@ object Ingest {
       idx += i; vals += r.getDouble(1); kept += 1
     }
     flush()
-    new TaskRows(names.toArray, files.toArray, nameIdx.toArray, values.toArray, droppedInTask(kept))
+    // the rows this task's scan read (its own input metrics) less the kept
+    val dropped = TaskContext.get().taskMetrics().inputMetrics.recordsRead - kept
+    new TaskRows(names.toArray, files.toArray, nameIdx.toArray, values.toArray, dropped)
+  }
+
+  /** The scan tasks of both regimes: one lenient multi-path scan of
+    * `files` (relative to `base`), each task's rows encoded by `encode`;
+    * `file_path` is the scanned file as Spark reports it, a
+    * percent-encoded URI.
+    */
+  private def scanTasks(spark: SparkSession, base: String, files: Iterable[String]): RDD[TaskRows] =
+    parseLenient(spark.read.options(ExpressionOptions).schema(ExpressionSchema)
+      .csv(files.map(base + _).toSeq.sorted: _*)
+      .select(col("probe_name"), col("raw_value"), col("_metadata.file_path").as("file_path")))
+      .select("probe_name", "value", "file_path")
+      .queryExecution.toRdd.mapPartitions(rows => Iterator.single(encode(rows)))
+
+  /** Both regimes' failure for a (sample, probe) cell observed twice. */
+  private[pipeline] def duplicateCell(probe: String, sample: String, files: Seq[String]): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"probe '$probe' is observed more than once for sample '$sample' " +
+        s"(file(s): ${files.distinct.sorted.mkString(", ")}) — one value per (sample, probe) cell")
+
+  /** Relational ingest (reference appends the per-type probe column
+    * spaces into one, `Input.scala:116-131`): one job brings each scan
+    * task's names, files and dropped rows to the driver; the matrix maps
+    * the same tasks' local indices to ids through two broadcasts, so
+    * computing it reads the files again.
+    */
+  def ingest(
+      spark: SparkSession,
+      baseDir: String,
+      config: DefParser.PipelineConfig,
+  ): IngestResult = {
+    val files = registeredFiles(config)
+    val base = normalizedBase(baseDir)
+    val tasks = scanTasks(spark, base, files.keys)
+    val heads = tasks.map(t => (t.names, t.files, t.dropped)).collect()
+    val probeNames = sortedNames(heads.flatMap(_._1).distinct)
+    val resolve = resolver(base, files)
+    val sampleOf = heads.flatMap(_._2).distinct.map(f => f -> files(resolve(f))).toMap
+
+    val sc = spark.sparkContext
+    val probeIds = sc.broadcast(probeNames.zipWithIndex.toMap)
+    val sampleIds = sc.broadcast(sampleOf)
+    import spark.implicits._
+    val matrix = tasks.flatMap { t =>
+      val toProbe = t.names.map(probeIds.value)
+      t.files.indices.iterator.flatMap { f =>
+        val (s, idx, vs) = (sampleIds.value(t.files(f)), t.nameIdx(f), t.values(f))
+        idx.indices.iterator.map(k => (s, toProbe(idx(k)), vs(k)))
+      }
+    }.toDF("sample", "probe", "value")
+    val samples = sampleNames(config)
+    IngestResult(matrix, samples, samples.toSeq.zipWithIndex.toDF("sample_name", "sample"),
+      probeNames, sampleOf.values.toSet, heads.map(_._3).sum)
   }
 
   /** The dense regime's ingest: every registered file in one scan job,
@@ -263,11 +247,8 @@ object Ingest {
     * probe count, since the count only grows. Until then the driver
     * holds the task results that passed the gate (12 B per observed
     * cell, bounded by the 36 B/cell model) plus the one being checked.
-    *
-    * Probe ids are the names in UTF-8 byte order, as `ingest` assigns
-    * them. A (sample, probe) cell observed twice — a file listing a
-    * probe twice, or one name in two type files of a sample — fails,
-    * naming the probe, the sample and the file(s).
+    * A cell observed twice — a file listing a probe twice, or one name
+    * in two type files of a sample — fails, naming the file(s).
     */
   def ingestDense(
       spark: SparkSession,
@@ -281,8 +262,7 @@ object Ingest {
     if (!Network.fitsDense(nSamples, 1, maxBytes)) return None
 
     val base = normalizedBase(baseDir)
-    val tasks = parseLenient(scan(spark, base, files.keys)).select("probe_name", "value", "file_path")
-      .queryExecution.toRdd.mapPartitions(rows => Iterator.single(encode(rows)))
+    val tasks = scanTasks(spark, base, files.keys)
     val sc = spark.sparkContext
     val held = ArrayBuffer.empty[TaskRows]
     val seen = new java.util.HashSet[String]
@@ -309,44 +289,38 @@ object Ingest {
   private def merge(
       tasks: Seq[TaskRows],
       resolve: String => String,
-      files: Map[String, String],
+      files: Map[String, Int],
       samples: Array[String],
   ): DenseIngest = {
     val probeNames = sortedNames(tasks.flatMap(_.names).distinct.toArray)
     val probeOf = probeNames.zipWithIndex.toMap
     val toProbe = tasks.map(_.names.map(probeOf))
-    val sampleOf = samples.zipWithIndex.toMap
-    // (task, file in task, sample id, registered file), by sample id, so
-    // each probe's samples are appended in ascending order
-    val parts = (for (t <- tasks.indices; f <- tasks(t).files.indices) yield {
-      val file = resolve(tasks(t).files(f))
-      (t, f, sampleOf(files(file)), file)
-    }).sortBy(_._3)
+    val sampleOf = tasks.flatMap(_.files).distinct.map(f => f -> files(resolve(f))).toMap
+    // (task, file in task, sample id), by sample id, so each probe's
+    // samples are appended in ascending order
+    val parts = (for (t <- tasks.indices; f <- tasks(t).files.indices)
+      yield (t, f, sampleOf(tasks(t).files(f)))).sortBy(_._3)
 
     val counts = new Array[Int](probeNames.length)
-    for ((t, f, _, _) <- parts; i <- tasks(t).nameIdx(f)) counts(toProbe(t)(i)) += 1
+    for ((t, f, _) <- parts; i <- tasks(t).nameIdx(f)) counts(toProbe(t)(i)) += 1
     val sampleIds = counts.map(new Array[Int](_))
     val values = counts.map(new Array[Double](_))
     java.util.Arrays.fill(counts, 0)
-    for ((t, f, s, _) <- parts) {
+    for ((t, f, s) <- parts) {
       val (idx, vs) = (tasks(t).nameIdx(f), tasks(t).values(f))
       var k = 0
       while (k < idx.length) {
         val p = toProbe(t)(idx(k))
         val n = counts(p)
-        if (n > 0 && sampleIds(p)(n - 1) == s) {
-          val in = parts.collect {
-            case (t2, f2, `s`, file) if tasks(t2).nameIdx(f2).exists(toProbe(t2)(_) == p) => file
-          }.distinct
-          throw new IllegalArgumentException(
-            s"probe '${probeNames(p)}' is observed more than once for sample '${samples(s)}' " +
-              s"(file(s): ${in.mkString(", ")}) — one value per (sample, probe) cell")
-        }
+        if (n > 0 && sampleIds(p)(n - 1) == s)
+          throw duplicateCell(probeNames(p), samples(s), parts.collect {
+            case (t2, f2, `s`) if tasks(t2).nameIdx(f2).exists(toProbe(t2)(_) == p) => resolve(tasks(t2).files(f2))
+          })
         sampleIds(p)(n) = s; values(p)(n) = vs(k); counts(p) = n + 1
         k += 1
       }
     }
     DenseIngest(probeNames, Completion.Observed(probeNames.indices.toArray, sampleIds, values),
-      tasks.map(_.dropped).sum)
+      sampleOf.values.toSet, tasks.map(_.dropped).sum)
   }
 }

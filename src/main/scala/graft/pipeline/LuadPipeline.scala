@@ -15,10 +15,11 @@ import org.apache.spark.storage.StorageLevel
   * read by one scan job and every later step runs on the driver arrays
   * — never re-parallelized as a matrix; in the relational regime shared
   * subtrees are persisted instead of recomputed per action; everything
-  * is a pure function of (SparkSession, config). `run` owns the
-  * registry-sized work of both regimes — sample ids, labels, the
-  * coverage guard, the decode and the survivor count — so the regimes
-  * differ only in how they read, complete, filter and train.
+  * is a pure function of (SparkSession, config). Both regimes ingest
+  * through the same scan tasks, and `run` owns the registry-sized work
+  * of both — sample ids, labels, the coverage guard, the decode and the
+  * survivor count — so the regimes differ only in where the matrix
+  * lives and how they complete, filter and train.
   */
 object LuadPipeline {
 
@@ -69,23 +70,18 @@ object LuadPipeline {
     val ingested = timed("ingest") {
       Ingest.ingestDense(spark, baseDir, config, maxBytes).toLeft {
         val ing = Ingest.ingest(spark, baseDir, config)
-        val matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK)
-        val covered = matrix.select("sample").distinct().collect().map(_.getInt(0)).toSet
-        (ing.copy(matrix = matrix), covered)
+        val persisted = ing.copy(matrix = ing.matrix.persist(StorageLevel.MEMORY_AND_DISK))
+        requireOneValuePerCell(persisted, config)
+        persisted
       }
     }
-    val (nProbes, rowsDropped, covered) = ingested match {
-      case Left(d) =>
-        val seen = new java.util.BitSet
-        d.observed.samples.foreach(_.foreach(seen.set))
-        (d.probeNames.length.toLong, d.rowsDropped, (i: Int) => seen.get(i))
-      case Right((ing, seen)) => (ing.nProbes, ing.rowsDropped, seen)
-    }
+    val read: Ingest.Ingested = ingested.merge
+    val nProbes = read.probeNames.length.toLong
     Network.reportPath(ingested.isLeft, names.length.toLong, nProbes, maxBytes)
-    requireCovered(names, covered)
+    requireCovered(names, read.covered)
     val (model, scores) = ingested match {
       case Left(d) => runDense(spark, d.observed, training, predicting, config, alsParams, svmParams)
-      case Right((ing, _)) => runRelational(spark, ing, training, predicting, config, alsParams, svmParams)
+      case Right(ing) => runRelational(spark, ing, training, predicting, config, alsParams, svmParams)
     }
 
     // P5 reverse decode, once for both regimes: the reference prints
@@ -96,7 +92,7 @@ object LuadPipeline {
     }
     import spark.implicits._
     // the model's feature count is the network filter's survivor count
-    Result(preds.toDF("sample_name", "prediction"), nProbes, model.numFeatures.toLong, rowsDropped)
+    Result(preds.toDF("sample_name", "prediction"), nProbes, model.numFeatures.toLong, read.rowsDropped)
   }
 
   /** Loud coverage guard (r15 pipeline review): a registered sample
@@ -105,12 +101,25 @@ object LuadPipeline {
     * matrix rows, nothing fabricated by completion, the training join
     * shrinks, and the run exits 0 with N-1 predictions.
     */
-  private def requireCovered(names: Array[String], covered: Int => Boolean): Unit = {
+  private def requireCovered(names: Array[String], covered: Set[Int]): Unit = {
     val uncovered = names.indices.filterNot(covered).map(names)
     require(uncovered.isEmpty,
       s"registered sample(s) with zero parseable matrix rows: " +
         s"${uncovered.mkString(", ")} — empty or fully unparseable file?")
   }
+
+  /** The relational regime's duplicate-cell guard, the first job over
+    * the persisted matrix (so it also materializes it): at most one cell
+    * observed twice reaches the driver and fails as `Ingest.ingestDense`
+    * fails. The matrix carries no file, so it names the sample's
+    * registered files.
+    */
+  private def requireOneValuePerCell(ing: Ingest.IngestResult, config: DefParser.PipelineConfig): Unit =
+    ing.matrix.groupBy("sample", "probe").count().filter(col("count") > 1).limit(1).collect().foreach { r =>
+      val sample = ing.sampleNames(r.getInt(0))
+      throw Ingest.duplicateCell(ing.probeNames(r.getInt(1)), sample,
+        config.samples.filter(_.name == sample).flatMap(_.files.values))
+    }
 
   /** Dense regime: completion, the network filter, training and
     * prediction run on the driver arrays of the observed matrix —
@@ -144,7 +153,7 @@ object LuadPipeline {
     */
   private def runRelational(
       spark: SparkSession,
-      ing: Ingest.IngestResult, // matrix persisted and covering every sample
+      ing: Ingest.IngestResult, // matrix persisted, covering every sample, one value per cell
       training: Seq[(Int, Boolean)], // (sample id, tumorous)
       predicting: Seq[Int],
       config: DefParser.PipelineConfig,
@@ -153,7 +162,7 @@ object LuadPipeline {
   ): (LinearSVCModel, Seq[(Int, Double)]) = {
     import spark.implicits._
     val matrix = ing.matrix
-    val cards = Some((ing.sampleNames.length.toLong, ing.nProbes))
+    val cards = Some((ing.sampleNames.length.toLong, ing.probeNames.length.toLong))
 
     val completed = timed("als-completion") {
       val c = Completion.complete(spark, matrix, alsParams, cards)

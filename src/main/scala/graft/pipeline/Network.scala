@@ -447,14 +447,6 @@ object Network {
         s"(samples=$nSamples probes=$nProbes cells=${nSamples * nProbes} " +
         s"footprint=${denseFootprintBytes(nSamples, nProbes)}B budget=${maxBytes}B)")
 
-  /** The dense-regime gate at the session budget, reported. */
-  def useDense(spark: SparkSession, nSamples: Long, nProbes: Long): Boolean = {
-    val maxBytes = maxDenseBytes(spark)
-    val dense = fitsDense(nSamples, nProbes, maxBytes)
-    reportPath(dense, nSamples, nProbes, maxBytes)
-    dense
-  }
-
   /** The relational regime's network step: Pearson self-join edges →
     * GraphX CC → `filterMatrix`.
     */

@@ -42,11 +42,11 @@ object Streams {
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
   /** Streaming file-source ingest of expression TSVs — the streaming
-    * twin of `pipeline.Ingest.readFiles`'s SCAN stage, with its schema,
-    * options and lenient parse (a headerless file keeps its first row;
-    * a non-numeric value drops its row): the `file` column carries the
-    * raw `input_file_name()` URI, and mapping it back to a sample (with
-    * readFiles' fail-loud check for files that map to no declared
+    * twin of `pipeline.Ingest`'s batch scan, with its schema, options
+    * and lenient parse (a headerless file keeps its first row; a
+    * non-numeric value drops its row): the `file` column carries the raw
+    * `input_file_name()` URI, and mapping it back to a sample (with
+    * `Ingest`'s fail-loud check for files that map to no declared
     * sample) is the caller's batch step, since the sample dictionary is
     * a static frame joined per micro-batch, not streaming state.
     */

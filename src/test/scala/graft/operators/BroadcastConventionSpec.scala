@@ -129,11 +129,11 @@ class BroadcastConventionSpec extends AnyFunSuite {
     // LUAD corpus dims: 62 samples / ~21.5k probes
     ("Svm.scala", "broadcast(labels)"),
     ("LuadPipeline.scala", "broadcast(predictIds)"),
-    ("Ingest.scala", "broadcast(sampleDict)"),
-    ("Ingest.scala", "broadcast(probeDict)"),
-    // relational-regime file → sample tags: one row per registered
-    // file, registry-sized (121 on the benchmark corpus)
-    ("Ingest.scala", "broadcast(owners)"),
+    // relational-regime matrix ids (sparkContext broadcasts): probe name
+    // → id, ~21.5k entries at the reference shape; scanned file → sample
+    // id, registry-sized (121 files on the benchmark corpus)
+    ("Ingest.scala", "sc.broadcast(probeNames.zipWithIndex.toMap)"),
+    ("Ingest.scala", "sc.broadcast(sampleOf)"),
     // budget-gated dense-Pearson scratch arrays (sparkContext
     // broadcast, entered only under the measured memory budget)
     ("Network.scala", "sparkContext.broadcast(z)"),

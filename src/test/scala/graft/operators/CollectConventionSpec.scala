@@ -46,20 +46,21 @@ class CollectConventionSpec extends AnyFunSuite {
     // (tasks ≤ 16 × cores), one int pair per probe that has an edge in
     // the task; same budget gate as the matrix pull
     ("Network.scala", "tasks.collect()"),
-    // relational-regime probe dictionary: each scan task's distinct
-    // probe names and one dropped-row count — ≤ probes names per task
-    // (~21.5k at the reference shape); the dictionary is the broadcast
-    // join's build side, so it is driver-resident anyway
-    ("Ingest.scala", "Iterator.single(distinctNames(rows))).collect()"),
+    // relational-regime dictionaries: each scan task's distinct probe
+    // names, the files it scanned and one dropped-row count — ≤ probes
+    // names (~21.5k at the reference shape) plus ≤ registered files per
+    // task; the probe dictionary is broadcast back, so it is
+    // driver-resident anyway
+    ("Ingest.scala", "tasks.map(t => (t.names, t.files, t.dropped)).collect()"),
     // dense-regime scan job: each task returns its rows
     // dictionary-encoded — 12 B per observed cell plus one probe-name
     // array per task — and the driver keeps a result only while the
     // probes seen pass the `Network.fitsDense` gate (36 B/cell modelled),
     // dropping all of them and cancelling the job once they do not
     ("Ingest.scala", "sc.runJob(tasks"),
-    // distinct ingested sample ids: registry-sized (62 samples at the
-    // reference shape) — the coverage-guard cardinality pass
-    ("LuadPipeline.scala", "matrix.select(\"sample\").distinct().collect()"),
+    // relational-regime duplicate-cell guard: limit(1) — at most one
+    // (sample, probe) cell observed twice
+    ("LuadPipeline.scala", ".filter(col(\"count\") > 1).limit(1).collect()"),
     // relational-regime scores: one (id, ±1.0) row per predictive
     // sample at most — registry-sized
     ("LuadPipeline.scala", "Svm.predict(model, toScore).as[(Int, Double)].collect()"),

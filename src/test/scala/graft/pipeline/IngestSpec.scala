@@ -51,15 +51,12 @@ class IngestSpec extends SparkSpec {
     val r = Ingest.ingest(spark, base, config)
     // 8 samples × 5 probes; header + malformed rows dropped
     assert(r.matrix.count() == 40)
-    val probes = r.probeDict.orderBy("probe").collect().map(_.getString(0)).toSeq
-    assert(probes == Seq("p000", "p001", "p002", "p003", "p004")) // sorted ids
+    assert(r.probeNames.toSeq == Seq("p000", "p001", "p002", "p003", "p004")) // sorted ids
     val samples = r.sampleDict.orderBy("sample").collect().map(_.getString(0)).toSeq
     assert(samples == samples.sorted)
     // re-running yields identical dictionaries (determinism, quirk Q3)
     val r2 = Ingest.ingest(spark, base, config)
-    assert(
-      r2.probeDict.orderBy("probe").collect().toSeq ==
-        r.probeDict.orderBy("probe").collect().toSeq)
+    assert(r2.probeNames.toSeq == r.probeNames.toSeq)
   }
 
   test("a HEADERLESS expression file keeps its first data row (faithful leniency)") {
@@ -67,19 +64,29 @@ class IngestSpec extends SparkSpec {
     // parse (lenient=true); a Spark header=true read ate the first
     // DATA row of a headerless export — an observed cell silently
     // became a missing one for ALS to fabricate (red against the old
-    // formulation). A headered file must read identically either way.
+    // formulation). A headered file must read identically either way,
+    // in both regimes.
     val dir = Files.createTempDirectory("graft_headerless")
     Files.writeString(dir.resolve("nohdr.txt"),
       "p000\t1.5\np001\t2.5\n")
     Files.writeString(dir.resolve("hdr.txt"),
       "probe_id\traw_count\np000\t1.5\np001\t2.5\n")
-    def rows(f: String) = Ingest
-      .readFiles(spark, dir.toString, Map(f -> "S1"))
-      .orderBy("probe_name")
-      .collect().map(r => (r.getString(1), r.getDouble(2))).toSeq
+    def config(f: String) = DefParser.PipelineConfig(
+      Seq(DefParser.SampleSpec("S1", predictive = false, tumorous = false, Map("expr" -> f))), Seq("expr"), None, None)
+    def relational(f: String) = {
+      val r = Ingest.ingest(spark, dir.toString, config(f))
+      r.matrix.collect().map(row => (r.probeNames(row.getInt(1)), row.getDouble(2))).sorted.toSeq
+    }
+    def dense(f: String) = {
+      val d = Ingest.ingestDense(spark, dir.toString, config(f), Long.MaxValue).get
+      (for (i <- d.observed.probes.indices; v <- d.observed.values(i))
+        yield (d.probeNames(d.observed.probes(i)), v)).sorted
+    }
     val want = Seq(("p000", 1.5), ("p001", 2.5))
-    assert(rows("nohdr.txt") == want, "headerless file lost a data row")
-    assert(rows("hdr.txt") == want, "header line not dropped leniently")
+    for (rows <- Seq(relational _, dense _)) {
+      assert(rows("nohdr.txt") == want, "headerless file lost a data row")
+      assert(rows("hdr.txt") == want, "header line not dropped leniently")
+    }
   }
 
   test("a base dir with . or .. segments ingests the same matrix as the plain dir") {
@@ -130,14 +137,9 @@ class IngestSpec extends SparkSpec {
     // every row fails the lenient parse
     Files.writeString(dir.resolve("expr/PRED-01.expr.txt"), "probe_id\traw_count\textra\n")
     val config = DefParser.parseFile(s"$base/input.txt")
-    val ex = intercept[IllegalArgumentException] {
-      LuadPipeline.run(
-        spark, base, config,
-        Completion.AlsParams(rank = 2, maxIter = 2, numBlocks = 2),
-        Svm.SvmParams(maxIter = 5))
-    }
-    assert(ex.getMessage.contains("PRED-01") &&
-      ex.getMessage.contains("zero parseable"), ex.getMessage)
+    for (ex <- failuresInBothRegimes(base, config))
+      assert(ex.getMessage.contains("PRED-01") &&
+        ex.getMessage.contains("zero parseable"), ex.getMessage)
   }
 
   /** The mini-corpus with probe p005 rewritten to mirror p000 exactly
@@ -179,7 +181,7 @@ class IngestSpec extends SparkSpec {
     val (base, config) = mirroredCorpus("graft_corpus_jobs")
     def predictions(r: LuadPipeline.Result) =
       r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
-    assert(Network.useDense(spark, config.samples.size.toLong, 6L))
+    assert(Network.fitsDense(config.samples.size.toLong, 6L, Network.maxDenseBytes(spark)))
     val (dense, denseJobs) = graft.JobStacks(spark)(runMini(base, config))
     assert(denseJobs.exists(_.contains("denseSurvivors")), "the fused kernel did not run")
     for (code <- Seq("org.apache.spark.graphx", "zipWithIndex", "pearsonEdges",
@@ -265,7 +267,7 @@ class IngestSpec extends SparkSpec {
     // fixed seeds, chosen before the first run
     for (seed <- Seq(11L, 12L, 13L)) {
       val (base, config) = twoTypeCorpus(seed)
-      assert(Network.useDense(spark, config.samples.size.toLong, 12L))
+      assert(Network.fitsDense(config.samples.size.toLong, 12L, Network.maxDenseBytes(spark)))
       def predictions(r: LuadPipeline.Result) =
         r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
       val dense = runMini(base, config)
@@ -313,10 +315,8 @@ class IngestSpec extends SparkSpec {
     val base = dir.toString
     val config = DefParser.parseFile(s"$base/input.txt")
 
-    def decoded(r: Ingest.IngestResult) = r.matrix
-      .join(r.sampleDict, "sample").join(r.probeDict, "probe")
-      .select("sample_name", "probe_name", "value")
-      .collect().map(row => (row.getString(0), row.getString(1), row.getDouble(2))).toSet
+    def decoded(r: Ingest.IngestResult) = r.matrix.collect()
+      .map(row => (r.sampleNames(row.getInt(0)), r.probeNames(row.getInt(1)), row.getDouble(2))).toSet
     val expected = (for {
       (n, i) <- names.zipWithIndex; (p, k) <- probeNames.zipWithIndex
     } yield (n, p, 100.0 * i + k)).toSet
@@ -339,18 +339,16 @@ class IngestSpec extends SparkSpec {
     assert(decoded(rDistributed) == expected)
 
     // probe ids: the dense range 0..P-1 in Spark's string order
-    val dict = r.probeDict.orderBy("probe").collect().map(row => (row.getString(0), row.getInt(1)))
-    assert(dict.map(_._2).toSeq == probeNames.indices)
-    assert(dict.map(_._1).toSeq ==
-      r.probeDict.orderBy("probe_name").collect().map(_.getString(0)).toSeq)
-    assert(dict.map(_._1).toSeq == Seq("p0", "pa", "pb", "p\uFF01", "p\uD83D\uDE00"))
-    assert(r.nProbes == probeNames.size)
+    val s = spark; import s.implicits._
+    assert(r.probeNames.toSeq ==
+      r.probeNames.toSeq.toDF("probe_name").orderBy("probe_name").collect().map(_.getString(0)).toSeq)
+    assert(r.probeNames.toSeq == Seq("p0", "pa", "pb", "p\uFF01", "p\uD83D\uDE00"))
 
     val result = LuadPipeline.run(
       spark, base, config,
       Completion.AlsParams(rank = 2, maxIter = 2, numBlocks = 2),
       Svm.SvmParams(maxIter = 5))
-    assert(result.nProbesBefore == r.nProbes && result.nProbesAfter == r.nProbes)
+    assert(result.nProbesBefore == probeNames.size && result.nProbesAfter == probeNames.size)
     assert(result.predictions.count() == 10)
   }
 
@@ -395,7 +393,7 @@ class IngestSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_corpus_one_scan")
     val base = writeCorpus(dir, nTrain = 8, nPredict = 4, nProbes = 6)
     val config = DefParser.parseFile(s"$base/input.txt")
-    assert(Network.useDense(spark, config.samples.size.toLong, 6L))
+    assert(Network.fitsDense(config.samples.size.toLong, 6L, Network.maxDenseBytes(spark)))
     val (result, w) = work(runMini(base, config))
     assert(w.readingJobs == 1, s"the corpus was read by ${w.readingJobs} jobs")
     assert(w.shuffleStages == 0, s"${w.shuffleStages} stage(s) wrote shuffle output")
@@ -407,13 +405,13 @@ class IngestSpec extends SparkSpec {
     val (nS, nP) = (config.samples.size.toLong, 12L)
     val footprint = Network.denseFootprintBytes(nS, nP)
     val (dense, dw) = withBudget(footprint)(work(runMini(base, config)))
-    assert(withBudget(footprint)(Network.useDense(spark, nS, nP)))
+    assert(withBudget(footprint)(Network.fitsDense(nS, nP, Network.maxDenseBytes(spark))))
     assert(dw.readingJobs == 1 && dw.readingTasks >= 2, s"the scan ran ${dw.readingTasks} task(s): no in-flight gate")
     assert(!dw.stacks.exists(_.contains("org.apache.spark.graphx")), "the dense budget ran the relational regime")
     // one byte less: the scan starts (one probe fits) and the gate
     // cancels it once the probes seen overflow the budget
     val (relational, rw) = withBudget(footprint - 1)(work(runMini(base, config)))
-    assert(!withBudget(footprint - 1)(Network.useDense(spark, nS, nP)))
+    assert(!withBudget(footprint - 1)(Network.fitsDense(nS, nP, Network.maxDenseBytes(spark))))
     assert(rw.stacks.exists(_.contains("org.apache.spark.graphx")), "one byte below the footprint ran dense")
     assert(dense.nProbesBefore == nP && relational.nProbesBefore == nP)
     assert(relational.nProbesAfter == dense.nProbesAfter)
@@ -430,13 +428,17 @@ class IngestSpec extends SparkSpec {
       p <- d.observed.probes.indices; k <- d.observed.samples(p).indices
     } yield (names(d.observed.samples(p)(k)), d.probeNames(p), d.observed.values(p)(k))).toSet
     val r = Ingest.ingest(spark, base, config)
-    val relationalCells = r.matrix.join(r.sampleDict, "sample").join(r.probeDict, "probe")
-      .select("sample_name", "probe_name", "value")
-      .collect().map(row => (row.getString(0), row.getString(1), row.getDouble(2))).toSet
+    val relationalCells = r.matrix.collect()
+      .map(row => (r.sampleNames(row.getInt(0)), r.probeNames(row.getInt(1)), row.getDouble(2))).toSet
     assert(denseCells.size == 6 * 3)
     assert(relationalCells == denseCells)
     assert(d.rowsDropped == r.rowsDropped)
   }
+
+  /** The failure of `runMini` in the dense regime, then forced relational. */
+  private def failuresInBothRegimes(base: String, config: DefParser.PipelineConfig) =
+    Seq(intercept[IllegalArgumentException](runMini(base, config)),
+      intercept[IllegalArgumentException](withBudget(0)(runMini(base, config))))
 
   test("a probe listed twice in one file fails the run, naming the probe, the sample and the file") {
     val dir = Files.createTempDirectory("graft_corpus_dup_row")
@@ -444,8 +446,7 @@ class IngestSpec extends SparkSpec {
     val f = dir.resolve("expr/TRAIN-03.expr.txt")
     Files.writeString(f, Files.readString(f) + "p002\t0.5\tN\n")
     val config = DefParser.parseFile(s"$base/input.txt")
-    val e = intercept[IllegalArgumentException](runMini(base, config))
-    for (part <- Seq("'p002'", "'TRAIN-03'", "expr/TRAIN-03.expr.txt"))
+    for (e <- failuresInBothRegimes(base, config); part <- Seq("'p002'", "'TRAIN-03'", "expr/TRAIN-03.expr.txt"))
       assert(e.getMessage.contains(part), e.getMessage)
   }
 
@@ -454,8 +455,18 @@ class IngestSpec extends SparkSpec {
     val sample = config.samples.find(_.files.size == 2).get.name
     val rna = Path.of(base, s"rna/$sample.txt")
     Files.writeString(rna, Files.readString(rna) + "m1\t3.25\n")
-    val e = intercept[IllegalArgumentException](runMini(base, config))
-    for (part <- Seq("'m1'", s"'$sample'", s"mirna/$sample.txt", s"rna/$sample.txt"))
+    val files = s"(file(s): mirna/$sample.txt, rna/$sample.txt)" // sorted
+    for (e <- failuresInBothRegimes(base, config); part <- Seq("'m1'", s"'$sample'", files))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  test("a base dir the JVM cannot encode as a path fails naming the dir and the file-name encoding") {
+    val dir = Files.createTempDirectory("graft_corpus_unencodable")
+    val base = writeCorpus(dir, nTrain = 4, nPredict = 2, nProbes = 3)
+    val config = DefParser.parseFile(s"$base/input.txt")
+    // a lone surrogate has no encoding in any charset
+    val e = intercept[IllegalArgumentException](runMini(s"$base/\uD800", config))
+    for (part <- Seq("base dir", "sun.jnu.encoding", "UTF-8 locale"))
       assert(e.getMessage.contains(part), e.getMessage)
   }
 

@@ -135,7 +135,7 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     // allows it
     def dense(maxBytes: Long): Boolean = {
       spark.conf.set("spark.graft.pearson.maxDenseBytes", maxBytes.toString)
-      try Network.useDense(spark, nSamples, nProbes)
+      try Network.fitsDense(nSamples, nProbes, Network.maxDenseBytes(spark))
       finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
     }
     assert(!dense(0L))

@@ -24,14 +24,14 @@ class RealCorpusIngestSpec extends SparkSpec {
   test("one miRNA file → 1,046 probes") {
     val sample = config.samples.find(_.files.contains("mirna")).get.name
     val r = Ingest.ingest(spark, base, restrict(Seq(sample), Seq("mirna")))
-    assert(r.probeDict.count() == 1046)
+    assert(r.probeNames.length == 1046)
     assert(r.matrix.count() == 1046)
   }
 
   test("one RNA file → 20,532 probes") {
     val sample = config.samples.find(_.files.contains("rna")).get.name
     val r = Ingest.ingest(spark, base, restrict(Seq(sample), Seq("rna")))
-    assert(r.probeDict.count() == 20532)
+    assert(r.probeNames.length == 20532)
     assert(r.matrix.count() == 20532)
   }
 
@@ -39,7 +39,7 @@ class RealCorpusIngestSpec extends SparkSpec {
     val sample = config.samples
       .find(s => s.files.contains("mirna") && s.files.contains("rna")).get.name
     val r = Ingest.ingest(spark, base, restrict(Seq(sample), Seq("mirna", "rna")))
-    assert(r.probeDict.count() == 1046 + 20532)
+    assert(r.probeNames.length == 1046 + 20532)
     assert(r.matrix.count() == 1046 + 20532)
   }
 }

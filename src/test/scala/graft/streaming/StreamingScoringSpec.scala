@@ -47,7 +47,7 @@ class StreamingScoringSpec extends SparkSpec {
     val labels = config.training.map(sp => (sp.name, sp.tumorous)).toDF("sample_name", "tumorous")
       .join(ing.sampleDict, "sample_name").select("sample", "tumorous")
     val model = Svm.train(s, features, labels, Svm.SvmParams(maxIter = 20))
-    val probeDict = ing.probeDict
+    val probeDict = ing.probeNames.toSeq.zipWithIndex.toDF("probe_name", "probe")
 
     // --- streaming side: new unlabeled samples dropped into a directory
     val dropDir = Files.createTempDirectory("graft_drop")

@@ -91,7 +91,7 @@ class StreamsSpec extends SparkSpec {
   test("streaming expression-file ingest is as lenient as the batch scan: headerless file, non-numeric value") {
     // a header=true read ate the first data row of a headerless file,
     // and a plain cast under ANSI failed the whole stream on "NA"; the
-    // batch scan (Ingest.readFiles) keeps the one and drops the other
+    // batch ingest (Ingest.ingest) keeps the one and drops the other
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_lenient")
     java.nio.file.Files.writeString(dir.resolve("s1.expr.txt"), "p1\t1.5\np2\tNA\np3\t2.5\n")
@@ -103,8 +103,12 @@ class StreamsSpec extends SparkSpec {
       val rows = s.table("ingest_lenient").select("probe_name", "value")
         .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
       assert(rows == Set(("p1", 1.5), ("p3", 2.5)))
-      val batch = graft.pipeline.Ingest.readFiles(spark, dir.toString, Map("s1.expr.txt" -> "s1"))
-        .collect().map(r => (r.getString(1), r.getDouble(2))).toSet
+      import graft.pipeline.{DefParser, Ingest}
+      val config = DefParser.PipelineConfig(
+        Seq(DefParser.SampleSpec("s1", predictive = false, tumorous = false, Map("expr" -> "s1.expr.txt"))),
+        Seq("expr"), None, None)
+      val ing = Ingest.ingest(spark, dir.toString, config)
+      val batch = ing.matrix.collect().map(r => (ing.probeNames(r.getInt(1)), r.getDouble(2))).toSet
       assert(rows == batch)
     } finally q.stop()
   }
