@@ -50,16 +50,6 @@ object GraftSession {
       // Read them as TIMESTAMP in the UTC session — the same wall-clock
       // values DuckDB's naive TIMESTAMP oracle sees.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // A scan over explicit paths lists them on the driver up to this
-      // many, and in a Spark job above it (default 32). LUAD ingest
-      // passes one path per registered file of a sample-type — ~240 on
-      // the reference corpus — and at the default each type's scan
-      // would start a listing job: building a 60-file scan took ~0.45 s
-      // that way and ~0.08 s listed on the driver (4-core host). On an
-      // object store each driver-side listing is a round trip per path,
-      // so a corpus far above this threshold goes back to listing in a
-      // job.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -54,10 +54,25 @@ object DefParser {
     // explicit UTF-8: the reference's Flink CSV reader decodes UTF-8;
     // the platform-default charset would mis-decode non-ASCII sample
     // names on a POSIX-locale JVM and silently garble the role joins
-    val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8)
+    val src = scala.io.Source.fromFile(localPath("definition file", path).toFile)(scala.io.Codec.UTF8)
     try parse(src.getLines().toSeq)
     finally src.close()
   }
+
+  /** `path` as a path of this JVM's file system, or a failure naming it
+    * (as `what`) and the JVM's file-name encoding: under the POSIX locale
+    * that encoding is ASCII, a non-ASCII character has no file name, and
+    * opening the path anyway fails with a bare FileNotFoundException.
+    */
+  private[pipeline] def localPath(what: String, path: String): java.nio.file.Path =
+    try java.nio.file.Paths.get(path)
+    catch {
+      case e: java.nio.file.InvalidPathException =>
+        throw new IllegalArgumentException(
+          s"$what '$path' is not a path in this JVM's file-name encoding " +
+            s"(sun.jnu.encoding=${System.getProperty("sun.jnu.encoding")}); " +
+            "run under a UTF-8 locale, e.g. LC_ALL=C.UTF-8", e)
+    }
 
   def parse(lines: Seq[String]): PipelineConfig = {
     val rows = lines.iterator

@@ -1,13 +1,19 @@
 package graft.pipeline
 
-import scala.collection.mutable.ArrayBuffer
+import java.io.{BufferedReader, FileNotFoundException, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Locale
 
-import org.apache.spark.{SparkException, TaskContext}
+import scala.collection.mutable.ArrayBuffer
+import scala.util.Using
+
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings, UnescapedQuoteHandling}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.{SerializableWritable, SparkException}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Expression-file ingest → COO matrix (reference `Input.scala:104-162`,
@@ -16,14 +22,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale design: the reference reads one file per (sample, type) in a
   * driver loop and chains 477 unions (`Input.scala:116-131`) — a plan
   * with 477 scan nodes. Here every registered file of every type is
-  * read in ONE multi-path scan, and `_metadata.file_path` says which
-  * file a row came from; the resolver maps each file (not each row)
-  * back to its sample. At 100 TB this is a single distributed scan whose
-  * parallelism comes from file splits, not from plan width.
+  * read by ONE Spark job of reader tasks (`readerTasks`), each of which
+  * opens its share of the files through the Hadoop `FileSystem` API, so
+  * it knows which registered file — and so which sample — each row came
+  * from. No Spark SQL file source is involved: no scan plan to build
+  * and no file listing. Parallelism is per file (a file is never
+  * split): the session's parallelism, or more tasks where that would
+  * put more than `spark.sql.files.maxPartitionBytes` in one.
   *
-  * Both regimes of `LuadPipeline.run` run the same scan tasks, each of
-  * which dictionary-encodes its rows (`encode`); the driver assigns the
-  * probe ids and maps each scanned file to its sample once:
+  * Both regimes of `LuadPipeline.run` run the same reader tasks, each of
+  * which dictionary-encodes its rows; the driver assigns the probe ids:
   *  - `ingestDense`: one Spark job whose task results the driver merges
   *    into the by-probe observed matrix, applying the dense gate to the
   *    probes seen as they arrive.
@@ -32,9 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the same tasks, whose local indices two broadcasts map to ids.
   *
   * Lenient semantics (reference `lenient = true`, `Input.scala:121`):
-  * the header line and any row whose value column fails the double cast
-  * are dropped and counted; only the first two columns are read (S2's
-  * `includedFields = Array(0,1)`).
+  * `LineRule`, shared with `Streams.expressionFileStream`.
   *
   * Dictionaries: the reference assigns probe ids from `Set` iteration
   * order — nondeterministic (SURVEY §8 Q3). We sort names before
@@ -66,22 +72,82 @@ object Ingest {
       rowsDropped: Long,
   ) extends Ingested
 
-  /** The expression-file scan of both regimes and of the streaming twin
-    * `Streams.expressionFileStream`: only cols 0-1 reach the plan (S2),
-    * read with header=false, then `parseLenient`. The reference
-    * (Input.scala lenient=true) drops a row only when its VALUE fails
-    * the Double parse, so a header line is dropped as a non-numeric
-    * row, where header=true would eat the first DATA row of a
-    * headerless export (an observed cell turned into a missing one for
-    * ALS to fabricate). try_cast, not cast: under Spark 4's ANSI default
-    * a plain cast THROWS on a non-numeric value.
+  /** What the lenient line rule makes of one line. */
+  private[graft] sealed trait Line
+  private[graft] case object NoRecord extends Line // blank: not a row, not counted
+  private[graft] case object Dropped extends Line // a row the lenient parse drops
+  private[graft] final case class Cell(probe: String, value: Double) extends Line
+
+  /** The lenient line rule of both regimes and of the stream: what
+    * Spark's CSV source (tab separator, `"` quote, `\` escape, no
+    * header, only columns 0-1 — S2's `includedFields = Array(0, 1)`)
+    * followed by `try_cast(value AS DOUBLE)` made of the line, except
+    * for non-finite values. The fields come from univocity's tokenizer
+    * set up as Spark's `CSVOptions` sets it up; one rule holds one
+    * tokenizer, which is not thread-safe, so each task or partition
+    * makes its own.
+    *  - A line that is empty after `trim` (chars ≤ U+0020) is no row.
+    *  - An empty field is absent; extra fields are ignored. A field
+    *    left open by a quote runs to the end of the line (a name then
+    *    has no value; a value is read).
+    *  - The name is kept verbatim, a byte-order mark included; the
+    *    value is read by `java.lang.Double.parseDouble`, which trims
+    *    chars ≤ U+0020 and reads `1d`, `0x1p3`, `+9`, `.5`, `5.` and
+    *    `7e2`.
+    *  - A row without a name or a value, or whose value does not parse,
+    *    is dropped (the reference drops a row only when its VALUE fails
+    *    the Double parse, so a header line is dropped as a non-numeric
+    *    row, and a headerless file keeps its first row).
+    *  - A value that reads as NaN or ±Infinity (`NaN`, `Infinity`,
+    *    `inf`, `1e400`, any spelling Spark's cast reads) fails, naming
+    *    the probe and `where`: kept, it poisons every correlation and
+    *    the SVM; dropped, ALS would invent the cell.
     */
-  private[graft] val ExpressionSchema: StructType =
-    StructType(Seq(StructField("probe_name", StringType), StructField("raw_value", StringType)))
-  private[graft] val ExpressionOptions: Map[String, String] = Map("sep" -> "\t", "header" -> "false")
-  private[graft] def parseLenient(raw: DataFrame): DataFrame =
-    raw.withColumn("value", expr("try_cast(raw_value AS DOUBLE)"))
-      .filter(col("value").isNotNull && col("probe_name").isNotNull)
+  private[graft] final class LineRule {
+    private val tokenizer = {
+      val settings = new CsvParserSettings
+      val format = settings.getFormat
+      format.setDelimiter('\t')
+      format.setQuote('"')
+      format.setQuoteEscape('\\')
+      settings.setCommentProcessingEnabled(false)
+      settings.setIgnoreLeadingWhitespaces(false)
+      settings.setIgnoreTrailingWhitespaces(false)
+      settings.setReadInputOnSeparateThread(false)
+      settings.setMaxColumns(20480)
+      settings.setMaxCharsPerColumn(-1)
+      settings.setUnescapedQuoteHandling(UnescapedQuoteHandling.STOP_AT_DELIMITER)
+      settings.setLineSeparatorDetectionEnabled(false)
+      val t = new CsvParser(settings)
+      // the tokenizer's first line drops a leading byte-order mark; spend
+      // it here, so which line of which file comes first does not matter
+      t.parseLine("-")
+      t
+    }
+
+    def apply(line: String, where: String): Line =
+      if (line.trim.isEmpty) NoRecord
+      else {
+        val fields = tokenizer.parseLine(line)
+        def field(i: Int) = if (fields.length > i && fields(i) != null && fields(i).nonEmpty) fields(i) else null
+        val (probe, raw) = (field(0), field(1))
+        if (probe == null || raw == null) Dropped
+        else {
+          val v =
+            try Some(java.lang.Double.parseDouble(raw))
+            catch {
+              case _: NumberFormatException => Option.when(SpecialValues(raw.trim.toLowerCase(Locale.ROOT)))(Double.NaN)
+            }
+          v.fold[Line](Dropped) { x =>
+            require(java.lang.Double.isFinite(x), s"non-finite value '$raw' for probe '$probe' in $where")
+            Cell(probe, x)
+          }
+        }
+      }
+  }
+
+  /** The non-numbers Spark's string → double cast reads besides Java's. */
+  private val SpecialValues = Set("inf", "+inf", "-inf", "infinity", "+infinity", "-infinity", "nan")
 
   /** Sample id → name: the registered samples sorted by name, so ids
     * are reproducible (F1/F2).
@@ -89,55 +155,33 @@ object Ingest {
   def sampleNames(config: DefParser.PipelineConfig): Array[String] =
     config.samples.map(_.name).sorted.toArray
 
-  /** Every registered file, by its path relative to the base dir, → its
-    * sample's id (`sampleNames`). A file registered twice — by two
-    * samples, or by two types of one — would map back to two owners (the
-    * reference reads per (sample, file) pair and gives the rows to
+  /** A registered expression file: its path relative to the base dir,
+    * its sample and its sample-type.
+    */
+  private final case class Registered(path: String, sample: String, sampleType: String)
+
+  /** Every registered file, sorted by path. A file registered twice — by
+    * two samples, or by two types of one — would belong to two owners
+    * (the reference reads per (sample, file) pair and gives the rows to
     * both), so it is rejected loudly instead.
     */
-  private def registeredFiles(config: DefParser.PipelineConfig): Map[String, Int] = {
-    val owners = for (s <- config.samples; (t, f) <- s.files.toSeq) yield (f, s.name, t)
+  private def registeredFiles(config: DefParser.PipelineConfig): IndexedSeq[Registered] = {
+    val owners = for (s <- config.samples; (t, f) <- s.files.toSeq) yield Registered(f, s.name, t)
     require(owners.nonEmpty, "no expression files registered")
-    val dups = owners.groupBy(_._1).filter(_._2.size > 1)
+    val dups = owners.groupBy(_.path).filter(_._2.size > 1)
     require(
       dups.isEmpty,
       "file(s) registered more than once: " +
-        dups.map { case (f, os) => s"$f -> ${os.map(o => s"${o._2} (${o._3})").mkString(", ")}" }.mkString("; "))
-    val id = sampleNames(config).zipWithIndex.toMap
-    owners.map(o => o._1 -> id(o._2)).toMap
+        dups.map { case (f, os) => s"$f -> ${os.map(o => s"${o.sample} (${o.sampleType})").mkString(", ")}" }
+          .mkString("; "))
+    owners.sortBy(_.path).toIndexedSeq
   }
 
-  /** Spark reports each scanned file by its absolute, normalized path,
-    * so the base is normalized the same way: a base with a `.` or `..`
-    * segment (`./input.txt`'s parent is `<cwd>/.`) would otherwise never
-    * match. A base the JVM's file-name encoding cannot represent fails
-    * naming that encoding: under the POSIX locale it is ASCII, and any
-    * non-ASCII character is shown as `?`.
+  /** The base dir as an absolute, normalized path, resolved once on the
+    * driver rather than against each task's working dir.
     */
   private def normalizedBase(baseDir: String): String =
-    try java.nio.file.Paths.get(baseDir).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
-    catch {
-      case e: java.nio.file.InvalidPathException =>
-        throw new IllegalArgumentException(
-          s"base dir '$baseDir' is not a path in this JVM's file-name encoding " +
-            s"(sun.jnu.encoding=${System.getProperty("sun.jnu.encoding")}); " +
-            "run under a UTF-8 locale, e.g. LC_ALL=C.UTF-8", e)
-    }
-
-  /** The registered file (its path relative to `base`) behind a file
-    * path Spark reports. The URI is decoded first: a space or non-ASCII
-    * character in the corpus path would otherwise never match. A miss
-    * throws: a path-form mismatch would otherwise lose every row of the
-    * file silently.
-    */
-  private def resolver(base: String, files: Map[String, Int]): String => String = { scanned =>
-    val decoded =
-      try new java.net.URI(scanned).getPath
-      catch { case _: Exception => scanned }
-    val i = decoded.indexOf(base)
-    Option.when(i >= 0)(decoded.substring(i + base.length)).filter(files.contains).getOrElse(
-      throw new IllegalStateException(s"cannot map scanned file back to a sample: $scanned (base $base)"))
-  }
+    DefParser.localPath("base dir", baseDir).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
 
   /** Probe names in Spark's string order (unsigned UTF-8 bytes, as
     * `orderBy` would), not Java's UTF-16 order, so ids match a
@@ -146,57 +190,101 @@ object Ingest {
   private def sortedNames(names: Array[String]): Array[String] =
     names.map(UTF8String.fromString).sortWith(_.compareTo(_) < 0).map(_.toString)
 
-  /** One scan task's rows, dictionary-encoded: the distinct probe names
-    * it saw, and per scanned file the name index and value of each kept
-    * row — 12 B per observed cell — plus the rows the lenient parse
-    * dropped. A file appears only with a kept row.
+  /** One reader task's rows, dictionary-encoded: the distinct probe names
+    * it saw, and per registered file (its path relative to the base) the
+    * name index and value of each kept row — 12 B per observed cell —
+    * plus the rows the lenient parse dropped. A file appears only with a
+    * kept row.
     */
   private final class TaskRows(
       val names: Array[String],
-      val files: Array[String], // as Spark reports them
+      val files: Array[String],
       val nameIdx: Array[Array[Int]],
       val values: Array[Array[Double]],
       val dropped: Long,
   ) extends Serializable
 
-  /** Encodes one task's (probe_name, value, file_path) rows. A file's
-    * rows arrive together; a file split over tasks shows up in each.
+  /** Reads and encodes one task's files under one `LineRule`. As
+    * Spark's text and CSV sources do, a codec suffix (`.gz`) is
+    * decompressed, a leading UTF-8 byte-order mark skipped, lines end at
+    * `\n`, `\r` or `\r\n`, and a malformed byte decodes as U+FFFD.
     */
-  private def encode(rows: Iterator[InternalRow]): TaskRows = {
-    val dict = new java.util.HashMap[UTF8String, Integer]
-    val (names, files) = (ArrayBuffer.empty[String], ArrayBuffer.empty[String])
+  private def readFiles(conf: Configuration, base: String, files: Seq[Registered]): TaskRows = {
+    val codecs = new CompressionCodecFactory(conf)
+    val rule = new LineRule
+    val dict = new java.util.HashMap[String, Integer]
+    val (names, kept) = (ArrayBuffer.empty[String], ArrayBuffer.empty[String])
     val (nameIdx, values) = (ArrayBuffer.empty[Array[Int]], ArrayBuffer.empty[Array[Double]])
-    val (idx, vals) = (Array.newBuilder[Int], Array.newBuilder[Double])
-    def flush(): Unit = if (files.size > nameIdx.size) {
-      nameIdx += idx.result(); values += vals.result(); idx.clear(); vals.clear()
+    var dropped = 0L
+    for (f <- files) {
+      val path = new Path(base + f.path)
+      val where = s"sample '${f.sample}' (${f.sampleType} file ${f.path})"
+      val (idx, vals) = (Array.newBuilder[Int], Array.newBuilder[Double])
+      val raw = path.getFileSystem(conf).open(path)
+      Using.resource(new BufferedReader(new InputStreamReader(
+        Option(codecs.getCodec(path)).fold[InputStream](raw)(_.createInputStream(raw)), UTF_8))) { in =>
+        var line = in.readLine()
+        if (line != null && line.startsWith("\uFEFF")) line = line.substring(1)
+        while (line != null) {
+          rule(line, where) match {
+            case Cell(probe, v) =>
+              var i = dict.get(probe)
+              if (i == null) { i = names.size; dict.put(probe, i); names += probe }
+              idx += i; vals += v
+            case Dropped => dropped += 1
+            case NoRecord =>
+          }
+          line = in.readLine()
+        }
+      }
+      val fileIdx = idx.result()
+      if (fileIdx.nonEmpty) { kept += f.path; nameIdx += fileIdx; values += vals.result() }
     }
-    var file: UTF8String = null
-    var kept = 0L
-    rows.foreach { r =>
-      val f = r.getUTF8String(2)
-      if (f != file) { flush(); file = f.clone(); files += file.toString }
-      val name = r.getUTF8String(0)
-      var i = dict.get(name)
-      if (i == null) { i = names.size; dict.put(name.clone(), i); names += name.toString }
-      idx += i; vals += r.getDouble(1); kept += 1
-    }
-    flush()
-    // the rows this task's scan read (its own input metrics) less the kept
-    val dropped = TaskContext.get().taskMetrics().inputMetrics.recordsRead - kept
-    new TaskRows(names.toArray, files.toArray, nameIdx.toArray, values.toArray, dropped)
+    new TaskRows(names.toArray, kept.toArray, nameIdx.toArray, values.toArray, dropped)
   }
 
-  /** The scan tasks of both regimes: one lenient multi-path scan of
-    * `files` (relative to `base`), each task's rows encoded by `encode`;
-    * `file_path` is the scanned file as Spark reports it, a
-    * percent-encoded URI.
+  /** The reader tasks of both regimes. The path-sorted registered files
+    * are dealt round-robin over min(files, defaultParallelism) shares, so
+    * each share holds some of every type and, for a small corpus, all run
+    * in one wave. Each share is then cut, in path order, into tasks of at
+    * most `spark.sql.files.maxPartitionBytes` of file (a larger file
+    * alone), the bound Spark's file sources put on a task, so what one
+    * task reads and encodes stays bounded however large the corpus. The
+    * file lengths are read on the driver, where a missing file fails,
+    * naming its sample and type.
     */
-  private def scanTasks(spark: SparkSession, base: String, files: Iterable[String]): RDD[TaskRows] =
-    parseLenient(spark.read.options(ExpressionOptions).schema(ExpressionSchema)
-      .csv(files.map(base + _).toSeq.sorted: _*)
-      .select(col("probe_name"), col("raw_value"), col("_metadata.file_path").as("file_path")))
-      .select("probe_name", "value", "file_path")
-      .queryExecution.toRdd.mapPartitions(rows => Iterator.single(encode(rows)))
+  private def readerTasks(spark: SparkSession, base: String, files: IndexedSeq[Registered]): RDD[TaskRows] = {
+    val sc = spark.sparkContext
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val length = files.map { f =>
+      val path = new Path(base + f.path)
+      try path.getFileSystem(sc.hadoopConfiguration).getFileStatus(path).getLen
+      catch {
+        case e: FileNotFoundException => throw new IllegalArgumentException(
+            s"the ${f.sampleType} file of sample '${f.sample}' does not exist: ${f.path} (under $base)", e)
+      }
+    }
+    val n = math.min(files.size, sc.defaultParallelism)
+    val tasks = ArrayBuffer.empty[ArrayBuffer[Registered]]
+    for (share <- 0 until n) {
+      tasks += ArrayBuffer.empty
+      var bytes = 0L
+      for (k <- share until files.size by n) {
+        if (tasks.last.nonEmpty && bytes + length(k) > maxBytes) { tasks += ArrayBuffer.empty; bytes = 0 }
+        tasks.last += files(k); bytes += length(k)
+      }
+    }
+    val conf = new SerializableWritable(sc.hadoopConfiguration)
+    sc.parallelize(tasks.map(_.toSeq).toSeq, tasks.size).map(readFiles(conf.value, base, _))
+  }
+
+  /** A reader task's own failure — a non-finite value — as itself
+    * rather than inside Spark's job-abort message.
+    */
+  private def readerFailure(e: SparkException): Throwable = e.getCause match {
+    case c: IllegalArgumentException => c
+    case _ => e
+  }
 
   /** Both regimes' failure for a (sample, probe) cell observed twice. */
   private[pipeline] def duplicateCell(probe: String, sample: String, files: Seq[String]): IllegalArgumentException =
@@ -205,7 +293,7 @@ object Ingest {
         s"(file(s): ${files.distinct.sorted.mkString(", ")}) — one value per (sample, probe) cell")
 
   /** Relational ingest (reference appends the per-type probe column
-    * spaces into one, `Input.scala:116-131`): one job brings each scan
+    * spaces into one, `Input.scala:116-131`): one job brings each reader
     * task's names, files and dropped rows to the driver; the matrix maps
     * the same tasks' local indices to ids through two broadcasts, so
     * computing it reads the files again.
@@ -216,30 +304,36 @@ object Ingest {
       config: DefParser.PipelineConfig,
   ): IngestResult = {
     val files = registeredFiles(config)
-    val base = normalizedBase(baseDir)
-    val tasks = scanTasks(spark, base, files.keys)
-    val heads = tasks.map(t => (t.names, t.files, t.dropped)).collect()
+    val tasks = readerTasks(spark, normalizedBase(baseDir), files)
+    val heads =
+      try tasks.map(t => (t.names, t.files, t.dropped)).collect()
+      catch { case e: SparkException => throw readerFailure(e) }
     val probeNames = sortedNames(heads.flatMap(_._1).distinct)
-    val resolve = resolver(base, files)
-    val sampleOf = heads.flatMap(_._2).distinct.map(f => f -> files(resolve(f))).toMap
+    val samples = sampleNames(config)
+    val sampleOf = sampleIds(files, samples)
 
     val sc = spark.sparkContext
     val probeIds = sc.broadcast(probeNames.zipWithIndex.toMap)
-    val sampleIds = sc.broadcast(sampleOf)
+    val sampleIdOf = sc.broadcast(sampleOf)
     import spark.implicits._
     val matrix = tasks.flatMap { t =>
       val toProbe = t.names.map(probeIds.value)
       t.files.indices.iterator.flatMap { f =>
-        val (s, idx, vs) = (sampleIds.value(t.files(f)), t.nameIdx(f), t.values(f))
+        val (s, idx, vs) = (sampleIdOf.value(t.files(f)), t.nameIdx(f), t.values(f))
         idx.indices.iterator.map(k => (s, toProbe(idx(k)), vs(k)))
       }
     }.toDF("sample", "probe", "value")
-    val samples = sampleNames(config)
     IngestResult(matrix, samples, samples.toSeq.zipWithIndex.toDF("sample_name", "sample"),
-      probeNames, sampleOf.values.toSet, heads.map(_._3).sum)
+      probeNames, heads.flatMap(_._2).map(sampleOf).toSet, heads.map(_._3).sum)
   }
 
-  /** The dense regime's ingest: every registered file in one scan job,
+  /** Registered file → its sample's id (`sampleNames`). */
+  private def sampleIds(files: Seq[Registered], samples: Array[String]): Map[String, Int] = {
+    val id = samples.zipWithIndex.toMap
+    files.map(f => f.path -> id(f.sample)).toMap
+  }
+
+  /** The dense regime's ingest: every registered file in one reader job,
     * dictionary-encoded inside its tasks, merged on the driver. None,
     * with the job cancelled, once the probes seen so far put the dense
     * footprint of the registered samples over `maxBytes`
@@ -261,8 +355,7 @@ object Ingest {
     val nSamples = samples.length.toLong
     if (!Network.fitsDense(nSamples, 1, maxBytes)) return None
 
-    val base = normalizedBase(baseDir)
-    val tasks = scanTasks(spark, base, files.keys)
+    val tasks = readerTasks(spark, normalizedBase(baseDir), files)
     val sc = spark.sparkContext
     val held = ArrayBuffer.empty[TaskRows]
     val seen = new java.util.HashSet[String]
@@ -278,24 +371,20 @@ object Ingest {
     }
     sc.addJobTag(tag)
     try sc.runJob(tasks, (it: Iterator[TaskRows]) => it.next(), (_: Int, r: TaskRows) => admit(r))
-    catch { case _: SparkException if over => } // the job the gate cancelled
-    finally sc.removeJobTag(tag)
-    if (over) None else Some(merge(held.toSeq, resolver(base, files), files, samples))
+    catch {
+      case _: SparkException if over => // the job the gate cancelled
+      case e: SparkException => throw readerFailure(e)
+    } finally sc.removeJobTag(tag)
+    if (over) None else Some(merge(held.toSeq, sampleIds(files, samples), samples))
   }
 
   /** The task results as the by-probe observed matrix: each probe's
     * sample ids ascending, each once, values aligned.
     */
-  private def merge(
-      tasks: Seq[TaskRows],
-      resolve: String => String,
-      files: Map[String, Int],
-      samples: Array[String],
-  ): DenseIngest = {
+  private def merge(tasks: Seq[TaskRows], sampleOf: Map[String, Int], samples: Array[String]): DenseIngest = {
     val probeNames = sortedNames(tasks.flatMap(_.names).distinct.toArray)
     val probeOf = probeNames.zipWithIndex.toMap
     val toProbe = tasks.map(_.names.map(probeOf))
-    val sampleOf = tasks.flatMap(_.files).distinct.map(f => f -> files(resolve(f))).toMap
     // (task, file in task, sample id), by sample id, so each probe's
     // samples are appended in ascending order
     val parts = (for (t <- tasks.indices; f <- tasks(t).files.indices)
@@ -314,13 +403,13 @@ object Ingest {
         val n = counts(p)
         if (n > 0 && sampleIds(p)(n - 1) == s)
           throw duplicateCell(probeNames(p), samples(s), parts.collect {
-            case (t2, f2, `s`) if tasks(t2).nameIdx(f2).exists(toProbe(t2)(_) == p) => resolve(tasks(t2).files(f2))
+            case (t2, f2, `s`) if tasks(t2).nameIdx(f2).exists(toProbe(t2)(_) == p) => tasks(t2).files(f2)
           })
         sampleIds(p)(n) = s; values(p)(n) = vs(k); counts(p) = n + 1
         k += 1
       }
     }
     DenseIngest(probeNames, Completion.Observed(probeNames.indices.toArray, sampleIds, values),
-      sampleOf.values.toSet, tasks.map(_.dropped).sum)
+      parts.map(_._3).toSet, tasks.map(_.dropped).sum)
   }
 }

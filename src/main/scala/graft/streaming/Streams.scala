@@ -42,22 +42,32 @@ object Streams {
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
   /** Streaming file-source ingest of expression TSVs — the streaming
-    * twin of `pipeline.Ingest`'s batch scan, with its schema, options
-    * and lenient parse (a headerless file keeps its first row; a
-    * non-numeric value drops its row): the `file` column carries the raw
-    * `input_file_name()` URI, and mapping it back to a sample (with
-    * `Ingest`'s fail-loud check for files that map to no declared
-    * sample) is the caller's batch step, since the sample dictionary is
-    * a static frame joined per micro-batch, not streaming state.
+    * twin of `pipeline.Ingest`'s reader tasks: the text source, one row
+    * per line, under the same lenient line rule (`Ingest.LineRule`: a
+    * headerless file keeps its first row, a non-numeric value drops its
+    * row, a non-finite one fails the query naming the probe and the
+    * file). The `file` column carries the raw `input_file_name()` URI;
+    * mapping it back to a sample is the caller's batch step, since the
+    * sample dictionary is a static frame joined per micro-batch, not
+    * streaming state.
     */
   def expressionFileStream(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.readStream
-      .options(Ingest.ExpressionOptions)
+    import spark.implicits._
+    spark.readStream
       .option("maxFilesPerTrigger", 16) // bound micro-batch size
-      .schema(Ingest.ExpressionSchema)
-      .csv(dir)
-      .withColumn("file", input_file_name())
-    Ingest.parseLenient(raw).select("file", "probe_name", "value")
+      .text(dir)
+      .select(input_file_name(), col("value"))
+      .as[(String, String)]
+      .mapPartitions { lines =>
+        val rule = new Ingest.LineRule
+        lines.flatMap { case (file, line) =>
+          rule(line, s"file $file") match {
+            case Ingest.Cell(probe, value) => Some((file, probe, value))
+            case _ => None
+          }
+        }
+      }
+      .toDF("file", "probe_name", "value")
   }
 
   /** Tumbling event-time counts with watermark: rows later than the

@@ -20,9 +20,12 @@ import scala.jdk.CollectionConverters._
   */
 object JobStacks {
 
+  /** The description prefix of the job that marks the end of `body`. */
+  val MarkerPrefix = "JobStacks marker"
+
   def apply[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
-    val marker = s"JobStacks marker ${System.nanoTime()}"
+    val marker = s"$MarkerPrefix ${System.nanoTime()}"
     val markerSeen = new CountDownLatch(1)
     val stacks = new ConcurrentLinkedQueue[String]()
     val executionSites = new ConcurrentHashMap[String, String]()

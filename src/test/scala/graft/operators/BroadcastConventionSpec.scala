@@ -130,8 +130,8 @@ class BroadcastConventionSpec extends AnyFunSuite {
     ("Svm.scala", "broadcast(labels)"),
     ("LuadPipeline.scala", "broadcast(predictIds)"),
     // relational-regime matrix ids (sparkContext broadcasts): probe name
-    // → id, ~21.5k entries at the reference shape; scanned file → sample
-    // id, registry-sized (121 files on the benchmark corpus)
+    // → id, ~21.5k entries at the reference shape; registered file →
+    // sample id, registry-sized (121 files on the benchmark corpus)
     ("Ingest.scala", "sc.broadcast(probeNames.zipWithIndex.toMap)"),
     ("Ingest.scala", "sc.broadcast(sampleOf)"),
     // budget-gated dense-Pearson scratch arrays (sparkContext

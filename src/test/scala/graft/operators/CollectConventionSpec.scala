@@ -46,13 +46,13 @@ class CollectConventionSpec extends AnyFunSuite {
     // (tasks ≤ 16 × cores), one int pair per probe that has an edge in
     // the task; same budget gate as the matrix pull
     ("Network.scala", "tasks.collect()"),
-    // relational-regime dictionaries: each scan task's distinct probe
-    // names, the files it scanned and one dropped-row count — ≤ probes
+    // relational-regime dictionaries: each reader task's distinct probe
+    // names, the files it read and one dropped-row count — ≤ probes
     // names (~21.5k at the reference shape) plus ≤ registered files per
     // task; the probe dictionary is broadcast back, so it is
     // driver-resident anyway
     ("Ingest.scala", "tasks.map(t => (t.names, t.files, t.dropped)).collect()"),
-    // dense-regime scan job: each task returns its rows
+    // dense-regime reader job: each task returns its rows
     // dictionary-encoded — 12 B per observed cell plus one probe-name
     // array per task — and the driver keeps a result only while the
     // probes seen pass the `Network.fitsDense` gate (36 B/cell modelled),
@@ -64,9 +64,9 @@ class CollectConventionSpec extends AnyFunSuite {
     // relational-regime scores: one (id, ±1.0) row per predictive
     // sample at most — registry-sized
     ("LuadPipeline.scala", "Svm.predict(model, toScore).as[(Int, Double)].collect()"),
-    // K1 stdout print sink (reference contract): predictions are
-    // prediction-set-sized (≤ registered samples)
-    ("LuadPipeline.scala", "result.collect().foreach"),
+    // K1/K2 sink (stdout print or driver-written part files):
+    // predictions are prediction-set-sized (≤ registered samples)
+    ("LuadPipeline.scala", "val rows = result.collect()"),
   )
 
   /** How many sites each entry is expected to match (default 1) — the

@@ -95,6 +95,16 @@ class DefParserSpec extends AnyFunSuite {
     }
   }
 
+  test("a definition-file path the JVM cannot encode fails naming the file and the file-name encoding") {
+    // under the POSIX locale any non-ASCII character is such a path, and
+    // opening it failed with a bare FileNotFoundException; a lone
+    // surrogate has no encoding in any charset
+    val dir = java.nio.file.Files.createTempDirectory("graft_def_unencodable")
+    val e = intercept[IllegalArgumentException](DefParser.parseFile(s"$dir/\uD800/input.txt"))
+    for (part <- Seq("definition file", "sun.jnu.encoding", "UTF-8 locale"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
   test("reference corpus: 40 training, 22 predictive, 24 TN, 2 types") {
     val c = DefParser.parseFile("/root/reference/input/input.txt")
     assert(c.training.size == 40)

@@ -3,8 +3,11 @@ package graft.pipeline
 import graft.SparkSpec
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.Success
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Ingest + end-to-end pipeline over a synthetic mini-corpus written in
   * the reference's file format (TSV expression files with a header
@@ -320,23 +323,12 @@ class IngestSpec extends SparkSpec {
     val expected = (for {
       (n, i) <- names.zipWithIndex; (p, k) <- probeNames.zipWithIndex
     } yield (n, p, 100.0 * i + k)).toSet
-    val listingKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    // with an explicit schema, the only job the scan's construction
-    // can start is the distributed file listing
-    val listing = "csv at Ingest.scala"
-
-    // listed on the driver at the session's threshold ...
+    // the reader tasks open the registered files themselves, so no job
+    // starts while a Spark file source is built (a distributed listing
+    // job's stack runs through `DataFrameReader.csv`)
     val (r, jobs) = graft.JobStacks(spark)(Ingest.ingest(spark, base, config))
-    assert(!jobs.exists(_.startsWith(listing)), "listing ran as a Spark job")
+    assert(!jobs.exists(_.contains("DataFrameReader")), "listing ran as a Spark job")
     assert(decoded(r) == expected)
-    // ... and in a Spark job above a lowered one, with the same rows
-    val threshold = spark.conf.get(listingKey)
-    spark.conf.set(listingKey, "8")
-    val (rDistributed, jobsDistributed) =
-      try graft.JobStacks(spark)(Ingest.ingest(spark, base, config))
-      finally spark.conf.set(listingKey, threshold)
-    assert(jobsDistributed.exists(_.startsWith(listing)))
-    assert(decoded(rDistributed) == expected)
 
     // probe ids: the dense range 0..P-1 in Spark's string order
     val s = spark; import s.implicits._
@@ -353,20 +345,40 @@ class IngestSpec extends SparkSpec {
   }
 
   /** What `body` made Spark do, from a listener: the jobs that read
-    * input files, the tasks of those jobs, the stages that wrote
-    * shuffle output, and every stage's stack (`graft.JobStacks`).
+    * the expression files (a stage over `Ingest`'s reader tasks), the
+    * finished tasks of those stages, the stages that wrote shuffle
+    * output, and every stage's stack (`graft.JobStacks`).
     */
-  private final case class Work(readingJobs: Int, readingTasks: Int, shuffleStages: Int, stacks: Seq[String])
+  private final case class Work(
+      readingJobs: Int,
+      readingTasks: Int,
+      shuffleStages: Int,
+      stacks: Seq[String],
+      jobs: Int, // every job `body` started
+      sqlJobs: Int, // those started by a Spark SQL execution
+  )
 
   private def work[T](body: => T): (T, Work) = {
-    val jobOf = new ConcurrentHashMap[Int, Int]
-    val readingTasks = new ConcurrentHashMap[Int, Int] // job → tasks that read input
+    val readingStages = ConcurrentHashMap.newKeySet[Int]
+    val readingJobs = ConcurrentHashMap.newKeySet[Int]
+    val readingTasks = new AtomicInteger
     val shuffleStages = ConcurrentHashMap.newKeySet[Int]
+    val (jobs, sqlJobs) = (new AtomicInteger, new AtomicInteger)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = e.stageIds.foreach(jobOf.put(_, e.jobId))
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
-        if (m.inputMetrics.recordsRead > 0) readingTasks.merge(jobOf.get(e.stageId), 1, (a, b) => a + b)
-        if (m.shuffleWriteMetrics.recordsWritten > 0) shuffleStages.add(e.stageId)
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        for (st <- e.stageInfos if st.rddInfos.exists(_.callSite.startsWith("parallelize at Ingest.scala"))) {
+          readingStages.add(st.stageId); readingJobs.add(e.jobId)
+        }
+        val props = Option(e.properties)
+        if (!props.flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith(graft.JobStacks.MarkerPrefix))) {
+          jobs.incrementAndGet()
+          if (props.exists(_.getProperty(SQLExecution.EXECUTION_ID_KEY) != null)) sqlJobs.incrementAndGet()
+        }
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        if (e.reason == Success && readingStages.contains(e.stageId)) readingTasks.incrementAndGet()
+        Option(e.taskMetrics).foreach(m => if (m.shuffleWriteMetrics.recordsWritten > 0) shuffleStages.add(e.stageId))
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -375,9 +387,7 @@ class IngestSpec extends SparkSpec {
     val (result, stacks) =
       try graft.JobStacks(spark)(body)
       finally spark.sparkContext.removeSparkListener(listener)
-    var tasks = 0
-    readingTasks.values.forEach(n => tasks += n)
-    (result, Work(readingTasks.size, tasks, shuffleStages.size, stacks))
+    (result, Work(readingJobs.size, readingTasks.get, shuffleStages.size, stacks, jobs.get, sqlJobs.get))
   }
 
   private def predictions(r: LuadPipeline.Result) =
@@ -394,10 +404,23 @@ class IngestSpec extends SparkSpec {
     val base = writeCorpus(dir, nTrain = 8, nPredict = 4, nProbes = 6)
     val config = DefParser.parseFile(s"$base/input.txt")
     assert(Network.fitsDense(config.samples.size.toLong, 6L, Network.maxDenseBytes(spark)))
-    val (result, w) = work(runMini(base, config))
+    def runAndWrite(base: String, config: DefParser.PipelineConfig) = work {
+      val r = runMini(base, config)
+      LuadPipeline.writeOutput(r.predictions, Some(s"$base/out"))
+      r
+    }
+    val (result, w) = runAndWrite(base, config)
     assert(w.readingJobs == 1, s"the corpus was read by ${w.readingJobs} jobs")
     assert(w.shuffleStages == 0, s"${w.shuffleStages} stage(s) wrote shuffle output")
     assert(result.nProbesAfter == 6 && predictions(result).size == 4)
+    // run + sink at pc-threshold none: the reader job is the only job,
+    // and no job comes from a Spark SQL execution (no file source, no
+    // write job)
+    assert(w.jobs == 1 && w.sqlJobs == 0, s"${w.jobs} job(s), ${w.sqlJobs} from SQL executions")
+    // with a threshold, the network kernel is the one more job
+    val (thrBase, thrConfig) = mirroredCorpus("graft_corpus_two_jobs")
+    val (_, tw) = runAndWrite(thrBase, thrConfig)
+    assert(tw.jobs == 2 && tw.sqlJobs == 0, s"${tw.jobs} job(s), ${tw.sqlJobs} from SQL executions")
   }
 
   test("the dense gate at the footprint of the corpus runs dense, one byte below it relational, with the same output") {
@@ -480,5 +503,126 @@ class IngestSpec extends SparkSpec {
     val want = 8 * 2 + 1
     assert(runMini(base, config).rowsDropped == want)
     assert(withBudget(0)(runMini(base, config)).rowsDropped == want)
+  }
+
+  test("a non-finite value fails the run, naming the probe, the sample and the file, in both regimes") {
+    // a NaN once passed the lenient cast, entered the matrix and turned
+    // every prediction of the run into -1.0 with exit code 0
+    val dir = Files.createTempDirectory("graft_corpus_nan")
+    val base = writeCorpus(dir, nTrain = 6, nPredict = 2, nProbes = 4)
+    val f = dir.resolve("expr/TRAIN-02.expr.txt")
+    Files.writeString(f, Files.readString(f).replaceFirst("p001\t[^\t]*\t", "p001\tNaN\t"))
+    val config = DefParser.parseFile(s"$base/input.txt")
+    for (e <- failuresInBothRegimes(base, config); part <- Seq("'NaN'", "'p001'", "'TRAIN-02'", "expr/TRAIN-02.expr.txt"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  test("a missing registered file fails the run, naming the sample, the type and the file, in both regimes") {
+    val dir = Files.createTempDirectory("graft_corpus_missing")
+    val base = writeCorpus(dir, nTrain = 6, nPredict = 2, nProbes = 4)
+    val config = DefParser.parseFile(s"$base/input.txt")
+    Files.delete(dir.resolve("expr/PRED-01.expr.txt"))
+    for (e <- failuresInBothRegimes(base, config); part <- Seq("'PRED-01'", "expr file", "expr/PRED-01.expr.txt"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  test("the line rule: an unterminated quote runs to the end of the line; every non-finite spelling fails") {
+    val rule = new Ingest.LineRule
+    // a rule's first line keeps its byte-order mark (the tokenizer would
+    // drop it from whichever line it saw first)
+    assert(rule("\uFEFFq\t9", "f") == Ingest.Cell("\uFEFFq", 9.0))
+    // an unterminated quoted name swallows the rest of the line, so the
+    // row has no value and is dropped; an unterminated quoted value is
+    // read (as Spark's CSV source read both)
+    assert(rule("\"p\t1.5", "f") == Ingest.Dropped)
+    assert(rule("p\t\"1.5", "f") == Ingest.Cell("p", 1.5))
+    assert(rule(" \t ", "f") == Ingest.NoRecord)
+    for (v <- Seq("NaN", "-NaN", "Infinity", "+Infinity", "-Infinity", "inf", "-INF", " nan ", "1e400", "-1e400")) {
+      val e = intercept[IllegalArgumentException](rule(s"pX\t$v", "sample 'S' (expr file x.txt)"))
+      for (part <- Seq("'pX'", "'S'", "x.txt")) assert(e.getMessage.contains(part), e.getMessage)
+    }
+  }
+
+  test("the reader job cuts each share of the files into tasks of at most maxPartitionBytes") {
+    val dir = Files.createTempDirectory("graft_corpus_task_bound")
+    val base = writeCorpus(dir, nTrain = 8, nPredict = 4, nProbes = 6)
+    val config = DefParser.parseFile(s"$base/input.txt")
+    def cells(d: Ingest.DenseIngest) = (for (p <- d.observed.probes.indices; k <- d.observed.samples(p).indices)
+      yield (d.observed.samples(p)(k), d.probeNames(p), d.observed.values(p)(k))).toSet
+    // 12 files dealt over the session's 4 cores: 4 tasks of 3 files
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val (whole, ww) = work(Ingest.ingestDense(spark, base, config, Long.MaxValue).get)
+    assert(ww.readingJobs == 1 && ww.readingTasks == 4, s"${ww.readingTasks} reader task(s)")
+    // every file over the bound: one task per file, in the same one job
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    val (cut, cw) =
+      try work(Ingest.ingestDense(spark, base, config, Long.MaxValue).get)
+      finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert(cw.readingJobs == 1 && cw.readingTasks == 12, s"${cw.readingTasks} reader task(s)")
+    assert(cells(cut) == cells(whole) && cells(whole).size == 12 * 6)
+    assert(cut.rowsDropped == whole.rowsDropped)
+  }
+
+  /** One expression file's bytes, each line an edge of the lenient rule:
+    * a first row behind a byte-order mark, the header, `NA`, an empty
+    * value, a name-only line, an empty name, `1,5`, `1_000`, blank and
+    * whitespace-only lines, padded values and names, quoted fields (one
+    * holding a tab, one an escaped quote), CRLF and CR line ends, extra
+    * columns, Java's number spellings, an invalid byte, a byte-order
+    * mark mid-file, `#`, quotes left open or followed by text.
+    */
+  private val edgeBytes: Array[Byte] = {
+    val lines = Seq("\uFEFFfirst\t0.5", "probe\tvalue", "a\tNA", "b\t", "c", "\t1.0", "d\t1,5", "e\t1_000", "", "   ",
+      "\t ", "f\t 2.5 ", " S \t3", "g\t\"3.5\"", "\"F\tG\"\t4.5", "\"q\\\"x\"\t5", "h\t6\r", "i\t7\tx\ty", "j\t1d",
+      "k\t0x1p3", "l\t+9", "m\t.5", "n\t5.", "o\t7e2", "\uFEFFq\t9", "#c\t10", "\"open\t11", "w\t\"12", "\"ab\"c\t13",
+      "x\"y\t14", "\"a\\\\b\"\t15", "rr\t\t1.0", "mm\t\"1.5\"x", "cr1\t1\rcr2\t2")
+    val invalid = Array('p'.toByte, 0xFF.toByte, '\t'.toByte, '8'.toByte)
+    (lines.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)) :+ invalid).flatMap(_ :+ '\n'.toByte).toArray
+  }
+
+  test("the lenient line rule reads what Spark's CSV source and try_cast read, in both regimes and the stream") {
+    val dir = Files.createTempDirectory("graft_corpus_edges")
+    Files.write(dir.resolve("plain.txt"), edgeBytes)
+    scala.util.Using.resource(new java.util.zip.GZIPOutputStream(Files.newOutputStream(dir.resolve("packed.txt.gz"))))(
+      _.write(edgeBytes))
+    val files = Seq("S1" -> "plain.txt", "S2" -> "packed.txt.gz")
+    // the oracle: Spark's CSV source, then try_cast, as ingest read the
+    // files before its reader tasks
+    val oracle = files.map { case (sample, f) =>
+      val rows = spark.read.options(Map("sep" -> "\t", "header" -> "false"))
+        .schema("probe_name STRING, raw_value STRING").csv(dir.resolve(f).toString)
+        .selectExpr("probe_name", "try_cast(raw_value AS DOUBLE)").collect()
+      val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(r => (sample, r.getString(0), r.getDouble(1)))
+      (kept.toSet, rows.length - kept.length)
+    }
+    val want = oracle.flatMap(_._1).toSet
+    val wantDropped = oracle.map(_._2).sum
+    for (cell <- Seq(("S1", "first", 0.5), ("S2", "F\tG", 4.5), ("S1", "q\"x", 5.0), ("S1", " S ", 3.0),
+        ("S2", "\uFEFFq", 9.0), ("S1", "p\uFFFD", 8.0), ("S1", "cr2", 2.0), ("S2", "w", 12.0)))
+      assert(want(cell), s"the oracle no longer reads $cell")
+    assert(want.size == 2 * 23 && wantDropped == 2 * 10, s"${want.size} cells, $wantDropped dropped")
+
+    val config = DefParser.PipelineConfig(
+      files.map { case (s, f) => DefParser.SampleSpec(s, predictive = false, tumorous = false, Map("expr" -> f)) },
+      Seq("expr"), None, None)
+    val r = Ingest.ingest(spark, dir.toString, config)
+    val relational = r.matrix.collect()
+      .map(row => (r.sampleNames(row.getInt(0)), r.probeNames(row.getInt(1)), row.getDouble(2))).toSet
+    val d = Ingest.ingestDense(spark, dir.toString, config, Long.MaxValue).get
+    val dense = (for (p <- d.observed.probes.indices; k <- d.observed.samples(p).indices) yield
+      (r.sampleNames(d.observed.samples(p)(k)), d.probeNames(d.observed.probes(p)), d.observed.values(p)(k))).toSet
+    assert(relational == want, s"relational: ${relational.diff(want)} read, ${want.diff(relational)} missed")
+    assert(dense == want, s"dense: ${dense.diff(want)} read, ${want.diff(dense)} missed")
+    assert(r.rowsDropped == wantDropped && d.rowsDropped == wantDropped)
+
+    val q = graft.streaming.Streams.expressionFileStream(spark, dir.toString)
+      .writeStream.format("memory").queryName("ingest_edges").outputMode("append").start()
+    val streamed =
+      try {
+        q.processAllAvailable()
+        spark.table("ingest_edges").collect()
+          .map(row => (if (row.getString(0).endsWith(".gz")) "S2" else "S1", row.getString(1), row.getDouble(2))).toSet
+      } finally q.stop()
+    assert(streamed == want, s"stream: ${streamed.diff(want)} read, ${want.diff(streamed)} missed")
   }
 }

@@ -113,6 +113,18 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a non-finite value fails the expression-file stream, naming the probe and the file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_nan")
+    java.nio.file.Files.writeString(dir.resolve("s1.expr.txt"), "p1\t1.5\np2\tInfinity\n")
+    val q = Streams.expressionFileStream(spark, dir.toString)
+      .writeStream.format("memory").queryName("ingest_nan")
+      .outputMode("append").start()
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      for (part <- Seq("'Infinity'", "'p2'", "s1.expr.txt")) assert(e.getMessage.contains(part), e.getMessage)
+    } finally q.stop()
+  }
+
   test("streaming tumbling counts over the events fixture equal the batch twin") {
     val s = spark; import s.implicits._
     // same fixture file, once as a bounded stream, once as a batch scan

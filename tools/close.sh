@@ -44,7 +44,7 @@ python3 tools/check.py "$SF01" "$WORK/verify_multi" > "$WORK/check_multi.log" 2>
   || { echo "FAIL: check multi"; fail=1; }
 tail -1 "$WORK/check_multi.log"
 
-step "4/5 benchmark (perfbench): one run per BENCHMARK.json workload, plus a traced run of each"
+step "4/5 benchmark (perfbench): one run per BENCHMARK.json workload, plus a traced run of each, plus regime parity"
 for w in luad_wide ops_sf0.01; do
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 > "$WORK/perfbench_$w.log" 2>&1 \
     || { echo "FAIL: perfbench $w (see $WORK/perfbench_$w.log)"; fail=1; }
@@ -56,6 +56,29 @@ done
 python3 perfbench/run.py --workload luad_wide --seed 1 --seconds 10 --trace 1 > "$WORK/perfbench_luad_wide_trace.log" 2>&1 \
   || { echo "FAIL: perfbench luad_wide --trace 1 (see $WORK/perfbench_luad_wide_trace.log)"; fail=1; }
 tail -1 "$WORK/perfbench_luad_wide_trace.log"
+# regime parity: LuadPipeline.main on the seed-1 corpus the traced run
+# left behind, once by default (the dense regime) and once forced onto
+# the relational one; the sorted sink rows, n_probes_after and
+# rows_dropped must agree
+parity() { # $1 = regime, $2 = extra JVM option (or empty)
+  local dir="$WORK/parity_$1"
+  rm -rf "$dir" && mkdir -p "$dir"
+  sbt "set Compile / run / baseDirectory := file(\"$dir\")" \
+    ${2:+"set Compile / run / javaOptions += \"$2\""} \
+    "runMain graft.pipeline.LuadPipeline $PWD/perfbench/.work/luad_wide/corpus/input.txt" > "$dir/run.log" 2>&1 \
+    || { echo "FAIL: LuadPipeline.main, $1 regime (see $dir/run.log)"; return 1; }
+  cat "$dir"/out/*/part-* | sort > "$dir/rows.tsv"
+  grep -o '"n_probes_after":[0-9]*,"rows_dropped":[0-9]*' "$dir/run.log" > "$dir/counts.txt"
+  echo "$1: $(wc -l < "$dir/rows.tsv") sink rows, $(cat "$dir/counts.txt")"
+}
+if parity dense "" && parity relational "-Dspark.graft.pearson.maxDenseBytes=0"; then
+  { cmp -s "$WORK/parity_dense/rows.tsv" "$WORK/parity_relational/rows.tsv" \
+      && cmp -s "$WORK/parity_dense/counts.txt" "$WORK/parity_relational/counts.txt" \
+      && [ -s "$WORK/parity_dense/rows.tsv" ] && [ -s "$WORK/parity_dense/counts.txt" ]; } \
+    || { echo "FAIL: the regimes disagree (see $WORK/parity_*)"; fail=1; }
+else
+  fail=1
+fi
 # traced operator pass: checks every golden row count and records the
 # per-module plan_s and spark.jobs
 python3 perfbench/run.py --workload ops_sf0.01 --seed 1 --seconds 10 --trace 1 > "$WORK/perfbench_ops_sf0.01_trace.log" 2>&1 \
