@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ml.recommendation.{ALS, GraftAlsBridge}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *  - Dense regime (the `Network.fitsDense` budget admits the matrix to
   *    the driver): the observed matrix that `Ingest.ingestDense` merged
   *    on the driver is completed there by `completeDense`, a replica of
-  *    ml-ALS's own arithmetic — no Spark job per ALS step.
+  *    ml-ALS on driver threads — no Spark job per ALS step.
   */
 object Completion {
 
@@ -156,19 +156,28 @@ object Completion {
     *    `userSeed` from `XORShiftRandom(seed)`, one stream per user
     *    block (`floorMod(id, blocks)`, ids ascending in a block).
     *  - Each iteration solves every item from the user factors, then
-    *    every user from the item factors, each with ml-ALS's
-    *    `NormalEquation` and Cholesky solve, regularized by λ × its
-    *    rating count. Solves are split over `threads` driver threads,
-    *    one normal equation per thread; a solve's arithmetic does not
-    *    depend on the split, so neither does the result.
+    *    every user from the item factors, each with ml-ALS's Cholesky
+    *    solve, regularized by λ × its rating count.
+    *  - A normal equation's AᵀA is built from the Gram of ALL source
+    *    factors, summed once per half-iteration in source order: a
+    *    destination with more observed sources than missing ones copies
+    *    it and subtracts the missing sources' outer products; any other
+    *    sums its observed ones. Aᵀb sums the observed ratings, skipping
+    *    zeros as `NormalEquation.add` does. Sums run in ascending source
+    *    order.
+    *  - Destinations are dealt to `threads` driver threads
+    *    (`DriverThreads`); a solve's arithmetic does not depend on which
+    *    thread runs it, so neither does the result.
     *  - A missing cell is the Float dot product of its factors (the
     *    `ALSModel` predict UDF), cast to Double; observed cells keep
     *    their Double values.
     *
     * Float rounding can differ from ml-ALS in the last bit where the
-    * two sum a normal equation's ratings in another order (ml-ALS's
-    * order follows its shuffle); filled cells agree to ~1e-7 relative.
-    * A matrix with no missing cell is returned as observed.
+    * two sum a normal equation in another order (ml-ALS adds each
+    * rating's outer product in an order that follows its shuffle; the
+    * Gram rule subtracts the missing ones from the sum of all); filled
+    * cells agree to ~1e-7 relative. A matrix with no missing cell is
+    * returned as observed.
     */
   def completeDense(observed: Observed, params: AlsParams, threads: Int): Network.DenseMatrix = {
     require(params.maxIter > 0, "completeDense needs at least one ALS iteration")
@@ -205,61 +214,100 @@ object Completion {
         .foreach { case (k, f) => userFactors(k) = f }
     }
 
-    val pool = Executors.newFixedThreadPool(math.max(1, threads))
-    try {
-      // dst j solved from the src factors of its ratings
-      def solveAll(
-          srcIdx: Array[Array[Int]],
-          ratings: Array[Array[Float]],
-          src: Array[Array[Float]],
-      ): Array[Array[Float]] = {
-        val n = srcIdx.length
-        val out = new Array[Array[Float]](n)
-        val chunk = math.max(1, (n + threads - 1) / math.max(1, threads))
-        (0 until n by chunk).map { from =>
-          pool.submit(new Runnable {
-            def run(): Unit = {
-              val solver = new GraftAlsBridge.Solver(rank)
-              var j = from
-              while (j < math.min(n, from + chunk)) {
-                val idx = srcIdx(j)
-                var i = 0
-                while (i < idx.length) { solver.add(src(idx(i)), ratings(j)(i)); i += 1 }
-                out(j) = solver.solve(idx.length * params.regParam)
-                j += 1
-              }
+    val triK = rank * (rank + 1) / 2
+    // dst j solved from the src factors of its ratings
+    def solveAll(
+        srcIdx: Array[Array[Int]],
+        ratings: Array[Array[Float]],
+        src: Array[Array[Float]],
+    ): Array[Array[Float]] = {
+      val nSrc = src.length
+      // the source factors widened to double, as `NormalEquation.add`
+      // widens them, and their Gram, summed in source order
+      val x = new Array[Double](nSrc * rank)
+      for (s <- 0 until nSrc; r <- 0 until rank) x(s * rank + r) = src(s)(r)
+      val gram = new Array[Double](triK)
+      (0 until nSrc).foreach(addOuter(gram, x, _, rank, 1.0))
+      val out = new Array[Array[Float]](srcIdx.length)
+      val next = new AtomicInteger
+      DriverThreads.run(threads) { _ =>
+        val solver = new GraftAlsBridge.Solver(rank)
+        val (ata, atb) = (solver.ata, solver.atb)
+        var j = next.getAndIncrement()
+        while (j < out.length) {
+          val idx = srcIdx(j)
+          if (2 * idx.length > nSrc) {
+            // more observed sources than missing: the Gram minus the
+            // missing ones, walked in source order past the ascending idx
+            System.arraycopy(gram, 0, ata, 0, triK)
+            var i = 0
+            var s = 0
+            while (s < nSrc) {
+              if (i < idx.length && idx(i) == s) i += 1 else addOuter(ata, x, s, rank, -1.0)
+              s += 1
             }
-          })
-        }.foreach(_.get())
-        out
-      }
-      var itemFactors: Array[Array[Float]] = null
-      (0 until params.maxIter).foreach { _ =>
-        itemFactors = solveAll(itemUsers, itemRatings, userFactors)
-        userFactors = solveAll(userItems, userRatings, itemFactors)
-      }
-
-      val values = Array.tabulate(nP) { p =>
-        val col = new Array[Double](nS)
-        val seen = new Array[Boolean](nS)
-        itemUsers(p).indices.foreach { i =>
-          col(itemUsers(p)(i)) = observed.values(p)(i)
-          seen(itemUsers(p)(i)) = true
-        }
-        var k = 0
-        while (k < nS) {
-          if (!seen(k)) {
-            val (u, v) = (userFactors(k), itemFactors(p))
-            var dot = 0.0f
-            var r = 0
-            while (r < rank) { dot += u(r) * v(r); r += 1 }
-            col(k) = dot.toDouble
+          } else idx.foreach(addOuter(ata, x, _, rank, 1.0))
+          var i = 0
+          while (i < idx.length) {
+            // `NormalEquation.add`'s daxpy, skipped for a zero rating
+            val b = ratings(j)(i).toDouble
+            if (b != 0.0) {
+              val o = idx(i) * rank
+              var r = 0
+              while (r < rank) { atb(r) += b * x(o + r); r += 1 }
+            }
+            i += 1
           }
-          k += 1
+          out(j) = solver.solve(idx.length * params.regParam)
+          j = next.getAndIncrement()
         }
-        col
       }
-      Network.DenseMatrix(observed.probes, samples, values)
-    } finally pool.shutdown()
+      out
+    }
+    var itemFactors: Array[Array[Float]] = null
+    (0 until params.maxIter).foreach { _ =>
+      itemFactors = solveAll(itemUsers, itemRatings, userFactors)
+      userFactors = solveAll(userItems, userRatings, itemFactors)
+    }
+
+    val values = Array.tabulate(nP) { p =>
+      val col = new Array[Double](nS)
+      val seen = new Array[Boolean](nS)
+      itemUsers(p).indices.foreach { i =>
+        col(itemUsers(p)(i)) = observed.values(p)(i)
+        seen(itemUsers(p)(i)) = true
+      }
+      var k = 0
+      while (k < nS) {
+        if (!seen(k)) {
+          val (u, v) = (userFactors(k), itemFactors(p))
+          var dot = 0.0f
+          var r = 0
+          while (r < rank) { dot += u(r) * v(r); r += 1 }
+          col(k) = dot.toDouble
+        }
+        k += 1
+      }
+      col
+    }
+    Network.DenseMatrix(observed.probes, samples, values)
+  }
+
+  /** ap += sign · x_s x_sᵀ for the source factor x_s at
+    * x(s·rank until (s+1)·rank), packed upper: `dspr`'s layout and
+    * order, each product x_i · (sign · x_j). sign is ±1, so subtracting
+    * an outer product rounds as adding its negation.
+    */
+  private def addOuter(ap: Array[Double], x: Array[Double], s: Int, rank: Int, sign: Double): Unit = {
+    val o = s * rank
+    var kk = 0
+    var j = 0
+    while (j < rank) {
+      val xj = sign * x(o + j)
+      var i = 0
+      while (i <= j) { ap(kk + i) += x(o + i) * xj; i += 1 }
+      kk += j + 1
+      j += 1
+    }
   }
 }

@@ -4,12 +4,14 @@ import java.io.{OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.ml.classification.LinearSVCModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** End-to-end LUAD pipeline (reference `PipeLine.scala:7-42`):
@@ -95,12 +97,20 @@ object LuadPipeline {
     // "Unknown" for an unmapped id (`PipeLine.scala:30`); every scored
     // id here came from `predicting`, so a miss is a bug and fails loudly
     val preds = scores.map { case (id, p) =>
-      names.lift(id).getOrElse(throw new IllegalStateException(s"score for unregistered sample id $id")) -> p
+      Row(names.lift(id).getOrElse(throw new IllegalStateException(s"score for unregistered sample id $id")), p)
     }
-    import spark.implicits._
+    // a local relation built from rows, with no encoder to derive
+    val predictions = spark.createDataFrame(preds.asJava, PredictionSchema)
     // the model's feature count is the network filter's survivor count
-    Result(preds.toDF("sample_name", "prediction"), nProbes, model.numFeatures.toLong, read.rowsDropped)
+    Result(predictions, nProbes, model.numFeatures.toLong, read.rowsDropped)
   }
+
+  /** `Result.predictions`' schema, the one `toDF` gives a
+    * `Seq[(String, Double)]`.
+    */
+  private val PredictionSchema = StructType(Seq(
+    StructField("sample_name", StringType, nullable = true),
+    StructField("prediction", DoubleType, nullable = false)))
 
   /** Loud coverage guard (r15 pipeline review): a registered sample
     * whose file(s) yield ZERO parseable rows (empty export, all values
@@ -131,7 +141,8 @@ object LuadPipeline {
   /** Dense regime: completion, the network filter, training and
     * prediction run on the driver arrays of the observed matrix —
     * replicas of ml-ALS and LinearSVC (`completeDense`, `trainDense`)
-    * plus one `denseSurvivors` pass. Returns the model and the ±1.0
+    * plus one `denseSurvivors` pass, the two kernels on
+    * `DriverThreads.count` driver threads. Returns the model and the ±1.0
     * score of each id in `predicting`.
     */
   private def runDense(
@@ -143,10 +154,10 @@ object LuadPipeline {
       alsParams: Completion.AlsParams,
       svmParams: Svm.SvmParams,
   ): (LinearSVCModel, Seq[(Int, Double)]) = {
-    val completed = timed("als-completion")(
-      Completion.completeDense(observed, alsParams, spark.sparkContext.defaultParallelism))
+    val threads = DriverThreads.count(spark)
+    val completed = timed("als-completion")(Completion.completeDense(observed, alsParams, threads))
     val keep = timed("network-and-assembly")(config.pcThreshold
-      .fold(completed.probes.indices.toArray)(Network.denseSurvivors(spark, completed.values, _)))
+      .fold(completed.probes.indices.toArray)(Network.denseSurvivors(completed.values, _, threads)))
     val rowOf = completed.samples.zip(Svm.denseRows(keep.map(completed.values))).toMap
     val model = timed("svm-train")(
       Svm.trainDense(training.map(t => rowOf(t._1)).toArray, training.map(_._2).toArray, svmParams))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.broadcast.Broadcast
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,11 +20,12 @@ import org.apache.spark.storage.StorageLevel
   *    O(Σ_sample nnz_sample²) — the honest cost of all-pairs — but
   *    distributed, with no driver copy.
   *  - Dense regime (skinny matrix under the driver budget, `fitsDense`):
-  *    the reference's own design — the matrix on the driver, its
-  *    standardized rows broadcast — made sample-aligned. One pass
-  *    (`denseSurvivors`) finds edges AND components (per-task
-  *    union-find, merged on the driver) over the matrix
-  *    `Completion.completeDense` already holds.
+  *    the reference's own design — the matrix and its standardized rows
+  *    on the driver — made sample-aligned. One pass (`denseSurvivors`)
+  *    of a register-tiled kernel on driver threads finds edges AND
+  *    components (per-thread union-find, merged by minimum root) over
+  *    the matrix `Completion.completeDense` already holds: no Spark job,
+  *    no broadcast.
   *  - Connected components elsewhere: GraphX `connectedComponents()`
   *    (Pregel, incremental frontier — same semantics as the reference's
   *    delta iteration `PreProcess.scala:179-197`, maxIter 100). The pure
@@ -83,9 +85,10 @@ object Network {
     * reference shape) — hopeless. Instead: standardize each probe's
     * sample-vector so that r_ij = z_i · z_j, broadcast the standardized
     * matrix (P × n doubles — ~10 MB at reference shape), and compute
-    * the upper triangle as a distributed block-nested loop over probe
-    * ranges. This is the reference's own A3 design (collected stats +
-    * closure broadcast, `PreProcess.scala:56-79`) made distributed and
+    * the upper triangle as a distributed loop over 4-probe strips of
+    * `forEachEdge`, the kernel `denseSurvivors` runs on the driver.
+    * This is the reference's own A3 design (collected stats + closure
+    * broadcast, `PreProcess.scala:56-79`) made distributed and
     * sample-aligned (quirk Q2 fixed). Cost O(P²·n / cores), no shuffle
     * at all. For millions of samples use `pearsonEdges` (relational) or
     * DIMSUM-style approximation instead.
@@ -98,16 +101,17 @@ object Network {
   def pearsonEdgesDense(spark: SparkSession, matrix: DataFrame, threshold: Double): DataFrame = {
     import spark.implicits._
     val d = collectDense(spark, matrix)
-    val probes = d.probes
-    val bz = broadcastStandardized(spark, d.values)
+    val (rows, z) = standardize(d.values)
+    val probes = rows.map(d.probes)
+    val bz = spark.sparkContext.broadcast(z)
     val bp = spark.sparkContext.broadcast(probes)
-    val nP = probes.length
+    val n = strips(z.length)
     spark.sparkContext
-      .parallelize(0 until nP, kernelPartitions(spark, nP))
-      .flatMap { i =>
+      .parallelize(0 until n, kernelPartitions(spark, n))
+      .flatMap { s =>
         val ids = bp.value
         val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-        forEachEdge(bz.value, i, threshold)((j, r) => out += ((ids(i), ids(j), r)))
+        forEachEdge(bz.value, s, threshold)((a, b, r) => out += ((ids(a), ids(b), r)))
         out.iterator
       }
       .toDF("pi", "pj", "r")
@@ -156,16 +160,13 @@ object Network {
     DenseMatrix(observed.probes, samples, observed.values)
   }
 
-  /** Standardize each probe row so that r_ij = z_i · z_j —
-    * z = (x - mean) / (sd·sqrt(n)); null for a zero-variance probe (its
-    * r is undefined, reference F5) — and broadcast the rows. The
-    * caller destroys the broadcast once its pass has run.
+  /** The standardized rows — z = (x - mean) / (sd·sqrt(n)), so that
+    * r_ij = z_i · z_j — of every probe row with nonzero variance, with
+    * their row indices ascending. A zero-variance row has no r (reference
+    * F5), so it has no edge and is left out.
     */
-  private def broadcastStandardized(
-      spark: SparkSession,
-      values: Array[Array[Double]],
-  ): Broadcast[Array[Array[Double]]] = {
-    val z: Array[Array[Double]] = values.map { vs =>
+  private def standardize(values: Array[Array[Double]]): (Array[Int], Array[Array[Double]]) = {
+    val z = values.map { vs =>
       val n = vs.length
       val mean = vs.sum / n
       var ss = 0.0
@@ -173,37 +174,75 @@ object Network {
       val norm = math.sqrt(ss)
       if (norm == 0.0) null else vs.map(v => (v - mean) / norm)
     }
-    spark.sparkContext.broadcast(z)
+    val rows = z.indices.filter(z(_) != null).toArray
+    (rows, rows.map(z))
   }
 
-  /** Many small row ranges: row i costs (nP-1-i) dots, so contiguous
+  /** Strips of `forEachEdge` over n rows: strip s is rows 4s until 4s + 4. */
+  private def strips(n: Int): Int = (n + 3) / 4
+
+  /** Many small strips: strip s costs ~4(n-4s) dots, so contiguous
     * ranges are skewed — 16× oversubscription lets the scheduler
     * balance them dynamically.
     */
-  private def kernelPartitions(spark: SparkSession, nP: Int): Int =
-    math.max(1, math.min(spark.sparkContext.defaultParallelism * 16, nP))
+  private def kernelPartitions(spark: SparkSession, nStrips: Int): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism * 16, nStrips))
 
-  /** Calls `f(j, r)` for every row j > i with |r_ij| >= threshold over
-    * standardized rows (null rows — zero variance — have no edges).
+  /** Calls `f(a, b, r)` for every pair of rows a < b of z with a in strip
+    * s and |r| >= threshold, r = z_a · z_b clamped to [-1, 1].
+    *
+    * Register-tiled: a full strip meets the rows after it four at a time,
+    * 16 dots in 16 accumulators that read 8 rows per step of k. Each
+    * dot is still its own sum over k ascending, as a scalar dot sums it,
+    * so every r is bit-identical to one.
     */
-  private def forEachEdge(zs: Array[Array[Double]], i: Int, threshold: Double)(
-      f: (Int, Double) => Unit): Unit = {
-    val zi = zs(i)
-    if (zi != null) {
-      var j = i + 1
-      while (j < zs.length) {
-        val zj = zs(j)
-        if (zj != null) {
-          var d = 0.0
-          var k = 0
-          while (k < zi.length) { d += zi(k) * zj(k); k += 1 }
-          // fp guard: z·z can overshoot ±1 by ~1e-15
-          d = math.min(1.0, math.max(-1.0, d))
-          if (math.abs(d) >= threshold) f(j, d)
+  private def forEachEdge(z: Array[Array[Double]], s: Int, threshold: Double)(
+      f: (Int, Int, Double) => Unit): Unit = {
+    val n = z.length
+    val a0 = 4 * s
+    val aEnd = math.min(a0 + 4, n)
+    def emit(a: Int, b: Int, d: Double): Unit = {
+      // fp guard: z·z can overshoot ±1 by ~1e-15
+      val r = math.min(1.0, math.max(-1.0, d))
+      if (math.abs(r) >= threshold) f(a, b, r)
+    }
+    def emitDot(a: Int, b: Int): Unit = {
+      val x = z(a)
+      val y = z(b)
+      var d = 0.0
+      var k = 0
+      while (k < x.length) { d += x(k) * y(k); k += 1 }
+      emit(a, b, d)
+    }
+    // the strip's own pairs; a short strip is the last, with no row after it
+    for (a <- a0 until aEnd; b <- a + 1 until aEnd) emitDot(a, b)
+    var b = aEnd
+    if (aEnd - a0 == 4) {
+      val x0 = z(a0); val x1 = z(a0 + 1); val x2 = z(a0 + 2); val x3 = z(a0 + 3)
+      val len = x0.length
+      while (b + 4 <= n) {
+        val y0 = z(b); val y1 = z(b + 1); val y2 = z(b + 2); val y3 = z(b + 3)
+        var d00, d01, d02, d03, d10, d11, d12, d13 = 0.0
+        var d20, d21, d22, d23, d30, d31, d32, d33 = 0.0
+        var k = 0
+        while (k < len) {
+          val u0 = x0(k); val u1 = x1(k); val u2 = x2(k); val u3 = x3(k)
+          val v0 = y0(k); val v1 = y1(k); val v2 = y2(k); val v3 = y3(k)
+          d00 += u0 * v0; d01 += u0 * v1; d02 += u0 * v2; d03 += u0 * v3
+          d10 += u1 * v0; d11 += u1 * v1; d12 += u1 * v2; d13 += u1 * v3
+          d20 += u2 * v0; d21 += u2 * v1; d22 += u2 * v2; d23 += u2 * v3
+          d30 += u3 * v0; d31 += u3 * v1; d32 += u3 * v2; d33 += u3 * v3
+          k += 1
         }
-        j += 1
+        emit(a0, b, d00); emit(a0, b + 1, d01); emit(a0, b + 2, d02); emit(a0, b + 3, d03)
+        emit(a0 + 1, b, d10); emit(a0 + 1, b + 1, d11); emit(a0 + 1, b + 2, d12); emit(a0 + 1, b + 3, d13)
+        emit(a0 + 2, b, d20); emit(a0 + 2, b + 1, d21); emit(a0 + 2, b + 2, d22); emit(a0 + 2, b + 3, d23)
+        emit(a0 + 3, b, d30); emit(a0 + 3, b + 1, d31); emit(a0 + 3, b + 2, d32); emit(a0 + 3, b + 3, d33)
+        b += 4
       }
     }
+    // the last < 4 rows after a full strip
+    for (c <- b until n; a <- a0 until aEnd) emitDot(a, c)
   }
 
   /** Union-find root of x, halving the path on the way. */
@@ -221,38 +260,33 @@ object Network {
     if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
   }
 
-  /** Row indices that survive the network filter: one pass over the
-    * broadcast standardized rows in which each task unions its
-    * above-threshold pairs into a local union-find and returns only the
-    * entries it changed, as flat (index, root) pairs. The driver merges
-    * them; roots are minimum indices, and rows are in probe-id order,
-    * so the survivors — every root, i.e. each component's minimum probe
-    * plus every probe with no edge — are exactly what GraphX's min-id
-    * labels followed by `filterMatrix` keep.
+  /** Row indices that survive the network filter: one pass of
+    * `forEachEdge` over the standardized rows on `threads` driver threads
+    * (`DriverThreads`). Each thread takes 4-row strips from a shared
+    * counter, first strips (the costliest) first, and unions its
+    * above-threshold pairs into its own union-find; the entries each
+    * changed are merged into one. Roots are minimum indices, and rows
+    * are in probe-id order, so the survivors — every root, i.e. each
+    * component's minimum probe plus every probe with no edge — are
+    * exactly what GraphX's min-id labels followed by `filterMatrix` keep,
+    * whatever the thread count.
     */
-  private[pipeline] def denseSurvivors(
-      spark: SparkSession,
-      values: Array[Array[Double]],
-      threshold: Double,
-      partitions: Option[Int] = None,
-  ): Array[Int] = {
+  private[pipeline] def denseSurvivors(values: Array[Array[Double]], threshold: Double, threads: Int): Array[Int] = {
     val nP = values.length
-    val bz = broadcastStandardized(spark, values)
-    val tasks = spark.sparkContext
-      .parallelize(0 until nP, partitions.getOrElse(kernelPartitions(spark, nP)))
-      .mapPartitions { rows =>
-        val zs = bz.value
-        val parent = Array.tabulate(zs.length)(identity)
-        rows.foreach(i => forEachEdge(zs, i, threshold)((j, _) => union(parent, i, j)))
-        val out = Array.newBuilder[Int]
-        parent.indices.foreach { x =>
-          if (parent(x) != x) { out += x; out += find(parent, x) }
-        }
-        Iterator.single(out.result())
+    val (rows, z) = standardize(values)
+    val next = new AtomicInteger
+    val parents = new Array[Array[Int]](threads)
+    DriverThreads.run(threads) { t =>
+      val parent = Array.tabulate(nP)(identity)
+      var s = next.getAndIncrement()
+      while (s < strips(z.length)) {
+        forEachEdge(z, s, threshold)((a, b, _) => union(parent, rows(a), rows(b)))
+        s = next.getAndIncrement()
       }
-    val changed = try tasks.collect() finally bz.destroy()
+      parents(t) = parent
+    }
     val parent = Array.tabulate(nP)(identity)
-    changed.foreach(c => c.indices.by(2).foreach(k => union(parent, c(k), c(k + 1))))
+    parents.foreach(p => p.indices.foreach(x => if (p(x) != x) union(parent, x, find(p, x))))
     parent.indices.filter(i => find(parent, i) == i).toArray
   }
 
@@ -408,10 +442,9 @@ object Network {
     *    a Float rating (4 B) per cell each, 16 B/cell;
     *  - the completed values (8 B/cell).
     * 36 B/cell. The network step that follows holds the completed
-    * values, their standardized z rows (8 B/cell) and the serialized
-    * TorrentBroadcast chunks of z (~8 B/cell) — 24 B/cell, or 36 with
-    * the collected arrays still reachable, so the ALS peak bounds it
-    * too. Factors (rank floats per probe and per sample) and per-array
+    * values and their standardized z rows (8 B/cell) — 16 B/cell, or 28
+    * with the collected arrays still reachable, so the ALS peak bounds
+    * it too. Factors (rank floats per probe and per sample) and per-array
     * headers are a few percent at the reference shape and not counted.
     */
   def denseFootprintBytes(nSamples: Long, nProbes: Long): Long =
@@ -443,7 +476,7 @@ object Network {
   /** Prints the regime decision of a run, once, with the gate's inputs. */
   def reportPath(dense: Boolean, nSamples: Long, nProbes: Long, maxBytes: Long): Unit =
     System.err.println(
-      s"[graft] pearson path: ${if (dense) "dense-broadcast" else "relational-self-join"} " +
+      s"[graft] pearson path: ${if (dense) "dense-driver" else "relational-self-join"} " +
         s"(samples=$nSamples probes=$nProbes cells=${nSamples * nProbes} " +
         s"footprint=${denseFootprintBytes(nSamples, nProbes)}B budget=${maxBytes}B)")
 

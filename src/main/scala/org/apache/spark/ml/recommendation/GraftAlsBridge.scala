@@ -7,8 +7,10 @@ import scala.util.hashing.byteswap64
 /** Bridge into ml-ALS's private pieces (`XORShiftRandom`,
   * `ALS.NormalEquation`, `ALS.CholeskySolver`, `BLAS.nativeBLAS`) for
   * `graft.pipeline.Completion.completeDense`, the driver-side replica of
-  * `ALS.train`: every value it computes comes from the same code ml-ALS
-  * runs, so a replicated solve is ml-ALS's solve.
+  * `ALS.train`: the factor init and the regularized Cholesky solve are
+  * the code ml-ALS runs. The normal equations themselves are summed by
+  * the replica (from a shared Gram), so their rounding may differ from
+  * ml-ALS's in the last bits.
   */
 object GraftAlsBridge {
 
@@ -30,17 +32,19 @@ object GraftAlsBridge {
   }
 
   /** One thread's least-squares solver: ml-ALS's normal equation and
-    * Cholesky solve, reset by every `solve`. Not thread-safe.
+    * Cholesky solve. The caller fills `ata` (AᵀA, packed upper — the
+    * `dspr` layout ml-ALS's `NormalEquation.add` accumulates) and `atb`
+    * (Aᵀb), then calls `solve`, which zeroes both. Not thread-safe.
     */
   final class Solver(rank: Int) {
     private val ne = new ALS.NormalEquation(rank)
     private val cholesky = new ALS.CholeskySolver
 
-    /** Adds one explicit rating of a source factor. */
-    def add(factor: Array[Float], rating: Float): Unit = ne.add(factor, rating.toDouble, 1.0)
+    def ata: Array[Double] = ne.ata
+    def atb: Array[Double] = ne.atb
 
-    /** The factor solving the ratings added since the last solve,
-      * regularized by `lambda` (ml-ALS passes regParam × ratings).
+    /** The factor solving the filled normal equation, regularized by
+      * `lambda` (ml-ALS passes regParam × ratings).
       */
     def solve(lambda: Double): Array[Float] = cholesky.solve(ne, lambda)
   }

@@ -41,11 +41,6 @@ class CollectConventionSpec extends AnyFunSuite {
     // (perfbench's traced composition) uses it only at shapes the
     // `Network.fitsDense` gate admits
     ("Completion.scala", "Network.byProbe(spark, matrix).collect()"),
-    // dense-path union-find merge: per kernel task, the (index, root)
-    // int pairs its union-find changed — ≤ 2 ints per probe per task
-    // (tasks ≤ 16 × cores), one int pair per probe that has an edge in
-    // the task; same budget gate as the matrix pull
-    ("Network.scala", "tasks.collect()"),
     // relational-regime dictionaries: each reader task's distinct probe
     // names, the files it read and one dropped-row count — ≤ probes
     // names (~21.5k at the reference shape) plus ≤ registered files per

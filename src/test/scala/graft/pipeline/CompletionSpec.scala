@@ -69,17 +69,22 @@ class CompletionSpec extends SparkSpec {
     // the default run converges to nearly the same cells from any
     // start, so only the short one pins the initial factors
     val paramSets = Seq(Completion.AlsParams(), Completion.AlsParams(maxIter = 2, regParam = 0.05))
-    // (seed, samples, probes, missing share): one matrix over 512
-    // samples, so ml-ALS draws its initial factors from two user
+    // (seed, samples, probes, missing share, sparse): one matrix over
+    // 512 samples, so ml-ALS draws its initial factors from two user
     // blocks, and one with no missing cell. Sample ids are spread
-    // (3i + 1), so block membership is not the index order.
-    for ((seed, nS, nP, missingShare) <- Seq((1, 40, 30, 0.15), (2, 600, 8, 0.1), (3, 25, 20, 0.0));
+    // (3i + 1), so block membership is not the index order. In a sparse
+    // matrix the first sample holds 3 probes and the first probe 5
+    // samples — fewer observed than missing, so their normal equations
+    // are summed directly, the others' from the Gram.
+    for ((seed, nS, nP, missingShare, sparse) <- Seq(
+          (1, 40, 30, 0.15, false), (2, 600, 8, 0.1, false), (3, 25, 20, 0.0, false), (4, 40, 30, 0.1, true));
         params <- paramSets) {
       val rnd = new Random(seed)
       val u = Array.fill(nS, 3)(rnd.nextDouble() + 0.5)
       val v = Array.fill(nP, 3)(rnd.nextDouble() + 0.5)
       val cells = for {
-        i <- 0 until nS; j <- 0 until nP if rnd.nextDouble() >= missingShare
+        i <- 0 until nS; j <- 0 until nP
+        if (if (sparse && i == 0) j < 3 else if (sparse && j == 0) i < 5 else rnd.nextDouble() >= missingShare)
       } yield (3 * i + 1, j, (0 until 3).map(k => u(i)(k) * v(j)(k)).sum + rnd.nextGaussian() * 0.1)
       val df = cells.toDF("sample", "probe", "value")
       val ml = Completion.complete(spark, df, params).collect()
@@ -88,9 +93,11 @@ class CompletionSpec extends SparkSpec {
       val observed = Completion.collectObserved(spark, df)
       val dense = Completion.completeDense(observed, params, threads = 4)
       // the split over threads leaves every solve's arithmetic alone
-      val single = Completion.completeDense(observed, params, threads = 1)
-      assert(dense.values.indices.forall(p => java.util.Arrays.equals(dense.values(p), single.values(p))),
-        s"seed $seed: result depends on the thread count")
+      for (threads <- Seq(3, 1)) {
+        val other = Completion.completeDense(observed, params, threads)
+        assert(dense.values.indices.forall(p => java.util.Arrays.equals(dense.values(p), other.values(p))),
+          s"seed $seed: result depends on the thread count")
+      }
       val got = (for {
         p <- dense.probes.indices; k <- dense.samples.indices
       } yield (dense.samples(k), dense.probes(p)) -> dense.values(p)(k)).toMap
@@ -103,6 +110,7 @@ class CompletionSpec extends SparkSpec {
       }
       val filled = ml.keySet -- obs.keySet
       assert(filled.isEmpty == (missingShare == 0.0), s"seed $seed")
+      if (sparse) assert(obs.count(_._1._1 == 1) == 3 && obs.count(_._1._2 == 0) == 5)
       filled.foreach { cell =>
         val (a, b) = (got(cell), ml(cell))
         assert(math.abs(a - b) <= 1e-6 * math.max(math.abs(a), math.abs(b)),

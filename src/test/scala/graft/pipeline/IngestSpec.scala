@@ -186,9 +186,10 @@ class IngestSpec extends SparkSpec {
       r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
     assert(Network.fitsDense(config.samples.size.toLong, 6L, Network.maxDenseBytes(spark)))
     val (dense, denseJobs) = graft.JobStacks(spark)(runMini(base, config))
-    assert(denseJobs.exists(_.contains("denseSurvivors")), "the fused kernel did not run")
+    // the fused kernel runs on driver threads: it merged p005 into p000
+    assert(dense.nProbesAfter == 5, "the network filter did not run")
     for (code <- Seq("org.apache.spark.graphx", "zipWithIndex", "pearsonEdges",
-        "connectedComponents", "filterRelational"))
+        "connectedComponents", "filterRelational", "denseSurvivors"))
       assert(!denseJobs.exists(_.contains(code)), s"dense-path run started a job in $code")
 
     // the same run forced onto the relational path (a zero driver
@@ -417,10 +418,11 @@ class IngestSpec extends SparkSpec {
     // and no job comes from a Spark SQL execution (no file source, no
     // write job)
     assert(w.jobs == 1 && w.sqlJobs == 0, s"${w.jobs} job(s), ${w.sqlJobs} from SQL executions")
-    // with a threshold, the network kernel is the one more job
-    val (thrBase, thrConfig) = mirroredCorpus("graft_corpus_two_jobs")
-    val (_, tw) = runAndWrite(thrBase, thrConfig)
-    assert(tw.jobs == 2 && tw.sqlJobs == 0, s"${tw.jobs} job(s), ${tw.sqlJobs} from SQL executions")
+    // with a threshold too: the network kernel runs on driver threads
+    val (thrBase, thrConfig) = mirroredCorpus("graft_corpus_threshold_jobs")
+    val (thrResult, tw) = runAndWrite(thrBase, thrConfig)
+    assert(thrResult.nProbesAfter == 5, "the network filter did not run")
+    assert(tw.jobs == 1 && tw.sqlJobs == 0, s"${tw.jobs} job(s), ${tw.sqlJobs} from SQL executions")
   }
 
   test("the dense gate at the footprint of the corpus runs dense, one byte below it relational, with the same output") {

@@ -142,7 +142,7 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(dense(Long.MaxValue))
     // same matrix, both paths: identical surviving probes
     val d = Network.collectDense(spark, df)
-    val denseKeep = Network.denseSurvivors(spark, d.values, 0.5).map(d.probes).toSet
+    val denseKeep = Network.denseSurvivors(d.values, 0.5, DriverThreads.count(spark)).map(d.probes).toSet
     val relationalKeep = Network.filterRelational(spark, df, 0.5)
       .select("probe").distinct().collect().map(_.getInt(0)).toSet
     assert(denseKeep.size < nProbes, "no edge at this threshold: the filter is not exercised")
@@ -198,34 +198,41 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   /** A random block-correlated matrix with the shapes the dense kernel
-    * must get right: correlated blocks, a zero-variance probe, a
-    * negatively correlated pair, and a chain p0-p1-p2-p3 whose links
-    * are edges (r = 0.5) while its non-adjacent pairs are not (r = 0),
-    * spread over the probe order so its edges fall in different kernel
-    * tasks. Probe ids are shuffled and non-contiguous. Returns the COO
-    * rows and the chain's probe ids.
+    * must get right: correlated blocks, a negatively correlated pair,
+    * a chain p0-p1-p2-p3 whose links are edges (r = 0.5) while its
+    * non-adjacent pairs are not (r = 0), spread over the probe order so
+    * its edges fall in different strips, and three zero-variance probes:
+    * at row 4 (the first row of a strip), row 9 (inside a tile) and the
+    * last row. The probe count is ≡ `residue` (mod 4), so the last strip
+    * has that many rows (4 for 0). Probe ids are shuffled and
+    * non-contiguous. Returns the COO rows and the chain's probe ids.
     */
-  private def kernelCase(seed: Int, nSamples: Int): (Seq[(Int, Int, Double)], Seq[Int]) = {
+  private def kernelCase(seed: Int, nSamples: Int, residue: Int): (Seq[(Int, Int, Double)], Seq[Int]) = {
     val rnd = new Random(seed)
     val blocks = (0 until 4).flatMap { _ =>
       val signal = Array.fill(nSamples)(rnd.nextGaussian())
       Seq.fill(2 + rnd.nextInt(4))(
         signal.map(v => v * (rnd.nextDouble() + 0.5) + rnd.nextGaussian() * 0.1))
     }
-    val noise = Seq.fill(8)(Array.fill(nSamples)(rnd.nextGaussian()))
-    val constant = Array.fill(nSamples)(3.25)
+    // blocks, 2 negatives, 4 chain members, 3 constants and the noise
+    val fixed = blocks.size + 2 + 4 + 3
+    val noise = Seq.fill(8 + Math.floorMod(residue - fixed - 8, 4))(Array.fill(nSamples)(rnd.nextGaussian()))
     val negA = Array.fill(nSamples)(rnd.nextGaussian())
     val negB = negA.map(v => -2.0 * v + rnd.nextGaussian() * 0.01)
     // zero-mean, mutually orthogonal cosines: p_k = e_k + e_(k+1)
     def e(k: Int) = Array.tabulate(nSamples)(s => math.cos(2 * math.Pi * k * s / nSamples))
     val chain = (1 to 4).map(k => e(k).zip(e(k + 1)).map { case (a, b) => a + b })
-    val others = rnd.shuffle(blocks ++ noise ++ Seq(constant, negA, negB))
+    val others = rnd.shuffle(blocks ++ noise ++ Seq(negA, negB))
     // chain members at the start, middle and end of the probe order
     val third = others.size / 3
-    val rows = Seq(chain(0)) ++ others.take(third) ++ Seq(chain(1)) ++
+    val body = Seq(chain(0)) ++ others.take(third) ++ Seq(chain(1)) ++
       others.slice(third, 2 * third) ++ Seq(chain(2)) ++ others.drop(2 * third) ++ Seq(chain(3))
+    // constants whose means are exact, so their deviations are exactly 0
+    val Seq(c4, c9, cLast) = Seq(3.25, -1.0, 0.0).map(Array.fill(nSamples)(_))
+    val rows = body.take(4) ++ Seq(c4) ++ body.slice(4, 8) ++ Seq(c9) ++ body.drop(8) ++ Seq(cLast)
+    assert(rows.size % 4 == residue % 4 && rows.indexOf(c9) == 9)
     val ids = rows.indices.map(_ * 7 + 3) // ascending in row order
-    val chainIds = Seq(0, third + 1, 2 * third + 2, rows.size - 1).map(ids)
+    val chainIds = chain.map(c => ids(rows.indexWhere(_ eq c)))
     val coo = rnd.shuffle(for {
       (vals, p) <- rows.zip(ids); s <- 0 until nSamples
     } yield (s, p, vals(s)))
@@ -238,8 +245,9 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
 
   test("fused dense kernel matches pearsonEdgesDense → GraphX CC → filterMatrix → assembleFeatures") {
     val t = 0.45
-    for (seed <- 1 to 3) {
-      val (coo, chainIds) = kernelCase(seed, nSamples = 40)
+    // probe counts ≡ 1, 2, 3 and 0 (mod 4)
+    for ((seed, residue) <- Seq(1 -> 1, 2 -> 2, 3 -> 3, 4 -> 0)) {
+      val (coo, chainIds) = kernelCase(seed, nSamples = 40, residue)
       val df = cooDF(coo)
       // the chain is one component through three edges, no shortcut
       val edgeDf = Network.pearsonEdgesDense(spark, df, t)
@@ -253,14 +261,13 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
       val legacyVectors = vectors(Svm.assembleFeatures(filtered))
 
       val d = Network.collectDense(spark, df)
-      val constantId = d.probes(d.values.indexWhere(vs => vs.distinct.length == 1))
-      assert(legacySurvivors.contains(constantId), s"seed $seed: zero-variance probe dropped")
-      // one kernel task, a few multi-row tasks, one row per task
-      for (parts <- Seq(Some(1), Some(3), None)) {
-        val got = Network.denseSurvivors(spark, d.values, t, parts).map(d.probes).toSet
-        assert(got == legacySurvivors, s"seed $seed, partitions $parts")
+      val constantIds = d.probes.indices.filter(p => d.values(p).distinct.length == 1).map(d.probes)
+      assert(constantIds.size == 3 && constantIds.forall(legacySurvivors), s"seed $seed: zero-variance probe dropped")
+      for (threads <- Seq(1, 3, DriverThreads.count(spark))) {
+        val got = Network.denseSurvivors(d.values, t, threads).map(d.probes).toSet
+        assert(got == legacySurvivors, s"seed $seed, $threads threads")
       }
-      val keep = Network.denseSurvivors(spark, d.values, t)
+      val keep = Network.denseSurvivors(d.values, t, DriverThreads.count(spark))
       assert(keep.length == legacySurvivors.size)
       val fused = d.samples.zip(Svm.denseRows(keep.map(d.values))).toMap
       assert(fused.keySet == legacyVectors.keySet, s"seed $seed")
@@ -271,7 +278,7 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("fused dense kernel without a threshold keeps every probe") {
-    val (coo, _) = kernelCase(4, nSamples = 20)
+    val (coo, _) = kernelCase(4, nSamples = 20, residue = 1)
     val df = cooDF(coo)
     val d = Network.collectDense(spark, df)
     assert(d.probes.length == df.select("probe").distinct().count())

@@ -50,6 +50,21 @@ for w in luad_wide ops_sf0.01; do
     || { echo "FAIL: perfbench $w (see $WORK/perfbench_$w.log)"; fail=1; }
   tail -1 "$WORK/perfbench_$w.log"
 done
+# which layer moved: the median wall of each `[graft] phase` of the
+# untraced luad_wide run, its first (cold) operation left out — read
+# before the traced run below replaces the run's log
+python3 - perfbench/.work/luad_wide/jvm.log <<'EOF'
+import re, statistics, sys
+walls = {}
+with open(sys.argv[1], errors="replace") as f:
+    for line in f:
+        m = re.search(r"\[graft\] phase (\S+): ([0-9.]+) s", line)
+        if m:
+            walls.setdefault(m.group(1), []).append(float(m.group(2)))
+for label, w in walls.items():
+    warm = w[1:] or w
+    print(f"luad_wide phase {label}: median {statistics.median(warm):.3f} s over {len(warm)} warm operations")
+EOF
 # traced LUAD run: its composition runs ml-ALS + LinearSVC and fails when
 # its predictions differ from the untraced run's (the dense regime's
 # driver-side replicas) — the end-to-end guard that the replicas match
