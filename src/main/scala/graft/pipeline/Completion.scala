@@ -119,33 +119,17 @@ object Completion {
     observed.union(predicted)
   }
 
-  /** An observed COO matrix on the driver, by probe: probe ids
-    * ascending; `samples(p)` holds probe p's observed sample ids
-    * ascending, each once, and `values(p)` their values aligned to it.
+  /** An observed COO matrix on the driver, by probe, as
+    * `Ingest.ingestDense` merges it from its reader tasks (where a cell
+    * observed twice fails the run): probe ids ascending; `samples(p)`
+    * holds probe p's observed sample ids ascending, each once, and
+    * `values(p)` their values aligned to it.
     */
   final case class Observed(
       probes: Array[Int],
       samples: Array[Array[Int]],
       values: Array[Array[Double]],
   )
-
-  /** A COO matrix collected by probe — `Network.collectDense`'s collect
-    * of a completed matrix — with the duplicate-observation guard: two
-    * observations of one (sample, probe) cell would be two values to
-    * every later step, so they are rejected, as the relational
-    * assembly's probe-set check rejects them. (The dense regime's
-    * ingest merges its matrix from the scan tasks and names a duplicate
-    * by probe, sample and file there.)
-    */
-  def collectObserved(spark: SparkSession, matrix: DataFrame): Observed = {
-    val rows = Network.byProbe(spark, matrix).collect().sortBy(_._1)
-    require(rows.nonEmpty, "empty matrix")
-    val dup = rows.find(r => r._2.indices.drop(1).exists(k => r._2(k - 1) >= r._2(k)))
-    require(dup.isEmpty,
-      s"probe ${dup.map(_._1).getOrElse(-1)} holds a duplicate (sample, probe) " +
-        "observation that survived ingest")
-    Observed(rows.map(_._1), rows.map(_._2), rows.map(_._3))
-  }
 
   /** `complete` on the driver: the same completed cells, computed by a
     * replica of `ml.recommendation.ALS` with the same parameters.

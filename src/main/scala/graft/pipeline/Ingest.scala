@@ -278,10 +278,11 @@ object Ingest {
     sc.parallelize(tasks.map(_.toSeq).toSeq, tasks.size).map(readFiles(conf.value, base, _))
   }
 
-  /** A reader task's own failure — a non-finite value — as itself
-    * rather than inside Spark's job-abort message.
+  /** A task's own failure — a reader task's non-finite value, a network
+    * task's incomplete matrix — as itself rather than inside Spark's
+    * job-abort message.
     */
-  private def readerFailure(e: SparkException): Throwable = e.getCause match {
+  private[pipeline] def taskFailure(e: SparkException): Throwable = e.getCause match {
     case c: IllegalArgumentException => c
     case _ => e
   }
@@ -307,7 +308,7 @@ object Ingest {
     val tasks = readerTasks(spark, normalizedBase(baseDir), files)
     val heads =
       try tasks.map(t => (t.names, t.files, t.dropped)).collect()
-      catch { case e: SparkException => throw readerFailure(e) }
+      catch { case e: SparkException => throw taskFailure(e) }
     val probeNames = sortedNames(heads.flatMap(_._1).distinct)
     val samples = sampleNames(config)
     val sampleOf = sampleIds(files, samples)
@@ -373,7 +374,7 @@ object Ingest {
     try sc.runJob(tasks, (it: Iterator[TaskRows]) => it.next(), (_: Int, r: TaskRows) => admit(r))
     catch {
       case _: SparkException if over => // the job the gate cancelled
-      case e: SparkException => throw readerFailure(e)
+      case e: SparkException => throw taskFailure(e)
     } finally sc.removeJobTag(tag)
     if (over) None else Some(merge(held.toSeq, sampleIds(files, samples), samples))
   }

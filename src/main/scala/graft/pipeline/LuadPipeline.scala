@@ -165,9 +165,10 @@ object LuadPipeline {
   }
 
   /** Relational regime over the persisted ingested matrix: ml-ALS, the
-    * Pearson self-join → GraphX → filter join, Spark-side assembly and
-    * LinearSVC, with shared subtrees persisted. Returns the model and
-    * the collected ±1.0 scores, one per id in `predicting`.
+    * network filter as one probe-panel-pair job
+    * (`Network.panelSurvivors`), Spark-side assembly and LinearSVC, with
+    * shared subtrees persisted. Returns the model and the collected ±1.0
+    * scores, one per id in `predicting`.
     */
   private def runRelational(
       spark: SparkSession,
@@ -180,21 +181,23 @@ object LuadPipeline {
   ): (LinearSVCModel, Seq[(Int, Double)]) = {
     import spark.implicits._
     val matrix = ing.matrix
-    val cards = Some((ing.sampleNames.length.toLong, ing.probeNames.length.toLong))
+    val (nSamples, nProbes) = (ing.sampleNames.length.toLong, ing.probeNames.length.toLong)
 
     val completed = timed("als-completion") {
-      val c = Completion.complete(spark, matrix, alsParams, cards)
+      val c = Completion.complete(spark, matrix, alsParams, Some((nSamples, nProbes)))
         .persist(StorageLevel.MEMORY_AND_DISK)
       c.count() // materialize inside the timed span
       c
     }
     // completion fabricates cells only for the OBSERVED sample × probe
-    // grid, so the distinct sets — and `cards` — are unchanged by it
+    // grid, so the distinct sets — and their sizes — are unchanged by it
 
-    // network filter + feature assembly: Pearson self-join → GraphX →
-    // filter join → Spark-side assembly (checkpointed inside)
-    val features = timed("network-and-assembly")(
-      Svm.assembleFeatures(config.pcThreshold.fold(completed)(Network.filterRelational(spark, completed, _))))
+    // network filter + feature assembly: the panel-pair job's survivors
+    // → semi join → Spark-side assembly (checkpointed inside)
+    val panels = Network.panelCount(spark.sparkContext.defaultParallelism, nSamples * nProbes)
+    val features = timed("network-and-assembly")(Svm.assembleFeatures(config.pcThreshold.fold(completed)(t =>
+      completed.join(Network.panelSurvivors(completed, nSamples, t, panels).toSeq.toDF("probe"),
+        Seq("probe"), "left_semi"))))
     val model = timed("svm-train")(Svm.train(spark, features, training.toDF("sample", "tumorous"), svmParams))
     val predictIds = predicting.toDF("sample")
     val toScore = features.join(broadcast(predictIds), Seq("sample"), "left_semi")

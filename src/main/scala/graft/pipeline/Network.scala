@@ -2,8 +2,10 @@ package graft.pipeline
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.{HashPartitioner, SparkException}
 import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,24 +16,24 @@ import org.apache.spark.storage.StorageLevel
   *  - The reference collects all per-probe stats to the driver and runs
   *    an O(P²) nested loop against the broadcast copy
   *    (`PreProcess.scala:56-79`), pairing the two value lists
-  *    positionally (quirk Q2). Here ΣXY comes from a self-join on the
-  *    sample key — alignment is explicit, the shuffle key is `sample`,
-  *    and partial aggregation is map-side combinable. Cost is
-  *    O(Σ_sample nnz_sample²) — the honest cost of all-pairs — but
-  *    distributed, with no driver copy.
-  *  - Dense regime (skinny matrix under the driver budget, `fitsDense`):
-  *    the reference's own design — the matrix and its standardized rows
-  *    on the driver — made sample-aligned. One pass (`denseSurvivors`)
-  *    of a register-tiled kernel on driver threads finds edges AND
-  *    components (per-thread union-find, merged by minimum root) over
-  *    the matrix `Completion.completeDense` already holds: no Spark job,
-  *    no broadcast.
-  *  - Connected components elsewhere: GraphX `connectedComponents()`
-  *    (Pregel, incremental frontier — same semantics as the reference's
-  *    delta iteration `PreProcess.scala:179-197`, maxIter 100). The pure
-  *    DataFrame loop `connectedComponentsDF` serves the operator surface
-  *    (`PipelineOps`), not the pipeline; it checkpoints each round to
-  *    truncate lineage.
+  *    positionally (quirk Q2). Here each probe's row is standardized
+  *    over its sample-aligned values, so that r_ij = z_i · z_j, and one
+  *    register-tiled kernel (`forEachEdge`) finds the pairs with
+  *    |r| >= threshold and unions them into a min-root union-find —
+  *    edges AND components in one pass, in two placements:
+  *     - dense regime (skinny matrix under the driver budget,
+  *       `fitsDense`): `denseSurvivors`, on driver threads over the
+  *       matrix `Completion.completeDense` already holds — no Spark job;
+  *     - relational regime: `panelSurvivors`, one Spark job whose tasks
+  *       each take one pair of probe panels (`panelPairs`), so no
+  *       shuffle carries pairs × samples rows and the driver holds only
+  *       O(P) ints of union-find.
+  *  - The sample-keyed self-join `pearsonEdges` (cost
+  *    O(Σ_sample nnz_sample²), so it takes sparse matrices) and
+  *    connected components as GraphX `connectedComponents()` (Pregel,
+  *    the reference's delta iteration `PreProcess.scala:179-197`) or the
+  *    DataFrame loop `connectedComponentsDF` serve the operator surface
+  *    (`PipelineOps`, `SimilarityOps`, `DedupOps`), not the pipeline.
   *  - Representative per component: `min(probe)` — the reference takes
   *    an arbitrary group-first (quirk Q3); min is deterministic.
   */
@@ -79,42 +81,24 @@ object Network {
       .select("pi", "pj", "r")
   }
 
-  /** Dense skinny-matrix Pearson: when the sample dimension is small
-    * (the reference corpus is 62 samples × 21.5k probes), the
-    * relational self-join would shuffle O(P²·n) rows (~1.4e10 at
-    * reference shape) — hopeless. Instead: standardize each probe's
-    * sample-vector so that r_ij = z_i · z_j, broadcast the standardized
-    * matrix (P × n doubles — ~10 MB at reference shape), and compute
-    * the upper triangle as a distributed loop over 4-probe strips of
-    * `forEachEdge`, the kernel `denseSurvivors` runs on the driver.
-    * This is the reference's own A3 design (collected stats + closure
-    * broadcast, `PreProcess.scala:56-79`) made distributed and
-    * sample-aligned (quirk Q2 fixed). Cost O(P²·n / cores), no shuffle
-    * at all. For millions of samples use `pearsonEdges` (relational) or
-    * DIMSUM-style approximation instead.
-    *
-    * Requires a COMPLETE matrix (every sample × probe cell present) —
-    * asserted; the reference runs it post-completion only. The
-    * pipeline's dense regime does not build this edge frame: it runs
-    * `denseSurvivors`, which finds components in the same pass.
+  /** `pearsonEdges`' edges (pi < pj, |r| >= threshold) of a COMPLETE
+    * COO matrix — as the reference runs it, post-completion only — from
+    * the one network kernel over the `panelPairs` job: r = z_i · z_j of
+    * the standardized rows, cost O(P²·n / cores). The pipeline builds no
+    * edge frame: both regimes find components in the same pass.
     */
   def pearsonEdgesDense(spark: SparkSession, matrix: DataFrame, threshold: Double): DataFrame = {
     import spark.implicits._
-    val d = collectDense(spark, matrix)
-    val (rows, z) = standardize(d.values)
-    val probes = rows.map(d.probes)
-    val bz = spark.sparkContext.broadcast(z)
-    val bp = spark.sparkContext.broadcast(probes)
-    val n = strips(z.length)
-    spark.sparkContext
-      .parallelize(0 until n, kernelPartitions(spark, n))
-      .flatMap { s =>
-        val ids = bp.value
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-        forEachEdge(bz.value, s, threshold)((a, b, r) => out += ((ids(a), ids(b), r)))
-        out.iterator
+    val (nSamples, nProbes) = matrix.select(countDistinct("sample"), countDistinct("probe")).as[(Long, Long)].head()
+    val panels = panelCount(spark.sparkContext.defaultParallelism, nSamples * nProbes)
+    panelPairs(matrix, nSamples, panels).flatMap { case (x, y) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
+      for (s <- 0 until strips(x.z.length)) forEachEdge(x.z, s, y.z, threshold) { (a, b, r) =>
+        val (i, j) = (x.ids(x.rows(a)), y.ids(y.rows(b)))
+        out += ((math.min(i, j), math.max(i, j), r))
       }
-      .toDF("pi", "pj", "r")
+      out
+    }.toDF("pi", "pj", "r")
   }
 
   /** A complete COO matrix on the driver: probe ids ascending, the one
@@ -128,100 +112,67 @@ object Network {
       values: Array[Array[Double]],
   )
 
-  /** A COO matrix grouped by probe, as a typed Dataset of PRIMITIVE
-    * arrays: (probe, its sample ids ascending, the values aligned to
-    * them). The encoder deserializes Array[Int]/Array[Double] as
-    * int[]/double[] — a collected row costs the 4 + 8 bytes per cell
-    * the dense gate budgets for, not the 4-6× boxed Seq overhead a
-    * Row/Seq collect would carry.
+  /** The standardized row z = (x - mean) / (sd·sqrt(n)) of one probe's
+    * values, so that r_ij = z_i · z_j; null for a zero-variance row,
+    * which has no r (reference F5) and so no edge.
     */
-  private[pipeline] def byProbe(spark: SparkSession, matrix: DataFrame): Dataset[(Int, Array[Int], Array[Double])] = {
-    import spark.implicits._
-    matrix
-      .groupBy("probe")
-      .agg(
-        expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.sample)").as("ss"),
-        expr("transform(array_sort(collect_list(struct(sample, value))), x -> x.value)").as("vs"))
-      .as[(Int, Array[Int], Array[Double])]
+  private def standardize(vs: Array[Double]): Array[Double] = {
+    val n = vs.length
+    val mean = vs.sum / n
+    var ss = 0.0
+    vs.foreach(v => ss += (v - mean) * (v - mean))
+    val norm = math.sqrt(ss)
+    if (norm == 0.0) null else vs.map(v => (v - mean) / norm)
   }
 
-  /** The completed-matrix collect of `pearsonEdgesDense`:
-    * `Completion.collectObserved` (one grouped collect, probe ids
-    * ascending, no duplicate observation) plus the alignment guard —
-    * every probe must cover the IDENTICAL sample array; equal counts
-    * alone would let positionally-misaligned vectors through (the
-    * reference's quirk Q2, the exact bug this module exists to fix).
+  /** The rows one kernel pass reads: probe ids ascending, and the
+    * standardized rows `z` of those with nonzero variance (`zs` holds
+    * null for the others), `z(k)` being probe `ids(rows(k))`'s.
     */
-  private[pipeline] def collectDense(spark: SparkSession, matrix: DataFrame): DenseMatrix = {
-    val observed = Completion.collectObserved(spark, matrix)
-    val samples = observed.samples.head
-    require(observed.samples.forall(java.util.Arrays.equals(_, samples)),
-      "dense path requires a complete matrix (every probe covers the same samples) — matrix incomplete")
-    DenseMatrix(observed.probes, samples, observed.values)
-  }
-
-  /** The standardized rows — z = (x - mean) / (sd·sqrt(n)), so that
-    * r_ij = z_i · z_j — of every probe row with nonzero variance, with
-    * their row indices ascending. A zero-variance row has no r (reference
-    * F5), so it has no edge and is left out.
-    */
-  private def standardize(values: Array[Array[Double]]): (Array[Int], Array[Array[Double]]) = {
-    val z = values.map { vs =>
-      val n = vs.length
-      val mean = vs.sum / n
-      var ss = 0.0
-      vs.foreach(v => ss += (v - mean) * (v - mean))
-      val norm = math.sqrt(ss)
-      if (norm == 0.0) null else vs.map(v => (v - mean) / norm)
-    }
-    val rows = z.indices.filter(z(_) != null).toArray
-    (rows, rows.map(z))
+  private final class Panel(val ids: Array[Int], zs: Array[Array[Double]]) {
+    val rows: Array[Int] = zs.indices.filter(zs(_) != null).toArray
+    val z: Array[Array[Double]] = rows.map(zs)
   }
 
   /** Strips of `forEachEdge` over n rows: strip s is rows 4s until 4s + 4. */
   private def strips(n: Int): Int = (n + 3) / 4
 
-  /** Many small strips: strip s costs ~4(n-4s) dots, so contiguous
-    * ranges are skewed — 16× oversubscription lets the scheduler
-    * balance them dynamically.
-    */
-  private def kernelPartitions(spark: SparkSession, nStrips: Int): Int =
-    math.max(1, math.min(spark.sparkContext.defaultParallelism * 16, nStrips))
-
-  /** Calls `f(a, b, r)` for every pair of rows a < b of z with a in strip
-    * s and |r| >= threshold, r = z_a · z_b clamped to [-1, 1].
+  /** Calls `f(a, b, r)` for every row a of x in strip s and row b of y
+    * with |r| >= threshold, r = x_a · y_b clamped to [-1, 1]. When y is
+    * x itself, only the pairs a < b.
     *
-    * Register-tiled: a full strip meets the rows after it four at a time,
+    * Register-tiled: a full strip meets the rows of y four at a time,
     * 16 dots in 16 accumulators that read 8 rows per step of k. Each
     * dot is still its own sum over k ascending, as a scalar dot sums it,
     * so every r is bit-identical to one.
     */
-  private def forEachEdge(z: Array[Array[Double]], s: Int, threshold: Double)(
+  private def forEachEdge(x: Array[Array[Double]], s: Int, y: Array[Array[Double]], threshold: Double)(
       f: (Int, Int, Double) => Unit): Unit = {
-    val n = z.length
+    val n = y.length
     val a0 = 4 * s
-    val aEnd = math.min(a0 + 4, n)
+    val aEnd = math.min(a0 + 4, x.length)
     def emit(a: Int, b: Int, d: Double): Unit = {
       // fp guard: z·z can overshoot ±1 by ~1e-15
       val r = math.min(1.0, math.max(-1.0, d))
       if (math.abs(r) >= threshold) f(a, b, r)
     }
     def emitDot(a: Int, b: Int): Unit = {
-      val x = z(a)
-      val y = z(b)
+      val u = x(a)
+      val v = y(b)
       var d = 0.0
       var k = 0
-      while (k < x.length) { d += x(k) * y(k); k += 1 }
+      while (k < u.length) { d += u(k) * v(k); k += 1 }
       emit(a, b, d)
     }
-    // the strip's own pairs; a short strip is the last, with no row after it
-    for (a <- a0 until aEnd; b <- a + 1 until aEnd) emitDot(a, b)
-    var b = aEnd
+    // within one panel: the strip's own pairs, then the rows after it (a
+    // short strip is the last, with none); across two: every row of y
+    if (x eq y) for (a <- a0 until aEnd; c <- a + 1 until aEnd) emitDot(a, c)
+    var b = if (x eq y) aEnd else 0
     if (aEnd - a0 == 4) {
-      val x0 = z(a0); val x1 = z(a0 + 1); val x2 = z(a0 + 2); val x3 = z(a0 + 3)
+      val x0 = x(a0); val x1 = x(a0 + 1); val x2 = x(a0 + 2); val x3 = x(a0 + 3)
       val len = x0.length
       while (b + 4 <= n) {
-        val y0 = z(b); val y1 = z(b + 1); val y2 = z(b + 2); val y3 = z(b + 3)
+        val y0 = y(b); val y1 = y(b + 1); val y2 = y(b + 2); val y3 = y(b + 3)
         var d00, d01, d02, d03, d10, d11, d12, d13 = 0.0
         var d20, d21, d22, d23, d30, d31, d32, d33 = 0.0
         var k = 0
@@ -241,7 +192,7 @@ object Network {
         b += 4
       }
     }
-    // the last < 4 rows after a full strip
+    // the last < 4 rows of y after a full strip, every row after a short one
     for (c <- b until n; a <- a0 until aEnd) emitDot(a, c)
   }
 
@@ -260,6 +211,32 @@ object Network {
     if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
   }
 
+  /** The strip loop of one kernel thread or task: for each strip s of x
+    * that `next` yields, until one runs past x's strips, unions every
+    * above-threshold pair of s with the rows of y into a union-find over
+    * x's probes then y's (x's alone when y is x); returns the entries it
+    * changed, as probe ids: the probes that are not their own root, and
+    * their roots.
+    */
+  private def unionStrips(x: Panel, y: Panel, threshold: Double, next: Iterator[Int]): (Array[Int], Array[Int]) = {
+    val yOffset = if (x eq y) 0 else x.ids.length
+    val parent = Array.range(0, yOffset + y.ids.length)
+    next.takeWhile(_ < strips(x.z.length)).foreach(s =>
+      forEachEdge(x.z, s, y.z, threshold)((a, b, _) => union(parent, x.rows(a), yOffset + y.rows(b))))
+    val ids = if (x eq y) x.ids else x.ids ++ y.ids
+    val changed = Array.range(0, parent.length).filter(i => parent(i) != i)
+    (changed.map(ids), changed.map(find(parent, _)).map(ids))
+  }
+
+  /** The min-root merge: the roots — each set's minimum index — of
+    * 0 until n once every changed entry is unioned with its root.
+    */
+  private def roots(n: Int, entries: Iterator[(Array[Int], Array[Int])]): Array[Int] = {
+    val parent = Array.range(0, n)
+    entries.foreach { case (xs, rs) => xs.indices.foreach(k => union(parent, xs(k), rs(k))) }
+    Array.range(0, n).filter(i => find(parent, i) == i)
+  }
+
   /** Row indices that survive the network filter: one pass of
     * `forEachEdge` over the standardized rows on `threads` driver threads
     * (`DriverThreads`). Each thread takes 4-row strips from a shared
@@ -272,22 +249,68 @@ object Network {
     * whatever the thread count.
     */
   private[pipeline] def denseSurvivors(values: Array[Array[Double]], threshold: Double, threads: Int): Array[Int] = {
-    val nP = values.length
-    val (rows, z) = standardize(values)
+    val p = new Panel(values.indices.toArray, values.map(standardize))
     val next = new AtomicInteger
-    val parents = new Array[Array[Int]](threads)
-    DriverThreads.run(threads) { t =>
-      val parent = Array.tabulate(nP)(identity)
-      var s = next.getAndIncrement()
-      while (s < strips(z.length)) {
-        forEachEdge(z, s, threshold)((a, b, _) => union(parent, rows(a), rows(b)))
-        s = next.getAndIncrement()
+    val entries = new Array[(Array[Int], Array[Int])](threads)
+    DriverThreads.run(threads)(t =>
+      entries(t) = unionStrips(p, p, threshold, Iterator.continually(next.getAndIncrement())))
+    roots(values.length, entries.iterator)
+  }
+
+  /** Panels for the panel-pair job over `cells` cells on `slots` task
+    * slots: the smallest B whose B(B+1)/2 pair tasks fill the slots and
+    * whose tasks running at once hold at most `DefaultMaxDenseBytes` of z
+    * between them — a task holds two panels, 16·cells/B bytes.
+    */
+  private[pipeline] def panelCount(slots: Int, cells: Long): Int =
+    Iterator.from(1).find(b => b * (b + 1L) / 2 >= slots && 16 * cells * slots <= b * DefaultMaxDenseBytes).get
+
+  /** One Spark task per probe-panel pair (a ≤ b) of a complete COO
+    * matrix over `nSamples` samples, yielding panel a as x and panel b as
+    * y (x itself when a = b). Probe p is in panel p mod `panels`; its row
+    * is grouped and standardized on the executors, failing with
+    * "duplicate" on a repeated sample and "complete matrix" short of
+    * `nSamples` samples, and its z alone is shuffled to its panel's pairs.
+    */
+  private def panelPairs(matrix: DataFrame, nSamples: Long, panels: Int): RDD[(Panel, Panel)] = {
+    val pairs = for (a <- 0 until panels; b <- a until panels) yield (a, b)
+    val index = pairs.zipWithIndex.toMap
+    val pairsOf = Array.tabulate(panels, panels)((p, q) => index((math.min(p, q), math.max(p, q))))
+    import matrix.sparkSession.implicits._
+    matrix.select("probe", "sample", "value").as[(Int, Int, Double)].rdd
+      .map { case (p, s, v) => (p, (s, v)) }
+      .groupByKey(pairs.size)
+      .flatMap { case (probe, cells) =>
+        val sorted = cells.toArray.sortBy(_._1)
+        require(sorted.indices.drop(1).forall(k => sorted(k - 1)._1 < sorted(k)._1),
+          s"probe $probe holds a duplicate (sample, probe) observation")
+        require(sorted.length == nSamples, s"the Pearson network requires a complete matrix (every probe " +
+          s"covers all $nSamples samples) — probe $probe covers ${sorted.length}")
+        val row = (probe, standardize(sorted.map(_._2)))
+        pairsOf(Math.floorMod(probe, panels)).iterator.map(_ -> row)
       }
-      parents(t) = parent
+      .partitionBy(new HashPartitioner(pairs.size))
+      .mapPartitionsWithIndex { (k, it) =>
+        val (a, b) = pairs(k)
+        val (inA, inB) = it.map(_._2).toArray.sortBy(_._1).partition(r => Math.floorMod(r._1, panels) == a)
+        val x = new Panel(inA.map(_._1), inA.map(_._2))
+        Iterator((x, if (a == b) x else new Panel(inB.map(_._1), inB.map(_._2))))
+      }
+  }
+
+  /** `denseSurvivors` as probe ids, ascending, from one `panelPairs`
+    * job, for the relational regime: each task returns its changed
+    * union-find entries (`unionStrips`), plus its panel's ids when a = b,
+    * and the driver merges them by minimum root, holding O(probes) ints.
+    */
+  private[pipeline] def panelSurvivors(matrix: DataFrame, nSamples: Long, threshold: Double, panels: Int): Array[Int] = {
+    val tasks = panelPairs(matrix, nSamples, panels).map { case (x, y) =>
+      (if (x eq y) x.ids else Array.emptyIntArray, unionStrips(x, y, threshold, Iterator.from(0)))
     }
-    val parent = Array.tabulate(nP)(identity)
-    parents.foreach(p => p.indices.foreach(x => if (p(x) != x) union(parent, x, find(p, x))))
-    parent.indices.filter(i => find(parent, i) == i).toArray
+    val parts = try tasks.collect() catch { case e: SparkException => throw Ingest.taskFailure(e) }
+    val ids = parts.flatMap(_._1).sorted
+    val at = java.util.Arrays.binarySearch(ids, _: Int)
+    roots(ids.length, parts.iterator.map { case (_, (xs, rs)) => (xs.map(at), rs.map(at)) }).map(ids)
   }
 
   /** Connected components over an (pi, pj) edge list via GraphX
@@ -298,9 +321,10 @@ object Network {
   def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
     // Pregel schedules every iteration over the edge partitioning, so
-    // an oversubscribed upstream (the dense-Pearson stage deliberately
-    // runs 16× cores) must be coalesced first — CC at 500+ partitions
-    // per iteration is pure scheduler churn. coalesce: no shuffle.
+    // an upstream with more partitions than cores (a self-join's shuffle
+    // partitions, `pearsonEdgesDense`'s B(B+1)/2 panel pairs) is
+    // coalesced first — CC at hundreds of partitions per iteration is
+    // pure scheduler churn. coalesce: no shuffle.
     val target = math.max(1, spark.sparkContext.defaultParallelism)
     val edgeRdd = edges
       .select(col("pi").cast("long"), col("pj").cast("long"))
@@ -476,25 +500,7 @@ object Network {
   /** Prints the regime decision of a run, once, with the gate's inputs. */
   def reportPath(dense: Boolean, nSamples: Long, nProbes: Long, maxBytes: Long): Unit =
     System.err.println(
-      s"[graft] pearson path: ${if (dense) "dense-driver" else "relational-self-join"} " +
+      s"[graft] pearson path: ${if (dense) "dense-driver" else "relational-panels"} " +
         s"(samples=$nSamples probes=$nProbes cells=${nSamples * nProbes} " +
         s"footprint=${denseFootprintBytes(nSamples, nProbes)}B budget=${maxBytes}B)")
-
-  /** The relational regime's network step: Pearson self-join edges →
-    * GraphX CC → `filterMatrix`.
-    */
-  def filterRelational(spark: SparkSession, matrix: DataFrame, threshold: Double): DataFrame = {
-    val t0 = System.nanoTime()
-    // localCheckpoint (eager): materializing splits the timing and
-    // keeps GraphX off the full Pearson lineage
-    val edges = pearsonEdges(matrix, threshold).localCheckpoint()
-    val t1 = System.nanoTime()
-    // materialized + localCheckpoint'd inside (so it can free its
-    // cached GraphX RDDs)
-    val comps = connectedComponents(spark, edges)
-    val t2 = System.nanoTime()
-    System.err.println(
-      f"[graft] pearson edges ${(t1 - t0) / 1e9}%.1f s, cc ${(t2 - t1) / 1e9}%.1f s")
-    filterMatrix(matrix, comps)
-  }
 }

@@ -380,11 +380,6 @@ class ArrayOrderingConventionSpec extends SparkSpec {
     // Per-file token counts (comments included — the pin is a
     // tripwire, not semantics). Non-walkable sites and why they are
     // safe:
-    //  - pipeline/Network.scala ×2 (byProbe, collected EAGERLY by
-    //    Completion.collectObserved): struct(sample, value) where a
-    //    sample occurs once per probe group — the duplicate-observation
-    //    require() makes the first field unique and would catch any
-    //    divergence loudly.
     //  - pipeline/Svm.scala ×2 (assembleFeatures, behind
     //    localCheckpoint + eager sig check): same matrix, same
     //    uniqueness; the probe_sig distinct-count require() is the
@@ -397,7 +392,6 @@ class ArrayOrderingConventionSpec extends SparkSpec {
     // Everything else is reachable from a declared query's analyzed
     // plan and covered by the gate test above.
     val pinned = Map(
-      "pipeline/Network.scala" -> 2,
       "pipeline/Svm.scala" -> 2,
       "operators/SimilarityOps.scala" -> 2,
       "operators/DedupOps.scala" -> 1,

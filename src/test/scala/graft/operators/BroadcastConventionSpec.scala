@@ -134,10 +134,6 @@ class BroadcastConventionSpec extends AnyFunSuite {
     // sample id, registry-sized (121 files on the benchmark corpus)
     ("Ingest.scala", "sc.broadcast(probeNames.zipWithIndex.toMap)"),
     ("Ingest.scala", "sc.broadcast(sampleOf)"),
-    // budget-gated dense-Pearson scratch arrays (sparkContext
-    // broadcast, entered only under the measured memory budget)
-    ("Network.scala", "sparkContext.broadcast(z)"),
-    ("Network.scala", "sparkContext.broadcast(probes)"),
   )
 
   /** How many sites each entry is expected to match (default 1).

@@ -35,12 +35,11 @@ class CollectConventionSpec extends AnyFunSuite {
     ("SimilarityOps.scala", ".collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq"),
     // single-row min/max bounds aggregate (the q108 bounds pattern)
     ("Relational.scala", "df.agg(min(a), max(a), min(b), max(b)).collect().head"),
-    // `collectObserved`, which now serves only `Network.collectDense`:
-    // the completed-matrix pull of `pearsonEdgesDense`, ≤ probes ×
-    // samples primitive arrays, whose one caller outside tests
-    // (perfbench's traced composition) uses it only at shapes the
-    // `Network.fitsDense` gate admits
-    ("Completion.scala", "Network.byProbe(spark, matrix).collect()"),
+    // relational-regime network job (`Network.panelSurvivors`): each
+    // panel-pair task returns the union-find entries it changed — fewer
+    // than its rows — plus, for a diagonal pair, its panel's probe ids:
+    // ≤ probes entries per task, O(probes) ints in all, no sample values
+    ("Network.scala", "try tasks.collect()"),
     // relational-regime dictionaries: each reader task's distinct probe
     // names, the files it read and one dropped-row count — ≤ probes
     // names (~21.5k at the reference shape) plus ≤ registered files per

@@ -90,7 +90,9 @@ class CompletionSpec extends SparkSpec {
       val ml = Completion.complete(spark, df, params).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
 
-      val observed = Completion.collectObserved(spark, df)
+      val byProbe = cells.groupBy(_._2).toArray.sortBy(_._1).map(_._2.sortBy(_._1))
+      val observed = Completion.Observed(
+        byProbe.map(_.head._2), byProbe.map(_.map(_._1).toArray), byProbe.map(_.map(_._3).toArray))
       val dense = Completion.completeDense(observed, params, threads = 4)
       // the split over threads leaves every solve's arithmetic alone
       for (threads <- Seq(3, 1)) {

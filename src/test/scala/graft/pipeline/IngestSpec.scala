@@ -189,16 +189,19 @@ class IngestSpec extends SparkSpec {
     // the fused kernel runs on driver threads: it merged p005 into p000
     assert(dense.nProbesAfter == 5, "the network filter did not run")
     for (code <- Seq("org.apache.spark.graphx", "zipWithIndex", "pearsonEdges",
-        "connectedComponents", "filterRelational", "denseSurvivors"))
+        "connectedComponents", "panelSurvivors", "denseSurvivors"))
       assert(!denseJobs.exists(_.contains(code)), s"dense-path run started a job in $code")
 
     // the same run forced onto the relational path (a zero driver
-    // budget) — which the listener must see running GraphX
+    // budget) — which the listener must see running the panel-pair job,
+    // and no GraphX or self-join job
     spark.conf.set("spark.graft.pearson.maxDenseBytes", "0")
     val (relational, relationalJobs) =
       try graft.JobStacks(spark)(runMini(base, config))
       finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
-    assert(relationalJobs.exists(_.contains("org.apache.spark.graphx")))
+    assert(relationalJobs.exists(_.contains("panelSurvivors")))
+    for (code <- Seq("org.apache.spark.graphx", "pearsonEdges", "connectedComponents"))
+      assert(!relationalJobs.exists(_.contains(code)), s"relational run started a job in $code")
     assert(relational.nProbesAfter == dense.nProbesAfter)
     assert(predictions(relational) == predictions(dense))
     // and it sees a zipWithIndex job when one runs
@@ -218,10 +221,10 @@ class IngestSpec extends SparkSpec {
     }
     def predictions(r: LuadPipeline.Result) =
       r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
-    val mlCode = Seq("recommendation.ALS", "LinearSVC", "RDDLossFunction", "treeAggregate", "graphx")
+    val mlCode = Seq("recommendation.ALS", "LinearSVC", "RDDLossFunction", "treeAggregate")
 
     val (dense, denseJobs) = graft.JobStacks(spark)(runMini(base, config))
-    for (code <- mlCode)
+    for (code <- mlCode :+ "graphx")
       assert(!denseJobs.exists(_.contains(code)), s"dense-regime run started a job in $code")
     spark.conf.set("spark.graft.pearson.maxDenseBytes", "0")
     val (relational, relationalJobs) =
@@ -229,6 +232,8 @@ class IngestSpec extends SparkSpec {
       finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
     for (code <- mlCode)
       assert(relationalJobs.exists(_.contains(code)), s"relational run started no job in $code")
+    // both regimes find components with the same kernel, not GraphX
+    assert(!relationalJobs.exists(_.contains("graphx")), "relational run started a GraphX job")
     assert(dense.nProbesAfter == 5 && relational.nProbesAfter == dense.nProbesAfter)
     assert(predictions(dense).size == 4)
     assert(predictions(relational) == predictions(dense))
@@ -285,6 +290,60 @@ class IngestSpec extends SparkSpec {
       assert(predictions(dense).size == 4, s"seed $seed")
       assert(predictions(relational) == predictions(dense), s"seed $seed")
     }
+  }
+
+  test("both regimes agree on a 62-sample, 1,024-probe two-type corpus whose correlated blocks cross panels") {
+    // the reference cohort's 40 training and 22 predictive samples over
+    // 256 mirna and 768 rna probes, ~1% of cells missing; 24 planted
+    // blocks of 2-6 probes drawn over both types, block 0 carrying the
+    // class (tumorous ⇔ even index), every other probe independent noise
+    val rnd = new scala.util.Random(31)
+    val dir = Files.createTempDirectory("graft_corpus_panels")
+    val names = (0 until 40).map(i => f"TRAIN-$i%02d") ++ (0 until 22).map(i => f"PRED-$i%02d")
+    // probe ids follow the sorted names: m0000-m0255 are 0-255, r0000-r0767 256-1023
+    val probes = (0 until 256).map(k => "mirna" -> f"m$k%04d") ++ (0 until 768).map(k => "rna" -> f"r$k%04d")
+    val members = rnd.shuffle(probes.indices.toList).iterator
+    val blocks = Seq.fill(24)(Seq.fill(2 + rnd.nextInt(5))(members.next()))
+    val blockOf = blocks.zipWithIndex.flatMap { case (ps, b) => ps.map(_ -> b) }.toMap
+    val factor = Array.tabulate(blocks.size, names.size) { (b, i) =>
+      rnd.nextGaussian() + (if (b != 0) 0.0 else if (i % 2 == 0) 3.0 else -3.0)
+    }
+    // centred values: a filled cell lands near its probe's mean, so a
+    // block's |r| stays far above the threshold in both regimes
+    val scale = Array.fill(probes.size)(rnd.nextDouble() + 1.0)
+    val defLines = new StringBuilder("def\tsample-type\tmirna\ndef\tsample-type\trna\ndef\tpc-threshold\t0.8\n")
+    for ((n, i) <- names.zipWithIndex) {
+      defLines ++= s"def\t${if (i < 40) "sample" else "predictive"}\t$n\n"
+      if (i % 2 == 0 && i < 40) defLines ++= s"diagnosis\t$n\tTN\n"
+      for (t <- Seq("mirna", "rna")) {
+        Files.createDirectories(dir.resolve(t))
+        val rows = probes.indices.filter(p => probes(p)._1 == t && rnd.nextDouble() >= 0.01).map { p =>
+          val v = blockOf.get(p).fold(rnd.nextGaussian())(b => scale(p) * factor(b)(i) + 0.1 * rnd.nextGaussian())
+          s"${probes(p)._2}\t" + String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
+        }
+        Files.writeString(dir.resolve(s"$t/$n.txt"), rows.mkString("probe\tvalue\n", "\n", "\n"))
+        defLines ++= s"$t\t$n\t$t/$n.txt\n"
+      }
+    }
+    Files.writeString(dir.resolve("input.txt"), defLines.toString)
+    val config = DefParser.parseFile(s"$dir/input.txt")
+    val panels = Network.panelCount(spark.sparkContext.defaultParallelism, 62L * 1024)
+    assert(panels > 1 && blocks.count(_.map(_ % panels).distinct.size > 1) > blocks.size / 2)
+    assert(Network.fitsDense(62L, 1024L, Network.maxDenseBytes(spark)))
+
+    def predictions(r: LuadPipeline.Result) =
+      r.predictions.collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
+    val dense = runMini(dir.toString, config)
+    spark.conf.set("spark.graft.pearson.maxDenseBytes", "0")
+    val relational =
+      try runMini(dir.toString, config)
+      finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
+    assert(dense.nProbesBefore == 1024 && relational.nProbesBefore == 1024)
+    // each planted block collapses to one representative, nothing else merges
+    assert(dense.nProbesAfter == 1024 - blocks.map(_.size - 1).sum)
+    assert(relational.nProbesAfter == dense.nProbesAfter)
+    assert(predictions(dense).size == 22)
+    assert(predictions(relational) == predictions(dense))
   }
 
   test("a training set of one class fails the run, naming the class counts") {
@@ -432,12 +491,12 @@ class IngestSpec extends SparkSpec {
     val (dense, dw) = withBudget(footprint)(work(runMini(base, config)))
     assert(withBudget(footprint)(Network.fitsDense(nS, nP, Network.maxDenseBytes(spark))))
     assert(dw.readingJobs == 1 && dw.readingTasks >= 2, s"the scan ran ${dw.readingTasks} task(s): no in-flight gate")
-    assert(!dw.stacks.exists(_.contains("org.apache.spark.graphx")), "the dense budget ran the relational regime")
+    assert(!dw.stacks.exists(_.contains("panelSurvivors")), "the dense budget ran the relational regime")
     // one byte less: the scan starts (one probe fits) and the gate
     // cancels it once the probes seen overflow the budget
     val (relational, rw) = withBudget(footprint - 1)(work(runMini(base, config)))
     assert(!withBudget(footprint - 1)(Network.fitsDense(nS, nP, Network.maxDenseBytes(spark))))
-    assert(rw.stacks.exists(_.contains("org.apache.spark.graphx")), "one byte below the footprint ran dense")
+    assert(rw.stacks.exists(_.contains("panelSurvivors")), "one byte below the footprint ran dense")
     assert(dense.nProbesBefore == nP && relational.nProbesBefore == nP)
     assert(relational.nProbesAfter == dense.nProbesAfter)
     assert(predictions(dense).size == 4 && predictions(relational) == predictions(dense))

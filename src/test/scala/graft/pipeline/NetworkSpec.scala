@@ -11,6 +11,15 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     entries.toDF("sample", "probe", "value")
   }
 
+  /** A complete COO matrix by probe, as `Completion.completeDense`
+    * returns one: probe ids ascending, samples ascending, values aligned.
+    */
+  private def denseOf(coo: Seq[(Int, Int, Double)]): Network.DenseMatrix = {
+    val rows = coo.groupBy(_._2).toArray.sortBy(_._1).map(_._2.sortBy(_._1))
+    require(rows.forall(_.map(_._1) == rows.head.map(_._1)), "incomplete test matrix")
+    Network.DenseMatrix(rows.map(_.head._2), rows.head.map(_._1).toArray, rows.map(_.map(_._3).toArray))
+  }
+
   private def naivePearson(x: Seq[Double], y: Seq[Double]): Double = {
     val n = x.size
     val mx = x.sum / n; val my = y.sum / n
@@ -141,10 +150,10 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(!dense(0L))
     assert(dense(Long.MaxValue))
     // same matrix, both paths: identical surviving probes
-    val d = Network.collectDense(spark, df)
+    val d = denseOf(coo)
     val denseKeep = Network.denseSurvivors(d.values, 0.5, DriverThreads.count(spark)).map(d.probes).toSet
-    val relationalKeep = Network.filterRelational(spark, df, 0.5)
-      .select("probe").distinct().collect().map(_.getInt(0)).toSet
+    val panels = Network.panelCount(spark.sparkContext.defaultParallelism, nSamples.toLong * nProbes)
+    val relationalKeep = Network.panelSurvivors(df, nSamples, 0.5, panels).toSet
     assert(denseKeep.size < nProbes, "no edge at this threshold: the filter is not exercised")
     assert(relationalKeep == denseKeep)
   }
@@ -243,8 +252,23 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
     features.collect().map(r =>
       r.getInt(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray).toMap
 
+  test("panelCount fills the task slots and bounds the z its running pair tasks hold") {
+    // luad_wide's 62 × 2,046 cells: the slots alone decide
+    assert(Network.panelCount(4, 62L * 2046) == 3)
+    assert(Network.panelCount(32, 62L * 2046) == 8)
+    // just past the dense budget's 36 B a cell: the running tasks' two
+    // panels each, 16·cells/B bytes a task, fit the budget between them
+    val cells = Network.DefaultMaxDenseBytes / 36 + 1
+    for ((slots, b) <- Seq(1 -> 1, 4 -> 3, 32 -> 15)) {
+      assert(Network.panelCount(slots, cells) == b, s"$slots slots")
+      assert(b * (b + 1) / 2 >= slots && 16 * cells * slots <= b * Network.DefaultMaxDenseBytes, s"$slots slots")
+    }
+  }
+
   test("fused dense kernel matches pearsonEdgesDense → GraphX CC → filterMatrix → assembleFeatures") {
     val t = 0.45
+    // the panel-pair job at one panel, panels splitting the chain, and
+    // more panels than a small matrix fills evenly
     // probe counts ≡ 1, 2, 3 and 0 (mod 4)
     for ((seed, residue) <- Seq(1 -> 1, 2 -> 2, 3 -> 3, 4 -> 0)) {
       val (coo, chainIds) = kernelCase(seed, nSamples = 40, residue)
@@ -260,12 +284,17 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
       val legacySurvivors = filtered.select("probe").distinct().collect().map(_.getInt(0)).toSet
       val legacyVectors = vectors(Svm.assembleFeatures(filtered))
 
-      val d = Network.collectDense(spark, df)
+      val d = denseOf(coo)
       val constantIds = d.probes.indices.filter(p => d.values(p).distinct.length == 1).map(d.probes)
       assert(constantIds.size == 3 && constantIds.forall(legacySurvivors), s"seed $seed: zero-variance probe dropped")
       for (threads <- Seq(1, 3, DriverThreads.count(spark))) {
         val got = Network.denseSurvivors(d.values, t, threads).map(d.probes).toSet
         assert(got == legacySurvivors, s"seed $seed, $threads threads")
+      }
+      assert(chainIds.map(Math.floorMod(_, 3)).distinct.size > 1, s"seed $seed: the chain is in one of 3 panels")
+      for (panels <- Seq(1, 2, 3, 5)) {
+        val got = Network.panelSurvivors(df, 40, t, panels)
+        assert(got.toSeq == got.sorted.toSeq && got.toSet == legacySurvivors, s"seed $seed, $panels panels")
       }
       val keep = Network.denseSurvivors(d.values, t, DriverThreads.count(spark))
       assert(keep.length == legacySurvivors.size)
@@ -280,7 +309,7 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
   test("fused dense kernel without a threshold keeps every probe") {
     val (coo, _) = kernelCase(4, nSamples = 20, residue = 1)
     val df = cooDF(coo)
-    val d = Network.collectDense(spark, df)
+    val d = denseOf(coo)
     assert(d.probes.length == df.select("probe").distinct().count())
     val legacy = vectors(Svm.assembleFeatures(df))
     val fused = d.samples.zip(Svm.denseRows(d.values)).toMap
@@ -301,18 +330,13 @@ class NetworkSpec extends SparkSpec with TableDrivenPropertyChecks {
       val df = cooDF(rows)
       // the relational assembly rejects the same inputs (probe_sig)
       assertThrows[IllegalArgumentException](Svm.assembleFeatures(df))
-      // collectDense is collectObserved plus the alignment guard, so
-      // the message names the fault: a duplicate is caught by the
-      // shared collect, a missing cell by the alignment guard
-      val e = intercept[IllegalArgumentException](Network.collectDense(spark, df))
-      val fault = if (name == "incomplete") "complete matrix" else "duplicate"
-      assert(e.getMessage.contains(fault), s"$name: ${e.getMessage}")
-      // the dense regime's collect of the INGESTED matrix takes missing
-      // cells (ALS fills them) but no duplicate
-      if (name == "incomplete") Completion.collectObserved(spark, df)
-      else {
-        val o = intercept[IllegalArgumentException](Completion.collectObserved(spark, df))
-        assert(o.getMessage.contains("duplicate"), s"$name: ${o.getMessage}")
+      // the panel-pair job's tasks name the fault, as themselves rather
+      // than inside Spark's job-abort message: a repeated sample in a
+      // probe's row, or rows that cover different samples
+      for (panels <- Seq(1, 3)) {
+        val e = intercept[IllegalArgumentException](Network.panelSurvivors(df, 6, 0.5, panels))
+        val fault = if (name == "incomplete") "complete matrix" else "duplicate"
+        assert(e.getMessage.contains(fault), s"$name, $panels panels: ${e.getMessage}")
       }
     }
   }

@@ -73,22 +73,29 @@ python3 perfbench/run.py --workload luad_wide --seed 1 --seconds 10 --trace 1 > 
 tail -1 "$WORK/perfbench_luad_wide_trace.log"
 # regime parity: LuadPipeline.main on the seed-1 corpus the traced run
 # left behind, once by default (the dense regime) and once forced onto
-# the relational one; the sorted sink rows, n_probes_after and
-# rows_dropped must agree
-parity() { # $1 = regime, $2 = extra JVM option (or empty)
-  local dir="$WORK/parity_$1"
+# the relational one at the perfbench heap (-Xmx3g) and the CLI's
+# default local[32] (SPARK_GRAFT_CPUS unset), where a relational
+# network step that shuffles pairs × samples rows runs out of heap; the
+# sorted sink rows, n_probes_after and rows_dropped must agree, and the
+# forced run must report the relational regime. Each prints its regime
+# and its network-and-assembly phase wall.
+parity() { # $1 = regime, then extra JVM options
+  local regime="$1"; shift
+  local dir="$WORK/parity_$regime" sets=()
+  for o in "$@"; do sets+=("set Compile / run / javaOptions += \"$o\""); done
   rm -rf "$dir" && mkdir -p "$dir"
-  sbt "set Compile / run / baseDirectory := file(\"$dir\")" \
-    ${2:+"set Compile / run / javaOptions += \"$2\""} \
+  sbt "set Compile / run / baseDirectory := file(\"$dir\")" "${sets[@]}" \
     "runMain graft.pipeline.LuadPipeline $PWD/perfbench/.work/luad_wide/corpus/input.txt" > "$dir/run.log" 2>&1 \
-    || { echo "FAIL: LuadPipeline.main, $1 regime (see $dir/run.log)"; return 1; }
+    || { echo "FAIL: LuadPipeline.main, $regime regime (see $dir/run.log)"; return 1; }
   cat "$dir"/out/*/part-* | sort > "$dir/rows.tsv"
   grep -o '"n_probes_after":[0-9]*,"rows_dropped":[0-9]*' "$dir/run.log" > "$dir/counts.txt"
-  echo "$1: $(wc -l < "$dir/rows.tsv") sink rows, $(cat "$dir/counts.txt")"
+  echo "$regime: $(wc -l < "$dir/rows.tsv") sink rows, $(cat "$dir/counts.txt")," \
+    "$(grep -o 'pearson path: [a-z-]*' "$dir/run.log"), $(grep -o 'phase network-and-assembly: [0-9.]* s' "$dir/run.log")"
 }
-if parity dense "" && parity relational "-Dspark.graft.pearson.maxDenseBytes=0"; then
+if parity dense && (unset SPARK_GRAFT_CPUS; parity relational -Dspark.graft.pearson.maxDenseBytes=0 -Xmx3g); then
   { cmp -s "$WORK/parity_dense/rows.tsv" "$WORK/parity_relational/rows.tsv" \
       && cmp -s "$WORK/parity_dense/counts.txt" "$WORK/parity_relational/counts.txt" \
+      && grep -q 'pearson path: relational-panels' "$WORK/parity_relational/run.log" \
       && [ -s "$WORK/parity_dense/rows.tsv" ] && [ -s "$WORK/parity_dense/counts.txt" ]; } \
     || { echo "FAIL: the regimes disagree (see $WORK/parity_*)"; fail=1; }
 else
