@@ -3,6 +3,7 @@ package graft.pipeline
 import java.io.{BufferedReader, FileNotFoundException, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Locale
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.Using
@@ -12,7 +13,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.{SerializableWritable, SparkException}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,23 +21,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale design: the reference reads one file per (sample, type) in a
   * driver loop and chains 477 unions (`Input.scala:116-131`) — a plan
-  * with 477 scan nodes. Here every registered file of every type is
-  * read by ONE Spark job of reader tasks (`readerTasks`), each of which
-  * opens its share of the files through the Hadoop `FileSystem` API, so
-  * it knows which registered file — and so which sample — each row came
-  * from. No Spark SQL file source is involved: no scan plan to build
-  * and no file listing. Parallelism is per file (a file is never
-  * split): the session's parallelism, or more tasks where that would
-  * put more than `spark.sql.files.maxPartitionBytes` in one.
+  * with 477 scan nodes. Here the registered files of every type are cut
+  * into reader tasks (`readerTasks`), each of which opens its files
+  * through the Hadoop `FileSystem` API, so it knows which registered
+  * file — and so which sample — each row came from. No Spark SQL file
+  * source is involved: no scan plan to build and no file listing.
+  * Parallelism is per file (a file is never split): the session's
+  * parallelism, or more tasks where that would put more than
+  * `spark.sql.files.maxPartitionBytes` in one.
   *
-  * Both regimes of `LuadPipeline.run` run the same reader tasks, each of
-  * which dictionary-encodes its rows; the driver assigns the probe ids:
-  *  - `ingestDense`: one Spark job whose task results the driver merges
-  *    into the by-probe observed matrix, applying the dense gate to the
-  *    probes seen as they arrive.
-  *  - `ingest` (relational): only each task's probe names, files and
-  *    dropped-row count reach the driver; the matrix is a DataFrame over
-  *    the same tasks, whose local indices two broadcasts map to ids.
+  * Both regimes of `LuadPipeline.run` read the same tasks with the same
+  * `readFiles`, which dictionary-encodes their rows; the driver assigns
+  * the probe ids:
+  *  - `ingestDense`: the tasks run on driver threads, with no Spark job,
+  *    and the driver merges their results into the by-probe observed
+  *    matrix, applying the dense gate to the probes seen as they arrive.
+  *  - `ingest` (relational): one Spark job of the tasks brings only each
+  *    task's probe names, files and dropped-row count to the driver; the
+  *    matrix is a DataFrame over the same tasks, whose local indices two
+  *    broadcasts map to ids.
   *
   * Lenient semantics (reference `lenient = true`, `Input.scala:121`):
   * `LineRule`, shared with `Streams.expressionFileStream`.
@@ -243,17 +245,22 @@ object Ingest {
     new TaskRows(names.toArray, kept.toArray, nameIdx.toArray, values.toArray, dropped)
   }
 
-  /** The reader tasks of both regimes. The path-sorted registered files
-    * are dealt round-robin over min(files, defaultParallelism) shares, so
-    * each share holds some of every type and, for a small corpus, all run
-    * in one wave. Each share is then cut, in path order, into tasks of at
-    * most `spark.sql.files.maxPartitionBytes` of file (a larger file
-    * alone), the bound Spark's file sources put on a task, so what one
-    * task reads and encodes stays bounded however large the corpus. The
-    * file lengths are read on the driver, where a missing file fails,
-    * naming its sample and type.
+  /** The reader tasks of both regimes, each a list of files. The
+    * path-sorted registered files are dealt round-robin over
+    * min(files, defaultParallelism) shares, so each share holds some of
+    * every type and, for a small corpus, all run in one wave. Each share
+    * is then cut, in path order, into tasks of at most
+    * `spark.sql.files.maxPartitionBytes` of file (a larger file alone),
+    * the bound Spark's file sources put on a task, so what one task
+    * reads and encodes stays bounded however large the corpus. The file
+    * lengths are read on the driver, where a missing file fails, naming
+    * its sample and type.
     */
-  private def readerTasks(spark: SparkSession, base: String, files: IndexedSeq[Registered]): RDD[TaskRows] = {
+  private def readerTasks(
+      spark: SparkSession,
+      base: String,
+      files: IndexedSeq[Registered],
+  ): IndexedSeq[Seq[Registered]] = {
     val sc = spark.sparkContext
     val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     val length = files.map { f =>
@@ -274,8 +281,7 @@ object Ingest {
         tasks.last += files(k); bytes += length(k)
       }
     }
-    val conf = new SerializableWritable(sc.hadoopConfiguration)
-    sc.parallelize(tasks.map(_.toSeq).toSeq, tasks.size).map(readFiles(conf.value, base, _))
+    tasks.map(_.toSeq).toIndexedSeq
   }
 
   /** A task's own failure — a reader task's non-finite value, a network
@@ -305,7 +311,11 @@ object Ingest {
       config: DefParser.PipelineConfig,
   ): IngestResult = {
     val files = registeredFiles(config)
-    val tasks = readerTasks(spark, normalizedBase(baseDir), files)
+    val base = normalizedBase(baseDir)
+    val cut = readerTasks(spark, base, files)
+    val sc = spark.sparkContext
+    val conf = new SerializableWritable(sc.hadoopConfiguration)
+    val tasks = sc.parallelize(cut, cut.size).map(readFiles(conf.value, base, _))
     val heads =
       try tasks.map(t => (t.names, t.files, t.dropped)).collect()
       catch { case e: SparkException => throw taskFailure(e) }
@@ -313,7 +323,6 @@ object Ingest {
     val samples = sampleNames(config)
     val sampleOf = sampleIds(files, samples)
 
-    val sc = spark.sparkContext
     val probeIds = sc.broadcast(probeNames.zipWithIndex.toMap)
     val sampleIdOf = sc.broadcast(sampleOf)
     import spark.implicits._
@@ -334,16 +343,19 @@ object Ingest {
     files.map(f => f.path -> id(f.sample)).toMap
   }
 
-  /** The dense regime's ingest: every registered file in one reader job,
-    * dictionary-encoded inside its tasks, merged on the driver. None,
-    * with the job cancelled, once the probes seen so far put the dense
-    * footprint of the registered samples over `maxBytes`
-    * (`Network.fitsDense`) — the same decision as the gate on the final
-    * probe count, since the count only grows. Until then the driver
-    * holds the task results that passed the gate (12 B per observed
-    * cell, bounded by the 36 B/cell model) plus the one being checked.
-    * A cell observed twice — a file listing a probe twice, or one name
-    * in two type files of a sample — fails, naming the file(s).
+  /** The dense regime's ingest: the reader tasks run on
+    * `DriverThreads.count` driver threads, with no Spark job. Each
+    * thread claims the next task from a shared counter, reads it with
+    * `readFiles`, and passes the result through the dense gate under a
+    * lock. None once the probes seen so far put the dense footprint of
+    * the registered samples over `maxBytes` (`Network.fitsDense`) — the
+    * same decision as the gate on the final probe count, since the count
+    * only grows; from then on, and after a task fails, no thread claims
+    * another task. Until then the driver holds the task results that
+    * passed the gate (12 B per observed cell, bounded by the 36 B/cell
+    * model) plus up to one task's result per thread in flight. A cell
+    * observed twice — a file listing a probe twice, or one name in two
+    * type files of a sample — fails, naming the file(s).
     */
   def ingestDense(
       spark: SparkSession,
@@ -356,27 +368,29 @@ object Ingest {
     val nSamples = samples.length.toLong
     if (!Network.fitsDense(nSamples, 1, maxBytes)) return None
 
-    val tasks = readerTasks(spark, normalizedBase(baseDir), files)
-    val sc = spark.sparkContext
+    val base = normalizedBase(baseDir)
+    val tasks = readerTasks(spark, base, files)
+    val conf = spark.sparkContext.hadoopConfiguration
     val held = ArrayBuffer.empty[TaskRows]
     val seen = new java.util.HashSet[String]
-    var over = false
-    val tag = s"graft-ingest-${java.util.UUID.randomUUID}"
-    def admit(r: TaskRows): Unit = if (!over) {
-      r.names.foreach(seen.add)
-      if (Network.fitsDense(nSamples, seen.size.toLong, maxBytes)) held += r
-      else {
-        over = true; held.clear(); seen.clear()
-        sc.cancelJobsWithTag(tag, "the probes seen exceed the dense-regime driver budget")
+    val next = new AtomicInteger
+    val stop = new AtomicBoolean // the gate closed, or a task failed
+    def admit(r: TaskRows): Unit = held.synchronized {
+      if (!stop.get) {
+        r.names.foreach(seen.add)
+        if (Network.fitsDense(nSamples, seen.size.toLong, maxBytes)) held += r
+        else { stop.set(true); held.clear(); seen.clear() }
       }
     }
-    sc.addJobTag(tag)
-    try sc.runJob(tasks, (it: Iterator[TaskRows]) => it.next(), (_: Int, r: TaskRows) => admit(r))
-    catch {
-      case _: SparkException if over => // the job the gate cancelled
-      case e: SparkException => throw taskFailure(e)
-    } finally sc.removeJobTag(tag)
-    if (over) None else Some(merge(held.toSeq, sampleIds(files, samples), samples))
+    DriverThreads.run(math.min(DriverThreads.count(spark), tasks.size)) { _ =>
+      var k = next.getAndIncrement()
+      while (k < tasks.size && !stop.get) {
+        admit(try readFiles(conf, base, tasks(k)) catch { case e: Throwable => stop.set(true); throw e })
+        k = next.getAndIncrement()
+      }
+    }
+    // run returned, so no task failed: a stop is the gate's
+    if (stop.get) None else Some(merge(held.toSeq, sampleIds(files, samples), samples))
   }
 
   /** The task results as the by-probe observed matrix: each probe's

@@ -20,9 +20,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Differences from the reference, all deliberate (SURVEY §4.1
   * anti-patterns): the matrix reaches the driver only in the
-  * budget-gated dense regime (`Network.fitsDense`), where the files are
-  * read by one reader job and every later step runs on the driver arrays
-  * — never re-parallelized as a matrix; in the relational regime shared
+  * budget-gated dense regime (`Network.fitsDense`), where the reader
+  * tasks run on driver threads and every later step runs on the driver
+  * arrays — never re-parallelized as a matrix, and no Spark job from the
+  * first read to the sink; in the relational regime shared
   * subtrees are persisted instead of recomputed per action; everything
   * is a pure function of (SparkSession, config). Both regimes ingest
   * through the same reader tasks, and `run` owns the registry-sized work
@@ -71,10 +72,12 @@ object LuadPipeline {
     val training = config.training.map(s => ids(s.name) -> s.tumorous).sortBy(_._1)
     val predicting = config.predicting.map(s => ids(s.name))
 
-    // the dense regime's one reader job applies the gate to the probes it
-    // has seen, for the registered samples (the coverage guard makes
-    // them the covered ones); past the budget it is cancelled and the
-    // relational regime reads the files itself
+    // the dense regime's reader threads apply the gate to the probes
+    // they have seen, for the registered samples (the coverage guard
+    // makes them the covered ones), while the driver holds the results
+    // that passed it plus one in flight per thread; past the budget they
+    // stop claiming tasks and the relational regime reads the files in
+    // its own job
     val maxBytes = Network.maxDenseBytes(spark)
     val ingested = timed("ingest") {
       Ingest.ingestDense(spark, baseDir, config, maxBytes).toLeft {
@@ -194,7 +197,7 @@ object LuadPipeline {
 
     // network filter + feature assembly: the panel-pair job's survivors
     // → semi join → Spark-side assembly (checkpointed inside)
-    val panels = Network.panelCount(spark.sparkContext.defaultParallelism, nSamples * nProbes)
+    val panels = Network.panelCount(Network.panelSlots(spark), nSamples * nProbes)
     val features = timed("network-and-assembly")(Svm.assembleFeatures(config.pcThreshold.fold(completed)(t =>
       completed.join(Network.panelSurvivors(completed, nSamples, t, panels).toSeq.toDF("probe"),
         Seq("probe"), "left_semi"))))

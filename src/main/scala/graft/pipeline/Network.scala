@@ -90,7 +90,7 @@ object Network {
   def pearsonEdgesDense(spark: SparkSession, matrix: DataFrame, threshold: Double): DataFrame = {
     import spark.implicits._
     val (nSamples, nProbes) = matrix.select(countDistinct("sample"), countDistinct("probe")).as[(Long, Long)].head()
-    val panels = panelCount(spark.sparkContext.defaultParallelism, nSamples * nProbes)
+    val panels = panelCount(panelSlots(spark), nSamples * nProbes)
     panelPairs(matrix, nSamples, panels).flatMap { case (x, y) =>
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
       for (s <- 0 until strips(x.z.length)) forEachEdge(x.z, s, y.z, threshold) { (a, b, r) =>
@@ -256,6 +256,14 @@ object Network {
       entries(t) = unionStrips(p, p, threshold, Iterator.continually(next.getAndIncrement())))
     roots(values.length, entries.iterator)
   }
+
+  /** The task slots `panelCount` fills: `defaultParallelism`, but in a
+    * local-mode session, whose tasks are threads of the driver, no more
+    * than `DriverThreads.count` — `local[32]` on a 4-core host runs 4
+    * tasks at once, not 32.
+    */
+  private[pipeline] def panelSlots(spark: SparkSession): Int =
+    if (spark.sparkContext.isLocal) DriverThreads.count(spark) else spark.sparkContext.defaultParallelism
 
   /** Panels for the panel-pair job over `cells` cells on `slots` task
     * slots: the smallest B whose B(B+1)/2 pair tasks fill the slots and
@@ -492,7 +500,7 @@ object Network {
     * the reference shape) whose MODELED driver peak
     * (`denseFootprintBytes`, not a cell count) fits `maxBytes`.
     * `Ingest.ingestDense` applies it to the probes seen so far while its
-    * scan runs.
+    * reader threads run.
     */
   def fitsDense(nSamples: Long, nProbes: Long, maxBytes: Long): Boolean =
     nSamples <= 10000 && denseFootprintBytes(nSamples, nProbes) <= maxBytes

@@ -46,12 +46,6 @@ class CollectConventionSpec extends AnyFunSuite {
     // task; the probe dictionary is broadcast back, so it is
     // driver-resident anyway
     ("Ingest.scala", "tasks.map(t => (t.names, t.files, t.dropped)).collect()"),
-    // dense-regime reader job: each task returns its rows
-    // dictionary-encoded — 12 B per observed cell plus one probe-name
-    // array per task — and the driver keeps a result only while the
-    // probes seen pass the `Network.fitsDense` gate (36 B/cell modelled),
-    // dropping all of them and cancelling the job once they do not
-    ("Ingest.scala", "sc.runJob(tasks"),
     // relational-regime duplicate-cell guard: limit(1) — at most one
     // (sample, probe) cell observed twice
     ("LuadPipeline.scala", ".filter(col(\"count\") > 1).limit(1).collect()"),

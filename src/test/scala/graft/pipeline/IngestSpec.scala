@@ -406,13 +406,12 @@ class IngestSpec extends SparkSpec {
 
   /** What `body` made Spark do, from a listener: the jobs that read
     * the expression files (a stage over `Ingest`'s reader tasks), the
-    * finished tasks of those stages, the stages that wrote shuffle
-    * output, and every stage's stack (`graft.JobStacks`).
+    * finished tasks of those stages, and every stage's stack
+    * (`graft.JobStacks`).
     */
   private final case class Work(
       readingJobs: Int,
       readingTasks: Int,
-      shuffleStages: Int,
       stacks: Seq[String],
       jobs: Int, // every job `body` started
       sqlJobs: Int, // those started by a Spark SQL execution
@@ -422,7 +421,6 @@ class IngestSpec extends SparkSpec {
     val readingStages = ConcurrentHashMap.newKeySet[Int]
     val readingJobs = ConcurrentHashMap.newKeySet[Int]
     val readingTasks = new AtomicInteger
-    val shuffleStages = ConcurrentHashMap.newKeySet[Int]
     val (jobs, sqlJobs) = (new AtomicInteger, new AtomicInteger)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -438,7 +436,6 @@ class IngestSpec extends SparkSpec {
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         if (e.reason == Success && readingStages.contains(e.stageId)) readingTasks.incrementAndGet()
-        Option(e.taskMetrics).foreach(m => if (m.shuffleWriteMetrics.recordsWritten > 0) shuffleStages.add(e.stageId))
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -447,7 +444,7 @@ class IngestSpec extends SparkSpec {
     val (result, stacks) =
       try graft.JobStacks(spark)(body)
       finally spark.sparkContext.removeSparkListener(listener)
-    (result, Work(readingJobs.size, readingTasks.get, shuffleStages.size, stacks, jobs.get, sqlJobs.get))
+    (result, Work(readingJobs.size, readingTasks.get, stacks, jobs.get, sqlJobs.get))
   }
 
   private def predictions(r: LuadPipeline.Result) =
@@ -459,8 +456,8 @@ class IngestSpec extends SparkSpec {
     finally spark.conf.unset("spark.graft.pearson.maxDenseBytes")
   }
 
-  test("a dense-regime run reads the corpus in one Spark job and writes no shuffle") {
-    val dir = Files.createTempDirectory("graft_corpus_one_scan")
+  test("a dense-regime run and its sink start no Spark job") {
+    val dir = Files.createTempDirectory("graft_corpus_no_job")
     val base = writeCorpus(dir, nTrain = 8, nPredict = 4, nProbes = 6)
     val config = DefParser.parseFile(s"$base/input.txt")
     assert(Network.fitsDense(config.samples.size.toLong, 6L, Network.maxDenseBytes(spark)))
@@ -469,33 +466,59 @@ class IngestSpec extends SparkSpec {
       LuadPipeline.writeOutput(r.predictions, Some(s"$base/out"))
       r
     }
+    // run + sink at pc-threshold none: the reader tasks run on driver
+    // threads and the sink is written from the driver
     val (result, w) = runAndWrite(base, config)
-    assert(w.readingJobs == 1, s"the corpus was read by ${w.readingJobs} jobs")
-    assert(w.shuffleStages == 0, s"${w.shuffleStages} stage(s) wrote shuffle output")
     assert(result.nProbesAfter == 6 && predictions(result).size == 4)
-    // run + sink at pc-threshold none: the reader job is the only job,
-    // and no job comes from a Spark SQL execution (no file source, no
-    // write job)
-    assert(w.jobs == 1 && w.sqlJobs == 0, s"${w.jobs} job(s), ${w.sqlJobs} from SQL executions")
+    assert(w.jobs == 0 && w.sqlJobs == 0, s"${w.jobs} job(s), ${w.sqlJobs} from SQL executions")
     // with a threshold too: the network kernel runs on driver threads
     val (thrBase, thrConfig) = mirroredCorpus("graft_corpus_threshold_jobs")
     val (thrResult, tw) = runAndWrite(thrBase, thrConfig)
     assert(thrResult.nProbesAfter == 5, "the network filter did not run")
-    assert(tw.jobs == 1 && tw.sqlJobs == 0, s"${tw.jobs} job(s), ${tw.sqlJobs} from SQL executions")
+    assert(tw.jobs == 0 && tw.sqlJobs == 0, s"${tw.jobs} job(s), ${tw.sqlJobs} from SQL executions")
+  }
+
+  /** `body` with every file of the corpus its own reader task. */
+  private def oneFilePerTask[T](body: => T): T = {
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    try body
+    finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  /** What `body` returns, and how many files it opened through the
+    * `file:` file system (bound to `CountingRawFs` meanwhile).
+    */
+  private def countingOpens[T](body: => T): (T, Int) = {
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val binding = Seq("fs.file.impl" -> classOf[CountingRawFs].getName, "fs.file.impl.disable.cache" -> "true")
+    val saved = binding.map { case (k, _) => k -> Option(hadoop.get(k)) }
+    val before = CountingRawFs.opens.get
+    binding.foreach { case (k, v) => hadoop.set(k, v) }
+    val r =
+      try body
+      finally saved.foreach { case (k, v) => v.fold(hadoop.unset(k))(hadoop.set(k, _)) }
+    (r, CountingRawFs.opens.get - before)
   }
 
   test("the dense gate at the footprint of the corpus runs dense, one byte below it relational, with the same output") {
     val (base, config) = twoTypeCorpus(14L)
     val (nS, nP) = (config.samples.size.toLong, 12L)
+    val nFiles = config.samples.map(_.files.size).sum
     val footprint = Network.denseFootprintBytes(nS, nP)
-    val (dense, dw) = withBudget(footprint)(work(runMini(base, config)))
     assert(withBudget(footprint)(Network.fitsDense(nS, nP, Network.maxDenseBytes(spark))))
-    assert(dw.readingJobs == 1 && dw.readingTasks >= 2, s"the scan ran ${dw.readingTasks} task(s): no in-flight gate")
-    assert(!dw.stacks.exists(_.contains("panelSurvivors")), "the dense budget ran the relational regime")
-    // one byte less: the scan starts (one probe fits) and the gate
-    // cancels it once the probes seen overflow the budget
-    val (relational, rw) = withBudget(footprint - 1)(work(runMini(base, config)))
     assert(!withBudget(footprint - 1)(Network.fitsDense(nS, nP, Network.maxDenseBytes(spark))))
+    // one file a task: at the footprint the dense read opens every file
+    // once; one byte less (one probe fits, so the read starts) the gate
+    // closes once the probes seen overflow, and no thread claims a task
+    // after that
+    val (fits, all) = oneFilePerTask(countingOpens(Ingest.ingestDense(spark, base, config, footprint)))
+    assert(fits.isDefined && all == nFiles, s"$all of $nFiles files opened")
+    val (over, some) = oneFilePerTask(countingOpens(Ingest.ingestDense(spark, base, config, footprint - 1)))
+    assert(over.isEmpty && some < nFiles, s"$some of $nFiles files opened: no in-flight gate")
+
+    val (dense, dw) = withBudget(footprint)(work(runMini(base, config)))
+    assert(!dw.stacks.exists(_.contains("panelSurvivors")), "the dense budget ran the relational regime")
+    val (relational, rw) = withBudget(footprint - 1)(work(runMini(base, config)))
     assert(rw.stacks.exists(_.contains("panelSurvivors")), "one byte below the footprint ran dense")
     assert(dense.nProbesBefore == nP && relational.nProbesBefore == nP)
     assert(relational.nProbesAfter == dense.nProbesAfter)
@@ -612,16 +635,30 @@ class IngestSpec extends SparkSpec {
       yield (d.observed.samples(p)(k), d.probeNames(p), d.observed.values(p)(k))).toSet
     // 12 files dealt over the session's 4 cores: 4 tasks of 3 files
     assert(spark.sparkContext.defaultParallelism == 4)
-    val (whole, ww) = work(Ingest.ingestDense(spark, base, config, Long.MaxValue).get)
+    val (_, ww) = work(Ingest.ingest(spark, base, config))
     assert(ww.readingJobs == 1 && ww.readingTasks == 4, s"${ww.readingTasks} reader task(s)")
+    val whole = Ingest.ingestDense(spark, base, config, Long.MaxValue).get
     // every file over the bound: one task per file, in the same one job
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
-    val (cut, cw) =
-      try work(Ingest.ingestDense(spark, base, config, Long.MaxValue).get)
-      finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    val (_, cw) = oneFilePerTask(work(Ingest.ingest(spark, base, config)))
     assert(cw.readingJobs == 1 && cw.readingTasks == 12, s"${cw.readingTasks} reader task(s)")
+    // the dense regime reads the same tasks on driver threads
+    val cut = oneFilePerTask(Ingest.ingestDense(spark, base, config, Long.MaxValue).get)
     assert(cells(cut) == cells(whole) && cells(whole).size == 12 * 6)
     assert(cut.rowsDropped == whole.rowsDropped)
+  }
+
+  test("a failed reader task stops the dense read: no thread claims a task after it") {
+    val dir = Files.createTempDirectory("graft_corpus_failed_task")
+    val base = writeCorpus(dir, nTrain = 150, nPredict = 50, nProbes = 2)
+    // the path-first file is the first task's: its first row fails
+    val f = dir.resolve("expr/PRED-00.expr.txt")
+    Files.writeString(f, "p000\tNaN\n" + Files.readString(f))
+    val config = DefParser.parseFile(s"$base/input.txt")
+    val (e, opened) = oneFilePerTask(countingOpens(
+      intercept[IllegalArgumentException](Ingest.ingestDense(spark, base, config, Long.MaxValue))))
+    for (part <- Seq("'NaN'", "'p000'", "'PRED-00'", "expr/PRED-00.expr.txt"))
+      assert(e.getMessage.contains(part), e.getMessage)
+    assert(opened < 200, s"all $opened files opened after a task failed")
   }
 
   /** One expression file's bytes, each line an edge of the lenient rule:

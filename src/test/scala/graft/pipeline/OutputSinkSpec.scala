@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.SparkSpec
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 
 /** K2 sink parity: the reference writes its TSV output 8-way
@@ -103,8 +103,14 @@ class OutputSinkSpec extends SparkSpec {
   }
 }
 
-/** The raw local file system, counting the files it creates. */
+/** The raw local file system, counting the files it creates and opens. */
 class CountingRawFs extends RawLocalFileSystem {
+  // where `FileSystem.open(Path)` lands in the raw local file system
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingRawFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+
   // where `FileSystem.create(Path)` lands in the raw local file system
   override def create(
       f: Path,
@@ -120,5 +126,5 @@ class CountingRawFs extends RawLocalFileSystem {
 }
 
 object CountingRawFs {
-  val creates = new AtomicInteger
+  val (creates, opens) = (new AtomicInteger, new AtomicInteger)
 }

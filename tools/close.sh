@@ -76,8 +76,9 @@ tail -1 "$WORK/perfbench_luad_wide_trace.log"
 # the relational one at the perfbench heap (-Xmx3g) and the CLI's
 # default local[32] (SPARK_GRAFT_CPUS unset), where a relational
 # network step that shuffles pairs × samples rows runs out of heap; the
-# sorted sink rows, n_probes_after and rows_dropped must agree, and the
-# forced run must report the relational regime. Each prints its regime
+# sorted sink rows, n_probes_after and rows_dropped must agree, the
+# default run must report the dense regime and the forced run the
+# relational one. Each prints its regime
 # and its network-and-assembly phase wall.
 parity() { # $1 = regime, then extra JVM options
   local regime="$1"; shift
@@ -96,8 +97,9 @@ if parity dense && (unset SPARK_GRAFT_CPUS; parity relational -Dspark.graft.pear
   { cmp -s "$WORK/parity_dense/rows.tsv" "$WORK/parity_relational/rows.tsv" \
       && cmp -s "$WORK/parity_dense/counts.txt" "$WORK/parity_relational/counts.txt" \
       && grep -q 'pearson path: relational-panels' "$WORK/parity_relational/run.log" \
+      && grep -q 'pearson path: dense-driver' "$WORK/parity_dense/run.log" \
       && [ -s "$WORK/parity_dense/rows.tsv" ] && [ -s "$WORK/parity_dense/counts.txt" ]; } \
-    || { echo "FAIL: the regimes disagree (see $WORK/parity_*)"; fail=1; }
+    || { echo "FAIL: the regimes disagree, or a run reported the wrong regime (see $WORK/parity_*)"; fail=1; }
 else
   fail=1
 fi
